@@ -9,12 +9,14 @@ benchmark with sbt (offline) and records the classpath under
 graftbench/.build; later runs reuse it while no source has changed. Each run
 works in a temporary directory under graftbench/.work that it removes at
 the end. The last line of standard output is the result, one JSON object:
-{"correct", "attempted", "failed", "metrics"}. See graftbench/README.md.
+{"correct", "attempted", "failed", "metrics"}. S is accepted but does not
+set the run's length: each workload makes a fixed number of steady
+operations, so that every run attempts the same work. See
+graftbench/README.md.
 """
 import argparse
 import hashlib
 import json
-import math
 import os
 import shutil
 import subprocess
@@ -130,33 +132,13 @@ def run_jvm(classpath, args, work):
     return None
 
 
-# --------------------------------------------------------------- oracle check
-# The comparison tools/check_correctness.py makes: columns sorted by name,
-# rows sorted by value, cells compared exactly (NaN equals NaN). Restated
-# here so that a change to the tool cannot change the benchmark's check.
-
-def canon(rows, cols):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    out = sorted((tuple(r[i] for i in order) for r in rows),
-                 key=lambda t: tuple((x is None, str(x)) for x in t))
-    return [cols[i] for i in order], out
-
-
-def cell_eq(a, b):
-    if a is None or b is None:
-        return a is b
-    if isinstance(a, float) or isinstance(b, float):
-        if isinstance(a, float) and isinstance(b, float):
-            return (math.isnan(a) and math.isnan(b)) or a == b
-        try:
-            return float(a) == float(b)
-        except (TypeError, ValueError):
-            return False
-    return a == b
-
-
 def oracle_checks(work, tables):
+    """Compares each query's rows with DuckDB's result of its oracle SQL the
+    way tools/check_correctness.py does, with that tool's own comparison:
+    columns sorted by name, rows sorted by value, cells compared exactly."""
     import duckdb
+    sys.path.insert(0, os.path.join(ROOT, "tools"))
+    from check_correctness import canon, cell_eq
     with open(os.path.join(work, "oracle_sql.json")) as fh:
         oracle = json.load(fh)
     con = duckdb.connect()
@@ -201,7 +183,7 @@ def main():
     work = tempfile.mkdtemp(prefix=f"{a.workload}-", dir=os.path.join(HERE, ".work"))
     try:
         args = ["--workload", a.workload, "--seed", str(a.seed),
-                "--seconds", str(a.seconds), "--trace", str(a.trace), "--work", work]
+                "--trace", str(a.trace), "--work", work]
         if a.trace:
             os.makedirs(os.path.join(HERE, "out"), exist_ok=True)
             args += ["--trace-file",

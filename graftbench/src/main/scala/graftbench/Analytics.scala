@@ -29,12 +29,11 @@ final class Analytics(base: SparkSession, tables: File, dir: File) extends Workl
 
   def items: Int = Queries.size
 
-  /** Rounds are counted, not timed: the retained heap grows with every
-    * round (SessionMemo keeps each dropped session's entries), so a run
-    * length must always mean the same number of rounds.
+  /** The retained heap grows with every round (SessionMemo keeps each
+    * dropped session's entries), so it is comparable only between runs of
+    * the same number of rounds.
     */
-  override def steadyOps(seconds: Int): Option[Int] =
-    Some(math.max(1, math.round(seconds / NominalRoundS).toInt))
+  def steadyOps: Int = SteadyRounds
 
   def op(t: Tracer): Int = {
     val s = base.newSession()
@@ -94,8 +93,5 @@ object Analytics {
     "e29_linear_attribution", "d1_exact_dedup", "s1_cosine_topk", "w2_seq_pack",
     "t1_token_stats", "x1_shipping_priority")
 
-  /** Seconds one steady round is taken to last, to turn a run length into
-    * a round count.
-    */
-  val NominalRoundS = 10.0
+  val SteadyRounds = 2
 }

@@ -30,6 +30,7 @@ final class Batch(spark: SparkSession, seed: Long, dir: File) extends Workload {
   private def callDir(i: Int) = new File(dir, s"call_$i")
 
   def items: Int = Products
+  def steadyOps: Int = SteadyOps
 
   def op(t: Tracer): Int = {
     n += 1
@@ -103,4 +104,5 @@ final class Batch(spark: SparkSession, seed: Long, dir: File) extends Workload {
 object Batch {
   val Products = 2
   val Size = 2048
+  val SteadyOps = 4
 }

@@ -18,14 +18,10 @@ import org.apache.spark.sql.SparkSession
   * and its own overhead as the traced minus the untraced operation time.
   */
 object Main {
-  /** The fewest steady operations a timed run makes, whatever its length. */
-  val MinSteady = 2
-
   def main(args: Array[String]): Unit = {
     val opt = args.grouped(2).collect { case Array(k, v) => k.stripPrefix("--") -> v }.toMap
     val launchMs = opt("launch-ms").toLong
     val seed = opt("seed").toLong
-    val seconds = opt("seconds").toInt
     val traced = opt("trace") == "1"
     val work = new File(opt("work"))
 
@@ -55,25 +51,13 @@ object Main {
     }
 
     val firstS = run(on)
-    // a traced run alternates untraced and traced steady operations, so the
-    // tracing overhead is measured in the same process: a pair where an
-    // untraced run makes one operation, and at least MinSteady pairs, so
-    // that neither side is always the later, warmer one
+    // a traced run makes its steady operations in pairs, one untraced and
+    // one traced, so the tracing overhead is measured in the same process
     val untracedS = mutable.ArrayBuffer.empty[Double]
     val tracedS = mutable.ArrayBuffer.empty[Double]
-    val pairs = if (traced) 2 else 1
-    val plan = wl.steadyOps(seconds).map(k => pairs * (if (traced) math.max(k, MinSteady) else k))
-    val minSteady = pairs * MinSteady
-    val t0 = System.nanoTime()
-    var i = 0
-    def more = plan match {
-      case Some(k) => i < k
-      case None => i < minSteady || (System.nanoTime() - t0) / 1e9 < seconds
-    }
-    while (more) {
+    val n = if (traced) 2 * math.max(1, wl.steadyOps / 2) else wl.steadyOps
+    for (i <- 0 until n)
       if (traced && i % 2 == 1) tracedS += run(on) else untracedS += run(off)
-      i += 1
-    }
 
     val checksT0 = System.nanoTime()
     val checks = wl.checks()

@@ -36,6 +36,7 @@ final class Scene(spark: SparkSession, seed: Long, dir: File) extends Workload {
   private def out(i: Int) = new File(dir, s"scene_$i.jpg")
 
   def items: Int = 1
+  def steadyOps: Int = SteadyOps
 
   def op(t: Tracer): Int = {
     n += 1
@@ -135,6 +136,7 @@ final class Scene(spark: SparkSession, seed: Long, dir: File) extends Workload {
 object Scene {
   val Size = 3072
   val Target = 2048
+  val SteadyOps = 3
   val SourceCrs = "EPSG:32632"
   val TargetCrs = "EPSG:32633"
 }

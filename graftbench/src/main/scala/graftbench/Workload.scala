@@ -22,10 +22,11 @@ trait Workload {
     */
   def settle(): Unit = ()
 
-  /** A fixed number of steady operations for this run length, or None to
-    * repeat the operation until the run length is used up.
+  /** Steady operations a run makes after the first. A fixed count, not a
+    * time, so that every run attempts the same operations and ends with
+    * the same retained state.
     */
-  def steadyOps(seconds: Int): Option[Int] = None
+  def steadyOps: Int
 
   /** Checks of the outputs, made after the timed operations. */
   def checks(): Seq[Check]

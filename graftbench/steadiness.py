@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Re-runs the benchmark's steadiness check.
 
-    python3 graftbench/steadiness.py [--runs 10] [--seconds 5] [--first-seed 1]
+    python3 graftbench/steadiness.py [--runs 10] [--first-seed 1]
                                      [workload ...]
 
 Runs graftbench/run.py once per seed (first-seed, first-seed+1, ...) on each
@@ -30,7 +30,6 @@ def main():
         bench = json.load(fh)
     ap = argparse.ArgumentParser()
     ap.add_argument("--runs", type=int, default=10)
-    ap.add_argument("--seconds", type=int, default=bench["run_seconds"])
     ap.add_argument("--first-seed", type=int, default=1)
     ap.add_argument("workloads", nargs="*",
                     default=[w["name"] for w in bench["workloads"]])
@@ -42,7 +41,7 @@ def main():
             t0 = time.time()
             p = subprocess.run([sys.executable, os.path.join(HERE, "run.py"),
                                 "--workload", w, "--seed", str(seed),
-                                "--seconds", str(a.seconds), "--trace", "0"],
+                                "--seconds", str(bench["run_seconds"]), "--trace", "0"],
                                cwd=ROOT, stdout=subprocess.PIPE,
                                stderr=subprocess.DEVNULL, text=True)
             walls.append(time.time() - t0)
