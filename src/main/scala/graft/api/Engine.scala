@@ -29,6 +29,14 @@ final case class ProcessedImage(
 /** Quantized output tile. */
 final case class QTile(tile_row: Int, tile_col: Int, h: Int, w: Int, q: Array[Int])
 
+/** One source tile cropped to the source window of one warp output block:
+  * the record [[Engine.warpTiles]] ships. `tile` is the id of the block's
+  * output tile (the exchange key), `block` the block id, and (r0, c0) the
+  * crop's origin in source pixels.
+  */
+final case class WarpCrop(product_id: String, band: String, tile: Int, block: Int,
+                          r0: Int, c0: Int, h: Int, w: Int, pixels: Array[Float])
+
 /** Per-product batch outcome (`api/mod.rs:452-457`). */
 final case class BatchReport(processed: Int, skipped: Int, errors: Seq[(String, String)])
 
@@ -285,6 +293,13 @@ object Engine {
     }
   }
 
+  /** Scanline-approximation error bound for [[warpTiles]] in source
+    * pixels — gdalwarp's default transform-approximation threshold
+    * (its `-et` knob). Rows whose middle-point check exceeds this fall
+    * back to exact per-pixel projection.
+    */
+  val WarpApproxTolPx = 0.125
+
   /** S8 EXECUTION: distributed inverse-projected tile resample — the
     * native counterpart of the reference's gdalwarp-on-VRT read
     * (`/root/reference/src/io/sentinel1.rs:1033-1068`: warp, then read
@@ -294,94 +309,55 @@ object Engine {
     * (dst grid → dst CRS → lon/lat → src CRS → fractional src pixel,
     * all [[graft.geom.Proj]] math inside the task closure) and samples
     * the source with [[graft.geom.Resample]] (near/bilinear/cubic —
-    * gdalwarp's kernel algebra). Source tiles are shipped ONLY to the
-    * output blocks whose source-footprint bbox they intersect (one
-    * bounded shuffle, the same halo idea as [[resizeTilesLanczos]]);
-    * pixels are touched exactly once per output sample.
+    * gdalwarp's kernel algebra). The driver computes each block's
+    * source-footprint bbox and broadcasts the bboxes with a source tile
+    * → block-ids index. The map side crops every source tile to the bbox
+    * of each block it touches and ships only that crop ([[WarpCrop]]), so
+    * a block receives exactly the source window it reads — gdalwarp's own
+    * per-chunk source window (`GDALWarpOperation::ComputeSourceWindow`).
+    * ONE exchange, keyed by output tile and sorted by (tile, block) within
+    * each partition, carries the crops; a task assembles one block's
+    * window at a time, resamples it straight into the current output tile
+    * and emits the tile when the tile id changes. Pixels are touched
+    * exactly once per output sample.
     *
-    * Scale properties: the per-task source footprint is bounded by
-    * construction — output blocks shrink (`tileSize/k`, k = next pow2 ≥
-    * the linear downscale factor, capped at `tileSize/16` so blocks
-    * never drop below 16 px) so a block's footprint stays ≈ one source
-    * tile for shrinks up to 16×; past the cap the footprint grows
-    * ~`16·scale` px per axis (dozens of source tiles per task at
-    * extreme fused `-ts` shrinks — a documented edge like the
-    * 10⁷-block note below; the pushdown decimation path is the right
-    * tool at those ratios, and the pipeline applies it first); blocks then
-    * regroup into standard tiles (a second, output-sized shuffle,
-    * skipped entirely when no shrink). Footprint metadata is O(output
-    * blocks) and broadcast; beyond ~10⁷ blocks (a source wider than
-    * ~10⁶ px) the bbox index would become a range-join relation instead
-    * — documented edge, same family as the resize strip width. Output
-    * blocks whose footprint misses the source entirely are omitted:
-    * downstream assembly zero-fills and a zero magnitude is below the
-    * dB valid floor, matching gdalwarp's zero-initialized destination.
+    * Scale properties: the shuffle carries ≈ the output's source
+    * footprint (each source pixel once per block whose bbox — footprint
+    * plus a 3-px margin — covers it), not whole tiles per block. Beside
+    * Spark's own spillable sort buffer, a task holds one block's window
+    * plus one output tile, at any shrink. Output blocks shrink
+    * (`tileSize/k`, k = next pow2 ≥ the linear downscale factor, capped
+    * at `tileSize/16` so blocks never drop below 16 px) so a block's
+    * window stays ≈ one source tile for shrinks up to 16×; past the cap the window grows ~`16·scale` px per
+    * axis (a 64× shrink reads a ≈1024² window — an extreme fused `-ts`
+    * shrink is a documented edge like the 10⁷-block note below; the
+    * pushdown decimation path is the right tool at those ratios, and the
+    * pipeline applies it first). Footprint metadata is O(output blocks)
+    * and broadcast; beyond ~10⁷ blocks (a source wider than ~10⁶ px) the
+    * bbox index would become a range-join relation instead — documented
+    * edge, same family as the resize strip width. Output blocks whose
+    * footprint misses the source entirely are omitted: downstream
+    * assembly zero-fills and a zero magnitude is below the dB valid
+    * floor, matching gdalwarp's zero-initialized destination.
     */
-  /** Scanline-approximation error bound for [[warpTiles]] in source
-    * pixels — gdalwarp's default transform-approximation threshold
-    * (its `-et` knob). Rows whose middle-point check exceeds this fall
-    * back to exact per-pixel projection.
-    */
-  val WarpApproxTolPx = 0.125
-
   def warpTiles(src: Dataset[Tile], plan: graft.geom.Warp.NativeWarp,
                 tileSize: Int = DefaultTileSize): Dataset[Tile] = {
     import org.apache.spark.sql.Encoders
-    implicit val tileEnc: org.apache.spark.sql.Encoder[Tile] = Encoders.product[Tile]
-    val spark = src.sparkSession
-    val srcProj = graft.geom.Proj.fromEpsg(plan.srcCrs).getOrElse(
-      throw graft.model.GraftException.Processing(s"non-native source CRS: ${plan.srcCrs}"))
-    val dstProj = graft.geom.Proj.fromEpsg(plan.dstCrs).getOrElse(
-      throw graft.model.GraftException.Processing(s"non-native target CRS: ${plan.dstCrs}"))
-    val sg = plan.srcGt
-    val dg = plan.dstGt
-    val det = sg(1) * sg(5) - sg(2) * sg(4)
-    require(det != 0.0, "source geotransform is not invertible")
-    // inverse source geotransform (2×2 solve; rotation terms included)
-    val i1 = sg(5) / det; val i2 = -sg(2) / det
-    val i4 = -sg(4) / det; val i5 = sg(1) / det
-    val (sg0, sg3) = (sg(0), sg(3))
-    val (dg0, dg1, dg2) = (dg(0), dg(1), dg(2))
-    val (dg3, dg4, dg5) = (dg(3), dg(4), dg(5))
+    val sc = src.sparkSession.sparkContext
+    val srcFrac = warpSrcFrac(plan)
     val alg = plan.alg
     val srcRows = plan.srcRows; val srcCols = plan.srcCols
     val dstRows = plan.dstRows; val dstCols = plan.dstCols
-
-    // dst pixel index (row py, col px) → fractional src pixel coords
-    // (pixel-center based, Resample's convention)
-    val srcFrac: (Double, Double) => (Double, Double) = (py, px) => {
-      val dx = dg0 + (px + 0.5) * dg1 + (py + 0.5) * dg2
-      val dy = dg3 + (px + 0.5) * dg4 + (py + 0.5) * dg5
-      val (lon, lat) = dstProj.inverse(dx, dy)
-      val (sx, sy) = srcProj.forward(lon, lat)
-      val pc = i1 * (sx - sg0) + i2 * (sy - sg3)
-      val pr = i4 * (sx - sg0) + i5 * (sy - sg3)
-      (pr - 0.5, pc - 0.5)
-    }
-
-    // Output BLOCK grid: tileSize/k so a block's source footprint stays
-    // ≈ one source tile under the fused -ts shrink. k is capped at
-    // tileSize/16 (blocks never smaller than 16×16): past a 16× shrink
-    // each block's footprint grows LINEARLY with scale/16 source tiles
-    // per axis — a 64× shrink regroups ≈4×4 source tiles (~16 tiles ≈
-    // 16 MB of float pixels) into one mapGroups call. That stays far
-    // under executor memory for any realistic -ts (the reference's own
-    // pipelines shrink ≤10×), and the per-group cost is bounded by the
-    // SOURCE footprint, not the corpus — but a pathological 1000×
-    // single-step shrink should pre-decimate (decimate=N scan pushdown)
-    // first, which resets scale here to the residual factor.
-    val scale = math.max(1.0,
-      math.max(srcCols.toDouble / dstCols, srcRows.toDouble / dstRows))
-    var k = 1
-    while (k < scale && k < tileSize / 16) k *= 2
-    val g = tileSize / k
+    val g = warpBlockEdge(plan, tileSize)
+    val k = tileSize / g
     val nGr = (dstRows + g - 1) / g
     val nGc = (dstCols + g - 1) / g
+    val nTc = (dstCols + tileSize - 1) / tileSize
 
     // Driver bbox pass: sample each block's pixel grid (5×5 incl. edges;
     // projection curvature across ≤tileSize px is far below the margin)
     // → source-footprint bbox → inverted into a (tile_row,tile_col) →
-    // block-ids index so the shuffle keys by direct lookup.
+    // block-ids index so the map side finds a tile's blocks by lookup.
     val margin = 3.0
     val bboxes = new Array[Array[Int]](nGr * nGc)
     var gr = 0
@@ -403,8 +379,8 @@ object Engine {
             // a non-finite sample (projection singularity, lon-wrap
             // seam) is simply skipped: the bbox comes from the FINITE
             // samples (clamped to the source extent below), so a block
-            // straddling a singularity still ships the tiles its valid
-            // pixels need instead of zero-filling wholesale; its
+            // straddling a singularity still receives the window its
+            // valid pixels need instead of zero-filling wholesale; its
             // out-of-bbox pixels read 0 exactly as a dropped block
             // would have
             if (java.lang.Double.isFinite(fr) && java.lang.Double.isFinite(fc)) {
@@ -445,102 +421,176 @@ object Engine {
       }
       gid += 1
     }
-    val bIdx = spark.sparkContext.broadcast(idx.view.mapValues(_.toArray).toMap)
+    val bIdx = sc.broadcast(idx.view.mapValues(_.toArray).toMap)
+    val bBoxes = sc.broadcast(bboxes)
 
-    val keyedEnc = Encoders.tuple(Encoders.scalaInt, tileEnc)
-    val blocks = src.flatMap { t =>
-      bIdx.value.getOrElse(tileKey(t.tile_row, t.tile_col), Array.empty[Int])
-        .iterator.map(gidv => (gidv, t))
-    }(keyedEnc)
-      .groupByKey(_._1)(Encoders.scalaInt)
-      .mapGroups { (gidv, it) =>
-        val parts = scala.collection.mutable.HashMap.empty[Long, Tile]
-        var pid = ""; var band = ""
-        it.foreach { case (_, t) =>
-          parts.put(tileKey(t.tile_row, t.tile_col), t)
-          pid = t.product_id; band = t.band
-        }
-        val bgr = gidv / nGc; val bgc = gidv % nGc
-        val y0 = bgr * g; val x0 = bgc * g
-        val h = math.min(g, dstRows - y0); val w = math.min(g, dstCols - x0)
-        val get: (Int, Int) => Float = (r, c) =>
-          parts.get(tileKey(r / tileSize, c / tileSize)) match {
-            case Some(t) =>
-              t.pixels((r - t.tile_row * tileSize) * t.w + (c - t.tile_col * tileSize))
-            case None => 0.0f
-          }
-        val out = new Array[Float](h * w)
-        var i = 0; var y = 0
+    // map side: one crop per (source tile, block it feeds), keyed by the
+    // block's output tile
+    val crops = src.flatMap { t =>
+      val boxes = bBoxes.value
+      val ty0 = t.tile_row * tileSize; val tx0 = t.tile_col * tileSize
+      bIdx.value.getOrElse(tileKey(t.tile_row, t.tile_col), Array.empty[Int]).iterator.map { gidv =>
+        val b = boxes(gidv)
+        val r0 = math.max(b(0), ty0); val h = math.min(b(1), ty0 + t.h - 1) - r0 + 1
+        val c0 = math.max(b(2), tx0); val w = math.min(b(3), tx0 + t.w - 1) - c0 + 1
+        val px = new Array[Float](h * w)
+        var y = 0
         while (y < h) {
-          val py = (y0 + y).toDouble
-          // Error-controlled scanline approximation (gdalwarp's
-          // approximator idea, default error threshold 0.125 px): the
-          // transform is evaluated exactly at the scanline's ends and
-          // middle — plus a quarter point for rows wider than 128 px,
-          // which catches odd-symmetric (inflection-shaped) deviation
-          // that is zero at the middle; when linear interpolation
-          // reproduces every checked point within tolerance — it
-          // always does for the smooth Proj family over ≤tileSize px,
-          // where the true error is milli-pixels — the row
-          // interpolates, cutting the per-pixel trig chain to a
-          // handful of evaluations per row. A failed check falls back
-          // to exact per-pixel projection. This is gdalwarp's own `-et`
-          // HEURISTIC, not a certified bound: deviation vanishing at
-          // all checked points could still exceed the tolerance between
-          // them, for transforms far less smooth than the Proj family.
-          val (fr0, fc0) = srcFrac(py, x0.toDouble)
-          val (fr1, fc1) = srcFrac(py, (x0 + w - 1).toDouble)
-          var interp = false
-          if (w >= 3) {
-            def checkAt(px: Int): Boolean = {
-              val (frp, fcp) = srcFrac(py, (x0 + px).toDouble)
-              val tp = px.toDouble / (w - 1)
-              math.abs(fr0 + (fr1 - fr0) * tp - frp) < WarpApproxTolPx &&
-                math.abs(fc0 + (fc1 - fc0) * tp - fcp) < WarpApproxTolPx
-            }
-            interp = checkAt((w - 1) / 2) && (w <= 128 || checkAt((w - 1) / 4))
-          }
-          var x = 0
-          while (x < w) {
-            val (fr, fc) =
-              if (interp) {
-                val tx = x.toDouble / (w - 1)
-                (fr0 + (fr1 - fr0) * tx, fc0 + (fc1 - fc0) * tx)
-              } else if (x == 0) (fr0, fc0)
-              else if (x == w - 1) (fr1, fc1)
-              else srcFrac(py, (x0 + x).toDouble)
-            out(i) = graft.geom.Resample.sample(alg, get, srcRows, srcCols, fr, fc)
-            i += 1; x += 1
-          }
+          System.arraycopy(t.pixels, (r0 - ty0 + y) * t.w + (c0 - tx0), px, y * w, w)
           y += 1
         }
-        Tile(pid, band, bgr, bgc, h, w, out)
-      }(tileEnc)
+        val bgr = gidv / nGc; val bgc = gidv % nGc
+        WarpCrop(t.product_id, t.band, (bgr / k) * nTc + bgc / k, gidv, r0, c0, h, w, px)
+      }
+    }(Encoders.product[WarpCrop])
 
-    if (g == tileSize) blocks
-    else {
-      // regroup g-blocks into standard tiles (k = tileSize/g blocks per
-      // axis; missing blocks zero-fill like the assembly path)
-      val nTc = (dstCols + tileSize - 1) / tileSize
-      blocks.groupByKey(b => (b.tile_row / k) * nTc + (b.tile_col / k))(Encoders.scalaInt)
-        .mapGroups { (tid, it) =>
-          val bs = it.toArray
-          val tr = tid / nTc; val tc = tid % nTc
-          val y0 = tr * tileSize; val x0 = tc * tileSize
-          val h = math.min(tileSize, dstRows - y0)
-          val w = math.min(tileSize, dstCols - x0)
-          val out = new Array[Float](h * w)
-          bs.foreach { b =>
-            val by = b.tile_row * g - y0; val bx = b.tile_col * g - x0
-            var y = 0
-            while (y < b.h) {
-              var x = 0
-              while (x < b.w) { out((by + y) * w + bx + x) = b.pixels(y * b.w + x); x += 1 }
-              y += 1
+    crops.repartition(col("tile")).sortWithinPartitions("tile", "block")
+      .mapPartitions { it =>
+        val in = it.buffered
+        val boxes = bBoxes.value
+        new Iterator[Tile] {
+          def hasNext: Boolean = in.hasNext
+          def next(): Tile = {
+            val first = in.head
+            val tid = first.tile
+            val tr = tid / nTc; val tc = tid % nTc
+            val ty0 = tr * tileSize; val tx0 = tc * tileSize
+            val th = math.min(tileSize, dstRows - ty0)
+            val tw = math.min(tileSize, dstCols - tx0)
+            // blocks of this tile that receive no crop stay zero, like
+            // the assembly path's fill
+            val out = new Array[Float](th * tw)
+            while (in.hasNext && in.head.tile == tid) {
+              val gidv = in.head.block
+              val b = boxes(gidv)
+              val wr0 = b(0); val wc0 = b(2)
+              val wh = b(1) - wr0 + 1; val ww = b(3) - wc0 + 1
+              val win = new Array[Float](wh * ww)
+              while (in.hasNext && in.head.block == gidv) {
+                val c = in.next()
+                var y = 0
+                while (y < c.h) {
+                  System.arraycopy(c.pixels, y * c.w, win, (c.r0 - wr0 + y) * ww + (c.c0 - wc0), c.w)
+                  y += 1
+                }
+              }
+              val get: (Int, Int) => Float = (r, c) => {
+                val y = r - wr0; val x = c - wc0
+                if (y >= 0 && y < wh && x >= 0 && x < ww) win(y * ww + x) else 0.0f
+              }
+              val by0 = (gidv / nGc) * g; val bx0 = (gidv % nGc) * g
+              warpBlock(srcFrac, alg, get, srcRows, srcCols, by0, bx0,
+                math.min(g, dstRows - by0), math.min(g, dstCols - bx0),
+                out, (by0 - ty0) * tw + (bx0 - tx0), tw)
             }
+            Tile(first.product_id, first.band, tr, tc, th, tw, out)
           }
-          Tile(bs(0).product_id, bs(0).band, tr, tc, h, w, out)
-        }(tileEnc)
+        }
+      }(Encoders.product[Tile])
+  }
+
+  /** [[warpTiles]]' pixel map: dst pixel index (row py, col px) →
+    * fractional src pixel coords (pixel-center based, Resample's
+    * convention).
+    */
+  private[graft] def warpSrcFrac(
+      plan: graft.geom.Warp.NativeWarp): (Double, Double) => (Double, Double) = {
+    val srcProj = graft.geom.Proj.fromEpsg(plan.srcCrs).getOrElse(
+      throw graft.model.GraftException.Processing(s"non-native source CRS: ${plan.srcCrs}"))
+    val dstProj = graft.geom.Proj.fromEpsg(plan.dstCrs).getOrElse(
+      throw graft.model.GraftException.Processing(s"non-native target CRS: ${plan.dstCrs}"))
+    val sg = plan.srcGt
+    val dg = plan.dstGt
+    val det = sg(1) * sg(5) - sg(2) * sg(4)
+    require(det != 0.0, "source geotransform is not invertible")
+    // inverse source geotransform (2×2 solve; rotation terms included)
+    val i1 = sg(5) / det; val i2 = -sg(2) / det
+    val i4 = -sg(4) / det; val i5 = sg(1) / det
+    val (sg0, sg3) = (sg(0), sg(3))
+    val (dg0, dg1, dg2) = (dg(0), dg(1), dg(2))
+    val (dg3, dg4, dg5) = (dg(3), dg(4), dg(5))
+    (py, px) => {
+      val dx = dg0 + (px + 0.5) * dg1 + (py + 0.5) * dg2
+      val dy = dg3 + (px + 0.5) * dg4 + (py + 0.5) * dg5
+      val (lon, lat) = dstProj.inverse(dx, dy)
+      val (sx, sy) = srcProj.forward(lon, lat)
+      val pc = i1 * (sx - sg0) + i2 * (sy - sg3)
+      val pr = i4 * (sx - sg0) + i5 * (sy - sg3)
+      (pr - 0.5, pc - 0.5)
+    }
+  }
+
+  /** Edge of [[warpTiles]]' square output blocks: tileSize/k so a block's
+    * source window stays ≈ one source tile under the fused -ts shrink. k
+    * is capped at tileSize/16 (blocks never smaller than 16×16): past a
+    * 16× shrink each block's window grows LINEARLY with scale/16 source
+    * tiles per axis — a 64× shrink reads ≈4×4 source tiles (~16 MB of
+    * float pixels) into one window. That stays far under executor memory
+    * for any realistic -ts (the reference's own pipelines shrink ≤10×),
+    * but a pathological 1000× single-step shrink should pre-decimate
+    * (decimate=N scan pushdown) first, which resets scale here to the
+    * residual factor.
+    */
+  private[graft] def warpBlockEdge(plan: graft.geom.Warp.NativeWarp, tileSize: Int): Int = {
+    val scale = math.max(1.0, math.max(plan.srcCols.toDouble / plan.dstCols,
+      plan.srcRows.toDouble / plan.dstRows))
+    var k = 1
+    while (k < scale && k < tileSize / 16) k *= 2
+    tileSize / k
+  }
+
+  /** Resamples the output block at (y0, x0) of size h×w into `out`, row y
+    * at `off + y * stride` — the per-block kernel of [[warpTiles]], pure
+    * in `get` (source pixel at (row, col); 0 outside what it holds).
+    */
+  private[graft] def warpBlock(srcFrac: (Double, Double) => (Double, Double), alg: String,
+                               get: (Int, Int) => Float, srcRows: Int, srcCols: Int,
+                               y0: Int, x0: Int, h: Int, w: Int,
+                               out: Array[Float], off: Int, stride: Int): Unit = {
+    var y = 0
+    while (y < h) {
+      val py = (y0 + y).toDouble
+      // Error-controlled scanline approximation (gdalwarp's
+      // approximator idea, default error threshold 0.125 px): the
+      // transform is evaluated exactly at the scanline's ends and
+      // middle — plus a quarter point for rows wider than 128 px,
+      // which catches odd-symmetric (inflection-shaped) deviation
+      // that is zero at the middle; when linear interpolation
+      // reproduces every checked point within tolerance — it
+      // always does for the smooth Proj family over ≤tileSize px,
+      // where the true error is milli-pixels — the row
+      // interpolates, cutting the per-pixel trig chain to a
+      // handful of evaluations per row. A failed check falls back
+      // to exact per-pixel projection. This is gdalwarp's own `-et`
+      // HEURISTIC, not a certified bound: deviation vanishing at
+      // all checked points could still exceed the tolerance between
+      // them, for transforms far less smooth than the Proj family.
+      val (fr0, fc0) = srcFrac(py, x0.toDouble)
+      val (fr1, fc1) = srcFrac(py, (x0 + w - 1).toDouble)
+      var interp = false
+      if (w >= 3) {
+        def checkAt(px: Int): Boolean = {
+          val (frp, fcp) = srcFrac(py, (x0 + px).toDouble)
+          val tp = px.toDouble / (w - 1)
+          math.abs(fr0 + (fr1 - fr0) * tp - frp) < WarpApproxTolPx &&
+            math.abs(fc0 + (fc1 - fc0) * tp - fcp) < WarpApproxTolPx
+        }
+        interp = checkAt((w - 1) / 2) && (w <= 128 || checkAt((w - 1) / 4))
+      }
+      var i = off + y * stride
+      var x = 0
+      while (x < w) {
+        val (fr, fc) =
+          if (interp) {
+            val tx = x.toDouble / (w - 1)
+            (fr0 + (fr1 - fr0) * tx, fc0 + (fc1 - fc0) * tx)
+          } else if (x == 0) (fr0, fc0)
+          else if (x == w - 1) (fr1, fc1)
+          else srcFrac(py, (x0 + x).toDouble)
+        out(i) = graft.geom.Resample.sample(alg, get, srcRows, srcCols, fr, fc)
+        i += 1; x += 1
+      }
+      y += 1
     }
   }
 
@@ -688,21 +738,40 @@ object Engine {
       math.min(255, math.max(0, math.round(math.pow(v / 255.0, 0.7) * 255.0))).toInt)
     val lutG = Array.tabulate(256)(v =>
       math.min(255, math.max(0, math.round(math.pow(v / 255.0, 0.9) * 255.0))).toInt)
+    val lutB = synRgbBlue
     val n = b1.length
     val r = new Array[Int](n); val g = new Array[Int](n); val b = new Array[Int](n)
     var i = 0
     while (i < n) {
       r(i) = lutR(b1(i) & 0xff)
       g(i) = lutG(b2(i) & 0xff)
-      b(i) = if (b2(i) == 0) 0
-      else {
-        val ratio = r(i).toDouble / g(i).toDouble
-        val v = math.pow(ratio, 0.1) * 255.0 * 0.24
-        math.round(math.min(255.0, math.max(0.0, v))).toInt
-      }
+      b(i) = if (b2(i) == 0) 0 else lutB((r(i) << 8) | g(i)) & 0xff
       i += 1
     }
     (r, g, b)
+  }
+
+  /** 256×256 u8 table of a synRGB blue expression on (r, g), indexed
+    * `r << 8 | g` — the reference's lookup-table compose (v0.2.10) in
+    * place of a `pow` per pixel; the entries are the expression's own
+    * values, so the output is unchanged.
+    */
+  private def blueTable(f: (Int, Int) => Int): Array[Byte] = {
+    val t = new Array[Byte](256 * 256)
+    var i = 0
+    while (i < t.length) { t(i) = f(i >>> 8, i & 0xff).toByte; i += 1 }
+    t
+  }
+
+  private lazy val synRgbBlue: Array[Byte] = blueTable { (r, g) =>
+    val ratio = r.toDouble / g.toDouble
+    val v = math.pow(ratio, 0.1) * 255.0 * 0.24
+    math.round(math.min(255.0, math.max(0.0, v))).toInt
+  }
+
+  private lazy val suppressedBlue: Array[Byte] = blueTable { (rr, gg) =>
+    val ratio = (rr + 8.0) / (gg + 8.0)
+    math.round(math.min(math.max(math.pow(ratio, 0.1) * 255.0 * 0.18, 0.0), 255.0)).toInt
   }
 
   /** Suppressed synRGB compose (P12, `synthetic_rgb.rs:88-178`) on
@@ -734,6 +803,9 @@ object Engine {
         val shifted = (v - floorD) / denom
         math.round(math.min(math.max(math.pow(shifted, gamma) * 255.0, 0.0), 255.0)).toInt
       }
+    val lutR = Array.tabulate(256)(chan(_, 1.15))
+    val lutG = Array.tabulate(256)(chan(_, 1.10))
+    val lutB = suppressedBlue
     val n = b1.length
     val r = new Array[Int](n); val g = new Array[Int](n); val b = new Array[Int](n)
     i = 0
@@ -741,12 +813,10 @@ object Engine {
       val v1 = b1(i) & 0xff; val v2 = b2(i) & 0xff
       if (v1 <= floorC && v2 <= floorC) { r(i) = 0; g(i) = 0; b(i) = 0 }
       else {
-        val rr = chan(v1, 1.15)
-        val gg = chan(v2, 1.10)
+        val rr = lutR(v1)
+        val gg = lutG(v2)
         r(i) = rr; g(i) = gg
-        val ratio = (rr + 8.0) / (gg + 8.0)
-        b(i) = math.round(math.min(math.max(
-          math.pow(ratio, 0.1) * 255.0 * 0.18, 0.0), 255.0)).toInt
+        b(i) = lutB((rr << 8) | gg) & 0xff
       }
       i += 1
     }

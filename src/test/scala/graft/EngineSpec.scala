@@ -277,6 +277,70 @@ class EngineSpec extends SparkSpec {
       e2.getMessage.contains("-tps"), e2.getMessage)
   }
 
+  /** The per-pixel synRGB compose the lookup tables replace, kept as the
+    * reference: default compose, then the suppressed one with its floor.
+    */
+  private def synRgbByFormula(b1: Array[Int], b2: Array[Int]): (Array[Int], Array[Int], Array[Int]) = {
+    val lutR = Array.tabulate(256)(v =>
+      math.min(255, math.max(0, math.round(math.pow(v / 255.0, 0.7) * 255.0))).toInt)
+    val lutG = Array.tabulate(256)(v =>
+      math.min(255, math.max(0, math.round(math.pow(v / 255.0, 0.9) * 255.0))).toInt)
+    val r = b1.map(v => lutR(v & 0xff)); val g = b2.map(v => lutG(v & 0xff))
+    val b = b2.indices.map { i =>
+      if (b2(i) == 0) 0
+      else {
+        val ratio = r(i).toDouble / g(i).toDouble
+        val v = math.pow(ratio, 0.1) * 255.0 * 0.24
+        math.round(math.min(255.0, math.max(0.0, v))).toInt
+      }
+    }.toArray
+    (r, g, b)
+  }
+
+  private def suppressedByFormula(b1: Array[Int], b2: Array[Int])
+      : ((Array[Int], Array[Int], Array[Int]), Int) = {
+    val hist = new Array[Long](256)
+    b1.foreach(v => hist(v & 0xff) += 1)
+    b2.foreach(v => hist(v & 0xff) += 1)
+    val target = math.round((b1.length + b2.length).toDouble * 0.05)
+    val floorValue = hist.scanLeft(0L)(_ + _).tail.indexWhere(_ >= target) max 0
+    val floorC = math.min(floorValue + 3, 40)
+    val floorD = floorC.toDouble
+    val denom = math.max(255.0 - floorD, 1.0)
+    def chan(v: Int, gamma: Double): Int =
+      if (v <= floorC) 0
+      else {
+        val shifted = (v - floorD) / denom
+        math.round(math.min(math.max(math.pow(shifted, gamma) * 255.0, 0.0), 255.0)).toInt
+      }
+    val px = b1.indices.map { i =>
+      val v1 = b1(i) & 0xff; val v2 = b2(i) & 0xff
+      if (v1 <= floorC && v2 <= floorC) (0, 0, 0)
+      else {
+        val rr = chan(v1, 1.15); val gg = chan(v2, 1.10)
+        val ratio = (rr + 8.0) / (gg + 8.0)
+        (rr, gg, math.round(math.min(math.max(
+          math.pow(ratio, 0.1) * 255.0 * 0.18, 0.0), 255.0)).toInt)
+      }
+    }
+    ((px.map(_._1).toArray, px.map(_._2).toArray, px.map(_._3).toArray), floorC)
+  }
+
+  test("synRGB compose by lookup table equals the per-pixel formula on every (v1, v2)") {
+    val v1 = Array.tabulate(65536)(_ >>> 8); val v2 = Array.tabulate(65536)(_ & 0xff)
+    def same(a: (Array[Int], Array[Int], Array[Int]), b: (Array[Int], Array[Int], Array[Int])) =
+      a._1.sameElements(b._1) && a._2.sameElements(b._2) && a._3.sameElements(b._3)
+    assert(same(Engine.composeSynRgb(v1, v2), synRgbByFormula(v1, v2)), "default compose")
+    // every pair once, plus `pad` pixels at value f in both bands, which
+    // moves the combined p05 — and so the suppression floor — to f
+    for ((f, pad, floorC) <- Seq((0, 10000, 3), (20, 150000, 23), (37, 200000, 40), (60, 400000, 40))) {
+      val b1 = v1 ++ Array.fill(pad)(f); val b2 = v2 ++ Array.fill(pad)(f)
+      val (ref, refFloor) = suppressedByFormula(b1, b2)
+      assert(refFloor == floorC, s"pad $pad at $f gives floor $refFloor")
+      assert(same(Engine.composeSynRgbSuppressed(b1, b2), ref), s"suppressed compose at floor $floorC")
+    }
+  }
+
   test("E2E single band: synthetic raster → TIFF + sidecars") {
     val dir = tmpDir
     val out = s"$dir/prod.tiff"

@@ -1,7 +1,9 @@
 package graft
 
+import graft.api.Engine
 import graft.geom.{Proj, Resample, Warp}
 import graft.model._
+import graft.sources.{RasterSource, Tile}
 
 /** S8 warp resolution AND native execution
   * (`/root/reference/src/io/sentinel1.rs:913-1072` decision semantics):
@@ -291,6 +293,112 @@ class WarpSpec extends SparkSpec {
     val vals = out.flatMap(_.pixels)
     assert(vals.exists(_ == 3.25f), "interior samples must hit the constant")
     assert(vals.forall(v => v >= 0.0f && v <= 3.25f + 1e-4f))
+  }
+
+  /** Driver-side warp reference: every block of [[Engine.warpTiles]]'
+    * output grid resampled by the same per-block kernel, reading the full
+    * source image instead of the shipped windows.
+    */
+  private def warpReference(src: Array[Float], plan: Warp.NativeWarp,
+                            tileSize: Int): Array[Float] = {
+    val g = Engine.warpBlockEdge(plan, tileSize)
+    val srcFrac = Engine.warpSrcFrac(plan)
+    val get: (Int, Int) => Float = (r, c) => src(r * plan.srcCols + c)
+    val out = new Array[Float](plan.dstRows * plan.dstCols)
+    for (y0 <- 0 until plan.dstRows by g; x0 <- 0 until plan.dstCols by g)
+      Engine.warpBlock(srcFrac, plan.alg, get, plan.srcRows, plan.srcCols, y0, x0,
+        math.min(g, plan.dstRows - y0), math.min(g, plan.dstCols - x0),
+        out, y0 * plan.dstCols + x0, plan.dstCols)
+    out
+  }
+
+  /** Row-major image of a tile set; absent tiles stay zero. */
+  private def assemble(tiles: Array[Tile], rows: Int, cols: Int, tileSize: Int): Array[Float] = {
+    val img = new Array[Float](rows * cols)
+    tiles.foreach { t =>
+      for (y <- 0 until t.h)
+        System.arraycopy(t.pixels, y * t.w, img,
+          (t.tile_row * tileSize + y) * cols + t.tile_col * tileSize, t.w)
+    }
+    img
+  }
+
+  test("warpTiles equals the full-source reference float for float (near/bilinear/cubic, k = 1/2/4, rotated)") {
+    val tileSize = 64
+    val rows = 200; val cols = 260
+    val north = Array(730000.0, 10.0, 0.0, 5000000.0, 0.0, -10.0)
+    val c = math.cos(math.toRadians(5.0)); val s = math.sin(math.toRadians(5.0))
+    val rotated = Array(730000.0, 10.0 * c, 10.0 * s, 5000000.0, 10.0 * s, -10.0 * c)
+    // speckled synthetic band; 200×260 leaves partial edge tiles
+    val tiles = RasterSource.scan(spark, "exact", "vv", rows, cols, tileSize = tileSize)
+    val src = assemble(tiles.collect(), rows, cols, tileSize)
+    // target size → block factor k: none keeps k = 1, 1.5× gives 2, 3× gives 4
+    val shrinks = Seq(None -> 1, Some(173) -> 2, Some(87) -> 4)
+    val algs = Seq("nearest", "bilinear", "cubic")
+    // every alg at every k north-up; the rotated grid once per k
+    val cases = (for (alg <- algs; (ts, k) <- shrinks) yield ("north", north, alg, ts, k)) ++
+      shrinks.zip(algs).map { case ((ts, k), alg) => ("rotated", rotated, alg, ts, k) }
+    cases.foreach { case (name, gt, alg, ts, k) =>
+      val plan = Warp.nativePlan(Some("EPSG:32632"), "EPSG:32633", Some(gt), rows, cols,
+        resampleAlg = Some(alg), targetSize = ts).get
+      val what = s"$name ${plan.alg} k=$k"
+      assert(Engine.warpBlockEdge(plan, tileSize) == tileSize / k, what)
+      val ref = warpReference(src, plan, tileSize)
+      val out = Engine.warpTiles(tiles, plan, tileSize).collect()
+      assert(out.map(t => (t.tile_row, t.tile_col)).distinct.length == out.length,
+        s"$what: one record per output tile")
+      val got = assemble(out, plan.dstRows, plan.dstCols, tileSize)
+      val bad = got.indices.filter(i =>
+        java.lang.Float.floatToRawIntBits(got(i)) != java.lang.Float.floatToRawIntBits(ref(i)))
+      assert(bad.isEmpty, s"$what: ${bad.length} pixels differ, first at ${bad.headOption
+        .map(i => (i / plan.dstCols, i % plan.dstCols, got(i), ref(i)))}")
+      // the output grid bounds the projected source, so its corner block
+      // straddles the source edge: that block's window is clipped there
+      val corner = for (y <- 0 until tileSize / k; x <- 0 until tileSize / k)
+        yield ref(y * plan.dstCols + x)
+      assert(corner.contains(0.0f) && corner.exists(_ != 0.0f), s"$what: corner block not clipped")
+    }
+  }
+
+  test("warpTiles ships each block only its source window, in one exchange") {
+    import org.apache.spark.scheduler._
+    val sc = spark.sparkContext
+    val rows = 768; val cols = 768
+    val gt = Array(730000.0, 10.0, 0.0, 5000000.0, 0.0, -10.0)
+    val src = RasterSource.scan(spark, "guard", "vv", rows, cols)
+    // 768² → 512: 1.5× shrink, 128-px blocks
+    val plan = Warp.nativePlan(Some("EPSG:32632"), "EPSG:32633", Some(gt), rows, cols,
+      targetSize = Some(512)).get
+    val group = "warp-shuffle-guard"
+    val ours = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val written = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
+    val ended = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val listener = new SparkListener {
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
+          ours.add(e.stageInfo.stageId)
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        if (ours.contains(e.stageInfo.stageId))
+          written.put(e.stageInfo.stageId, e.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = ended.add(e.jobId)
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "warp shuffle guard")
+      try Engine.warpTiles(src, plan).collect() finally sc.clearJobGroup()
+      // listener events arrive in order: once a later job's end is seen,
+      // every stage of the warp has been reported
+      val marker = sc.parallelize(Seq(1), 1).countAsync()
+      scala.concurrent.Await.result(marker, scala.concurrent.duration.Duration(60, "s"))
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (!marker.jobIds.forall(ended.contains) && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(marker.jobIds.forall(ended.contains), "listener bus did not drain")
+    } finally sc.removeSparkListener(listener)
+    val shuffles = written.values().toArray.map(_.asInstanceOf[Long]).filter(_ > 0)
+    val srcBytes = rows.toLong * cols * 4
+    assert(shuffles.length == 1, s"shuffle stages: ${shuffles.toSeq}")
+    assert(shuffles.sum <= srcBytes * 3 / 2,
+      s"shuffle wrote ${shuffles.sum} B for $srcBytes B of source floats")
   }
 
   test("Resample kernels: outside → 0, bilinear/cubic reproduce linear data") {
