@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.enhance.{Clahe, LocalStats, SynRgbSuppressed}
-import graft.ext.{Curation, Dedup, Events, Graph, Ivf, Mix, Pii, Relational, Similarity, Sketch, TextOps}
+import graft.ext.{Curation, Dedup, Events, Graph, Ivf, Mix, Pii, Relational, Similarity, Sketch, Tables, TextOps}
 import graft.ops.PixelOps
 import graft.sources.Multimodal
 import graft.stats.HistStats
@@ -29,7 +29,7 @@ object SparkEntry {
   // ---------------------------------------------------------------- helpers
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+    Tables.parquet(s, s"$dir/$name.parquet")
 
   /** dB-domain pixel view of lineitem: the SAR "band" fixture per
     * FIXTURES.md §C (l_extendedprice as the pixel magnitude).

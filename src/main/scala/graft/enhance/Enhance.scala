@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.ext.Tables
 import graft.ops.PixelOps
 import graft.stats.HistStats
 
@@ -36,7 +37,7 @@ object Grid {
     * across buckets.
     */
   def df(s: SparkSession, dir: String): DataFrame = {
-    val li = s.read.parquet(s"$dir/lineitem.parquet")
+    val li = Tables.parquet(s, s"$dir/lineitem.parquet")
     // one cheap single-column agg (driver scalar) to size the buckets;
     // max() over an empty relation is null → empty grid, bucket width 1
     val maxRow = li.agg(max(col("l_orderkey").cast("long"))).head()
@@ -569,7 +570,7 @@ object LocalStats {
   */
 object SynRgbSuppressed {
   def query(s: SparkSession, dir: String): DataFrame = {
-    val part = s.read.parquet(s"$dir/part.parquet")
+    val part = Tables.parquet(s, s"$dir/part.parquet")
     val withBands = part.select(col("p_partkey"),
       (col("p_partkey") % 256).as("b1"),
       ((col("p_partkey") * 7 + 3) % 256).as("b2"))

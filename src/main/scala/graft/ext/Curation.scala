@@ -32,7 +32,7 @@ object Curation {
   val QualityMin = 0.4
 
   private def t(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/documents.parquet")
+    Tables.parquet(s, s"$dir/documents.parquet")
 
   /** Per-(stage, source) funnel — the per-source breakdown makes the
     * funnel compose with W1's mixture weights: one query yields the

@@ -26,7 +26,7 @@ import org.apache.spark.sql.functions._
 object Dedup {
 
   private def t(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/documents.parquet")
+    Tables.parquet(s, s"$dir/documents.parquet")
 
   /** D1: exact dedup — canonical id = min doc_id per identical text.
     * Keyed on md5(text), not the text itself, so the exchanges carry
@@ -2035,7 +2035,7 @@ object Dedup {
     val cand = bandCandidates(sig)
     val matches = (0 until NumHashes).map(i =>
       when(col(s"a.m$i") === col(s"b.m$i"), 1L).otherwise(0L)).reduce(_ + _)
-    val src = s.read.parquet(s"$dir/documents.parquet")
+    val src = Tables.parquet(s, s"$dir/documents.parquet")
       .select(col("doc_id"), col("source"))
     val scored = cand
       .join(sig.as("a"), col("doc_a") === col("a.doc_id"))

@@ -29,7 +29,7 @@ object Events {
     * wall-clock-as-UTC epoch DuckDB's `epoch_us` computes.
     */
   private def t(s: SparkSession, dir: String): DataFrame = {
-    val raw = s.read.parquet(s"$dir/events.parquet")
+    val raw = Tables.parquet(s, s"$dir/events.parquet")
     import org.apache.spark.sql.types.{LongType, TimestampNTZType}
     val us = raw.schema("ts").dataType match {
       case LongType         => expr("ts div 1000")
@@ -572,7 +572,7 @@ object Events {
     * engines.
     */
   def pointInTime(s: SparkSession, dir: String): DataFrame = {
-    val ord = s.read.parquet(s"$dir/orders.parquet")
+    val ord = Tables.parquet(s, s"$dir/orders.parquet")
       .select(col("o_custkey").as("user_id"),
         // parquet TIMESTAMP(ms) surfaces as NTZ; the UTC session cast
         // states the same wall-clock→epoch mapping DuckDB's epoch_us uses

@@ -25,7 +25,7 @@ import org.apache.spark.sql.types.DecimalType
 object Graph {
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+    Tables.parquet(s, s"$dir/$name.parquet")
 
   val Damping = 0.85
   val PrIters = 3

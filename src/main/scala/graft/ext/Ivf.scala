@@ -71,7 +71,7 @@ object Ivf {
     */
   private def embBase(s: SparkSession, dir: String): DataFrame =
     SessionMemo.rearm(SessionMemo.get[DataFrame](s, s"ivf:emb:$dir") {
-      s.read.parquet(s"$dir/embeddings.parquet")
+      Tables.parquet(s, s"$dir/embeddings.parquet")
         .withColumn("features", toVec(col("embedding")))
         .withColumn("nrm", Similarity.norm(col("embedding")))
         .persist()

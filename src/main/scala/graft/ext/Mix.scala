@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
 object Mix {
 
   private def docs(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/documents.parquet")
+    Tables.parquet(s, s"$dir/documents.parquet")
 
   private def docHash: Column = TextOps.tokenHash(col("doc_id").cast("string"))
 

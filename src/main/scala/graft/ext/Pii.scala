@@ -80,7 +80,7 @@ object Pii {
 
   /** W3 registry query over the augmented corpus column. */
   def piiScan(s: SparkSession, dir: String): DataFrame =
-    piiScanFrom(s.read.parquet(s"$dir/documents.parquet")
+    piiScanFrom(Tables.parquet(s, s"$dir/documents.parquet")
       .select(col("doc_id"), augmented(col("text"), col("doc_id")).as("t")))
 
   /** [[piiScan]] over an explicit `(doc_id, t)` relation — the spec
@@ -116,7 +116,7 @@ object Pii {
     * scan, zero shuffle; same Java∩RE2 regex contract.
     */
   def piiRedact(s: SparkSession, dir: String): DataFrame =
-    piiRedactFrom(s.read.parquet(s"$dir/documents.parquet")
+    piiRedactFrom(Tables.parquet(s, s"$dir/documents.parquet")
       .select(col("doc_id"), augmented(col("text"), col("doc_id")).as("t")))
 
   /** [[piiRedact]] over an explicit `(doc_id, t)` relation. */

@@ -18,7 +18,7 @@ import org.apache.spark.sql.types.DecimalType
 object Relational {
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+    Tables.parquet(s, s"$dir/$name.parquet")
 
   private val revenueDec =
     sum((col("l_extendedprice").cast(DecimalType(18, 2)) *

@@ -30,7 +30,7 @@ object Similarity {
   val Dim = 64
 
   private def t(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/embeddings.parquet")
+    Tables.parquet(s, s"$dir/embeddings.parquet")
 
   /** Left-assoc dot product of two Array[Float] columns — the native
     * codegen'd [[graft.plans.DotProductExpr]], resolved through the
@@ -1400,7 +1400,7 @@ object Similarity {
     import org.apache.spark.sql.types.DecimalType
     val emb = withNorm(t(s, dir))
       .select(col("vec_id"), round(col("nrm"), 6).as("x"))
-    val docs = s.read.parquet(s"$dir/documents.parquet")
+    val docs = Tables.parquet(s, s"$dir/documents.parquet")
       .select(col("doc_id"), col("source"),
         round(log(lit(1.0) + col("n_chars").cast("double")), 9).as("y"))
     val dec = DecimalType(25, 12)

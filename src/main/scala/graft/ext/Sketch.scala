@@ -45,7 +45,7 @@ object Sketch {
   val Registers = 256
 
   private def events(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/events.parquet")
+    Tables.parquet(s, s"$dir/events.parquet")
 
   /** HLL-256 register relation `(event_type, bucket, rho)` for the
     * distinct-`user_id` sketch — only OCCUPIED registers appear (empty
@@ -202,7 +202,7 @@ object Sketch {
     * contract; in Bench.extraIters).
     */
   def cmsHeavyHitters(s: SparkSession, dir: String): DataFrame = {
-    val vocab = s.read.parquet(s"$dir/documents.parquet")
+    val vocab = Tables.parquet(s, s"$dir/documents.parquet")
       .select(explode(TextOps.tokens(col("text"))).as("tok"))
       .groupBy("tok").agg(count(lit(1)).as("cnt"))
       .persist()
@@ -281,7 +281,7 @@ object Sketch {
     * Bench.extraIters).
     */
   def kmvOverlap(s: SparkSession, dir: String): DataFrame = {
-    val sh = s.read.parquet(s"$dir/documents.parquet")
+    val sh = Tables.parquet(s, s"$dir/documents.parquet")
       .select(col("source"), kmvHash(col("text")).as("h"))
       .distinct().persist()
     val nPer = sh.groupBy("source").agg(count(lit(1)).as("n"))

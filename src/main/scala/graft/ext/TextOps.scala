@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
 object TextOps {
 
   private def t(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/documents.parquet")
+    Tables.parquet(s, s"$dir/documents.parquet")
 
   /** Non-empty whitespace tokens of a text column. NULL text yields an
     * EMPTY array (r13 ADVICE): the per-row fold consumers (t6/t13

@@ -98,10 +98,26 @@ object GraftExtensions {
     new ExpressionInfo(classOf[DbExpression].getName, "graft_db"),
     (children: Seq[Expression]) => DbExpression(Cast(children.head, DoubleType)))
 
+  val ArtifactIsolationKey = "spark.sql.artifact.isolation.enabled"
+
   /** Register on an already-created session (e.g. when getOrCreate
-    * returned a session built without the extensions config).
+    * returned a session built without the extensions config). Every
+    * session graft touches passes through here first.
+    *
+    * It also sets [[ArtifactIsolationKey]] to `false` unless the caller
+    * set that key explicitly. Spark keys its codegen cache by (context
+    * classloader, code), and with isolation on (Spark's default) the
+    * executor runs each session's tasks under that session's own
+    * `ExecutorClassLoader`, so every fresh session recompiled the
+    * generated classes an earlier session had already compiled. graft
+    * adds no session artifacts (jars, files, classes), so there is
+    * nothing to isolate: with the key off, tasks share one classloader
+    * and the cache serves every later session. Spark reads the key once
+    * per session, on its first query, so this must come before that.
     */
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {
+    if (!spark.conf.getAll.contains(ArtifactIsolationKey))
+      spark.conf.set(ArtifactIsolationKey, "false")
     spark.sessionState.functionRegistry.registerFunction(
       dbFunction._1, dbFunction._2, dbFunction._3)
     spark.sessionState.functionRegistry.registerFunction(

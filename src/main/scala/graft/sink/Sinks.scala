@@ -1,6 +1,6 @@
 package graft.sink
 
-import java.awt.image.{BufferedImage, DataBufferUShort}
+import java.awt.image.{BufferedImage, DataBufferByte, DataBufferUShort}
 import java.io.{ByteArrayOutputStream, File}
 import java.nio.file.{Files, Paths}
 import javax.imageio.ImageIO
@@ -16,15 +16,15 @@ object Sinks {
 
   // --------------------------------------------------------------- images
 
+  // Pixels go straight into the image's backing array: per-pixel
+  // setSample/setRGB converts through the sample and colour models on
+  // every pixel, about half of a 2048² JPEG sink's time. SinksSpec pins
+  // the encoded bytes to those of the per-pixel path.
   private def grayU8(img: Array[Int], w: Int, h: Int): BufferedImage = {
     val bi = new BufferedImage(w, h, BufferedImage.TYPE_BYTE_GRAY)
-    val raster = bi.getRaster
-    var y = 0
-    while (y < h) {
-      var x = 0
-      while (x < w) { raster.setSample(x, y, 0, img(y * w + x) & 0xff); x += 1 }
-      y += 1
-    }
+    val buf = bi.getRaster.getDataBuffer.asInstanceOf[DataBufferByte].getData
+    var i = 0
+    while (i < w * h) { buf(i) = img(i).toByte; i += 1 }
     bi
   }
 
@@ -37,16 +37,14 @@ object Sinks {
   }
 
   private def rgb(r: Array[Int], g: Array[Int], b: Array[Int], w: Int, h: Int): BufferedImage = {
-    val bi = new BufferedImage(w, h, BufferedImage.TYPE_INT_RGB)
-    var y = 0
-    while (y < h) {
-      var x = 0
-      while (x < w) {
-        val i = y * w + x
-        bi.setRGB(x, y, ((r(i) & 0xff) << 16) | ((g(i) & 0xff) << 8) | (b(i) & 0xff))
-        x += 1
-      }
-      y += 1
+    val bi = new BufferedImage(w, h, BufferedImage.TYPE_3BYTE_BGR)
+    val buf = bi.getRaster.getDataBuffer.asInstanceOf[DataBufferByte].getData
+    var i = 0
+    while (i < w * h) {
+      buf(3 * i) = b(i).toByte
+      buf(3 * i + 1) = g(i).toByte
+      buf(3 * i + 2) = r(i).toByte
+      i += 1
     }
     bi
   }

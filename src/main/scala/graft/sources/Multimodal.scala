@@ -5,6 +5,8 @@ import org.apache.spark.sql.catalyst.encoders.RowEncoder
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.ext.Tables
+
 /** Multimodal column plumbing: opaque `binary` payloads + typed metadata,
   * with decode / feature-extract / frame-sample implemented as
   * `mapPartitions` batch transforms (the Scala analog of `mapInPandas`).
@@ -24,7 +26,7 @@ object Multimodal {
     * source id.
     */
   def table(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/documents.parquet")
+    Tables.parquet(s, s"$dir/documents.parquet")
       .select(col("doc_id"),
         concat(lit("modality_"), col("source")).as("modality"),
         col("text").cast("binary").as("payload"))

@@ -2,6 +2,7 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.enhance.Clahe
+import graft.ext.Tables
 
 /** Warm-leg breakdown of a4_clahe (dev utility): after one cold run
   * populates the persists, times each warm sub-action separately.
@@ -28,7 +29,7 @@ object A4Warm {
     (1 to 2).foreach { it =>
       println(s"[a4warm] --- warm iteration $it")
       time("Grid.df construct (incl. max head job)")(graft.enhance.Grid.df(spark, dir))
-      val li = spark.read.parquet(s"$dir/lineitem.parquet")
+      val li = Tables.parquet(spark, s"$dir/lineitem.parquet")
       time("bare max(l_orderkey) head")(li.agg(max(col("l_orderkey").cast("long"))).head())
       time("construct query()")(Clahe.query(spark, dir))
       val q = Clahe.query(spark, dir)

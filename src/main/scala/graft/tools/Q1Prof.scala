@@ -4,6 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.ext.Tables
+
 /** Stage profile of q1_agg's 1.2 s warm floor at sf0.1: is it the scan,
   * the DECIMAL aggregation, or harness overhead? Diagnostic only.
   */
@@ -27,7 +29,7 @@ object Q1Prof {
       }
       println(f"  $label%-34s min ${runs.min}%.3f  all ${runs.map(r => f"$r%.2f").mkString(" ")}")
     }
-    val li = spark.read.parquet(s"$dir/lineitem.parquet")
+    val li = Tables.parquet(spark, s"$dir/lineitem.parquet")
     li.count() // warm FS cache
     t("count only")(li.count())
     t("raw double agg") {

@@ -2,7 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import graft.ext.Similarity
+import graft.ext.{Similarity, Tables}
 
 /** Dev utility: stage-level timing of the s3 near-dup plan — isolates
   * the corpus scan and the coded-band materialization from candidate
@@ -37,7 +37,7 @@ object S3Prof {
       r
     }
     spark.range(1000000).count()
-    val emb = spark.read.parquet(s"$dir/embeddings.parquet")
+    val emb = Tables.parquet(spark, s"$dir/embeddings.parquet")
       .withColumn("nrm", Similarity.norm(col("embedding")))
     time("scan+nrm count")(emb.count())
     (1 to 2).foreach { i =>

@@ -3,6 +3,8 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.ext.Tables
+
 /** Opt-in larger-SF scaling tier (r21, r20 verdict #5).
   *
   * PERF_r20's scaling block showed every surviving sf0.1 entry is
@@ -71,13 +73,13 @@ object ScaleTier {
     */
   private def replicate(s: SparkSession, src: String, dst: String,
                         table: String, keys: Seq[String], k: Int): Long = {
-    val base = s.read.parquet(s"$src/$table.parquet")
+    val base = Tables.parquet(s, s"$src/$table.parquet")
     val copies = (0 until k).map { i =>
       keys.foldLeft(base) { (d, c) => d.withColumn(c, col(c) + lit(i * Shift)) }
     }
     val all = copies.reduce(_ unionAll _)
     all.write.mode("overwrite").parquet(s"$dst/$table.parquet")
-    s.read.parquet(s"$dst/$table.parquet").count()
+    Tables.parquet(s, s"$dst/$table.parquet").count()
   }
 
   def main(args: Array[String]): Unit = {

@@ -372,7 +372,6 @@ class WarpSpec extends SparkSpec {
     val group = "warp-shuffle-guard"
     val ours = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
     val written = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
-    val ended = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
     val listener = new SparkListener {
       override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
         if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
@@ -380,19 +379,12 @@ class WarpSpec extends SparkSpec {
       override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
         if (ours.contains(e.stageInfo.stageId))
           written.put(e.stageInfo.stageId, e.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-      override def onJobEnd(e: SparkListenerJobEnd): Unit = ended.add(e.jobId)
     }
     sc.addSparkListener(listener)
     try {
       sc.setJobGroup(group, "warp shuffle guard")
       try Engine.warpTiles(src, plan).collect() finally sc.clearJobGroup()
-      // listener events arrive in order: once a later job's end is seen,
-      // every stage of the warp has been reported
-      val marker = sc.parallelize(Seq(1), 1).countAsync()
-      scala.concurrent.Await.result(marker, scala.concurrent.duration.Duration(60, "s"))
-      val deadline = System.nanoTime() + 60L * 1000000000L
-      while (!marker.jobIds.forall(ended.contains) && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(marker.jobIds.forall(ended.contains), "listener bus did not drain")
+      drainListeners()
     } finally sc.removeSparkListener(listener)
     val shuffles = written.values().toArray.map(_.asInstanceOf[Long]).filter(_ > 0)
     val srcBytes = rows.toLong * cols * 4
