@@ -541,12 +541,14 @@ object Engine {
 
   /** Resamples the output block at (y0, x0) of size h×w into `out`, row y
     * at `off + y * stride` — the per-block kernel of [[warpTiles]], pure
-    * in `get` (source pixel at (row, col); 0 outside what it holds).
+    * in `get` (source pixel at (row, col); 0 outside what it holds). The
+    * sampling kernel is picked once per block.
     */
   private[graft] def warpBlock(srcFrac: (Double, Double) => (Double, Double), alg: String,
                                get: (Int, Int) => Float, srcRows: Int, srcCols: Int,
                                y0: Int, x0: Int, h: Int, w: Int,
                                out: Array[Float], off: Int, stride: Int): Unit = {
+    val kernel = graft.geom.Resample.kernel(alg)
     var y = 0
     while (y < h) {
       val py = (y0 + y).toDouble
@@ -587,7 +589,7 @@ object Engine {
           } else if (x == 0) (fr0, fc0)
           else if (x == w - 1) (fr1, fc1)
           else srcFrac(py, (x0 + x).toDouble)
-        out(i) = graft.geom.Resample.sample(alg, get, srcRows, srcCols, fr, fc)
+        out(i) = kernel(get, srcRows, srcCols, fr, fc)
         i += 1; x += 1
       }
       y += 1
@@ -781,13 +783,15 @@ object Engine {
     */
   def composeSynRgbSuppressed(b1: Array[Int], b2: Array[Int]): (Array[Int], Array[Int], Array[Int]) = {
     val hist = new Array[Long](256)
-    b1.foreach(v => hist(v & 0xff) += 1)
-    b2.foreach(v => hist(v & 0xff) += 1)
+    var i = 0
+    while (i < b1.length) { hist(b1(i) & 0xff) += 1; i += 1 }
+    i = 0
+    while (i < b2.length) { hist(b2(i) & 0xff) += 1; i += 1 }
     val total = (b1.length + b2.length).toLong
     val target = math.round(total.toDouble * 0.05)
     var cum = 0L
     var floorValue = 0
-    var i = 0
+    i = 0
     var found = false
     while (i < 256 && !found) {
       cum += hist(i)
@@ -823,14 +827,71 @@ object Engine {
     (r, g, b)
   }
 
-  /** Two-band pipeline (K10): SEQUENTIAL staging — band 1's jobs run and
-    * its cache drops before band 2 starts (bounded peak memory,
-    * `save.rs:240-280`). Each band is autoscaled (full strategy dispatch
-    * incl. per-band CLAHE) and RESIZED first; then, for JPEG, synRGB
-    * composes on the final-size u8 bands (`save.rs` order). TIFF output
-    * carries the two autoscaled bands at the requested bit depth;
-    * synRGB strategy routing mirrors `synthetic_rgb.rs:182-197`
-    * (Tamed/Clahe → suppressed compose).
+  // ------------------------------------------------------------ overlap
+
+  /** Most pipelines [[overlapped]] runs at once. Two fill the cores that
+    * one pipeline leaves idle at its job barriers and through its
+    * driver-side tail (collect, resize, encode) while holding at most two
+    * pipelines' caches.
+    */
+  private val MaxInFlight = 2
+
+  /** Runs `f` over `items` with at most two items in flight, and returns
+    * the results in input order.
+    *
+    * Items start in input order. If an item throws, no further item
+    * starts; the call waits for every item already started (so each one's
+    * own `finally` unpersists run) and then rethrows the first failure in
+    * input order. It also waits through an interrupt, which it restores
+    * before returning.
+    *
+    * The lane threads are created per call, from the caller's thread, so
+    * each inherits a clone of the caller's Spark local properties (job
+    * group, description, scheduler pool) and active session as they are
+    * at the call; a JVM-wide pool would carry whatever its first caller
+    * had set. A single item runs on the caller's thread.
+    */
+  private[graft] def overlapped[A, B](items: Seq[A])(f: A => B): Seq[B] = {
+    val in = items.toIndexedSeq
+    if (in.length <= 1) return in.map(f)
+    val results = new Array[Any](in.length)
+    val failures = new Array[Throwable](in.length)
+    val next = new java.util.concurrent.atomic.AtomicInteger(0)
+    val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val lanes = Seq.tabulate(math.min(MaxInFlight, in.length)) { l =>
+      val t = new Thread(() => {
+        var i = next.getAndIncrement()
+        while (i < in.length && !stop.get) {
+          try results(i) = f(in(i))
+          catch { case e: Throwable => failures(i) = e; stop.set(true) }
+          i = next.getAndIncrement()
+        }
+      }, s"graft-overlapped-$l")
+      t.setDaemon(true)
+      t
+    }
+    lanes.foreach(_.start())
+    var interrupted = false
+    lanes.foreach { t =>
+      while (t.isAlive)
+        try t.join() catch { case _: InterruptedException => interrupted = true }
+    }
+    if (interrupted) Thread.currentThread().interrupt()
+    failures.find(_ != null).foreach(e => throw e)
+    results.toSeq.map(_.asInstanceOf[B])
+  }
+
+  /** Two-band pipeline (K10): the two bands run as independent pipelines
+    * through [[overlapped]], so band 2's jobs fill the cores band 1
+    * leaves idle between its jobs and through its collect, resize and
+    * pad. Peak memory is therefore both bands' caches at once (the
+    * reference stages them one after the other, `save.rs:240-280`); each
+    * band drops its own caches as it finishes. Each band is autoscaled
+    * (full strategy dispatch incl. per-band CLAHE) and RESIZED first;
+    * once both are done, for JPEG, synRGB composes on the final-size u8
+    * bands (`save.rs` order). TIFF output carries the two autoscaled
+    * bands at the requested bit depth; synRGB strategy routing mirrors
+    * `synthetic_rgb.rs:182-197` (Tamed/Clahe → suppressed compose).
     */
   def processMultiband(spark: SparkSession, productId: String,
                        bands: (String, String), rows: Int, cols: Int,
@@ -878,8 +939,11 @@ object Engine {
         own.foreach(_.unpersist())
       }
     }
-    val (b1, fw, fh, newGt) = bandArr(bands._1, isCopol = true)
-    val (b2, _, _, _) = bandArr(bands._2, isCopol = false)
+    val done = overlapped(Seq(bands._1 -> true, bands._2 -> false)) {
+      case (band, isCopol) => bandArr(band, isCopol)
+    }
+    val (b1, fw, fh, newGt) = done(0)
+    val b2 = done(1)._1
     if (forTiff)
       ProcessedImage(fw, fh, params.bitDepth, None, None, newGt, Some((b1, b2)))
     else {
@@ -1168,39 +1232,51 @@ object Engine {
 
   /** E2 batch: per-product error isolation + report
     * (`process_directory_to_path`, `api/mod.rs:474-536`).
+    *
+    * Products run through [[overlapped]]: at most two at once, each one
+    * whole [[processToPath]] call, so one product's jobs run through the
+    * other's collect, TIFF encode and sidecars. Each product's outcome is
+    * its own: an empty product (zero rows or columns) is skipped with a
+    * warning on stderr, an unsupported product type is skipped, and any
+    * other exception is recorded and the batch goes on. The report lists
+    * errors in product order, whatever order the products finished in.
     */
   def processDirectory(spark: SparkSession,
                        products: Seq[(String, Int, Int)], outDir: String,
                        params: ProcessingParams): BatchReport = {
     new java.io.File(outDir).mkdirs()
-    var processed = 0
-    var skipped = 0
-    val errors = scala.collection.mutable.ArrayBuffer[(String, String)]()
-    products.foreach { case (id, rows, cols) =>
+    val ext = params.format match {
+      case OutputFormat.Tiff => "tiff"
+      case OutputFormat.Jpeg => "jpg"
+    }
+    val outcomes = overlapped(products) { case (id, rows, cols) =>
       // lenient-open semantics (S2): an empty/unsupported product is
       // SKIPPED with a warning, not an error (`api/mod.rs:502-532`)
       if (rows == 0 || cols == 0) {
         System.err.println(s"[batch] skipping unsupported/empty product: $id")
-        skipped += 1
+        Skipped
       } else try {
-        val ext = params.format match {
-          case OutputFormat.Tiff => "tiff"
-          case OutputFormat.Jpeg => "jpg"
-        }
         // the product type declared by the SAFE-style name (no manifest
         // for synthetic ids) feeds the same viability check the
         // reference runs at reader open (`sentinel1.rs:155-161`)
         val meta = SafeMeta(productType = SafeMeta.productTypeFromId(id))
         processToPath(spark, id, rows, cols, s"$outDir/$id.$ext", params, meta)
-        processed += 1
+        Processed
       } catch {
         // an unsupported product is SKIPPED (the reference's early
         // viability check, `api/mod.rs:486-532`), any other failure is
         // recorded and the batch continues
-        case _: graft.model.GraftException.UnsupportedProduct => skipped += 1
-        case e: Exception => errors += (id -> String.valueOf(e.getMessage))
+        case _: graft.model.GraftException.UnsupportedProduct => Skipped
+        case e: Exception => Failed(id, String.valueOf(e.getMessage))
       }
     }
-    BatchReport(processed, skipped, errors.toSeq)
+    BatchReport(outcomes.count(_ == Processed), outcomes.count(_ == Skipped),
+      outcomes.collect { case Failed(id, msg) => id -> msg })
   }
+
+  /** One product's outcome in [[processDirectory]]. */
+  private sealed trait Outcome
+  private case object Processed extends Outcome
+  private case object Skipped extends Outcome
+  private final case class Failed(id: String, msg: String) extends Outcome
 }

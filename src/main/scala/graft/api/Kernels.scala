@@ -42,17 +42,22 @@ object Kernels {
     out
   }
 
-  /** P7 over a dB tile: mask → clip → normalize → gamma → quantize. */
+  /** P7 over a dB tile: mask → clip → normalize → gamma → quantize. A
+    * gamma of 1.0 (Tamed synRGB, two Standard branches) skips the `pow`:
+    * `Math.pow(x, 1.0)` is specified to return `x`.
+    */
   def quantize(dbv: Array[Double], low: Double, high: Double,
                gamma: Double, maxVal: Double): Array[Int] = {
     val range = math.max(high - low, 1.0)
+    val linear = gamma == 1.0
     val out = new Array[Int](dbv.length)
     var i = 0
     while (i < dbv.length) {
       val d = dbv(i)
       if (valid(d)) {
         val clipped = math.min(math.max(d, low), high)
-        val normalized = math.pow((clipped - low) / range, gamma)
+        val t = (clipped - low) / range
+        val normalized = if (linear) t else math.pow(t, gamma)
         out(i) = math.floor(math.min(math.max(normalized * maxVal, 0.0), maxVal)).toInt
       }
       i += 1

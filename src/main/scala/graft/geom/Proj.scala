@@ -211,44 +211,78 @@ object Resample extends Serializable {
     else 0.0
   }
 
-  /** Sample `get(row, col)` at fractional (fr, fc). */
-  def sample(alg: String, get: (Int, Int) => Float, rows: Int, cols: Int,
-             fr: Double, fc: Double): Float = {
-    if (fr < -0.5 || fr > rows - 0.5 || fc < -0.5 || fc > cols - 0.5) return 0.0f
-    @inline def clampR(r: Int) = math.max(0, math.min(rows - 1, r))
-    @inline def clampC(c: Int) = math.max(0, math.min(cols - 1, c))
-    alg match {
-      case "near" =>
-        get(clampR(math.floor(fr + 0.5).toInt), clampC(math.floor(fc + 0.5).toInt))
-      case "cubic" =>
-        val r0 = math.floor(fr).toInt
-        val c0 = math.floor(fc).toInt
-        var acc = 0.0
-        var dr = -1
-        while (dr <= 2) {
-          val wr = cubicW(fr - (r0 + dr))
-          if (wr != 0.0) {
-            var dc = -1
-            while (dc <= 2) {
-              val wc = cubicW(fc - (c0 + dc))
-              if (wc != 0.0) acc += wr * wc * get(clampR(r0 + dr), clampC(c0 + dc))
-              dc += 1
-            }
+  @inline private def clamp(i: Int, n: Int): Int = math.max(0, math.min(n - 1, i))
+
+  /** One sampling algorithm: `get(row, col)` sampled at fractional (fr,
+    * fc) of a `rows × cols` source, 0 outside the source extent. Picked
+    * once by [[kernel]], so a caller sampling many points does not match
+    * the algorithm name per point.
+    */
+  sealed abstract class Kernel extends Serializable {
+    final def apply(get: (Int, Int) => Float, rows: Int, cols: Int,
+                    fr: Double, fc: Double): Float =
+      if (fr < -0.5 || fr > rows - 0.5 || fc < -0.5 || fc > cols - 0.5) 0.0f
+      else inside(get, rows, cols, fr, fc)
+    protected def inside(get: (Int, Int) => Float, rows: Int, cols: Int,
+                         fr: Double, fc: Double): Float
+  }
+
+  private object Near extends Kernel {
+    protected def inside(get: (Int, Int) => Float, rows: Int, cols: Int,
+                         fr: Double, fc: Double): Float =
+      get(clamp(math.floor(fr + 0.5).toInt, rows), clamp(math.floor(fc + 0.5).toInt, cols))
+  }
+
+  private object Cubic extends Kernel {
+    protected def inside(get: (Int, Int) => Float, rows: Int, cols: Int,
+                         fr: Double, fc: Double): Float = {
+      val r0 = math.floor(fr).toInt
+      val c0 = math.floor(fc).toInt
+      var acc = 0.0
+      var dr = -1
+      while (dr <= 2) {
+        val wr = cubicW(fr - (r0 + dr))
+        if (wr != 0.0) {
+          var dc = -1
+          while (dc <= 2) {
+            val wc = cubicW(fc - (c0 + dc))
+            if (wc != 0.0) acc += wr * wc * get(clamp(r0 + dr, rows), clamp(c0 + dc, cols))
+            dc += 1
           }
-          dr += 1
         }
-        acc.toFloat
-      case _ => // bilinear (the reference's default warp alg)
-        val r0 = math.floor(fr).toInt
-        val c0 = math.floor(fc).toInt
-        val wr = fr - r0
-        val wc = fc - c0
-        val v00 = get(clampR(r0), clampC(c0))
-        val v01 = get(clampR(r0), clampC(c0 + 1))
-        val v10 = get(clampR(r0 + 1), clampC(c0))
-        val v11 = get(clampR(r0 + 1), clampC(c0 + 1))
-        ((v00 * (1.0 - wc) + v01 * wc) * (1.0 - wr) +
-          (v10 * (1.0 - wc) + v11 * wc) * wr).toFloat
+        dr += 1
+      }
+      acc.toFloat
     }
   }
+
+  private object Bilinear extends Kernel {
+    protected def inside(get: (Int, Int) => Float, rows: Int, cols: Int,
+                         fr: Double, fc: Double): Float = {
+      val r0 = math.floor(fr).toInt
+      val c0 = math.floor(fc).toInt
+      val wr = fr - r0
+      val wc = fc - c0
+      val v00 = get(clamp(r0, rows), clamp(c0, cols))
+      val v01 = get(clamp(r0, rows), clamp(c0 + 1, cols))
+      val v10 = get(clamp(r0 + 1, rows), clamp(c0, cols))
+      val v11 = get(clamp(r0 + 1, rows), clamp(c0 + 1, cols))
+      ((v00 * (1.0 - wc) + v01 * wc) * (1.0 - wr) +
+        (v10 * (1.0 - wc) + v11 * wc) * wr).toFloat
+    }
+  }
+
+  /** The kernel of a warp algorithm name; any name other than near and
+    * cubic is bilinear, the reference's default warp alg.
+    */
+  def kernel(alg: String): Kernel = alg match {
+    case "near" => Near
+    case "cubic" => Cubic
+    case _ => Bilinear
+  }
+
+  /** Sample `get(row, col)` at fractional (fr, fc). */
+  def sample(alg: String, get: (Int, Int) => Float, rows: Int, cols: Int,
+             fr: Double, fc: Double): Float =
+    kernel(alg)(get, rows, cols, fr, fc)
 }

@@ -52,6 +52,30 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
+  test("quantize at gamma 1.0 equals the pow path, clip edges and invalid pixels included") {
+    // the kernel as it was before gamma 1.0 skipped the pow
+    def viaPow(dbv: Array[Double], low: Double, high: Double, gamma: Double,
+               maxVal: Double): Array[Int] = {
+      val range = math.max(high - low, 1.0)
+      dbv.map { d =>
+        if (!Kernels.valid(d)) 0
+        else {
+          val normalized = math.pow((math.min(math.max(d, low), high) - low) / range, gamma)
+          math.floor(math.min(math.max(normalized * maxVal, 0.0), maxVal)).toInt
+        }
+      }
+    }
+    forAll(Gen.zip(Gen.listOfN(64, dbGen), Gen.chooseNum(-30.0, 0.0), Gen.chooseNum(0.0, 30.0),
+        Gen.oneOf(255.0, 65535.0))) { case (dbs, low, width, maxVal) =>
+      val high = low + width
+      val edges = Seq(low, high, math.nextDown(low), math.nextUp(high), -50.0,
+        math.nextUp(-50.0), Double.NaN, Double.NegativeInfinity, Double.PositiveInfinity)
+      val in = (dbs ++ edges).toArray
+      assert(Kernels.quantize(in, low, high, 1.0, maxVal).sameElements(
+        viaPow(in, low, high, 1.0, maxVal)), s"low $low high $high max $maxVal")
+    }
+  }
+
   test("rescaleU8 maps min→0 and max→255 when distinct") {
     forAll(Gen.nonEmptyListOf(Gen.chooseNum(0, 65535))) { qs =>
       val arr = qs.toArray
