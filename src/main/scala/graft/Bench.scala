@@ -201,8 +201,11 @@ object Bench {
     t.start()
   }
 
-  def buildSession(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+  /** The one session set-up of Bench, Verify and the tools: `local[n]`
+    * with n from SPARK_GRAFT_CPUS, else `defaultCpus`.
+    */
+  def buildSession(defaultCpus: Int = 4): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCpus.toString)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

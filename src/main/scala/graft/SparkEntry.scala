@@ -7,6 +7,7 @@ import org.apache.spark.sql.types.DecimalType
 
 import graft.enhance.{Clahe, LocalStats, SynRgbSuppressed}
 import graft.ext.{Curation, Dedup, Events, Graph, Ivf, Mix, Pii, Relational, Similarity, Sketch, Tables, TextOps}
+import graft.ext.SessionMemo.PersistRecorded
 import graft.ops.PixelOps
 import graft.sources.Multimodal
 import graft.stats.HistStats
@@ -167,7 +168,7 @@ object SparkEntry {
         col("l_orderkey"), col("l_linenumber"),
         PixelOps.clipQuantizeMasked(col("db"), PixelOps.validMask(col("db")),
           col("p05"), col("p95"), lit(1.0), lit(255.0)).as("q"))
-        .persist()
+        .persistRecorded()
       val mm = q.agg(min(col("q")).as("mn"), max(col("q")).as("mx"))
       q.crossJoin(broadcast(mm)).select(
         col("l_orderkey"), col("l_linenumber"),
@@ -906,46 +907,20 @@ object SparkEntry {
     * rounds) MAY leave those persists cached after the query returns —
     * callers running many queries in one long-lived session (as
     * Verify/Bench do) should `spark.catalog.clearCache()` between
-    * queries to reclaim executor storage. Session-lifetime memoized
-    * relations (`ext.SessionMemo`-held CC labels, shingle
-    * bases) additionally RE-ARM their persist on every call, so a
-    * clearCache costs their consumers one lineage replay, not a
-    * rebuild. The set of queries allowed to leave persists behind is
-    * machine-checked by `tools/PersistAudit` against `Bench.extraIters`.
+    * queries to reclaim executor storage. `tools/PersistAudit` checks
+    * that only the `Bench.extraIters ++ Bench.auditSkip` entries do.
     *
     * Prepared-query memo (r19): registry fns are pure in
     * (session, dir) and eager per-operation analysis makes steady-state
     * CONSTRUCTION alone cost 100–600 ms for most entries
-    * (tools/BuildCensus: 24 s summed across the registry — paid again
-    * on every bench iteration), so built Datasets are memoized per
-    * (session, name, dir). Generic memoization is only safe for fns
-    * that touch NO persisted relation: a persist armed inside a
-    * memoized build is never re-armed after a clearCache and its
-    * subtree silently recomputes on every action (the d17 lesson,
-    * `Dedup.simhashParts`). The exact "touches persists" set is the
-    * machine-checked `Bench.extraIters ++ Bench.auditSkip`
-    * (PersistAudit: leftover=0 for everything else), so those entries
-    * keep per-call construction — except the ones that carry their own
-    * hand-written memo with explicit re-arms (Clahe/LocalStats/Dedup
-    * d17 style).
-    *
-    * Why no in-JVM assertion that a generically memoized build armed no
-    * persist (r19 ADVICE item, considered and declined): the only
-    * reliable arm-detection point is Spark's CacheManager, which is
-    * `private[sql]` — reaching it would need a package-injection shim,
-    * and `sparkContext.getPersistentRDDs` only sees persists after
-    * materialization, not at build time. The invariant is instead
-    * machine-checked out-of-band by `tools/PersistAudit` (exits nonzero
-    * if ANY query outside the boundary set leaves cached relations),
-    * which `tools/roundend.sh` runs on every round-end.
+    * (tools/BuildCensus), so every built Dataset is memoized per
+    * (session, name, dir) on [[graft.ext.SessionMemo]], which re-arms
+    * the persists each build recorded on every hit.
     */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     registry.map(q => q.name -> { (s: SparkSession, dir: String) =>
       graft.plans.GraftExtensions.register(s)
-      if (Bench.extraIters(q.name) || Bench.auditSkip(q.name)) q.fn(s, dir)
-      else graft.ext.SessionMemo.get[DataFrame](s, s"registry:${q.name}:$dir") {
-        q.fn(s, dir)
-      }
+      graft.ext.SessionMemo.get[DataFrame](s, s"registry:${q.name}:$dir")(q.fn(s, dir))
     }).toMap
 
   /** The registry WITHOUT the prepared-query memo (r19 ADVICE item):

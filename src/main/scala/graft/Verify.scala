@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,26 +8,9 @@ object Verify {
     // dump to that subset for fast iteration; oracle_sql.json always
     // carries the full registry so the checker can gate any subset.
     val (sfDir, outDir, only) = (args(0), args(1), args.drop(2).toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.parquet is TIMESTAMP(NANOS): read as long nanos (Events
-      // converts to exact integer micros).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // bound AQE's per-stage plan-description rendering (r19, see
-      // Bench.buildSession) — string-only, no effect on plans/results
-      .config("spark.sql.maxPlanStringLength", "8192")
-      // r20: codegen-class cache sized to the registry (see Bench.buildSession)
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4096"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // fused-dB optimizer rule + graft_db function active in the oracle
-    // runs — the rewrite must be value-invisible or the hash gate fails
-    graft.plans.GraftExtensions.register(spark)
+    // registers the fused-dB optimizer rule + graft_db function, so the
+    // oracle runs check that the rewrite is value-invisible
+    val spark = Bench.buildSession()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.foreach { case (name, fn) =>
       if (only.nonEmpty && !only.contains(name)) ()

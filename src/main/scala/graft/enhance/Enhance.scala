@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.ext.Tables
+import graft.ext.SessionMemo.PersistRecorded
 import graft.ops.PixelOps
 import graft.stats.HistStats
 
@@ -108,37 +109,21 @@ object Clahe {
   val ClipLimit = 2.0
   val TileW: Int = (Grid.Cols + Tiles - 1) / Tiles // 32
 
-  /** Prepared-query memo: the a4 plan embeds ~60 copies of the grid
-    * lineage once the stats/corner subtrees are composed, and Spark's
-    * eager per-operation checkAnalysis makes CONSTRUCTION alone cost
-    * ~1.2 s of driver time per call (tools/A4Warm, r11) — on top of the
-    * identical plan-equality cache hits. Construction is pure in
-    * (session, dir), so the built Dataset (immutable) is memoized and
-    * its persists re-armed on each call (a clearCache between calls
-    * unregisters them; without the re-arm every later action would
-    * recompute the whole tree uncached). Bounded: one entry per live
-    * (session, dir) pair.
+  /** A4 CLAHE over the lineitem grid. The plan embeds ~60 copies of
+    * the grid lineage once the stats/corner subtrees are composed, and
+    * Spark's eager per-operation checkAnalysis makes construction alone
+    * cost ~1.2 s of driver time (tools/A4Warm, r11) — the registry's
+    * prepared-query memo builds it once per (session, dir).
     */
   def query(s: SparkSession, dir: String): DataFrame = {
-    // r14: moved off a per-object ConcurrentHashMap onto the one shared,
-    // stopped-session-evicting SessionMemo (the r12 leak rule)
-    val (q, persisted) = graft.ext.SessionMemo.get[(DataFrame, Seq[DataFrame])](
-      s, s"enhance-grid:$dir") {
-      build(s, dir)
-    }
-    persisted.foreach(graft.ext.SessionMemo.rearm)
-    q
-  }
-
-  private def build(s: SparkSession, dir: String): (DataFrame, Seq[DataFrame]) = {
     // The grid (global row_number) feeds the stats pass, both histograms,
     // and the sampling pass — cache it so the sort runs once, not 5×.
-    val g = Grid.df(s, dir).persist()
+    val g = Grid.df(s, dir).persistRecorded()
     // the one-row stats relation is a full two-pass subtree over the
     // cached grid (agg + 4096-bin hist + CDF windows); without a persist
     // every invocation rebuilds it just to broadcast one row (~1.6 s warm
     // at sf0.1, measured tools/A4Prof r11)
-    val st = HistStats.stats(g.filter(col("valid")).select(col("db"))).persist()
+    val st = HistStats.stats(g.filter(col("valid")).select(col("db"))).persistRecorded()
     val params = st.select(col("p01").as("low"), col("p99").as("high"),
       greatest(col("p99") - col("p01"), lit(1.0)).as("rng"))
 
@@ -170,7 +155,7 @@ object Clahe {
         expr(s"x div $TileW").as("tx"),
         (rfE - tyfE).as("dy"), (cfE - txfE).as("dx"),
         tyfE.cast("long").as("tyi"), txfE.cast("long").as("txi"))
-      .persist()
+      .persistRecorded()
 
     val hist = px.filter(col("valid"))
       .groupBy(col("ty"), col("tx"), col("bin")).agg(count(lit(1)).as("h"))
@@ -218,7 +203,7 @@ object Clahe {
       least(greatest(
         sum(col("hfin")).over(wTile.orderBy("bin").rowsBetween(Window.unboundedPreceding, 0)) /
           greatest(sum(col("hfin")).over(wTile), lit(1.0)), lit(0.0)), lit(1.0)).as("cdf"))
-      .persist()
+      .persistRecorded()
 
     // Pre-compose the FOUR corner lookups into one relation keyed by the
     // pixel's (floored tile, bin): the corner tile ids are pure functions
@@ -245,7 +230,7 @@ object Clahe {
       // bounded Tiles²·NumBins = 16 384 rows; persisted so a warm rerun
       // broadcasts the cached corner table instead of re-running the
       // three cdf self-joins (per the registry persist-lifetime contract)
-      .persist()
+      .persistRecorded()
 
     // the floored tile index is already ≤ Tiles-1 for every in-grid
     // pixel (y < rows_ ≤ Tiles·tile_h), so it IS the 00-corner id —
@@ -255,12 +240,11 @@ object Clahe {
     val top = col("c00") * (lit(1.0) - col("dx")) + col("c01") * col("dx")
     val bottom = col("c10") * (lit(1.0) - col("dx")) + col("c11") * col("dx")
     val out = top * (lit(1.0) - col("dy")) + bottom * col("dy")
-    val result = joined.select(col("y"), col("x"),
+    joined.select(col("y"), col("x"),
       when(col("valid"),
         floor(least(greatest(out, lit(0.0)), lit(1.0)) * lit(65535.0)).cast("int"))
         .otherwise(lit(0)).as("q"))
       .orderBy("y", "x")
-    (result, Seq(g, st, px, cdf, corner4))
   }
 
   val querySql: String = {
@@ -357,17 +341,8 @@ object Clahe {
   * in the last ulp).
   */
 object LocalStats {
-  /** Prepared-query memo, same contract as [[Clahe.query]] (r19,
-    * tools/PlanPhase): constructing the statsOf(Grid.df) tree costs
-    * ~0.4 s of eager per-operation analysis plus the Grid bucket-sizing
-    * driver action per call; the built Dataset is pure in
-    * (session, dir), so build once per live pair. No persists to
-    * re-arm on this path.
-    */
-  def query(s: SparkSession, dir: String): DataFrame =
-    graft.ext.SessionMemo.get[DataFrame](s, s"enhance-a5:$dir") {
-      statsOf(Grid.df(s, dir))
-    }
+  /** A5: [[statsOf]] over the lineitem grid. */
+  def query(s: SparkSession, dir: String): DataFrame = statsOf(Grid.df(s, dir))
 
   /** One 9-neighbor stat cell of [[neighborhood]]: target position,
     * contributor count, upper median / min / max of the contributing
@@ -482,19 +457,7 @@ object LocalStats {
     * bounds check, in-grid invalid centers pass with a null `cdb`.
     */
   def enhancedQuantize(s: SparkSession, dir: String): DataFrame = {
-    // prepared-query memo, same contract as Clahe.query (r19,
-    // tools/PlanPhase: construction was ~0.6 s/call of driver analysis +
-    // the Grid bucket-sizing action); g's persist is re-armed per call
-    val (q, g) = graft.ext.SessionMemo.get[(DataFrame, DataFrame)](
-      s, s"enhance-a5b:$dir") {
-      buildEnhancedQuantize(s, dir)
-    }
-    graft.ext.SessionMemo.rearm(g)
-    q
-  }
-
-  private def buildEnhancedQuantize(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val g = Grid.df(s, dir).persist()
+    val g = Grid.df(s, dir).persistRecorded()
     val st = HistStats.stats(g.filter(col("valid")).select(col("db")))
     val params = st.select(col("p05").as("low"), col("p95").as("high"),
       greatest(col("p95") - col("p05"), lit(1.0)).as("rng"))
@@ -504,13 +467,12 @@ object LocalStats {
     val q = floor(least(greatest(
       pow((clipped - col("low")) / col("rng"), lit(1.0)) * lit(65535.0),
       lit(0.0)), lit(65535.0))).cast("int")
-    val out = neighborhood(g).crossJoin(broadcast(dims)).crossJoin(broadcast(params))
+    neighborhood(g).crossJoin(broadcast(dims)).crossJoin(broadcast(params))
       .filter(col("cy") >= 0 && col("cy") < col("rows_") &&
         col("cx") >= 0 && col("cx") < lit(Grid.Cols))
       .select(col("cy").as("y"), col("cx").as("x"),
         when(col("cdb").isNotNull, q).otherwise(lit(0)).as("q"))
       .orderBy("y", "x")
-    (out, g)
   }
 
   val enhancedQuantizeSql: String = {

@@ -3,6 +3,8 @@ package graft.ext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.ext.SessionMemo.PersistRecorded
+
 /** C1: the end-to-end curation funnel — the composition a real
   * training-data run executes over the operator tiers this library
   * provides: quality gate ([[TextOps.qualityCol]]) → fuzzy-dedup to
@@ -45,7 +47,7 @@ object Curation {
     val base = t(s, dir).select(col("doc_id"), col("source"),
         size(TextOps.tokens(col("text"))).cast("long").as("ntok"),
         TextOps.qualityCol.as("q"))
-      .persist() // one corpus scan feeds three stage aggregates
+      .persistRecorded() // one corpus scan feeds three stage aggregates
     def stageAgg(df: DataFrame, label: String): DataFrame =
       df.groupBy("source")
         .agg(count(lit(1)).as("n_docs"),
@@ -100,7 +102,7 @@ object Curation {
         TextOps.qualityCol.as("q"),
         TextOps.predictedLang.as("plang"),
         md5(col("text")).as("h"))
-      .persist() // one scan feeds the canonical agg + the join-back
+      .persistRecorded() // one scan feeds the canonical agg + the join-back
     val canon = base.groupBy("h").agg(min("doc_id").as("canonical_id"))
     val marked = base.join(canon, "h")
       .withColumn("is_dup", (col("doc_id") =!= col("canonical_id")).cast("long"))
@@ -168,7 +170,7 @@ object Curation {
     val base = t(s, dir).select(col("doc_id"), col("source"),
         size(TextOps.tokens(col("text"))).cast("long").as("ntok"),
         md5(col("text")).as("h"))
-      .persist() // one scan feeds the canonical agg + both join-backs
+      .persistRecorded() // one scan feeds the canonical agg + both join-backs
     val canon = base.groupBy("h").agg(min("doc_id").as("canonical_id"))
     val labels = Dedup.clusterIds(s, dir) // (id, lbl)
     base.join(canon, "h")
@@ -271,7 +273,7 @@ object Curation {
     val g = marked.groupBy("status", "band")
       .agg(count(lit(1)).as("n_docs"),
         sum(col("q").cast(DecimalType(20, 6))).as("sq"))
-      .persist()
+      .persistRecorded()
     val st = g.groupBy("status").agg(sum("n_docs").as("tn")) // <=2 rows
     g.join(st, "status")
       .select(col("status"), col("band"), col("n_docs"),

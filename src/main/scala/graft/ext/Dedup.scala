@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.ext.SessionMemo.PersistRecorded
+
 /** Deduplication operators over the `documents` table — exact, n-gram
   * Jaccard, MinHash+LSH, and SimHash. These are the training-corpus
   * dedup tiers; each is a pure shuffle-based plan:
@@ -108,7 +110,7 @@ object Dedup {
 
   def paragraphDedup(s: SparkSession, dir: String): DataFrame = {
     val keyed = paraBlocks(s, dir)
-      .persist() // feeds the two canonical aggs AND the marking join
+      .persistRecorded() // feeds the two canonical aggs AND the marking join
     val canonDoc = keyed.groupBy("h").agg(min("doc_id").as("cdoc"))
     val canon = keyed.join(canonDoc, "h")
       .filter(col("doc_id") === col("cdoc"))
@@ -224,23 +226,20 @@ object Dedup {
     * they are constructed once and their persists re-armed per call:
     * after a caller's clearCache the next action recomputes the (one)
     * shared plan instead of five structurally-equal ones. `capped`'s
-    * plan contains `raw` as a subtree, so re-arming both lets the cache
+    * plan contains `raw` as a subtree, so persisting both lets the cache
     * manager serve the cap build and the join sides from the raw cache.
-    * Bounded: one entry per live (session, dir), held in the shared
-    * stopped-session-evicting [[SessionMemo]] (r13).
     */
-  private def shingleRelations(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val (raw, capped) = SessionMemo.get[(DataFrame, DataFrame)](s, s"shingles:$dir") {
+  private def shingleRelations(s: SparkSession, dir: String): (DataFrame, DataFrame) =
+    SessionMemo.get[(DataFrame, DataFrame)](s, s"shingles:$dir") {
       val raw = shingleDf(s, dir)
         .select(col("doc_id"), TextOps.tokenHash(col("shingle")).as("sh"))
         .distinct()
+        .persistRecorded()
       val keep = raw.groupBy("sh").agg(count(lit(1)).as("df"))
         .filter(col("df") <= MaxShingleDf)
         .select("sh")
-      (raw, raw.join(keep, "sh"))
+      (raw, raw.join(keep, "sh").persistRecorded())
     }
-    (SessionMemo.rearm(raw), SessionMemo.rearm(capped))
-  }
 
   /** The memoized raw distinct `(doc_id, sh)` relation — D13's base
     * (first-appearance novelty needs the UNCAPPED distinct shingles,
@@ -288,8 +287,8 @@ object Dedup {
     * posting grain; the persisted relation is the same pair set every
     * consumer already materialized per run.
     */
-  private def shinglePairs(s: SparkSession, dir: String): DataFrame = {
-    val pairs = SessionMemo.get[DataFrame](s, s"shingle-pairs:$dir") {
+  private def shinglePairs(s: SparkSession, dir: String): DataFrame =
+    SessionMemo.get[DataFrame](s, s"shingle-pairs:$dir") {
       val sh = cappedShingles(s, dir)
       val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("nsh"))
       val shhN = sh.join(sizes, "doc_id")
@@ -298,10 +297,8 @@ object Dedup {
         .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
         .agg(count(lit(1)).as("common"),
           min(col("a.nsh")).as("na"), min(col("b.nsh")).as("nb"))
+        .persistRecorded()
     }
-    cappedShingles(s, dir) // memo hit; re-arms the shared shingle persists
-    SessionMemo.rearm(pairs)
-  }
 
   def ngramJaccard(s: SparkSession, dir: String): DataFrame = {
     val j = shinglePairs(s, dir)
@@ -384,12 +381,11 @@ object Dedup {
   /** Per-doc MinHash signature relation `(doc_id, m0..m15)`. */
   /** The per-doc MinHash signature relation, memoized per
     * (session, dir) in [[SessionMemo]] (r13): SEVEN queries (d3, d7,
-    * d9, d11, d17, d20, d22) consume it and each persists it — on the
-    * shared instance those persists are the re-arm, so after a caller's
-    * clearCache the next query replays ONE retained shuffle lineage
-    * instead of re-running the shingle explode + 16-min aggregate per
-    * query (the shingleRelations argument applied to the signature
-    * tier).
+    * d9, d11, d17, d20, d22) consume it and each persists the shared
+    * instance, so after a caller's clearCache the next query replays ONE
+    * retained shuffle lineage instead of re-running the shingle explode +
+    * 16-min aggregate per query (the shingleRelations argument applied to
+    * the signature tier).
     */
   /** Per-ROW MinHash signature of one document's text as a 16-element
     * array column — the same affine-hash family over the same 3-gram
@@ -462,7 +458,7 @@ object Dedup {
     */
   def minhashLsh(s: SparkSession, dir: String): DataFrame = {
     // signature table feeds banding + both verification join sides
-    val sig = minhashSig(s, dir).persist()
+    val sig = minhashSig(s, dir).persistRecorded()
     val cand = bandCandidates(sig)
     val matches = (0 until NumHashes).map(i =>
       when(col(s"a.m$i") === col(s"b.m$i"), 1).otherwise(0)).reduce(_ + _)
@@ -552,7 +548,7 @@ object Dedup {
     // the band relation feeds BOTH probe sides (batch filter + existing
     // filter) — without the persist the shingle-explode signature build
     // runs once per leg; left cached per the registry persist contract
-    val bands = sigBands(minhashSig(s, dir)).persist()
+    val bands = sigBands(minhashSig(s, dir)).persistRecorded()
     val nearResp = bands.filter(isBatch(col("doc_id")))
       .join(bands.filter(!isBatch(col("doc_id")))
         .select(col("doc_id").as("eid"), col("band"), col("key")),
@@ -569,7 +565,7 @@ object Dedup {
       // r20 (tools/ReProf): batch-grain (1/BatchMod of the corpus)
       // verdict boundary — a fresh construction re-runs the sort only,
       // not the exact/near probe joins (recon 0.69 s vs 0.04 s warm)
-      .persist()
+      .persistRecorded()
       .orderBy("doc_id")
   }
 
@@ -742,7 +738,7 @@ object Dedup {
     */
   def minhashCalibration(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
-    val sig = minhashSig(s, dir).persist() // feeds banding + both est join sides
+    val sig = minhashSig(s, dir).persistRecorded() // feeds banding + both est join sides
     val matches = (0 until NumHashes).map(i =>
       when(col(s"a.m$i") === col(s"b.m$i"), 1).otherwise(0)).reduce(_ + _)
     val est = bandCandidates(sig)
@@ -769,7 +765,7 @@ object Dedup {
           .otherwise(lit(0.0)).as("exact_j"))
       // pair-grain calibration scatter: the prepared relation a fresh
       // rollup re-reads (steady state = one agg exchange + sort)
-      .persist()
+      .persistRecorded()
     ex.groupBy("est_jaccard")
       .agg(count(lit(1)).as("n_pairs"),
         round(sum(col("exact_j").cast(DecimalType(20, 10))).cast("double") /
@@ -847,8 +843,8 @@ object Dedup {
       spark.createDataFrame(df.rdd, df.schema)
     val edges = cand.select(col("doc_a").as("src"), col("doc_b").as("dst"))
       .unionAll(cand.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-      .persist()
-    var labels = truncated(nodes.select(col("id"), col("id").as("lbl"))).persist()
+      .persistRecorded()
+    var labels = truncated(nodes.select(col("id"), col("id").as("lbl"))).persistRecorded()
     var changed = 1L
     var iters = 0
     while (changed > 0 && iters < MaxClusterIters) {
@@ -856,7 +852,7 @@ object Dedup {
         .select(col("dst").as("id"), col("lbl"))
         .unionAll(labels)
         .groupBy("id").agg(min("lbl").as("lbl")))
-        .persist()
+        .persistRecorded()
       changed = prop.join(labels.withColumnRenamed("lbl", "old"), "id")
         .filter(col("lbl") =!= col("old")).count()
       labels.unpersist()
@@ -892,16 +888,14 @@ object Dedup {
     * each bench iteration of each) re-runs the whole per-round action
     * loop (measured r11: ~9-17 s per re-run at sf0.1; the r10 bench
     * charged c1's cold slot 67 s for exactly this). The built Dataset is
-    * immutable and pure in (session, dir), so it is constructed once and
-    * its persist re-armed per call: after a caller's clearCache the next
-    * action replays the loop's RDD lineage (shuffle files are retained
-    * while the memoized RDDs stay referenced) instead of re-running the
-    * per-round count() actions. Bounded: one entry per live
-    * (session, dir, granularity).
+    * immutable and pure in (session, dir), so it is constructed once:
+    * after a caller's clearCache the next action replays the loop's RDD
+    * lineage (shuffle files are retained while the memoized RDDs stay
+    * referenced) instead of re-running the per-round count() actions.
     */
   private def memoLabels(key: String, s: SparkSession, dir: String)(
       build: => DataFrame): DataFrame =
-    SessionMemo.rearm(SessionMemo.get[DataFrame](s, s"cc:$key:$dir")(build))
+    SessionMemo.get[DataFrame](s, s"cc:$key:$dir")(build)
 
   def clusterIds(s: SparkSession, dir: String): DataFrame =
     memoLabels("doc", s, dir) {
@@ -910,15 +904,15 @@ object Dedup {
       // list in clusterLabels (whose distinct-exchanges differ, so AQE
       // stage reuse does NOT dedupe them — measured: dropping this
       // persist took d7/c1 from ≤1.4 s to ~6 s warm at sf0.1, the
-      // shingle-explode signature build re-running per leg). Left cached
-      // on return per the registry's persist-lifetime contract
-      // (SparkEntry.queries): long-lived callers clearCache between
-      // queries; an in-call unpersist would force every re-invocation to
-      // rebuild the signatures.
-      val sig = minhashSig(s, dir).persist()
-      val cand = bandCandidates(sig)
+      // shingle-explode signature build re-running per leg). Released
+      // once the loop has materialized the labels: they are re-rooted at
+      // an RDD scan, so no later plan reads sig through them, and a memo
+      // hit need not re-arm it.
+      val sig = minhashSig(s, dir).persistRecorded()
       val nodes = t(s, dir).select(col("doc_id").as("id"))
-      clusterLabels(nodes, cand)
+      val labels = clusterLabels(nodes, bandCandidates(sig))
+      sig.unpersist()
+      labels
     }
 
   def dupClusters(s: SparkSession, dir: String): DataFrame = {
@@ -974,11 +968,11 @@ object Dedup {
     */
   def paraClusters(s: SparkSession, dir: String): DataFrame = {
     val labels = memoLabels("para", s, dir) {
-      // persisted for the same reason as clusterIds' sig: inst feeds the
-      // df agg, both self-join legs, and both edge-union legs downstream;
-      // left cached per the registry's persist-lifetime contract
+      // persisted (and released) for the same reasons as clusterIds'
+      // sig: inst feeds the df agg, both self-join legs, and both
+      // edge-union legs downstream
       val inst = paraBlocks(s, dir).select(col("h"), col("doc_id")).distinct()
-        .persist()
+        .persistRecorded()
       // df ∈ [2, cap]: singleton paragraphs generate no edge, and the
       // count agg carries 16-byte keys with map-side partials
       val keep = inst.groupBy("h").agg(count(lit(1)).as("df"))
@@ -990,7 +984,9 @@ object Dedup {
         .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
         .distinct()
       val nodes = t(s, dir).select(col("doc_id").as("id"))
-      clusterLabels(nodes, cand)
+      val labels = clusterLabels(nodes, cand)
+      inst.unpersist()
+      labels
     }
     val sizes = labels.groupBy("lbl").agg(count(lit(1)).as("cluster_size"))
     labels.join(sizes, "lbl")
@@ -1031,18 +1027,7 @@ object Dedup {
     * candidates from 12-bit block equality (pigeonhole-complete for
     * hamming ≤ 3); emits candidate pairs with hamming ≤ 20.
     */
-  def simhash(s: SparkSession, dir: String): DataFrame = simhashParts(s, dir)._1
-
-  /** [[simhash]] plus its internal persisted relation (the `sim`
-    * signature table feeding both block-join sides), for callers that
-    * memoize a composed plan over this subtree and must re-arm EVERY
-    * persist inside it per call (r19 lesson, [[methodAgreement]]: a
-    * persist buried in a helper is armed only at memo-build time, so
-    * after a clearCache the memoized plan silently recomputes the
-    * helper's whole subtree on every action — d17 warm went 1.3 s →
-    * 5.5 s before the re-arm was wired through).
-    */
-  private[graft] def simhashParts(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
+  def simhash(s: SparkSession, dir: String): DataFrame = {
     // distinct on the 48-bit hash, not the token string: the exchange
     // carries longs, and the (engine-identical) hash is what the bit
     // sums consume anyway
@@ -1059,19 +1044,18 @@ object Dedup {
     val sim = bitSums.select(col("doc_id"),
       (0 until SimhashBits).map(j =>
         shiftleft(when(col(s"s$j") * 2 > col("ntok"), 1L).otherwise(0L), j)).reduce(_ + _).as("simhash"))
-      .persist() // feeds both block-join sides
+      .persistRecorded() // feeds both block-join sides
     val blocks = sim.select(col("doc_id"), col("simhash"), explode(array(
       (0 until SimhashBlocks).map(b => struct(lit(b).as("blk"),
         shiftright(col("simhash"), b * BlockBits).bitwiseAND(lit((1L << BlockBits) - 1)).as("bval"))): _*)).as("e"))
       .select(col("doc_id"), col("simhash"), col("e.blk"), col("e.bval"))
-    val pairs = blocks.as("x").join(blocks.as("y"), Seq("blk", "bval"))
+    blocks.as("x").join(blocks.as("y"), Seq("blk", "bval"))
       .filter(col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
         bit_count(col("x.simhash").bitwiseXOR(col("y.simhash"))).as("hamming"))
       .distinct()
       .filter(col("hamming") <= 20)
       .orderBy("doc_a", "doc_b")
-    (pairs, sim)
   }
 
   val simhashSql: String = {
@@ -1118,7 +1102,7 @@ object Dedup {
       .select(col("doc_id"), col("source"),
         TextOps.tokenHash(col("shingle")).as("sh"))
       .distinct()
-      .persist() // feeds the benchmark set and the corpus side
+      .persistRecorded() // feeds the benchmark set and the corpus side
     val bench = sh.filter(col("source") === BenchmarkSource)
       .select("sh").distinct()
     val corpus = sh.filter(col("source") =!= BenchmarkSource)
@@ -1136,7 +1120,7 @@ object Dedup {
       // r20 (tools/ReProf): contaminated-doc-grain boundary — a fresh
       // construction re-runs the sort only, not the benchmark mark join
       // + per-doc agg over the sh cache (recon 0.91 s vs 0.03 s warm)
-      .persist()
+      .persistRecorded()
       .orderBy(col("contamination").desc, col("doc_id"))
   }
 
@@ -1174,18 +1158,8 @@ object Dedup {
     * operator here that needs none. Coverage explodes duplicated
     * positions ×k only (bounded blowup on the duplicated subset).
     */
-  def substringSpans(s: SparkSession, dir: String): DataFrame = {
-    // prepared-query memo (r19, tools/BuildCensus: ~0.34 s of driver
-    // analysis per call — the unrolled SpanK polynomial fold is a big
-    // tree); BOTH internal persists (g, dupg) are re-armed per call —
-    // the d17 buried-persist lesson, see [[simhashParts]]
-    val (q, persisted) = SessionMemo.get[(DataFrame, Seq[DataFrame])](
-      s, s"dedup-d12:$dir") {
-      substringSpansParts(t(s, dir).select(col("doc_id"), col("text")))
-    }
-    persisted.foreach(SessionMemo.rearm)
-    q
-  }
+  def substringSpans(s: SparkSession, dir: String): DataFrame =
+    substringSpansFrom(t(s, dir).select(col("doc_id"), col("text")))
 
   /** [[substringSpans]] over an explicit `(doc_id, text)` relation —
     * the spec pins coverage arithmetic on planted shared spans.
@@ -1198,12 +1172,7 @@ object Dedup {
     * identical arithmetic, so any collision merges the same spans in
     * both engines.
     */
-  def substringSpansFrom(d: DataFrame): DataFrame = substringSpansParts(d)._1
-
-  /** [[substringSpansFrom]] plus its persisted relations, for the
-    * memoizing caller's per-call re-arm.
-    */
-  private[graft] def substringSpansParts(d: DataFrame): (DataFrame, Seq[DataFrame]) = {
+  def substringSpansFrom(d: DataFrame): DataFrame = {
     val toks = TextOps.tokens(col("text"))
     val base = d.select(col("doc_id"),
       size(toks).as("n_tokens"),
@@ -1217,13 +1186,13 @@ object Dedup {
     val g = base
       .select(col("doc_id"), posexplode(ghArr))
       .select(col("doc_id"), (col("pos") + 1).as("pos"), col("col").as("gh"))
-      .persist() // feeds the dup agg, the join-back, and the per-doc counts
+      .persistRecorded() // feeds the dup agg, the join-back, and the per-doc counts
     // distinct-then-count (the d18 viral-key rule): a boilerplate span
     // hash-spreads across partitions before the combinable per-gh count
     val dup = g.select("gh", "doc_id").distinct()
       .groupBy("gh").agg(count(lit(1)).as("dfd"))
       .filter(col("dfd") >= 2).select("gh")
-    val dupg = g.join(dup, "gh").persist() // feeds coverage + dup counts
+    val dupg = g.join(dup, "gh").persistRecorded() // feeds coverage + dup counts
     val cov = dupg
       .select(col("doc_id"),
         explode(sequence(col("pos"), col("pos") + (SpanK - 1))).as("cp"))
@@ -1231,7 +1200,7 @@ object Dedup {
       .groupBy("doc_id").agg(count(lit(1)).as("covered"))
     val counts = g.groupBy("doc_id").agg(count(lit(1)).as("n_grams"))
     val dcounts = dupg.groupBy("doc_id").agg(count(lit(1)).as("n_dup_grams"))
-    val out = base.select("doc_id", "n_tokens")
+    base.select("doc_id", "n_tokens")
       .join(counts, Seq("doc_id"), "left")
       .join(dcounts, Seq("doc_id"), "left")
       .join(cov, Seq("doc_id"), "left")
@@ -1244,7 +1213,6 @@ object Dedup {
             col("n_tokens").cast("double"), 6))
           .otherwise(lit(0.0)).as("dup_span_frac"))
       .orderBy("doc_id")
-    (out, Seq(g, dupg))
   }
 
   val substringSpansSql: String = {
@@ -1308,7 +1276,7 @@ object Dedup {
       explode(TextOps.ngrams(TextOps.tokens(col("text")), 3)).as("shingle"))
       .select(col("doc_id"), TextOps.tokenHash(col("shingle")).as("sh"))
       .distinct()
-      .persist() // feeds the first-appearance agg and the join-back leg
+      .persistRecorded() // feeds the first-appearance agg and the join-back leg
     shingleNoveltyFromSh(d.select(col("doc_id")), sh)
   }
 
@@ -1374,20 +1342,6 @@ object Dedup {
     * Nothing re-probes, nothing rescans the corpus per point.
     */
   def dedupSweep(s: SparkSession, dir: String): DataFrame = {
-    // prepared-query memo (r19, tools/BuildCensus: ~0.2 s of driver
-    // analysis per call); per call the shared shingle accessor runs for
-    // its re-arm side effect and the query's own j persist is re-armed
-    // explicitly — the d17 buried-persist lesson, see [[simhashParts]]
-    val (q, j) = SessionMemo.get[(DataFrame, DataFrame)](
-      s, s"dedup-d14:$dir") {
-      buildDedupSweep(s, dir)
-    }
-    cappedShingles(s, dir) // memo hit; re-arms the shared shingle persists
-    SessionMemo.rearm(j)
-    q
-  }
-
-  private def buildDedupSweep(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
     val sh = cappedShingles(s, dir)
     val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("nsh"))
     val pairs = sh.as("a").join(sh.as("b"), "sh")
@@ -1400,7 +1354,7 @@ object Dedup {
       .select(col("doc_a"), col("doc_b"),
         (col("common").cast("double") /
           (col("na") + col("nb") - col("common")).cast("double")).as("jaccard"))
-      .persist() // one candidate pass feeds every sweep point
+      .persistRecorded() // one candidate pass feeds every sweep point
     val spine = s.createDataFrame(SweepThresholds.map(Tuple1(_)))
       .toDF("thr_pct") // 5 rows, provably bounded
     val hit = j.crossJoin(broadcast(spine))
@@ -1410,7 +1364,7 @@ object Dedup {
       .distinct() // spread before the combinable per-threshold count
       .groupBy("thr_pct").agg(count(lit(1)).as("n_docs_affected"))
     val total = t(s, dir).agg(count(lit(1)).as("n_corpus")) // 1 row
-    val out = spine
+    spine
       .join(nPairs, Seq("thr_pct"), "left")
       .join(nDocs, Seq("thr_pct"), "left")
       .crossJoin(broadcast(total))
@@ -1420,7 +1374,6 @@ object Dedup {
         round(coalesce(col("n_docs_affected"), lit(0L)).cast("double") /
           col("n_corpus").cast("double"), 6).as("affected_rate"))
       .orderBy("thr_pct")
-    (out, j)
   }
 
   val dedupSweepSql: String = s"""WITH $shingleCte,
@@ -1533,7 +1486,7 @@ object Dedup {
     val withUrl = d.withColumn("url", url)
     val canon = withUrl.withColumn("canon_url", canonicalUrl(col("url")))
       .select(col("doc_id"), col("n_chars"), col("url"), col("canon_url"))
-      .persist() // the regex canon projection feeds the winner agg AND the join-back
+      .persistRecorded() // the regex canon projection feeds the winner agg AND the join-back
     // ONE map-side-combinable aggregate picks group size and winner:
     // lexicographic struct-max over (n_chars, -doc_id) = max quality,
     // tie min doc_id — the same struct-extremum encoding the S11 PQ
@@ -1616,29 +1569,13 @@ object Dedup {
     * map-side-combinable onto ≤3 keys. No new quadratic surface.
     */
   def methodAgreement(s: SparkSession, dir: String): DataFrame = {
-    // prepared-query memo, same contract as Clahe.query (r19,
-    // tools/PlanPhase: composing the minhash-band × simhash-block
-    // candidate union costs ~0.4 s of driver analysis per call); EVERY
-    // persist inside the composed plan — sig AND simhash's internal sim
-    // table — is re-armed per call (see [[simhashParts]] for what
-    // happens when one is missed)
-    val (q, persisted) = SessionMemo.get[(DataFrame, Seq[DataFrame])](
-      s, s"dedup-d17:$dir") {
-      buildMethodAgreement(s, dir)
-    }
-    persisted.foreach(SessionMemo.rearm)
-    q
-  }
-
-  private def buildMethodAgreement(s: SparkSession, dir: String): (DataFrame, Seq[DataFrame]) = {
-    val sig = minhashSig(s, dir).persist() // band self-join's two sides
+    val sig = minhashSig(s, dir).persistRecorded() // band self-join's two sides
     val mcand = bandCandidates(sig).withColumn("in_m", lit(1))
-    val (spairs, sim) = simhashParts(s, dir)
-    val scand = spairs.select(col("doc_a"), col("doc_b"))
+    val scand = simhash(s, dir).select(col("doc_a"), col("doc_b"))
       .withColumn("in_s", lit(1))
     val h = t(s, dir).select(col("doc_id"), md5(col("text")).as("h"))
     val u = mcand.join(scand, Seq("doc_a", "doc_b"), "full_outer")
-    val out = u.join(h.select(col("doc_id").as("doc_a"), col("h").as("hx")), "doc_a")
+    u.join(h.select(col("doc_id").as("doc_a"), col("h").as("hx")), "doc_a")
       .join(h.select(col("doc_id").as("doc_b"), col("h").as("hy")), "doc_b")
       .select(
         when(col("in_m").isNotNull && col("in_s").isNotNull, "both")
@@ -1651,7 +1588,6 @@ object Dedup {
         round(col("n_exact").cast("double") / col("n_pairs").cast("double"), 6)
           .as("exact_frac"))
       .orderBy("method")
-    (out, Seq(sig, sim))
   }
 
   val methodAgreementSql: String = {
@@ -1950,7 +1886,7 @@ object Dedup {
   def bandTuning(s: SparkSession, dir: String): DataFrame = {
     // sig feeds 3 config bandings (both self-join sides) + 2
     // verification sides → persisted (same contract as d3)
-    val sig = minhashSig(s, dir).persist()
+    val sig = minhashSig(s, dir).persistRecorded()
     val bands = sig.select(col("doc_id"), explode(array(
         BandConfigs.flatMap { case (b, r) =>
           (0 until b).map(bi => struct(lit(b).as("cfg"), lit(bi).as("band"),
@@ -2031,7 +1967,7 @@ object Dedup {
     * persists per call (extraIters-documented).
     */
   def sourceOverlap(s: SparkSession, dir: String): DataFrame = {
-    val sig = minhashSig(s, dir).persist() // banding + both verify sides
+    val sig = minhashSig(s, dir).persistRecorded() // banding + both verify sides
     val cand = bandCandidates(sig)
     val matches = (0 until NumHashes).map(i =>
       when(col(s"a.m$i") === col(s"b.m$i"), 1L).otherwise(0L)).reduce(_ + _)
@@ -2052,7 +1988,7 @@ object Dedup {
       // construction re-runs the ratio projection + sort only, not the
       // band candidates + signature/source joins over the sig cache
       // (recon 0.90 s vs 0.05 s warm)
-      .persist()
+      .persistRecorded()
       .select(col("source_a"), col("source_b"), col("n_pairs"),
         round(col("sm").cast("double") /
           (col("n_pairs") * NumHashes).cast("double"), 6).as("mean_est_jaccard"))

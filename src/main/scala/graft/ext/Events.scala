@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.ext.SessionMemo.PersistRecorded
+
 /** Event-stream batch analytics over the `events` table — the
   * large-scale-pipeline extension surface (the reference has no temporal
   * operators; time-series is its roadmap Phase 7,
@@ -498,7 +500,7 @@ object Events {
     import org.apache.spark.sql.types.DecimalType
     val per = events.groupBy("event_type", "user_id")
       .agg(count(lit(1)).as("n_events"))
-      .persist() // feeds the per-type stats AND the z-score join
+      .persistRecorded() // feeds the per-type stats AND the z-score join
     // Σc² accumulates in DECIMAL: a 3e9-event hot key squares past
     // Long.MaxValue (ANSI abort), and nu·Σc² overflows 64 bits long
     // before any real 100 TB population does — DECIMAL(14,0)² =
@@ -648,7 +650,7 @@ object Events {
   def activeUsersFrom(events: DataFrame): DataFrame = {
     val ud = events.select(col("user_id"), expr(s"us div $DayUs").as("day"))
       .distinct()
-      .persist() // feeds the DAU agg and the window expansion
+      .persistRecorded() // feeds the DAU agg and the window expansion
     val dau = ud.groupBy("day").agg(count(lit(1)).as("dau"))
     val wau = ud
       .select(col("user_id"), explode(sequence(col("day"), col("day") + 6)).as("day"))
@@ -661,7 +663,7 @@ object Events {
       // r20 (tools/ReProf): day-grain boundary — a fresh construction
       // re-runs the sort only, not the 7-day window expansion +
       // distinct over the ud cache (recon 0.93 s vs 0.04 s warm)
-      .persist()
+      .persistRecorded()
       .orderBy("day")
   }
 
@@ -708,7 +710,7 @@ object Events {
     val st = sessionNumbered(events)
       .select(col("user_id"), col("session_seq"), col("event_type"))
       .distinct()
-      .persist() // feeds totals, per-type counts, and both pair legs
+      .persistRecorded() // feeds totals, per-type counts, and both pair legs
     val total = st.select("user_id", "session_seq").distinct()
       .agg(count(lit(1)).as("s")) // 1 row, provably bounded
     val perType = st.groupBy("event_type").agg(count(lit(1)).as("n"))
@@ -719,7 +721,7 @@ object Events {
       // r20 (tools/ReProf): ≤|types|²-row basket boundary — a fresh
       // construction re-runs the per-type counts + lift joins + sort,
       // not the in-session pair self-join (recon 0.98 s vs 0.08 s warm)
-      .persist()
+      .persistRecorded()
     pairs
       .join(perType.select(col("event_type").as("type_a"), col("n").as("n_a")), "type_a")
       .join(perType.select(col("event_type").as("type_b"), col("n").as("n_b")), "type_b")
@@ -953,7 +955,7 @@ object Events {
     // same multi-leg shape as E19: persist the narrow pre-agg so the
     // max leg, bucket-rank leg, and offset leg share one events pass
     val cnts = events.groupBy("event_type", "user_id").agg(count(lit(1)).as("cnt"))
-      .persist()
+      .persistRecorded()
     val mx = cnts.groupBy("event_type").agg(max("cnt").as("mxc"))
     val bucketed = cnts.join(broadcast(mx), "event_type")
       .withColumn("bucket", least(expr(s"(cnt * $GiniBuckets) div mxc"),
@@ -1083,7 +1085,7 @@ object Events {
     // leg, and the offset leg — unpersisted, each leg replays the full
     // events scan + shuffle (t11 rule; registered in Bench.extraIters)
     val cnts = events.groupBy("user_id").agg(count(lit(1)).as("cnt"))
-      .persist()
+      .persistRecorded()
     val mx = cnts.agg(max("cnt").as("mxc"), count(lit(1)).as("n"))
     val bucketed = cnts.crossJoin(broadcast(mx))
       .withColumn("bucket", least(expr(s"(cnt * $ParetoBuckets) div mxc"),
@@ -1296,7 +1298,7 @@ object Events {
     val per = events
       .withColumn("day", expr("us div 86400000000"))
       .groupBy("event_type", "day").agg(count(lit(1)).as("n_events"))
-      .persist() // feeds the per-type stats AND the z-score join
+      .persistRecorded() // feeds the per-type stats AND the z-score join
     val stats = per.groupBy("event_type").agg(
       count(lit(1)).as("nd"),
       sum(col("n_events").cast(DecimalType(14, 0))).as("s1"),
@@ -1398,7 +1400,7 @@ object Events {
         when(col("gap_us") >= 0, lit("error_after")).otherwise(lit("error_before"))
           .as("direction"),
         expr("abs(gap_us) div 60000000").as("gap_min"))
-      .persist() // feeds the pair rollup and the distinct-user leg
+      .persistRecorded() // feeds the pair rollup and the distinct-user leg
     val cells = pairs.groupBy("direction", "gap_min")
       .agg(count(lit(1)).as("n_pairs"),
         min("gap_us").as("min_gap_us"),
@@ -1727,7 +1729,7 @@ object Events {
       .groupBy("band")
       .agg(count(lit(1)).as("n_gaps"), sum("gap_min").as("tot_min"),
         min("gap_min").as("min_gap_min"), max("gap_min").as("max_gap_min"))
-      .persist()
+      .persistRecorded()
     val tot = bins.agg(sum("n_gaps").as("tg"))
     bins.crossJoin(broadcast(tot))
       .select(col("band"), col("n_gaps"), col("min_gap_min"), col("max_gap_min"),
@@ -1803,7 +1805,7 @@ object Events {
       .select(expr("f div 7").as("cohort_week"),
         (col("l") - col("f")).as("dur"),
         (col("m") - col("f")).as("hor"))
-      .persist() // 4 consumer legs, see Scaladoc
+      .persistRecorded() // 4 consumer legs, see Scaladoc
     val act = u.groupBy(col("cohort_week"), col("dur").as("t"))
       .agg(count(lit(1)).as("a"),
         sum(when(col("dur") < col("hor"), 1L).otherwise(0L)).as("ch"))

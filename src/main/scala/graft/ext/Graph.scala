@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.ext.SessionMemo.PersistRecorded
+
 /** Graph analytics over the part co-purchase graph (nodes = parts,
   * undirected edges = "appeared in the same order", the X16 basket
   * relation) — the iterative-computation tier the rest of the registry
@@ -32,13 +34,11 @@ object Graph {
   val PrTopK = 20
 
   /** Session-lifetime memo for the (edges, deg) pair per (session, dir)
-    * — the Dedup shingle re-armed-persist pattern, held in the shared
-    * stopped-session-evicting [[SessionMemo]]: g1–g6 all consume the
-    * same co-purchase adjacency, and g1 alone walks it 4+ times (degree
-    * attach + one leg per iteration round), so the explode+distinct
-    * build runs once per session and later calls re-`persist()` if
-    * clearCache dropped it (re-execution then reuses the retained
-    * shuffle files). Documented in `Bench.extraIters`.
+    * on [[SessionMemo]]: g1–g6 all consume the same co-purchase
+    * adjacency, and g1 alone walks it 4+ times (degree attach + one leg
+    * per iteration round), so the explode+distinct build runs once per
+    * session and later hits re-arm its persists if clearCache dropped
+    * them (re-execution then reuses the retained shuffle files).
     */
   /** The memoized HALF-pair support relation `(p1 < p2, support)` — the
     * expensive within-order self-join, built once per (session, dir) and
@@ -48,9 +48,10 @@ object Graph {
     * identical self-join independently).
     */
   private[ext] def halfPairs(s: SparkSession, dir: String): DataFrame =
-    SessionMemo.rearm(SessionMemo.get[DataFrame](s, s"copurchase-half:$dir") {
+    SessionMemo.get[DataFrame](s, s"copurchase-half:$dir") {
       halfPairsFrom(t(s, dir, "lineitem").select(col("l_orderkey"), col("l_partkey")))
-    })
+        .persistRecorded()
+    }
 
   /** [[halfPairs]] over an explicit `(l_orderkey, l_partkey)` relation. */
   private[ext] def halfPairsFrom(li: DataFrame): DataFrame = {
@@ -62,15 +63,14 @@ object Graph {
       .groupBy("p1", "p2").agg(count(lit(1)).as("support"))
   }
 
-  private def edgeRelations(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val (edges, deg) = SessionMemo.get[(DataFrame, DataFrame)](s, s"graph-edges:$dir") {
+  private def edgeRelations(s: SparkSession, dir: String): (DataFrame, DataFrame) =
+    SessionMemo.get[(DataFrame, DataFrame)](s, s"graph-edges:$dir") {
       val kept = halfPairs(s, dir).filter(col("support") >= MinSupport)
       val e = kept.select(col("p1").as("u"), col("p2").as("v"))
         .unionAll(kept.select(col("p2").as("u"), col("p1").as("v")))
-      (e, e.groupBy("u").agg(count(lit(1)).as("deg")))
+        .persistRecorded()
+      (e, e.groupBy("u").agg(count(lit(1)).as("deg")).persistRecorded())
     }
-    (SessionMemo.rearm(edges), SessionMemo.rearm(deg))
-  }
 
   /** Minimum co-occurrence support for a graph edge — the Apriori cut
     * (Agrawal & Srikant 1994): a pair seen in ONE basket is chance, not
@@ -159,7 +159,7 @@ object Graph {
           round(lit(0.15) / col("n_nodes").cast("double") +
             lit(0.85) * coalesce(col("inflow"), lit(0.0)), 9).as("r"))
     }
-    // r21 (verdict r20 item 1): the r20 node-grain `ranks.persist()` is
+    // r21 (verdict r20 item 1): the r20 node-grain `ranks` persist is
     // REMOVED — `ranks` feeds exactly one consumer (the top-k chain), so
     // the persist avoided recompute only across bench iterations while a
     // one-shot production run would pay a full node-grain
@@ -303,7 +303,7 @@ object Graph {
       // r20 (tools/ReProf, the m6 pattern): 1-row triangle-count
       // boundary — a fresh construction re-runs the degree stats agg +
       // crossJoin only, not the wedge join (recon 1.27 s vs 0.03 s warm)
-      .persist()
+      .persistRecorded()
     val stats = deg.agg(
       count(lit(1)).as("n_nodes"),
       // integer division (never double-then-truncate): exact by
@@ -400,7 +400,7 @@ object Graph {
       // boundary — a fresh construction re-runs the known-edge anti-join
       // + top-k only, not the wedge self-join (recon 0.85 s vs 0.07 s
       // warm); same relation the query already materialized per run
-      .persist()
+      .persistRecorded()
     val half = edges.filter(col("u") < col("v"))
       .select(col("u").as("eu"), col("v").as("ev"))
     val top = cand
@@ -467,7 +467,7 @@ object Graph {
         .agg(max(struct(col("cnt"), (-col("lbl")).as("neg"))).as("m"))
         .select(col("v").as("node"), (-col("m.neg")).as("lbl"))
     }
-    // r21 (verdict r20 item 1): the r20 node-grain `labels.persist()` is
+    // r21 (verdict r20 item 1): the r20 node-grain `labels` persist is
     // REMOVED — single consumer (the community rollup), so it bought only
     // bench-iteration reuse at the cost of a node-grain materialization
     // in a one-shot run (guide §5 anti-pattern).
@@ -528,14 +528,14 @@ object Graph {
   def components(s: SparkSession, dir: String): DataFrame = {
     // the clusterLabels loop re-roots each round at an RDD scan, so two
     // constructions are never plan-equal (see Dedup.memoLabels) — one
-    // build per (session, dir), persist re-armed per call
-    val labels = SessionMemo.rearm(SessionMemo.get[DataFrame](s, s"graph-cc:$dir") {
+    // build per (session, dir)
+    val labels = SessionMemo.get[DataFrame](s, s"graph-cc:$dir") {
       val (edges, deg) = edgeRelations(s, dir)
       graft.ext.Dedup.clusterLabels(
         deg.select(col("u").as("id")),
         edges.filter(col("u") < col("v"))
           .select(col("u").as("doc_a"), col("v").as("doc_b")))
-    })
+    }
     componentsHist(labels)
   }
 
@@ -649,30 +649,16 @@ object Graph {
     * registry per-query persist contract; Verify clears per query, g7
     * is in Bench.extraIters).
     */
-  def kcore(s: SparkSession, dir: String): DataFrame = {
-    // r20 (tools/ReProf): the peel's per-round `df.rdd` re-roots force
-    // 13 physical-plan compilations PER CONSTRUCTION (~0.9 s of the
-    // 1.23 s steady state — construction, not execution), and the
-    // RDD-rooted rounds are never plan-equal across builds, so the
-    // generic prepared-query memo can't apply. Hand memo in the
-    // d14/memoLabels style: build once per (session, dir), re-arm every
-    // buried round persist per call (the d17 re-arm contract).
-    val (q, persisted) = SessionMemo.get[(DataFrame, Seq[DataFrame])](
-      s, s"kcore:$dir") {
-      kcoreCore(edgeRelations(s, dir)._1)
-    }
-    edgeRelations(s, dir) // memo hit; re-arms the shared edge persists
-    persisted.foreach(SessionMemo.rearm)
-    q
-  }
+  def kcore(s: SparkSession, dir: String): DataFrame =
+    kcoreCore(edgeRelations(s, dir)._1)
 
   /** [[kcore]] over an explicit `(l_orderkey, l_partkey)` relation —
     * the spec pins the peel on a crafted core-plus-fringe graph.
     */
   def kcoreFrom(li: DataFrame): DataFrame =
-    kcoreCore(copurchaseEdges(li))._1
+    kcoreCore(copurchaseEdges(li))
 
-  private def kcoreCore(edges0: DataFrame): (DataFrame, Seq[DataFrame]) = {
+  private def kcoreCore(edges0: DataFrame): DataFrame = {
     def stats(round: Int, d: DataFrame): DataFrame =
       d.agg(count(lit(1)).as("n_nodes"),
         coalesce(sum("d"), lit(0L)).as("n_dir_edges"),
@@ -694,20 +680,17 @@ object Graph {
     def truncated(df: DataFrame): DataFrame =
       spark.createDataFrame(df.rdd, df.schema)
     var e = edges0.select(col("u"), col("v"))
-    var d = truncated(e.groupBy("u").agg(count(lit(1)).as("d"))).persist()
-    val persisted = scala.collection.mutable.ArrayBuffer[DataFrame](d)
+    var d = truncated(e.groupBy("u").agg(count(lit(1)).as("d"))).persistRecorded()
     var out = stats(0, d)
     for (r <- 1 to KcoreRounds) {
       val keep = d.filter(col("d") >= KcoreK).select(col("u").as("node"))
       e = truncated(
         e.join(keep, col("u") === col("node"), "left_semi")
-          .join(keep, col("v") === col("node"), "left_semi")).persist()
-      d = truncated(e.groupBy("u").agg(count(lit(1)).as("d"))).persist()
-      persisted += e
-      persisted += d
+          .join(keep, col("v") === col("node"), "left_semi")).persistRecorded()
+      d = truncated(e.groupBy("u").agg(count(lit(1)).as("d"))).persistRecorded()
       out = out.unionAll(stats(r, d))
     }
-    (out.orderBy("round"), persisted.toSeq)
+    out.orderBy("round")
   }
 
   val kcoreSql: String = {

@@ -6,6 +6,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.ext.SessionMemo.PersistRecorded
+
 /** IVF (inverted-file) approximate nearest neighbor — the learned-
   * centroid counterpart of the sign-LSH path in [[Similarity]]: a KMeans
   * coarse quantizer partitions the corpus into `nlist` cells; a query
@@ -70,23 +72,22 @@ object Ivf {
     * comparison) don't trigger the coarse-quantizer fit.
     */
   private def embBase(s: SparkSession, dir: String): DataFrame =
-    SessionMemo.rearm(SessionMemo.get[DataFrame](s, s"ivf:emb:$dir") {
+    SessionMemo.get[DataFrame](s, s"ivf:emb:$dir") {
       Tables.parquet(s, s"$dir/embeddings.parquet")
         .withColumn("features", toVec(col("embedding")))
         .withColumn("nrm", Similarity.norm(col("embedding")))
-        .persist()
-    })
+        .persistRecorded()
+    }
 
   /** Session-lifetime shared IVF index base — the featurized corpus
     * scan ([[embBase]]), the trained coarse quantizer (a driver-side
     * model object), and the cell assignment. s4, s9, and s21 build the
     * IDENTICAL quantizer (same [[NList]]/seed/iterations over the same
     * hash-ordered [[TrainSample]]), so the KMeans fit runs ONCE per
-    * (session, dir) on the shared [[SessionMemo]] and each caller
-    * re-arms the persists (the Dedup shingle / Graph co-purchase
-    * pattern; all these queries sit in Bench.extraIters per the
-    * persist-lifetime contract). At rest this IS the IVF index: fit
-    * once, assign once, serve every query batch from the assignment.
+    * (session, dir) on [[SessionMemo]], whose hits re-arm the persists
+    * (the Dedup shingle / Graph co-purchase pattern). At rest this IS
+    * the IVF index: fit once, assign once, serve every query batch from
+    * the assignment.
     *
     * The quantizer trains on a deterministic fixed-size SAMPLE — at
     * corpus scale it never trains on all vectors; assignment does see
@@ -96,10 +97,10 @@ object Ivf {
     * deterministic, where a fraction-based sample would need a
     * separate COUNT pass to size the fraction.
     */
-  private def indexBase(s: SparkSession, dir: String): (DataFrame, org.apache.spark.ml.clustering.KMeansModel, DataFrame) = {
-    val emb = embBase(s, dir)
-    val (model, corpus) = SessionMemo.get[(
-        org.apache.spark.ml.clustering.KMeansModel, DataFrame)](s, s"ivf:$dir") {
+  private def indexBase(s: SparkSession, dir: String): (DataFrame, org.apache.spark.ml.clustering.KMeansModel, DataFrame) =
+    SessionMemo.get[(DataFrame, org.apache.spark.ml.clustering.KMeansModel, DataFrame)](
+        s, s"ivf:$dir") {
+      val emb = embBase(s, dir)
       val train = emb
         .orderBy(xxhash64(col("vec_id")), col("vec_id"))
         .limit(TrainSample)
@@ -108,10 +109,9 @@ object Ivf {
         .fit(train)
       val corpus = model.transform(emb)
         .select(col("vec_id"), col("embedding"), col("nrm"), col("cell"))
-      (model, corpus)
+        .persistRecorded()
+      (emb, model, corpus)
     }
-    (emb, model, SessionMemo.rearm(corpus))
-  }
 
   def ivfTopk(s: SparkSession, dir: String): DataFrame =
     ivfTopk(s, dir, broadcastQueries = Similarity.NumQueries <= MaxBroadcastQueries)
@@ -170,7 +170,7 @@ object Ivf {
           .over(Window.partitionBy("qid")).cast("double") / TopK)
       .select(col("qid"), col("rk"), col("oid"), col("cos"),
         col("exact_hit"), col("recall3"))
-      .persist() // tiny (queries×k rows); feeds the output AND the guard
+      .persistRecorded() // tiny (queries×k rows); feeds the output AND the guard
 
     // Recall guard: if the run's mean recall@k vs the exact baseline
     // falls below MinRecall the guard relation is EMPTY and the whole
@@ -261,33 +261,18 @@ object Ivf {
     * bounded shortlist, the point of PQ at 100 TB.
     */
   def ivfpqTopk(s: SparkSession, dir: String): DataFrame = {
-    // prepared-query memo (r19, tools/BuildCensus: ~0.45 s of driver
-    // analysis + codebook composition per call); per call the shared
-    // index base accessor runs for its re-arm side effect and the
-    // query's own persists (codes, db) are re-armed explicitly — the
-    // d17 buried-persist lesson, see Dedup.simhashParts
-    val (q, persisted) = graft.ext.SessionMemo.get[(DataFrame, Seq[DataFrame])](
-      s, s"ivf-s21:$dir") {
-      buildIvfpqTopk(s, dir)
-    }
-    indexBase(s, dir) // memo hit; re-arms the shared emb/cell persists
-    persisted.foreach(graft.ext.SessionMemo.rearm)
-    q
-  }
-
-  private def buildIvfpqTopk(s: SparkSession, dir: String): (DataFrame, Seq[DataFrame]) = {
     val (emb, model, corpusCells) = indexBase(s, dir)
     val cells = corpusCells.select(col("vec_id"), col("cell"))
     // ONE codebook build serves both the corpus encode and the ADC
     // table below (its TakeOrdered is a corpus pass — don't run it twice)
     val codes = Similarity.pqCodebook(emb.select(col("vec_id"), col("embedding")))
-      .persist() // ≤ PqCodes rows
+      .persistRecorded() // ≤ PqCodes rows
     // The composed index: PQ codes + routing cell, built once.
     val db = Similarity.pqEncodeWith(emb.select(col("vec_id"), col("embedding")), codes)
       .select(col("vec_id") +:
         (0 until Similarity.PqSubSpaces).map(m => col(s"code$m")): _*)
       .join(cells, "vec_id")
-      .persist()
+      .persistRecorded()
     // Query side: probe cells (identical distance logic to ivfTopk) +
     // the bounded query→codeword ADC table.
     val bc = s.sparkContext.broadcast(model.clusterCenters.map(_.toArray))
@@ -359,7 +344,7 @@ object Ivf {
       .withColumn("recall3",
         sum(when(col("exact_hit"), 1L).otherwise(0L))
           .over(Window.partitionBy("qid")).cast("double") / TopK)
-      .persist() // tiny (queries×k rows); feeds the output AND the guard
+      .persistRecorded() // tiny (queries×k rows); feeds the output AND the guard
     // s4's collapse guard, at the composed-index bar.
     val nq = q.agg(count(lit(1)).as("nq"))
     val guard = res
@@ -369,11 +354,10 @@ object Ivf {
         (col("nq") * TopK).cast("double")).as("mean_recall"))
       .filter(col("mean_recall") > PqMinRecall)
       .select(lit(true).as("recall_ok"))
-    val out = res.crossJoin(broadcast(guard))
+    res.crossJoin(broadcast(guard))
       .select(col("qid"), col("rk"), col("oid"), col("adc"), col("d2"),
         col("exact_hit"), col("recall3"), col("recall_ok"))
       .orderBy("qid", "rk")
-    (out, Seq(codes, db, res))
   }
 
   /** The nprobe values S9 sweeps (≤ [[NList]]). */
@@ -421,7 +405,7 @@ object Ivf {
       .select(col("qid"), col("prank"), col("vec_id").as("oid"),
         (Similarity.dot(col("qe"), col("embedding")) / (col("qn") * col("nrm")))
           .as("cos"))
-      .persist() // one probe pass feeds every grid point
+      .persistRecorded() // one probe pass feeds every grid point
     val qbase = emb.filter(col("vec_id") < Similarity.NumQueries)
       .select(col("vec_id").as("qid"), col("embedding").as("qe"), col("nrm").as("qn"))
     val exact = Similarity.exactTopk(
@@ -593,7 +577,7 @@ object Ivf {
       .groupBy("subspace")
       .agg(count(lit(1)).as("n_vectors"),
         avg("te").as("tmse"), avg("fe").as("fmse"))
-      .persist() // nSub rows, UNROUNDED; feeds the output
+      .persistRecorded() // nSub rows, UNROUNDED; feeds the output
     // guard: SAMPLE-SSE non-increase — the invariant Lloyd actually
     // proves (r14 ADVICE: the previous strictly-positive CORPUS gain
     // was a data-dependent flake — monotonicity only bounds SSE on the

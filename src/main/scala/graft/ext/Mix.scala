@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.ext.SessionMemo.PersistRecorded
+
 /** W1/W2: corpus-mixing operators of a pretraining-data pipeline —
   * weighted per-source sampling quotas (The Pile / Gopher-style mixture
   * weights) and fixed-token-budget sequence packing. Both are
@@ -243,7 +245,7 @@ object Mix {
     val per = d.groupBy("source").agg(
       count(lit(1)).as("n_docs"),
       sum("ntok").as("available_tokens"))
-      .persist()
+      .persistRecorded()
     val tot = per.agg(sum("available_tokens").as("nn")) // 1 row, bounded
     val scored = per.crossJoin(broadcast(tot))
       .withColumn("p",
@@ -413,7 +415,7 @@ object Mix {
         sum("keep").as("n_kept"),
         sum("ntok").as("tokens_pre"),
         sum(col("keep") * col("ntok")).as("tokens_post"))
-      .persist()
+      .persistRecorded()
     val tot = per.agg(sum("tokens_pre").as("tp"), sum("tokens_post").as("tq")) // 1 row
     val scored = per.crossJoin(broadcast(tot))
       .withColumn("w9_pre",
@@ -503,7 +505,7 @@ object Mix {
       // feeds the bucket-count, total-count, and ranked legs — the
       // registry entry point embeds the regex-heavy qualityCol
       // projection, which would otherwise re-scan the corpus 3×
-      .persist()
+      .persistRecorded()
     // ≤64-row count relation; the exclusive running offset walks buckets
     // in DESCENDING order (global order is quality desc)
     val wOff = Window.orderBy(col("bucket").desc)
@@ -690,7 +692,7 @@ object Mix {
       // r20 (tools/ReProf): ≤|splits|²-row boundary — a fresh
       // construction re-runs the ratio projection + sort only, not the
       // d3 candidate re-scoring (recon 0.75 s vs 0.08 s warm)
-      .persist()
+      .persistRecorded()
       .select(col("split_a"), col("split_b"),
         (col("split_a") =!= col("split_b")).cast("int").as("is_cross"),
         col("n_pairs"),
@@ -772,7 +774,7 @@ object Mix {
       // (source, phase)-grain, but it feeds the total leg AND the
       // final projection: unpersisted, the curriculum chain over the
       // corpus executed twice (DupSubtreeAudit: 51-node duplicate)
-      .persist()
+      .persistRecorded()
     val tot = per.agg(sum(col("mult") * col("available_tokens")).as("tot")) // 1 row
     per.crossJoin(broadcast(tot))
       .withColumn("target_tokens", expr(s"($budget * (mult * available_tokens)) div tot"))
@@ -965,7 +967,7 @@ object Mix {
       .withColumn("wpost", col("k") * col("tokens_canonical"))
       // source-grain two-leg pre-agg (total + final): persisted per the
       // same rule as w7/w13
-      .persist()
+      .persistRecorded()
     val tot = per.agg(sum("wpre").as("tpre"), sum("wpost").as("tpost"))
     per.crossJoin(broadcast(tot))
       .select(col("source"),
@@ -1151,7 +1153,7 @@ object Mix {
       .select(col("doc_id"), col("is_target"),
         pmod(TextOps.tokenHash(col("g")), lit(B)).as("bucket"))
       .groupBy("doc_id", "is_target", "bucket").agg(count(lit(1)).as("c"))
-      .persist() // bucket-histogram leg + per-doc join-back leg
+      .persistRecorded() // bucket-histogram leg + per-doc join-back leg
     val hist = occ.groupBy("bucket")
       .agg(sum(when(col("is_target") === 1L, col("c")).otherwise(lit(0L))).as("cp"),
         sum(when(col("is_target") === 0L, col("c")).otherwise(lit(0L))).as("cq"))

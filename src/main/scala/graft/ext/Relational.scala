@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.ext.SessionMemo.PersistRecorded
+
 /** Multi-table relational queries over the TPC-H-ish star schema —
   * exercising the join planning the raster surface doesn't: selective
   * dimension filters feeding fact joins (broadcast for small sides,
@@ -505,7 +507,7 @@ object Relational {
         max(col("o_orderdate")).as("last_date"),
         count(lit(1)).as("freq"),
         sum(col("o_totalprice").cast(DecimalType(18, 2))).as("mon"))
-      .persist()
+      .persistRecorded()
     // 1-row corpus stats: anchor date + population; provably bounded
     val st = pc.agg(max(col("last_date")).as("maxd"), count(lit(1)).as("n"))
     val base = pc.crossJoin(broadcast(st))
@@ -523,7 +525,7 @@ object Relational {
         (col("max_freq").cast("double") + 1.0)), lit(63L)))
       .withColumn("mb", least(floor(col("mond") * 64.0 /
         (col("max_mon") + 1.0)), lit(63L)))
-      .persist()
+      .persistRecorded()
     def off(bucket: String, asc: Boolean): DataFrame = {
       val w = Window.orderBy(if (asc) col(bucket).asc else col(bucket).desc)
         .rowsBetween(Window.unboundedPreceding, -1)
@@ -792,25 +794,13 @@ object Relational {
     * decile relation. The oracle states the naive single window.
     */
   def customerConcentration(s: SparkSession, dir: String): DataFrame = {
-    // prepared-query memo (r19, tools/BuildCensus: ~0.27 s of driver
-    // analysis per call); the cust persist is re-armed per call — the
-    // d17 buried-persist lesson, see Dedup.simhashParts
-    val (q, cust) = graft.ext.SessionMemo.get[(DataFrame, DataFrame)](
-      s, s"rel-x15:$dir") {
-      buildCustomerConcentration(s, dir)
-    }
-    graft.ext.SessionMemo.rearm(cust)
-    q
-  }
-
-  private def buildCustomerConcentration(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
     val cust = t(s, dir, "orders")
       .groupBy("o_custkey")
       .agg(sum(col("o_totalprice").cast(DecimalType(18, 2))).as("rev"),
         count(lit(1)).as("n_orders"))
       .select(col("o_custkey"), col("n_orders"),
         (col("rev") * 100).cast("long").as("cents"))
-      .persist() // feeds the max leg and the bucket-rank/offset legs
+      .persistRecorded() // feeds the max leg and the bucket-rank/offset legs
     val mx = cust.agg(max("cents").as("mxc"), count(lit(1)).as("n"))
     val bucketed = cust.crossJoin(broadcast(mx))
       .withColumn("bucket", least(expr(s"(cents * $ConcBuckets) div mxc"),
@@ -829,7 +819,7 @@ object Relational {
         sum("n_orders").as("n_orders"),
         sum(col("cents").cast(DecimalType(38, 0))).as("rc"))
     val tot = deciles.agg(sum("rc").as("tc"))
-    val out = deciles.crossJoin(broadcast(tot))
+    deciles.crossJoin(broadcast(tot))
       .withColumn("cum", sum("rc").over(Window.orderBy("decile")
         .rowsBetween(Window.unboundedPreceding, 0)))
       .select(col("decile"), col("n_customers"), col("n_orders"),
@@ -837,7 +827,6 @@ object Relational {
         round(col("rc").cast("double") / col("tc").cast("double"), 6).as("share"),
         round(col("cum").cast("double") / col("tc").cast("double"), 6).as("cum_share"))
       .orderBy("decile")
-    (out, cust)
   }
 
   val customerConcentrationSql: String = """WITH cust AS (
@@ -1284,27 +1273,13 @@ object Relational {
     * per run). Per the registry persist contract the persist is left
     * for the session (x22 is in Bench.extraIters; PersistAudit knows).
     */
-  def topSupplier(s: SparkSession, dir: String): DataFrame = {
-    // prepared-query memo (r19, tools/BuildCensus: ~0.18 s of driver
-    // analysis per call); the rev persist is re-armed per call
-    val (q, rev) = graft.ext.SessionMemo.get[(DataFrame, DataFrame)](
-      s, s"rel-x22:$dir") {
-      topSupplierParts(t(s, dir, "lineitem"), t(s, dir, "supplier"))
-    }
-    graft.ext.SessionMemo.rearm(rev)
-    q
-  }
+  def topSupplier(s: SparkSession, dir: String): DataFrame =
+    topSupplierFrom(t(s, dir, "lineitem"), t(s, dir, "supplier"))
 
   /** [[topSupplier]] over explicit relations — the spec pins the
     * exact-DECIMAL tie semantics.
     */
-  def topSupplierFrom(lineitem: DataFrame, supplier: DataFrame): DataFrame =
-    topSupplierParts(lineitem, supplier)._1
-
-  /** [[topSupplierFrom]] plus its persisted rev pre-agg, for the
-    * memoizing caller's per-call re-arm.
-    */
-  private def topSupplierParts(lineitem: DataFrame, supplier: DataFrame): (DataFrame, DataFrame) = {
+  def topSupplierFrom(lineitem: DataFrame, supplier: DataFrame): DataFrame = {
     val rev = lineitem
       .filter(col("l_shipdate") >= lit(LateShipWindowStart).cast("timestamp") &&
         col("l_shipdate") < lit(LateShipWindowEnd).cast("timestamp"))
@@ -1312,16 +1287,15 @@ object Relational {
       .agg(sum(col("l_extendedprice").cast(DecimalType(18, 2)) *
         (lit(1).cast(DecimalType(3, 2)) - col("l_discount").cast(DecimalType(4, 2))))
         .as("rev"))
-      .persist() // supplier-grain (bounded); consumed by 2 plan legs
+      .persistRecorded() // supplier-grain (bounded); consumed by 2 plan legs
     val mx = rev.agg(max("rev").as("mxrev")) // 1 row, provably bounded
-    val out = rev.crossJoin(broadcast(mx))
+    rev.crossJoin(broadcast(mx))
       .filter(col("rev") === col("mxrev"))
       .join(supplier.select(col("s_suppkey"), col("s_name")),
         col("l_suppkey") === col("s_suppkey"))
       .select(col("s_suppkey"), col("s_name"),
         col("rev").cast("double").as("total_revenue"))
       .orderBy("s_suppkey")
-    (out, rev)
   }
 
   /** X23 part-name filter (Q9 filters `p_name LIKE '%green%'`; this

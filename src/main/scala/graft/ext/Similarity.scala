@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.ext.SessionMemo.PersistRecorded
+
 /** Embedding similarity search over the `embeddings` table (64-dim
   * Array[Float]): brute-force cosine top-k as the exactness baseline and
   * a sign-LSH (random-hyperplane) bucketed variant as the scale path.
@@ -202,7 +204,7 @@ object Similarity {
         shiftright(col("code"), b * NeardupBandBits)
           .bitwiseAND(lit((1L << NeardupBandBits) - 1)).as("bval"))): _*)).as("e"))
       .select(col("vec_id"), col("e.blk"), col("e.bval"))
-      .persist()
+      .persistRecorded()
     // the keep relation is ≤ 2·256 rows BY CONSTRUCTION (one row per
     // (band, 8-bit value)) — provably bounded, so the hint is sound
     val keep = bands.groupBy("blk", "bval").agg(count(lit(1)).as("df"))
@@ -456,7 +458,7 @@ object Similarity {
     // label-grain, but consumed by BOTH pair sides: unpersisted, the
     // posexplode centroid build over the corpus executed twice
     // (DupSubtreeAudit; the two-leg rule)
-    val cents = centroids.join(members, "label").persist()
+    val cents = centroids.join(members, "label").persistRecorded()
     val a = cents.select(col("label").as("label_a"), col("centroid").as("ca"),
       col("n").as("n_a"))
     val b = cents.select(col("label").as("label_b"), col("centroid").as("cb"),
@@ -605,7 +607,7 @@ object Similarity {
     val emb = emb0.select(col("vec_id"), col("embedding"), col("nrm"))
     val asg = cellAssign(emb, nSeeds)
     // cell-keyed membership feeds BOTH pairwise sides and the output base
-    val mem = asg.join(emb, "vec_id").persist()
+    val mem = asg.join(emb, "vec_id").persistRecorded()
     val x = mem.select(col("vec_id"), col("cell"), col("ccos"),
       col("embedding"), col("nrm"))
     val y = mem.select(col("vec_id").as("yid"), col("cell").as("ycell"),
@@ -817,7 +819,7 @@ object Similarity {
       Seq(col("qid"), col("cid")) ++ (0 until PqSubSpaces).map { m =>
         val qs = sub(col("qe"), m); val cs = sub(col("ce"), m)
         (dot(qs, qs) + dot(cs, cs) - lit(2.0) * dot(qs, cs)).as(s"qd$m")
-      }: _*).persist()
+      }: _*).persistRecorded()
     val db = pqEncodeFrom(emb)
       .select(col("vec_id") +: (0 until PqSubSpaces).map(m => col(s"code$m")): _*)
     val cand = db.crossJoin(broadcast(q.select(col("qid"))))
@@ -848,7 +850,7 @@ object Similarity {
       // r20 (tools/ReProf): ≤NumQueries-row overlap boundary — a fresh
       // construction re-runs the query-spine left join + sort, not the
       // ADC and exact top-k legs (recon 0.94 s vs 0.06 s warm)
-      .persist()
+      .persistRecorded()
     q.select(col("qid"))
       .join(ov, Seq("qid"), "left")
       .select(col("qid"),
@@ -900,7 +902,7 @@ object Similarity {
       .select(least(floor((cos + lit(1.0)) / lit(2.0) * lit(CosHistBins.toDouble)),
         lit(CosHistBins - 1L)).cast("long").as("bin"))
       .groupBy("bin").agg(count(lit(1)).as("n_pairs"))
-      .persist() // ≤40 rows, but its subtree is the corpus pass — feeds total + join
+      .persistRecorded() // ≤40 rows, but its subtree is the corpus pass — feeds total + join
     val total = binned.agg(sum("n_pairs").as("tp")) // 1 row
     val spine = emb0.sparkSession.range(CosHistBins).select(col("id").as("bin"))
     spine.join(binned, Seq("bin"), "left")
@@ -993,7 +995,7 @@ object Similarity {
         Window.partitionBy("dim", "qid").orderBy(col("cos").desc, col("oid"))))
       .filter(col("rk") <= TopK)
       .select(col("dim"), col("qid"), col("oid"))
-      .persist() // bounded: |dims|·NumQueries·TopK rows; feeds both legs
+      .persistRecorded() // bounded: |dims|·NumQueries·TopK rows; feeds both legs
     val etop = ranked.filter(col("dim") === Dim).select(col("qid"), col("oid"))
     val ov = ranked.filter(col("dim") =!= Dim)
       .join(etop, Seq("qid", "oid"))

@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.ext.SessionMemo.PersistRecorded
+
 /** Mergeable cardinality sketches — the distinct-count primitive that
   * replaces exact `COUNT(DISTINCT …)` at 100 TB (Flajolet et al. 2007,
   * HyperLogLog; the reference has no sketch surface — its roadmap stops
@@ -205,7 +207,7 @@ object Sketch {
     val vocab = Tables.parquet(s, s"$dir/documents.parquet")
       .select(explode(TextOps.tokens(col("text"))).as("tok"))
       .groupBy("tok").agg(count(lit(1)).as("cnt"))
-      .persist()
+      .persistRecorded()
     val cells = cmsCellsOf(vocab)
     val w1 = Window
       .partitionBy(pmod(TextOps.tokenHash(col("tok")), lit(CmsRankBuckets)))
@@ -283,7 +285,7 @@ object Sketch {
   def kmvOverlap(s: SparkSession, dir: String): DataFrame = {
     val sh = Tables.parquet(s, s"$dir/documents.parquet")
       .select(col("source"), kmvHash(col("text")).as("h"))
-      .distinct().persist()
+      .distinct().persistRecorded()
     val nPer = sh.groupBy("source").agg(count(lit(1)).as("n"))
     val w1 = Window
       .partitionBy(col("source"), shiftright(col("h"), KmvShift))
@@ -298,7 +300,7 @@ object Sketch {
     // executes twice (the CLAUDE.md two-leg rule)
     val arr = sk.groupBy("source")
       .agg(sort_array(collect_list(col("h"))).as("hs"))
-      .persist()
+      .persistRecorded()
     val inter = sh.as("x")
       .join(sh.as("y"),
         col("x.h") === col("y.h") && col("x.source") < col("y.source"))
@@ -307,7 +309,7 @@ object Sketch {
       // r20 (tools/ReProf): ≤|sources|²-row exact-intersection boundary
       // — a fresh construction re-runs the tiny KMV pair grid + joins +
       // sort, not the corpus self-join (recon 0.79 s vs 0.04 s warm)
-      .persist()
+      .persistRecorded()
     val u = array_sort(array_union(col("ha"), col("hb")))
     val pairs = arr.select(col("source").as("source_a"), col("hs").as("ha"))
       .join(broadcast(
@@ -336,7 +338,7 @@ object Sketch {
       // r20 (tools/ReProf): the inter persist alone left recon at
       // 0.78 s — the KMV pair grid + size joins re-ran per fresh build;
       // the ≤|sources|²-row assembly boundary leaves only the sort
-      .persist()
+      .persistRecorded()
       .orderBy("source_a", "source_b")
   }
 

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.ext.SessionMemo.PersistRecorded
+
 /** Text analysis over the `documents` table — training-data-pipeline
   * operators (language ID, quality scoring, token stats, fingerprinting).
   * Everything is a codegen'd projection/aggregate over one scan; no UDFs,
@@ -702,7 +704,7 @@ object TextOps {
       // feeds the vocab→total, vocab→surp, and per-doc join legs —
       // unpersisted, the corpus explode+pre-agg executes 3× (the T11
       // multi-leg rule)
-      .persist()
+      .persistRecorded()
     val vocab = occ.groupBy("tok").agg(sum("c").as("cc"))
     val total = vocab.agg(sum("cc").as("n")) // 1 row, provably bounded
     val surp = vocab.crossJoin(broadcast(total))
@@ -806,7 +808,7 @@ object TextOps {
       // the n-gram explode + pre-agg (the dominant cost) runs twice
       // (the D2 `raw` persist, same reasoning); 3 longs + a count per
       // row, the narrowest relation in the plan
-      .persist()
+      .persistRecorded()
     val vocab = occ.groupBy("h", "hp").agg(sum("c").as("cg"))
     val prefixes = vocab.groupBy("hp").agg(sum("cg").as("cp"))
     val surp = vocab
@@ -987,7 +989,7 @@ object TextOps {
     import org.apache.spark.sql.types.DecimalType
     val base = d.withColumn("bucket",
         least(floor(col("q") * WinsorBuckets), lit(WinsorBuckets - 1L)).cast("long"))
-      .persist() // feeds the offsets, the ranked leg, and the final mean
+      .persistRecorded() // feeds the offsets, the ranked leg, and the final mean
     val wOff = Window.orderBy("bucket").rowsBetween(Window.unboundedPreceding, -1)
     val off = base.groupBy("bucket").agg(count(lit(1)).as("c"))
       .select(col("bucket"), coalesce(sum("c").over(wOff), lit(0L)).as("off"))
@@ -1005,7 +1007,7 @@ object TextOps {
       // r20 (tools/ReProf): 1-row percentile boundary — a fresh
       // construction re-runs the winsorized-mean agg over the base
       // cache, not the two-phase rank windows (recon 0.68 s vs 0.06 warm)
-      .persist()
+      .persistRecorded()
     base.crossJoin(broadcast(qs))
       .groupBy("n_docs", "p05", "p50", "p95")
       .agg(
@@ -1081,7 +1083,7 @@ object TextOps {
       .select(col("source"), explode(tokens(col("text"))).as("tok"))
       .filter(col("tok").isInCollection(AllStop))
       .groupBy("source", "tok").agg(count(lit(1)).as("c"))
-      .persist() // feeds ns, cw, and the term join legs (multi-leg rule)
+      .persistRecorded() // feeds ns, cw, and the term join legs (multi-leg rule)
     val ns = occ.groupBy("source").agg(sum("c").as("n_stop_tokens"))
     val cw = occ.groupBy("tok").agg(sum("c").as("cw"))
     val n = cw.agg(sum("cw").as("n")) // 1 row, provably bounded
@@ -1092,7 +1094,7 @@ object TextOps {
         (p * round(log((col("c").cast("double") * col("n").cast("double")) /
           (col("n_stop_tokens").cast("double") * col("cw").cast("double"))), 9))
           .as("term"))
-      .persist() // feeds the KL sum and the top-word rank
+      .persistRecorded() // feeds the KL sum and the top-word rank
     val kl = terms.groupBy("source")
       .agg(round(sum(col("term").cast(DecimalType(25, 12))).cast("double"), 6)
         .as("kl_drift"))
@@ -1108,7 +1110,7 @@ object TextOps {
       // r20 (tools/ReProf): ≤|sources|-row assembly boundary — a fresh
       // construction re-runs the sort only, not the KL/top-word legs
       // over the terms cache (recon 1.62 s vs 0.07 s warm)
-      .persist()
+      .persistRecorded()
       .orderBy("source")
   }
 
@@ -1475,7 +1477,7 @@ object TextOps {
       .withColumn("bucket",
         least(greatest(floor(col("mean_surprisal") * 8), lit(0L)),
           lit(CcnetBuckets - 1L)).cast("long"))
-      .persist() // feeds the offset, per-lang-count, and ranked legs
+      .persistRecorded() // feeds the offset, per-lang-count, and ranked legs
     val wOff = Window.partitionBy("lang").orderBy("bucket")
       .rowsBetween(Window.unboundedPreceding, -1)
     val off = base.groupBy("lang", "bucket").agg(count(lit(1)).as("c"))
@@ -1743,10 +1745,10 @@ object TextOps {
   def collocationsFrom(d: DataFrame): DataFrame = {
     val uni = d.select(explode(tokens(col("text"))).as("w"))
       .groupBy("w").agg(count(lit(1)).as("cw"))
-      .persist() // feeds the U total and both unigram join sides
+      .persistRecorded() // feeds the U total and both unigram join sides
     val bi = d.select(explode(ngrams(tokens(col("text")), 2)).as("g"))
       .groupBy("g").agg(count(lit(1)).as("cg"))
-      .persist() // feeds the B total and the candidate leg
+      .persistRecorded() // feeds the B total and the candidate leg
     val totals = uni.agg(sum("cw").as("u")).crossJoin(bi.agg(sum("cg").as("b")))
     val cand = bi.filter(col("cg") >= PmiMinCount)
       .withColumn("w1", split(col("g"), " ").getItem(0))
@@ -1949,7 +1951,7 @@ object TextOps {
     val postings = d
       .select(col("doc_id"), explode(tokens(col("text"))).as("term"))
       .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-      .persist() // feeds df spine + doc lengths + candidate join
+      .persistRecorded() // feeds df spine + doc lengths + candidate join
     val dl = postings.groupBy("doc_id").agg(sum("tf").as("dl"))
     // N counts ALL documents (empty ones included); T = total tokens.
     val stats = d.agg(count(lit(1)).as("n_docs"))
@@ -1985,7 +1987,7 @@ object TextOps {
       // construction re-runs the final term window + sort only, not the
       // candidate join/scoring/bucket window downstream of the postings
       // persist (recon 1.17 s vs 0.04 s warm)
-      .persist()
+      .persistRecorded()
     local
       .withColumn("rk", row_number().over(
         Window.partitionBy("term").orderBy(col("tfdl_e9").desc, col("doc_id"))))
@@ -2008,7 +2010,7 @@ object TextOps {
     val postings = t(s, dir)
       .select(col("doc_id"), explode(tokens(col("text"))).as("term"))
       .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-      .persist() // df spine + both stat legs
+      .persistRecorded() // df spine + both stat legs
     val stats = postings.select(col("doc_id")).distinct()
       .agg(count(lit(1)).as("n_docs_postings"))
       .crossJoin(postings.agg(sum("tf").cast("long").as("tot_tokens")))
@@ -2206,7 +2208,7 @@ object TextOps {
     val maxR = CoverageRanks.max
     val cnts = d.select(explode(tokens(col("text"))).as("w"))
       .groupBy("w").agg(count(lit(1)).as("cw"))
-      .persist() // feeds the max/total legs AND the rank leg
+      .persistRecorded() // feeds the max/total legs AND the rank leg
     val mx = cnts.agg(max("cw").as("mxc"), sum("cw").as("u"),
       count(lit(1)).as("n_all"))
     val bucketed = cnts.crossJoin(broadcast(mx))
@@ -2692,19 +2694,8 @@ object TextOps {
     * join-back legs — all three persisted (t34 is in Bench.extraIters
     * per the persist contract).
     */
-  def lmPerplexity(s: SparkSession, dir: String): DataFrame = {
-    // prepared-query memo (r19, tools/BuildCensus: ~0.8 s of driver
-    // analysis per call — the registry's largest non-loop construction);
-    // EVERY persist in the composed plan (model uni/big, the scored
-    // occurrence pre-agg, the ranked base) is re-armed per call — the
-    // d17 buried-persist lesson, see Dedup.simhashParts
-    val (q, persisted) = SessionMemo.get[(DataFrame, Seq[DataFrame])](
-      s, s"textops-t34:$dir") {
-      lmPerplexityParts(t(s, dir).select(col("doc_id"), col("source"), col("text")))
-    }
-    persisted.foreach(SessionMemo.rearm)
-    q
-  }
+  def lmPerplexity(s: SparkSession, dir: String): DataFrame =
+    lmPerplexityFrom(t(s, dir).select(col("doc_id"), col("source"), col("text")))
 
   /** The T34 stupid-backoff model: hashed n-gram count tables + the
     * 1-row train-token total. `uni` and `big` are persisted by
@@ -2732,12 +2723,12 @@ object TextOps {
       .select(explode(tokens(col("text"))).as("tok"))
       .select(tokenHash(col("tok")).as("h"))
       .groupBy("h").agg(count(lit(1)).as("c"))
-      .persist() // u2 + u3 scoring legs (+ the N total)
+      .persistRecorded() // u2 + u3 scoring legs (+ the N total)
     val big = train
       .select(explode(ngrams(tokens(col("text")), 2)).as("g"))
       .select(tokenHash(col("g")).as("h"))
       .groupBy("h").agg(count(lit(1)).as("c"))
-      .persist() // b12 + b23 scoring legs
+      .persistRecorded() // b12 + b23 scoring legs
     val tri = train
       .select(explode(ngrams(tokens(col("text")), 3)).as("g"))
       .select(tokenHash(col("g")).as("h"))
@@ -2790,12 +2781,7 @@ object TextOps {
     * relation — the spec pins exact backoff levels and nats on a
     * crafted train/held-out corpus.
     */
-  def lmPerplexityFrom(d: DataFrame): DataFrame = lmPerplexityParts(d)._1
-
-  /** [[lmPerplexityFrom]] plus every persisted relation inside the
-    * composed plan, for the memoizing caller's per-call re-arm.
-    */
-  private[graft] def lmPerplexityParts(d: DataFrame): (DataFrame, Seq[DataFrame]) = {
+  def lmPerplexityFrom(d: DataFrame): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
     val isTrain = splitOf(col("doc_id")) === "train"
     val m = sbModel(d.filter(isTrain))
@@ -2808,7 +2794,7 @@ object TextOps {
       .select(col("doc_id") +: sbKeyCols(col("g")): _*)
       .groupBy("doc_id", sbKeys: _*)
       .agg(count(lit(1)).as("c"))
-      .persist() // distinct-trigram leg + per-doc join-back leg
+      .persistRecorded() // distinct-trigram leg + per-doc join-back leg
     val keys = sbKeys
     val dist = socc.select(keys.map(col): _*).distinct()
     val sc = sbNll(dist, m)
@@ -2835,7 +2821,7 @@ object TextOps {
             lit(1000000.0)).cast("long")).as("anll_e6"))
       // tercile rank legs + final join-back — and its subtree holds the
       // only reference to the (unpersisted) train trigram table
-      .persist()
+      .persistRecorded()
     val ranked = base.filter(col("anll_e6").isNotNull)
     // two-phase exact per-source rank on (anll_e6, doc_id) — T28 shape
     val mx = ranked.groupBy("source")
@@ -2856,12 +2842,11 @@ object TextOps {
         when(col("rk") * 3 <= col("ns"), "head")
           .when(col("rk") * 3 <= col("ns") * 2, "middle")
           .otherwise("tail").as("ppl_bucket"))
-    val out = base.join(tercile, Seq("doc_id"), "left")
+    base.join(tercile, Seq("doc_id"), "left")
       .select(col("doc_id"), col("source"), col("n_scored"), col("n_tri"),
         col("n_bi"), col("n_oov"), col("mean_nll"),
         coalesce(col("ppl_bucket"), lit("unscored")).as("ppl_bucket"))
       .orderBy("doc_id")
-    (out, Seq(m.uni, m.big, socc, base))
   }
 
   val lmPerplexitySql: String = {

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.ext.Tables
+import graft.ext.SessionMemo.PersistRecorded
 
 /** Multimodal column plumbing: opaque `binary` payloads + typed metadata,
   * with decode / feature-extract / frame-sample implemented as
@@ -362,7 +363,7 @@ object Multimodal {
     */
   def frameOverlapFrom(tbl: DataFrame): DataFrame = {
     val fh = framesOf(tbl).select(col("doc_id"), col("frame_hash")).distinct()
-      .persist() // build-time: feeds the df cap, the capped join, and the sizes leg
+      .persistRecorded() // build-time: feeds the df cap, the capped join, and the sizes leg
     val keep = fh.groupBy("frame_hash").agg(count(lit(1)).as("df"))
       .filter(col("df") <= MaxFrameDf).select("frame_hash")
     val capped = fh.join(keep, "frame_hash")
@@ -376,7 +377,7 @@ object Multimodal {
     // enrichment join is on doc_id (bounded ≤ MaxSampledFrames rows per
     // key), and nothing new is broadcast or windowed.
     val cappedN = capped.join(sizes, "doc_id")
-      .persist() // feeds both self-join sides
+      .persistRecorded() // feeds both self-join sides
     val pairs = cappedN.as("a").join(cappedN.as("b"), "frame_hash")
       .filter(col("a.doc_id") < col("b.doc_id"))
       .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
@@ -478,7 +479,7 @@ object Multimodal {
         lit(0L), (acc, x) => acc * 2 + x).as(s"blk$b")
     }
     val hashed = withBits.select(col("doc_id") +: blockCols: _*)
-      .persist() // feeds the occupancy cap and both join sides
+      .persistRecorded() // feeds the occupancy cap and both join sides
     val blocks = hashed.select(col("doc_id"),
       col("blk0"), col("blk1"), col("blk2"), col("blk3"),
       explode(array((0 until AHashBlocks).map(b =>
@@ -493,7 +494,7 @@ object Multimodal {
       // the bucket self-join + distinct + sort only, not the hex
       // sampling projection, block explode and occupancy-cap agg
       // downstream of the hashed persist (recon 0.44 s vs 0.03 s warm)
-      .persist()
+      .persistRecorded()
     val hamming = (0 until AHashBlocks).map(b =>
       bit_count(col(s"x.blk$b").bitwiseXOR(col(s"y.blk$b")))).reduce(_ + _)
     capped.as("x").join(capped.as("y"), Seq("blk", "bval"))
@@ -586,7 +587,7 @@ object Multimodal {
     // columns and the per-modality counts after them are map-side
     // combinable. The exploded block relation feeds all three legs →
     // persisted (registered in Bench.extraIters).
-    val blk = blocks.persist()
+    val blk = blocks.persistRecorded()
     val tot = blk.groupBy("modality").agg(count(lit(1)).as("total_blocks"))
     val pay = blk.select("modality", "doc_id").distinct()
       .groupBy("modality").agg(count(lit(1)).as("n_payloads"))

@@ -1,14 +1,16 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Construction-cost census over the whole registry (diagnostic): calls
   * each query function twice WITHOUT executing the result and reports
   * the second call's wall time — the steady-state per-action Dataset
   * construction cost a bench iteration pays before any task runs
   * (eager per-operation analysis, embedded driver actions like Grid's
-  * bucket sizing; memoized entries show ~0). Found the r19 a5/a5b/d17
-  * memoization candidates; run it when the slow tail shifts.
+  * bucket sizing; shared bases memoized on SessionMemo show ~0). Found
+  * the r19 a5/a5b/d17 memoization candidates; run it when the slow
+  * tail shifts. Through `rawQueries` every entry's second call is a
+  * real construction — including the eleven (a4, a5, a5b, d12, d14,
+  * d17, g7, s21, t34, x15, x22) that once carried their own memo and
+  * showed ~0 here.
   *
   * Usage: SPARK_GRAFT_SF_DIR=... sbt "runMain graft.tools.BuildCensus [minMs]"
   */
@@ -16,20 +18,8 @@ object BuildCensus {
   def main(args: Array[String]): Unit = {
     val minMs = args.headOption.map(_.toLong).getOrElse(100L)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.maxPlanStringLength", "8192")
-      // r20: codegen-class cache sized to the registry (see Bench.buildSession)
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4096"))
-      .getOrCreate()
+    val spark = graft.Bench.buildSession(32)
     spark.sparkContext.setLogLevel("ERROR")
-    graft.plans.GraftExtensions.register(spark)
 
     // rawQueries, NOT queries (r19 ADVICE): the prepared-query memo
     // would make every second call a map hit (~0 ms) and the census

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{bit_xor, col, struct, xxhash64}
 
 /** Persist-lifetime audit: machine-checks the contract documented on
@@ -20,16 +19,7 @@ import org.apache.spark.sql.functions.{bit_xor, col, struct, xxhash64}
 object PersistAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.GraftExtensions.register(spark)
+    val spark = graft.Bench.buildSession(8)
     // Queries allowed to leave persists alive on return: the documented
     // internal/memoized-persist set plus the CC label-propagation
     // queries (session-lifetime ccMemo labels + their edge fixtures).

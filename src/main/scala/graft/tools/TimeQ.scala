@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{bit_xor, col, struct, xxhash64}
 
 /** Times named registry queries AND raster bench cases (Bench's
@@ -15,22 +14,8 @@ import org.apache.spark.sql.functions.{bit_xor, col, struct, xxhash64}
 object TimeQ {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val iters = sys.env.getOrElse("SPARK_GRAFT_ITERS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // match Bench.buildSession (r19): bound AQE plan-string rendering
-      .config("spark.sql.maxPlanStringLength", "8192")
-      // r20: codegen-class cache sized to the registry (see Bench.buildSession)
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4096"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.GraftExtensions.register(spark)
+    val spark = graft.Bench.buildSession(32)
     val raster = graft.Bench.rasterCases(spark).toMap
     val unknown = args.filterNot(n =>
       graft.SparkEntry.queries.contains(n) || raster.contains(n))
