@@ -7,7 +7,7 @@ import graft.geom.Geom
 import graft.meta.SafeMeta
 import graft.model._
 import graft.ops.PixelOps
-import graft.sink.Sinks
+import graft.sink.{Sinks, TiffWriter}
 import graft.sources.{RasterSource, Tile}
 import graft.stats.FastStats
 
@@ -26,8 +26,50 @@ final case class ProcessedImage(
       * and composes synRGB only for JPEG). */
     bands: Option[(Array[Int], Array[Int])] = None)
 
-/** Quantized output tile. */
-final case class QTile(tile_row: Int, tile_col: Int, h: Int, w: Int, q: Array[Int])
+/** Quantized output tile: the h×w samples row-major in `q`, packed
+  * little-endian at the output width — 1 byte a sample when the producing
+  * stage's maxVal ≤ 255, else 2 — and read unsigned. Bytes per sample =
+  * `q.length / (h·w)`.
+  *
+  * A byte payload is one binary column to Spark: the encoders and the
+  * collect copy it whole, where an `Array[Int]` converts element by
+  * element at 4 bytes a sample. At 16 bits it is also the TIFF tile row
+  * layout, so [[graft.sink.TiffWriter.tileBytes]] copies rows.
+  */
+final case class QTile(tile_row: Int, tile_col: Int, h: Int, w: Int, q: Array[Byte]) {
+  def bytesPerSample: Int = if (q.length == 0) 1 else q.length / (h * w)
+
+  /** All samples, unpacked. */
+  def samples: Array[Int] = {
+    val out = new Array[Int](h * w)
+    var i = 0
+    if (bytesPerSample == 1) while (i < out.length) { out(i) = q(i) & 0xff; i += 1 }
+    else while (i < out.length) { out(i) = (q(2 * i) & 0xff) | ((q(2 * i + 1) & 0xff) << 8); i += 1 }
+    out
+  }
+}
+
+object QTile {
+  /** A tile of `samples` (each in 0..maxVal), packed at maxVal's width. */
+  def packed(tileRow: Int, tileCol: Int, h: Int, w: Int, samples: Array[Int],
+             maxVal: Double): QTile = {
+    val q =
+      if (maxVal <= 255) {
+        val b = new Array[Byte](samples.length)
+        var i = 0
+        while (i < b.length) { b(i) = samples(i).toByte; i += 1 }
+        b
+      } else {
+        val b = new Array[Byte](2 * samples.length)
+        var i = 0
+        while (i < samples.length) {
+          b(2 * i) = samples(i).toByte; b(2 * i + 1) = (samples(i) >>> 8).toByte; i += 1
+        }
+        b
+      }
+    QTile(tileRow, tileCol, h, w, q)
+  }
+}
 
 /** One source tile cropped to the source window of one warp output block:
   * the record [[Engine.warpTiles]] ships. `tile` is the id of the block's
@@ -76,11 +118,18 @@ object Engine {
   /** A1/A2 over tiles: moments reduce, then histogram reduce, then the
     * shared CDF inversion — two jobs, partial state = one buffer per
     * partition.
+    *
+    * The per-partition Welford buffers fold on the driver in PARTITION
+    * order: Chan's merge is not associative in floating point, and a
+    * `Dataset.reduce` merges in task-completion order, so mean/std could
+    * differ in their last bits from run to run. The collect ships the
+    * same one row per partition the reduce did. Histogram bins are
+    * integer adds, exact in any order.
     */
   def tileStats(tiles: Dataset[DbTile]): FastStats.FastStatsResult = {
     val m = tiles.mapPartitions(Kernels.momentsOfTiles)(
       org.apache.spark.sql.Encoders.product[FastStats.Moments])
-      .reduce(FastStats.WelfordAgg.merge _)
+      .collect().foldLeft(FastStats.WelfordAgg.zero)(FastStats.WelfordAgg.merge)
     val mr = FastStats.WelfordAgg.finish(m)
     FastStats.fromMoments(mr, () => {
       val bins = graft.stats.HistStats.NumBins
@@ -114,36 +163,47 @@ object Engine {
 
   def quantizeTiles(tiles: Dataset[DbTile], low: Double, high: Double,
                     gamma: Double, maxVal: Double): Dataset[QTile] =
-    tiles.map(t => QTile(t.tile_row, t.tile_col, t.h, t.w,
-      Kernels.quantize(t.db, low, high, gamma, maxVal)))
+    tiles.map(t => QTile.packed(t.tile_row, t.tile_col, t.h, t.w,
+      Kernels.quantize(t.db, low, high, gamma, maxVal), maxVal))
 
   /** P8: global min/max reduce + per-tile rescale. */
   def rescaleTilesU8(tq: Dataset[QTile]): Dataset[QTile] = {
     import tq.sparkSession.implicits._
     val (mn, mx) = tq.map { t =>
+      val q = t.samples
       var mn = Int.MaxValue; var mx = Int.MinValue
       var i = 0
-      while (i < t.q.length) { if (t.q(i) < mn) mn = t.q(i); if (t.q(i) > mx) mx = t.q(i); i += 1 }
+      while (i < q.length) { if (q(i) < mn) mn = q(i); if (q(i) > mx) mx = q(i); i += 1 }
       (mn, mx)
     }.reduce((a, b) => (math.min(a._1, b._1), math.max(a._2, b._2)))
-    tq.map(t => t.copy(q = Kernels.rescaleU8(t.q, mn, mx)))
+    tq.map(t => QTile.packed(t.tile_row, t.tile_col, t.h, t.w,
+      Kernels.rescaleU8(t.samples, mn, mx), 255.0))
   }
 
-  /** Collect the output as TILE ARRAYS and stitch the row-major image. */
+  /** Samples [[assembleTiles]] has stitched on the driver since the JVM
+    * started; specs read it to show a path never assembles an image.
+    */
+  private[graft] val assembledSamples = new java.util.concurrent.atomic.AtomicLong
+
+  /** Collect the output as TILE ARRAYS and stitch the row-major image on
+    * the driver: `rows·cols` ints, so only for target-size outputs (the
+    * resized, padded, two-band and JPEG paths). A full-resolution TIFF
+    * never comes here; [[processToPath]] streams its tiles to the file.
+    */
   def assembleTiles(tq: Dataset[QTile], rows: Int, cols: Int,
                     tileSize: Int = DefaultTileSize): Array[Int] = {
     val out = new Array[Int](rows * cols)
     tq.collect().foreach { t =>
       val y0 = t.tile_row * tileSize
       val x0 = t.tile_col * tileSize
-      var i = 0
+      val q = t.samples
       var y = 0
       while (y < t.h) {
-        var x = 0
-        while (x < t.w) { out((y0 + y) * cols + x0 + x) = t.q(i); i += 1; x += 1 }
+        System.arraycopy(q, y * t.w, out, (y0 + y) * cols + x0, t.w)
         y += 1
       }
     }
+    assembledSamples.addAndGet(out.length.toLong)
     out
   }
 
@@ -183,10 +243,11 @@ object Engine {
         val strip = new Array[Double](h * srcCols)
         tiles.foreach { t =>
           val x0 = t.tile_col * tileSize
+          val q = t.samples
           var y = 0
           while (y < t.h) {
             var x = 0
-            while (x < t.w) { strip(y * srcCols + x0 + x) = t.q(y * t.w + x).toDouble; x += 1 }
+            while (x < t.w) { strip(y * srcCols + x0 + x) = q(y * t.w + x).toDouble; x += 1 }
             y += 1
           }
         }
@@ -259,7 +320,7 @@ object Engine {
           }
           o += 1
         }
-        QTile(s, 0, o1 - o0, dstCols, q)
+        QTile.packed(s, 0, o1 - o0, dstCols, q, maxVal)
       }(qTileEnc)
   }
 
@@ -269,7 +330,9 @@ object Engine {
     * (EngineSpec proves it), so this is purely a cost model: 32 M px is a
     * ~128 MB driver buffer, well under any sane driver heap, while the
     * two extra shuffles of the distributed path cost more than the
-    * local convolution at that size.
+    * local convolution at that size. It bounds only a RESIZED output's
+    * source: a full-resolution TIFF streams at any size, and a
+    * full-resolution JPEG or two-band TIFF is collected at its own size.
     */
   val DriverResizeMaxPixels: Long = 32L * 1024 * 1024
 
@@ -277,7 +340,8 @@ object Engine {
     * target shrinks a LARGE image, the separable Lanczos runs distributed
     * BEFORE the collect, so the driver only ever holds target-size
     * buffers (a native-res 26544² scene would otherwise collect ~2.8 GB
-    * just to throw most of it away in the resize).
+    * just to throw most of it away in the resize). The tiles travel
+    * packed ([[QTile]]) and unpack into the returned `Array[Int]`.
     */
   def collectResized(tq: Dataset[QTile], rows: Int, cols: Int,
                      target: Option[Int], maxVal: Int,
@@ -659,9 +723,9 @@ object Engine {
       ty += 1
     }
 
-    tiles.map(t => QTile(t.tile_row, t.tile_col, t.h, t.w,
+    tiles.map(t => QTile.packed(t.tile_row, t.tile_col, t.h, t.w,
       Kernels.claheSample(t, tileSize, tileH, tileW, nTiles, bins, low, high,
-        cdfFlat, maxVal)))
+        cdfFlat, maxVal), maxVal))
   }
 
   // ------------------------------------------------------------- pipeline
@@ -674,8 +738,37 @@ object Engine {
                   decimate: Int = 1,
                   gt: Option[Array[Double]] = None,
                   warp: Option[graft.geom.Warp.NativeWarp] = None): ProcessedImage = {
-    val (outRows, outCols) = warp.map(nw => (nw.dstRows, nw.dstCols))
+    val (outRows, outCols) = outDims(rows, cols, decimate, warp)
+    bandTiles(spark, productId, band, rows, cols, params, decimate, warp)(
+      collectImage(params, gt, outRows, outCols))
+  }
+
+  /** The output grid of a pipeline: the warp's, else the decimated source's. */
+  private def outDims(rows: Int, cols: Int, decimate: Int,
+                      warp: Option[graft.geom.Warp.NativeWarp]): (Int, Int) =
+    warp.map(nw => (nw.dstRows, nw.dstCols))
       .getOrElse(((rows + decimate - 1) / decimate, (cols + decimate - 1) / decimate))
+
+  /** [[processBand]]'s and [[processBandOp]]'s output step on the final
+    * tiles: collect at target size, then pad.
+    */
+  private def collectImage(params: ProcessingParams, gt: Option[Array[Double]],
+                           outRows: Int, outCols: Int)(q: Dataset[QTile]): ProcessedImage = {
+    val (resized, nw, nh) = collectResized(
+      q, outRows, outCols, params.targetSize, params.bitDepth.maxVal.toInt)
+    val (img, fw, fh, newGt) = Geom.padAndRescaleGt(
+      resized, nw, nh, outCols, outRows, params.pad, gt)
+    ProcessedImage(fw, fh, params.bitDepth, Some(img), None, newGt)
+  }
+
+  /** [[processBand]]'s pipeline up to its final tiles, which `finish`
+    * consumes while the pipeline's caches are still held.
+    */
+  private def bandTiles[R](spark: SparkSession, productId: String, band: String,
+                           rows: Int, cols: Int, params: ProcessingParams, decimate: Int,
+                           warp: Option[graft.geom.Warp.NativeWarp])(
+                           finish: Dataset[QTile] => R): R = {
+    val (outRows, outCols) = outDims(rows, cols, decimate, warp)
     // cache the FLOAT tiles (half the bytes through the columnar cache);
     // the dB view recomputes lazily per pass — log10 is cheaper than
     // decoding a cached double column. The warp (when requested and
@@ -698,15 +791,8 @@ object Engine {
       // U8 output goes through the u16-path quantize then a min-max
       // rescale (the reference's double normalization, autoscale.rs:662-680).
       val quantP = if (params.bitDepth == BitDepth.U8) Some(quant.persist()) else None
-      try {
-        val finalQ = quantP.map(rescaleTilesU8).getOrElse(quant)
-        // resize runs distributed; the driver collects target-size tiles
-        val (resized, nw, nh) = collectResized(
-          finalQ, outRows, outCols, params.targetSize, maxVal.toInt)
-        val (img, fw, fh, newGt) = Geom.padAndRescaleGt(
-          resized, nw, nh, outCols, outRows, params.pad, gt)
-        ProcessedImage(fw, fh, params.bitDepth, Some(img), None, newGt)
-      } finally quantP.foreach(_.unpersist())
+      try finish(quantP.map(rescaleTilesU8).getOrElse(quant))
+      finally quantP.foreach(_.unpersist())
     } finally {
       // unpersist only THIS pipeline's caches — a library entry point must
       // not clear the shared session's cache manager out from under
@@ -724,7 +810,7 @@ object Engine {
   def tamedSynrgbU8(tiles: Dataset[DbTile], isCopol: Boolean): Dataset[QTile] = {
     val st = tileStats(tiles)
     if (st.n == 0)
-      return tiles.map(t => QTile(t.tile_row, t.tile_col, t.h, t.w, new Array[Int](t.db.length)))
+      return tiles.map(t => QTile(t.tile_row, t.tile_col, t.h, t.w, new Array[Byte](t.db.length)))
     val p02 = st.percentiles("p02"); val p05 = st.percentiles("p05")
     val p99 = st.percentiles("p99")
     val low = if (isCopol) math.min(p02, p05) else p05
@@ -898,8 +984,7 @@ object Engine {
                        params: ProcessingParams, decimate: Int = 1,
                        gt: Option[Array[Double]] = None,
                        warp: Option[graft.geom.Warp.NativeWarp] = None): ProcessedImage = {
-    val (outRows, outCols) = warp.map(nw => (nw.dstRows, nw.dstCols))
-      .getOrElse(((rows + decimate - 1) / decimate, (cols + decimate - 1) / decimate))
+    val (outRows, outCols) = outDims(rows, cols, decimate, warp)
     val forTiff = params.format == OutputFormat.Tiff
     // JPEG synRGB consumes u8 bands; TIFF keeps the requested bit depth.
     val maxVal = if (forTiff) params.bitDepth.maxVal else 255.0
@@ -960,6 +1045,13 @@ object Engine {
 
   /** E2: file-to-file with sidecars (`process_safe_to_path`,
     * `api/mod.rs:539-674`).
+    *
+    * A single-band or band-operation TIFF at full resolution (no resize,
+    * no effective pad) never exists as an image on the driver: the
+    * pipeline hands its final tiles to [[streamTiff]], whose tasks encode
+    * TIFF tiles that the driver writes at their fixed offsets partition
+    * by partition. Every other output is collected at its target size
+    * and written from the array. A TIFF past 4 GiB raises before any job.
     */
   def processToPath(spark: SparkSession, productId: String, rows: Int, cols: Int,
                     outPath: String, params: ProcessingParams,
@@ -987,16 +1079,79 @@ object Engine {
       case Polarization.Multiband => "MULTIBAND(VV, VH)"
       case p => p.name.toUpperCase
     }
-    val img = params.polarization match {
-      case Polarization.Multiband => processMultiband(
-        spark, productId, ("vv", "vh"), rows, cols, params, decimate, gt, warp)
-      case Polarization.Op(op) =>
-        processBandOp(spark, productId, op, rows, cols, params, decimate, gt, warp)
-      case p =>
-        processBand(spark, productId, p.name, rows, cols, params, decimate, gt, warp)
+    val (outRows, outCols) = outDims(rows, cols, decimate, warp)
+    val (nw, nh) = params.targetSize.map(Geom.resizeDims(outCols, outRows, _))
+      .getOrElse((outCols, outRows))
+    val multiband = params.polarization == Polarization.Multiband
+    val u16 = params.bitDepth == BitDepth.U16
+    val fields = Sinks.metadataFields(effMeta, polLabel)
+    val padded = params.pad && nw != nh
+    if (params.format == OutputFormat.Tiff) {
+      val (fw, fh) = if (padded) (math.max(nw, nh), math.max(nw, nh)) else (nw, nh)
+      TiffWriter.requireClassic(fw, fh, u16, if (multiband) 2 else 1)
     }
-    writeImage(outPath, img, params, effMeta, polLabel)
+    val streams = params.format == OutputFormat.Tiff && !multiband &&
+      (nw, nh) == (outCols, outRows) && !padded
+    if (streams) {
+      // at full size and without a pad the geotransform is unchanged
+      val layout = TiffWriter.layout(outCols, outRows, u16, 1,
+        Sinks.tiffFields(gt, effMeta.crs, fields))
+      val write = (q: Dataset[QTile]) => streamTiff(q, layout, outPath)
+      params.polarization match {
+        case Polarization.Op(op) =>
+          bandOpTiles(spark, productId, op, rows, cols, params, decimate, warp)(write)
+        case p => bandTiles(spark, productId, p.name, rows, cols, params, decimate, warp)(write)
+      }
+      writeSidecars(outPath, gt, effMeta, fields)
+    } else {
+      val img = params.polarization match {
+        case Polarization.Multiband => processMultiband(
+          spark, productId, ("vv", "vh"), rows, cols, params, decimate, gt, warp)
+        case Polarization.Op(op) =>
+          processBandOp(spark, productId, op, rows, cols, params, decimate, gt, warp)
+        case p =>
+          processBand(spark, productId, p.name, rows, cols, params, decimate, gt, warp)
+      }
+      writeImage(outPath, img, params, effMeta, polLabel)
+    }
   }
+
+  /** Writes `q`, the final tiles of a full-resolution single-page TIFF,
+    * into the file at `layout` without an image on the driver: each task
+    * encodes its tiles ([[TiffWriter.tileBytes]]), and the driver writes
+    * each partition's parts at their offsets as the partition's result
+    * arrives, then drops them — so it holds one partition's parts at a
+    * time, not the image. Spark calls the handler on its scheduler
+    * thread, one call per partition: a positional write of that
+    * partition's tiles (2 MB for 16 tiles at 16 bits). A failed job
+    * leaves no file behind.
+    */
+  private def streamTiff(q: Dataset[QTile], layout: TiffWriter.Layout, path: String): Unit = {
+    val bps = layout.bytesPerSample
+    val parts = q.rdd.mapPartitions(_.map(t => (t.tile_row, t.tile_col, TiffWriter.tileBytes(t, bps))))
+    val out = new TiffWriter.Out(path, layout)
+    try {
+      try q.sparkSession.sparkContext.runJob(parts,
+        (it: Iterator[(Int, Int, Array[Byte])]) => it.toArray,
+        (_: Int, ps: Array[(Int, Int, Array[Byte])]) => {
+          streamedDeliveries.incrementAndGet()
+          mostPartsHeld.accumulateAndGet(ps.length, (a, b) => math.max(a, b))
+          ps.foreach { case (tr, tc, b) => out.put(0, tr, tc, b) }
+        })
+      finally out.close()
+    } catch {
+      case e: Throwable =>
+        java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(path))
+        throw e
+    }
+  }
+
+  /** The driver's side of [[streamTiff]] since the JVM started: the
+    * partition deliveries it wrote, and the most parts one delivery held.
+    * Specs read them beside [[assembledSamples]].
+    */
+  private[graft] val streamedDeliveries = new java.util.concurrent.atomic.AtomicLong
+  private[graft] val mostPartsHeld = new java.util.concurrent.atomic.AtomicInteger
 
   /** S1 viability check at open (`sentinel1.rs:155-161`): only GRD
     * products are supported; a declared non-GRD type raises
@@ -1160,8 +1315,20 @@ object Engine {
                     params: ProcessingParams, decimate: Int = 1,
                     gt: Option[Array[Double]] = None,
                     warp: Option[graft.geom.Warp.NativeWarp] = None): ProcessedImage = {
-    val (outRows, outCols) = warp.map(nw => (nw.dstRows, nw.dstCols))
-      .getOrElse(((rows + decimate - 1) / decimate, (cols + decimate - 1) / decimate))
+    val (outRows, outCols) = outDims(rows, cols, decimate, warp)
+    bandOpTiles(spark, productId, op, rows, cols, params, decimate, warp)(
+      collectImage(params, gt, outRows, outCols))
+  }
+
+  /** [[processBandOp]]'s pipeline up to its final tiles, handed to
+    * `finish` like [[bandTiles]].
+    */
+  private def bandOpTiles[R](spark: SparkSession, productId: String,
+                             op: PolarizationOperation, rows: Int, cols: Int,
+                             params: ProcessingParams, decimate: Int,
+                             warp: Option[graft.geom.Warp.NativeWarp])(
+                             finish: Dataset[QTile] => R): R = {
+    val (outRows, outCols) = outDims(rows, cols, decimate, warp)
     implicit val tileEnc: org.apache.spark.sql.Encoder[Tile] =
       org.apache.spark.sql.Encoders.product[Tile]
     // both bands warp onto the SAME output grid before the positional
@@ -1188,16 +1355,8 @@ object Engine {
           quantizeTiles(combined, low, high, gamma, maxVal)
       }
       val q0P = if (params.bitDepth == BitDepth.U8) Some(q0.persist()) else None
-      try {
-        val q = q0P.map(rescaleTilesU8).getOrElse(q0)
-        // same target-size collect as processBand: large sources resize
-        // distributed before anything reaches the driver
-        val (resized, nw, nh) = collectResized(
-          q, outRows, outCols, params.targetSize, maxVal.toInt)
-        val (rz, fw, fh, newGt) = Geom.padAndRescaleGt(
-          resized, nw, nh, outCols, outRows, params.pad, gt)
-        ProcessedImage(fw, fh, params.bitDepth, Some(rz), None, newGt)
-      } finally q0P.foreach(_.unpersist())
+      try finish(q0P.map(rescaleTilesU8).getOrElse(q0))
+      finally q0P.foreach(_.unpersist())
     } finally {
       // only this pipeline's caches — never the shared cache manager
       combined.unpersist()
@@ -1207,6 +1366,7 @@ object Engine {
   private def writeImage(outPath: String, img: ProcessedImage,
                          params: ProcessingParams, meta: SafeMeta,
                          polLabel: String): Unit = {
+    val fields = Sinks.metadataFields(meta, polLabel)
     (params.format, img.bands, img.rgb, img.gray) match {
       case (OutputFormat.Tiff, Some((b1, b2)), _, _) =>
         Sinks.writeTiffMultiband(outPath, b1, b2, img.width, img.height,
@@ -1215,19 +1375,22 @@ object Engine {
         // K8: embed geo + metadata as TIFF tags (skip-identity gt /
         // projection-only-with-gt rules live in Sinks.tiffFieldNodes)
         Sinks.writeTiffGrayTagged(outPath, gray, img.width, img.height,
-          params.bitDepth == BitDepth.U16, img.geotransform, meta.crs,
-          Sinks.metadataFields(meta, polLabel))
+          params.bitDepth == BitDepth.U16, img.geotransform, meta.crs, fields)
       case (OutputFormat.Jpeg, _, Some((r, g, b)), _) =>
         Sinks.writeJpegRgb(outPath, r, g, b, img.width, img.height)
       case (OutputFormat.Jpeg, _, _, Some(gray)) =>
         Sinks.writeJpegGray(outPath, gray, img.width, img.height)
       case _ => throw graft.model.GraftException.Processing("no image data")
     }
-    img.geotransform.foreach(Sinks.writeWorldFile(outPath, _))
+    writeSidecars(outPath, img.geotransform, meta, fields)
+  }
+
+  /** World file, .prj and JSON sidecar of an image at `outPath`. */
+  private def writeSidecars(outPath: String, gt: Option[Array[Double]], meta: SafeMeta,
+                            fields: Seq[(String, String)]): Unit = {
+    gt.foreach(Sinks.writeWorldFile(outPath, _))
     meta.crs.foreach(Sinks.writePrj(outPath, _))
-    val json = Sinks.sidecarJson(Sinks.metadataFields(meta, polLabel),
-      img.geotransform, meta.crs)
-    Sinks.writeSidecar(outPath, json)
+    Sinks.writeSidecar(outPath, Sinks.sidecarJson(fields, gt, meta.crs))
   }
 
   /** E2 batch: per-product error isolation + report

@@ -528,9 +528,12 @@ object Graph {
   def components(s: SparkSession, dir: String): DataFrame = {
     // the clusterLabels loop re-roots each round at an RDD scan, so two
     // constructions are never plan-equal (see Dedup.memoLabels) — one
-    // build per (session, dir)
+    // build per (session, dir). The loop materializes the RDD-rooted
+    // labels inside the build, and no plan reads the edges after it, so
+    // the entry does not own the edge persists: its hits would re-arm
+    // them for nothing.
     val labels = SessionMemo.get[DataFrame](s, s"graph-cc:$dir") {
-      val (edges, deg) = edgeRelations(s, dir)
+      val (edges, deg) = SessionMemo.unrecorded(edgeRelations(s, dir))
       graft.ext.Dedup.clusterLabels(
         deg.select(col("u").as("id")),
         edges.filter(col("u") < col("v"))

@@ -88,6 +88,15 @@ private[graft] object SessionMemo {
     }
   }
 
+  /** Runs `body` with nothing it persists or hits credited to the
+    * enclosing build: for a build that reads a shared entry only while it
+    * builds, so that its own hits need not re-arm that entry's persists.
+    */
+  def unrecorded[A](body: => A): A = {
+    frames.set(new Frame :: frames.get)
+    try body finally frames.set(frames.get.tail)
+  }
+
   /** Memoized build of a pure (session, key) value.
     *
     * Deliberately NOT `computeIfAbsent`: builds nest (Graph.components →
@@ -121,6 +130,12 @@ private[graft] object SessionMemo {
       }
     }
   }
+
+  /** The persists the held entry `key` owns, in build order; empty when
+    * the memo holds no such entry.
+    */
+  private[graft] def persistsOf(key: String): Seq[Dataset[_]] =
+    Option(held.entries.get(key)).map(_.persists).getOrElse(Nil)
 
   /** The session whose entries the memo holds, and their keys. */
   private[graft] def heldEntries: (SparkSession, Set[String]) = {

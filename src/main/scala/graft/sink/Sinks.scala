@@ -7,10 +7,15 @@ import javax.imageio.ImageIO
 
 import graft.meta.SafeMeta
 
-/** Sinks (SURVEY §2.8 K1-K8): quantized image buffers → TIFF/JPEG via
-  * javax.imageio (TIFF plugin ships with the JDK), plus the text
-  * sidecars: world file (pixel-center convention), .prj, and the JSON
-  * metadata sidecar with numeric-string inference.
+/** Sinks (SURVEY §2.8 K1-K8): quantized image buffers → TIFF/JPEG, plus
+  * the text sidecars: world file (pixel-center convention), .prj, and the
+  * JSON metadata sidecar with numeric-string inference.
+  *
+  * Every TIFF the engine writes goes through [[TiffWriter]] (tiled,
+  * tags from [[tiffFields]]); a full-resolution `Engine.processToPath`
+  * TIFF streams its tiles there without a driver-side image. JPEG, and
+  * the strip-layout fixture writers [[writeTiffGray]] /
+  * [[writeTiffGrayLayout]] the decode specs use, stay on javax.imageio.
   */
 object Sinks {
 
@@ -88,27 +93,13 @@ object Sinks {
     }
   }
 
-  /** K2: two-band gray TIFF (multiband) as a multi-page TIFF — the
-    * ImageIO analog of the reference's 2×GrayIndex-band GTiff
-    * (`tiff.rs:34-78`).
+  /** K2: two-band gray TIFF (multiband) as a two-page tiled TIFF
+    * ([[TiffWriter]]) — the analog of the reference's 2×GrayIndex-band
+    * GTiff (`tiff.rs:34-78`).
     */
   def writeTiffMultiband(path: String, b1: Array[Int], b2: Array[Int],
-                         w: Int, h: Int, u16: Boolean): Unit = {
-    val writer = ImageIO.getImageWritersByFormatName("TIFF").next()
-    val out = ImageIO.createImageOutputStream(new File(path))
-    try {
-      writer.setOutput(out)
-      writer.prepareWriteSequence(null)
-      Seq(b1, b2).foreach { band =>
-        val bi = if (u16) grayU16(band, w, h) else grayU8(band, w, h)
-        writer.writeToSequence(new javax.imageio.IIOImage(bi, null, null), null)
-      }
-      writer.endWriteSequence()
-    } finally {
-      out.close()
-      writer.dispose()
-    }
-  }
+                         w: Int, h: Int, u16: Boolean): Unit =
+    TiffWriter.write(path, Seq(b1, b2), w, h, u16, Nil)
 
   // ------------------------------------------------------ K8: TIFF tags
 
@@ -209,27 +200,14 @@ object Sinks {
   private def xmlEsc(s: String): String =
     s.replace("&", "&amp;").replace("<", "&lt;").replace(">", "&gt;").replace("\"", "&quot;")
 
-  /** K1+K8: gray TIFF with embedded geo/metadata tags. */
+  /** K1+K8: gray TIFF with embedded geo/metadata tags, written from the
+    * array by [[TiffWriter]]. A full-resolution `Engine.processToPath`
+    * streams the same file from executor-encoded tiles instead.
+    */
   def writeTiffGrayTagged(path: String, img: Array[Int], w: Int, h: Int, u16: Boolean,
                           gt: Option[Array[Double]], projection: Option[String],
-                          fields: Seq[(String, String)]): Unit = {
-    import javax.imageio.plugins.tiff.TIFFDirectory
-    val bi = if (u16) grayU16(img, w, h) else grayU8(img, w, h)
-    val writer = ImageIO.getImageWritersByFormatName("TIFF").next()
-    val out = ImageIO.createImageOutputStream(new File(path))
-    try {
-      writer.setOutput(out)
-      val wparam = writer.getDefaultWriteParam
-      val spec = javax.imageio.ImageTypeSpecifier.createFromRenderedImage(bi)
-      val meta = writer.getDefaultImageMetadata(spec, wparam)
-      val dir = TIFFDirectory.createFromMetadata(meta)
-      tiffFields(gt, projection, fields).foreach(dir.addTIFFField)
-      writer.write(null, new javax.imageio.IIOImage(bi, null, dir.getAsMetadata), wparam)
-    } finally {
-      out.close()
-      writer.dispose()
-    }
-  }
+                          fields: Seq[(String, String)]): Unit =
+    TiffWriter.write(path, Seq(img), w, h, u16, tiffFields(gt, projection, fields))
 
   /** Read back TIFF tag values (for specs + downstream consumers):
     * tag number → flattened value strings.

@@ -125,7 +125,7 @@ class EngineSpec extends SparkSpec {
         val th = math.min(ts, h - tr * ts); val tw = math.min(ts, w - tc * ts)
         val q = Array.tabulate(th * tw)(i =>
           src((tr * ts + i / tw) * w + tc * ts + i % tw))
-        graft.api.QTile(tr, tc, th, tw, q)
+        graft.api.QTile.packed(tr, tc, th, tw, q, 255)
       }).toDS()
       val got = Engine.assembleTiles(
         Engine.resizeTilesLanczos(tiles, h, w, dh, dw, 255), dh, dw)
@@ -134,6 +134,32 @@ class EngineSpec extends SparkSpec {
       assert(mismatch.isEmpty, mismatch.map(i =>
         s"case ($w,$h,$target): first mismatch at $i: ${got(i)} vs ${want(i)}").getOrElse(""))
     }
+  }
+
+  test("tileStats folds the partitions' moments in partition order, whatever order they finish in") {
+    import graft.api.{DbTile, Kernels}
+    import graft.stats.FastStats.WelfordAgg
+    // partition 1 holds few values far from partition 0's, so Chan's merge
+    // gives different last bits in the two orders
+    def tiles(p: Long): Seq[DbTile] = {
+      val rnd = new scala.util.Random(41 + p)
+      val n = if (p == 0) 4000 else 37
+      Seq(DbTile(0, p.toInt, 1, n, Array.fill(n)(
+        if (p == 0) -12.3 + 7.7 * rnd.nextDouble() else 3.1 + 0.01 * rnd.nextDouble())))
+    }
+    val m = Seq(0L, 1L).map(p => Kernels.momentsOfTiles(tiles(p).iterator).next())
+    val forward = WelfordAgg.finish(WelfordAgg.merge(m(0), m(1)))
+    val reverse = WelfordAgg.finish(WelfordAgg.merge(m(1), m(0)))
+    assert((forward.mean, forward.std) != ((reverse.mean, reverse.std)),
+      "the data does not tell the two merge orders apart")
+    // partition 0 finishes last in every job
+    val ds = spark.range(0, 2, 1, 2).flatMap { p =>
+      if (p == 0) Thread.sleep(700)
+      tiles(p)
+    }(org.apache.spark.sql.Encoders.product[DbTile])
+    val st = Engine.tileStats(ds)
+    assert(st.mean == forward.mean && st.std == forward.std,
+      s"mean/std ${(st.mean, st.std)}, partition-order fold ${(forward.mean, forward.std)}")
   }
 
   test("native-res pipeline collects only target-size buffers (8192² → 1024)") {

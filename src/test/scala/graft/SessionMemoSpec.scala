@@ -152,6 +152,32 @@ class SessionMemoSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     spark.catalog.clearCache()
   }
 
+  test("g6 owns none of the edge persists; the other graph entries keep re-arming them") {
+    spark.catalog.clearCache()
+    val s = spark.newSession()
+    val graph = Seq("g1_pagerank", "g2_degree_hist", "g3_triangles", "g4_link_prediction",
+      "g5_communities", "g6_components", "g7_kcore")
+    graph.foreach(q => SparkEntry.queries(q)(s, Sf0001))
+    // the edge entry owns its nested half-pair persist too
+    val edges = SessionMemo.persistsOf(s"graph-edges:$Sf0001")
+    assert(edges.size == 3, s"half pairs, edges and deg: $edges")
+    def owned(q: String) = SessionMemo.persistsOf(s"registry:$q:$Sf0001")
+    assert(owned("g6_components").nonEmpty, "g6 owns its labels")
+    assert(!owned("g6_components").exists(p => edges.exists(_ eq p)), "g6 owns an edge persist")
+    def rearmedBy(q: String): Boolean = {
+      spark.catalog.clearCache()
+      assert(edges.forall(_.storageLevel == StorageLevel.NONE))
+      SparkEntry.queries(q)(s, Sf0001)
+      edges.forall(_.storageLevel != StorageLevel.NONE)
+    }
+    assert(!rearmedBy("g6_components"), "a g6 hit re-armed the edge persists")
+    graph.filterNot(_ == "g6_components").foreach(q => assert(rearmedBy(q), s"a $q hit did not re-arm them"))
+    // the labels still answer after their edges were dropped
+    spark.catalog.clearCache()
+    assert(SparkEntry.queries("g6_components")(s, Sf0001).collect().nonEmpty)
+    spark.catalog.clearCache()
+  }
+
   test("registry code persists only through SessionMemo") {
     val root = new File("src/main/scala/graft")
     assert(root.isDirectory, s"${root.getAbsolutePath} not found")
