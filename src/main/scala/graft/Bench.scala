@@ -34,7 +34,7 @@ object Bench {
 
   /** Queries per forked chunk. Small enough that per-JVM plan state
     * stays small (judge target: artifact within ~1.3× of an isolated
-    * TimeQ run), large enough that the ~10 s JVM+session startup
+    * Profile time run), large enough that the ~10 s JVM+session startup
     * amortizes across the suite. r12 calibration at the 170-query
     * registry: chunks of 12 still inflated state-sensitive plans (a4
     * sweep 7.4 s vs 3.0 isolated); chunks of 6 REDUCED but did not
@@ -201,55 +201,19 @@ object Bench {
     t.start()
   }
 
-  /** The one session set-up of Bench, Verify and the tools: `local[n]`
-    * with n from SPARK_GRAFT_CPUS, else `defaultCpus`.
+  /** One row that depends on EVERY output column (checksum aggregate):
+    * collecting it materializes the whole result, where a bare count()
+    * would let Catalyst prune the benchmarked projections. bit_xor (not
+    * sum): summing full-range xxhash64 longs overflows under Spark 4's
+    * default ANSI mode and aborts the query.
     */
-  def buildSession(defaultCpus: Int = 4): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCpus.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // r19 (tools/PlanPhase on a4_clahe): AQE posts a plan-DESCRIPTION
-      // string per stage update, rendered + regex-redacted on the driver
-      // thread; for queries whose cached lineage is large (a4's ~60 grid
-      // copies, the memoized dedup/graph bases) that rendering was
-      // ~0.8 s/action of pure driver CPU — the warm floor itself, since
-      // task wall is ~0.3 s. Capping the string bounds the cost with no
-      // effect on plans or results (a4 warm min 1.89 s → 1.10 s).
-      .config("spark.sql.maxPlanStringLength", "8192")
-      // r20 (tools/D17Prof on x15): Spark's generated-class cache
-      // (spark.sql.codegen.cache.maxEntries, STATIC conf) defaults to
-      // 100 entries while one registry query compiles ~20-40 codegen
-      // units per action under AQE — a 6-query chunk cycles 100+
-      // classes per iteration, so EVERY warm iteration re-ran janino
-      // (D17Prof janino_n 20-42 warm; x15 warm stuck at 2.4-2.6 s).
-      // At 4096 entries recompiles converge to 0 and x15's warm wall
-      // drops to ~1.1 s. This is the r11 "JVM holding 130+ plans
-      // inflates timings" class: capacity thrash, not metaspace. The
-      // cache is per-JVM (driver AND executors at cluster scale), so
-      // the production value is the same; parameterized for smaller
-      // hosts. Generated classes are ~10-30 KB of metaspace each →
-      // ≤~120 MB at the default.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4096"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.GraftExtensions.register(spark)
-    spark
-  }
+  private[graft] def checksum(d: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    d.select(bit_xor(xxhash64(struct(d.columns.toIndexedSeq.map(col): _*))))
 
-  // Materialize EVERY output column (checksum aggregate): a bare
-  // count() would let Catalyst prune the benchmarked projections.
-  // bit_xor (not sum): summing full-range xxhash64 longs overflows
-  // under Spark 4's default ANSI mode and aborts the query.
   private def run(spark: SparkSession,
                   fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
                   dir: String): Unit = {
-    val d = fn(spark, dir)
-    d.select(bit_xor(xxhash64(struct(d.columns.toIndexedSeq.map(col): _*)))).collect()
+    checksum(fn(spark, dir)).collect()
     ()
   }
 
@@ -444,14 +408,14 @@ object Bench {
       try run(spark, fn, warmDir) catch { case _: Throwable => }
       spark.catalog.clearCache()
     }
-    // TimeQ iteration discipline for revalidation children (r13 verdict
-    // #3: a4's isolated child published 4.46s vs TimeQ's 2.25 — the
+    // `Profile time` iteration discipline for revalidation children (r13
+    // verdict #3: a4's isolated child published 4.46s vs an isolated 2.25 — the
     // child's first "warm" iteration still paid at-target codegen/
     // broadcast state that the sf0.001 warmup doesn't cover). When
     // SPARK_GRAFT_BENCH_WARMTARGET is set (single-query reval forks
     // only — one extra run there, prohibitive across a 185-entry
     // sweep), each query gets one UNTIMED full run at the TARGET sfDir
-    // before its timed iterations, exactly TimeQ's warm protocol.
+    // before its timed iterations, exactly Profile time's warm protocol.
     val warmAtTarget = sys.env.contains("SPARK_GRAFT_BENCH_WARMTARGET")
     if (warmAtTarget) ordered.foreach { case (_, fn) =>
       try run(spark, fn, sfDir) catch { case _: Throwable => }
@@ -484,7 +448,7 @@ object Bench {
         .orElse(sys.env.get("SPARK_GRAFT_BENCH_WARMTARGET_ITERS")
           .flatMap(_.toIntOption)).getOrElse(3)
       val iters =
-        if (warmAtTarget) // TimeQ's min-of-3 in reval children (min-of-4 raster/cold-heavy)
+        if (warmAtTarget) // min-of-3 in reval children (min-of-4 raster/cold-heavy)
           math.max(warmTargetIters, if (name.startsWith("raster_")) 4 else 3)
         else if (extraIters(name)) 3
         else if (name.startsWith("raster_")) 4
@@ -706,7 +670,7 @@ object Bench {
     * budget-dropped at the default deadline because each suspect paid
     * its own ~10 s JVM+Spark boot). The child restarts its SparkSession
     * between queries (fresh session state per suspect — the fleet-child
-    * semantics) and follows TimeQ's warm-target iteration discipline,
+    * semantics) and follows Profile time's warm-target iteration discipline,
     * with a per-suspect iteration count (min-of-3 / min-of-4 per the
     * cold-heavy history rule) carried in `SPARK_GRAFT_BENCH_MULTI_ITERS`.
     * JVM-level JIT/codegen state survives across the fleet's queries —
@@ -829,7 +793,7 @@ object Bench {
           skipped ++= chunk
         } else {
           val t0 = System.nanoTime()
-          val spark = buildSession()
+          val spark = GraftSession.build(4)
           try done += runSuite(spark, sfDir, chunk.toSet)
           finally { spark.catalog.clearCache(); spark.stop() }
           System.err.println(f"BENCH in-process chunk (${chunk.length} queries) " +
@@ -847,7 +811,7 @@ object Bench {
   // ------------------------------------------------- self-validation
 
   /** Inflation threshold for the revalidation pass — the judge's own
-    * artifact-vs-TimeQ acceptance band.
+    * artifact-vs-isolated (`Profile time`) acceptance band.
     */
   private val RevalidateRatio = 1.3
   /** Only entries at/above this sweep time are candidates (below it a
@@ -868,7 +832,7 @@ object Bench {
     * consumed the whole budget and the always-set (a4/m6/d17) plus the
     * real ratio suspects (d9/g1/t6/t11) were truncated out — the
     * artifact published phantom regressions the judge had to
-    * TimeQ-adjudicate by hand.
+    * re-time by hand (`Profile time`).
     */
   private val RevalidateMax = 24
 
@@ -1017,13 +981,13 @@ object Bench {
     * of the same code and every known distortion — chunk-mate JVM
     * state, host contention, JIT compile-lag — can only INFLATE a
     * wall time, never deflate it, so the min of two valid
-    * measurements is the better floor estimator (exactly why TimeQ
+    * measurements is the better floor estimator (exactly why Profile time
     * is min-of-3). The r16/r17 rule believed a slower-than-sweep
     * isolated number whenever the child's sentinel showed an idle
     * machine, but an idle sentinel does not prove JIT steady state:
     * in BENCH_r18 the reval children published cold-class 9.57 s
-    * (a4, sweep 3.17, TimeQ warm 2.74) and 3.47 s (g7, sweep 4.51
-    * inflated, TimeQ warm 1.40). A failed isolated run (iso < 0)
+    * (a4, sweep 3.17, Profile time warm 2.74) and 3.47 s (g7, sweep 4.51
+    * inflated, Profile time warm 1.40). A failed isolated run (iso < 0)
     * keeps the sweep number (flagged flaky by the caller). Both raw
     * numbers stay in the artifact under `revalidated`.
     */
@@ -1042,7 +1006,7 @@ object Bench {
     * spec-pinned. `prevCold` / `prevWarm` come from the previous
     * artifact's `cold` map and its warm floor (min of published and
     * recorded sweep); entries with no cold history (only extraIters
-    * entries record cold) or no warm floor stay at TimeQ's min-of-3.
+    * entries record cold) or no warm floor stay at Profile time's min-of-3.
     */
   private[graft] def revalChildIters(prevCold: Option[Double],
                                      prevWarm: Option[Double]): Int = {
@@ -1135,7 +1099,7 @@ object Bench {
     val measuredChild = scala.collection.mutable.ArrayBuffer.empty[Double]
     val dropped = scala.collection.mutable.ArrayBuffer.empty[String]
     val reruns = scala.collection.mutable.ArrayBuffer.empty[(String, (Double, Double), SuiteResult)]
-    // warmTarget: children follow TimeQ's iteration discipline (one
+    // warmTarget: children follow Profile time's iteration discipline (one
     // untimed at-target run, then min-of-3 warm; min-of-4 for entries
     // whose history shows cold/warm > ColdHeavyRatio) — r13 verdict
     // #3 + r18 verdict #2
@@ -1253,7 +1217,7 @@ object Bench {
   private def notes(nChunks: Int, nReval: Int): String =
     s"chunked sweep: $nChunks forked JVMs x <=$ChunkSize queries each " +
       "(r11 judge finding: one 133-plan JVM inflated timings up to 5x vs " +
-      "isolated TimeQ runs); per-chunk sentinels listed in 'sentinels', " +
+      "isolated Profile time runs); per-chunk sentinels listed in 'sentinels', " +
       "'sentinel' is their max. Chunks of 6 REDUCE but do not eliminate " +
       "state inflation (r12 judge: w8 3.14 in-sweep vs 0.55 isolated, a4 " +
       "7.23 vs 2.4), so the sweep now self-validates: every entry >=2s " +
@@ -1268,16 +1232,16 @@ object Bench {
       "of the same code and chunk-state/contention/JIT-lag only " +
       "INFLATE, so the min is the better floor estimator; in r18 the " +
       "old idle-sentinel rule published cold-class isolated numbers " +
-      "a4 9.57/g7 3.47 whose TimeQ warm floors are 2.74/1.40); both " +
+      "a4 9.57/g7 3.47 whose Profile time warm floors are 2.74/1.40); both " +
       "raw numbers are in 'revalidated' (sweep/isolated). " +
       "Reval children for entries whose previous artifact shows " +
       "cold/warm > 3 run min-of-4 (one extra warm iteration for the " +
-      "JIT compile-lag class; others keep TimeQ's min-of-3). " +
+      "JIT compile-lag class; others keep Profile time's min-of-3). " +
       "r14 (judge ask #3): the reval children now " +
-      "follow TimeQ's exact iteration discipline - one UNTIMED full run " +
+      "follow Profile time's exact iteration discipline - one UNTIMED full run " +
       "at the TARGET sf before the timed iterations (the sf0.001 warmup " +
       "alone left at-target codegen/broadcast state unpaid: a4's r13 " +
-      "child published 4.46s vs TimeQ 2.25) and min-of-3 - and a child " +
+      "child published 4.46s vs Profile time 2.25) and min-of-3 - and a child " +
       "whose query fails isolated keeps the sweep number (flagged " +
       "flaky) instead of publishing -1. Child sentinels are now " +
       "diagnostic only (they classify slower-than-sweep children as " +
@@ -1286,13 +1250,13 @@ object Bench {
       "Ratio-rule baselines are also " +
       "sf-guarded: a bench_full.json recorded at a different sf no " +
       "longer drives re-runs or gets overwritten. " +
-      "tools/TimeQ remains the manual cross-check and " +
+      "tools/Profile time remains the manual cross-check and " +
       "accepts raster_* case names. " +
       "Rasters run min-of-4 (min-of-2 swung " +
       "0.46<->0.78 run-to-run). r14 final sweep: pushdown 0.51 (1.47x " +
-      "the 348ms baseline; fresh TimeQ 0.55), warp 0.82 and synrgb " +
+      "the 348ms baseline; fresh Profile time 0.55), warp 0.82 and synrgb " +
       "1.47 (both under the ~1.5s warp headline), batch_4prod 1.25; " +
-      "a4 2.2-2.4 across sweep/isolated/TimeQ - the r13 judge's 2x " +
+      "a4 2.2-2.4 across sweep/isolated/Profile time - the r13 judge's 2x " +
       "artifact-vs-notes contradiction is closed by the warm-target " +
       "child discipline. The IVF family rides one session-memoized " +
       "index base (fit once): s4 0.59, s9 0.73, s21 1.38, s22 0.39. " +
@@ -1300,8 +1264,8 @@ object Bench {
       "revalidated.*.sweep field), not vs isolated minima, so the " +
       "warm-target substitution cannot re-flag the same entries " +
       "every round. " +
-      "a4 stage verdict (r12, isolated at sf0.1): TimeQ " +
-      "warm min 2.13s (r10 target <=2.2s MET), cold ~9s; A4Warm breakdown " +
+      "a4 stage verdict (r12, isolated at sf0.1): Profile time " +
+      "warm min 2.13s (r10 target <=2.2s MET), cold ~9s; phase breakdown " +
       "of the warm 2.4s: Grid construct 0.3s, all plan phases ~0.00s, " +
       "execution 2.3s in ONE fused stage (grid cache scan -> broadcast " +
       "corner join -> bilinear project -> partial agg; 1 shuffle + 1 " +
@@ -1316,7 +1280,7 @@ object Bench {
       "cache in the stats job and the quantize+resize+collect job " +
       "rereads it; folding them would need sampled (inexact) stats, " +
       "which breaks the oracle's exact-percentile contract. Per " +
-      "PushProf the per-job Spark scheduling+collect overhead (~0.2s " +
+      "stage probe (Profile stages) the per-job Spark scheduling+collect overhead (~0.2s " +
       "across the two jobs at 6.25M cached pixels) IS the gap, and it " +
       "amortizes to noise at cluster scale where a job carries " +
       "thousands of tasks. Floor documented final. " +
@@ -1341,7 +1305,7 @@ object Bench {
       "best-effort contract line (partial:true) on SIGTERM. " +
       "harness_sec/sweep_sec/reval_sec record the wall split. " +
       "m6_frame_overlap verdict (r20, closes the r19 #6 item): " +
-      "tools/ReProf showed the published number was NOT engine compute " +
+      "Profile recon showed the published number was NOT engine compute " +
       "- a same-instance re-collect ran 0.07s while a fresh " +
       "construction over the SAME armed caches ran 1.9-2.3s, i.e. the " +
       "min-of-3 was dominated by re-running ~8 tiny-data exchange " +
@@ -1349,10 +1313,10 @@ object Bench {
       "agg, two sizes joins). Fixed by attaching the per-doc frame " +
       "counts to the postings BEFORE the self-join and persisting that " +
       "enriched relation: a fresh plan now re-runs 2 exchanges " +
-      "(self-join + pair agg). TimeQ 2.72 -> 0.65s; oracle unchanged " +
+      "(self-join + pair agg). Profile time 2.72 -> 0.65s; oracle unchanged " +
       "and hash-green; same scale shape (doc_id enrichment join is " +
       "bounded <=MaxSampledFrames rows/key, nothing new broadcast or " +
-      "windowed). Generalized (r20, tools/ReProf screen over every " +
+      "windowed). Generalized (r20, Profile recon screen over every " +
       "extraIters entry): seven more persisting entries published " +
       "1.0-2.2s of downstream-of-persist re-run, not engine compute - " +
       "d2/d10/d9 now share one session-memoized pair-grain " +
@@ -1595,7 +1559,7 @@ object Bench {
         val chunkIters = sys.env.get("SPARK_GRAFT_BENCH_MULTI_ITERS")
           .map(_.split('|').toSeq.flatMap(_.trim.toIntOption))
         chunkSpecs.zipWithIndex.foreach { case (chunk, i) =>
-          val spark = buildSession()
+          val spark = GraftSession.build(4)
           val r = runSuite(spark, sfDir, chunk.toSet,
             chunkIters.flatMap(_.lift(i)))
           writeProtocol(s"$out.$i", r)
@@ -1603,7 +1567,7 @@ object Bench {
         }
       case Some(out) =>
         // child: run the subset, write the protocol file, no artifacts
-        val spark = buildSession()
+        val spark = GraftSession.build(4)
         val r = runSuite(spark, sfDir, n => only.forall(_.contains(n)))
         writeProtocol(out, r)
         spark.stop()
@@ -1645,7 +1609,7 @@ object Bench {
       case _ =>
         // manual in-process run (subset perf iteration / INPROC escape)
         val t0 = System.nanoTime()
-        val spark = buildSession()
+        val spark = GraftSession.build(4)
         val r = runSuite(spark, sfDir, n => only.forall(_.contains(n)))
         val el = (System.nanoTime() - t0) / 1e9
         emitArtifacts(r, sfDir, 1, fullSuite = only.isEmpty,

@@ -639,7 +639,7 @@ object SparkEntry {
       // Exact decimal domain: raw values are 2-dp, so double→DECIMAL(p,2)
       // rounds identically in Spark and DuckDB and every product/sum below
       // is exact — partition-order independent by construction.
-      // Cost accounting (tools/Q1Prof, sf0.1 warm min): scan+count 0.11s,
+      // Cost accounting (r17 stage probe, sf0.1 warm min; `Profile stages`): scan+count 0.11s,
       // the same agg over raw doubles 0.28s, this exact-DECIMAL body
       // 1.02s — the 3.5× is the BigDecimal-backed sum buffer
       // (DecimalType(18,2) input ⇒ (28,2) buffer > Spark's 18-digit
@@ -913,7 +913,7 @@ object SparkEntry {
     * Prepared-query memo (r19): registry fns are pure in
     * (session, dir) and eager per-operation analysis makes steady-state
     * CONSTRUCTION alone cost 100–600 ms for most entries
-    * (tools/BuildCensus), so every built Dataset is memoized per
+    * (`Profile build`), so every built Dataset is memoized per
     * (session, name, dir) on [[graft.ext.SessionMemo]], which re-arms
     * the persists each build recorded on every hit.
     */
@@ -925,7 +925,7 @@ object SparkEntry {
 
   /** The registry WITHOUT the prepared-query memo (r19 ADVICE item):
     * every call pays real Dataset construction. Diagnostics only —
-    * `tools/BuildCensus` measures steady-state construction cost, and
+    * `Profile build` measures steady-state construction cost, and
     * through the memoized [[queries]] a second call would measure the
     * memo hit (~0 ms), hiding a construction-cost regression for the
     * memoized majority. Production callers use [[queries]].

@@ -10,7 +10,7 @@ object Verify {
     val (sfDir, outDir, only) = (args(0), args(1), args.drop(2).toSet)
     // registers the fused-dB optimizer rule + graft_db function, so the
     // oracle runs check that the rewrite is value-invisible
-    val spark = Bench.buildSession()
+    val spark = GraftSession.build(4)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.foreach { case (name, fn) =>
       if (only.nonEmpty && !only.contains(name)) ()

@@ -1280,7 +1280,9 @@ object Engine {
 
   /** [[loadOperation]] with an optional read-time warp: both bands warp
     * onto the SAME output grid before the positional zip, exactly as
-    * the reference reads both from the one warped VRT.
+    * the reference reads both from the one warped VRT, so the tile join
+    * stays co-partitioned by construction. [[processBandOp]] persists
+    * this relation as its input.
     */
   def loadOperation(spark: SparkSession, productId: String,
                     op: PolarizationOperation, rows: Int, cols: Int,
@@ -1329,20 +1331,7 @@ object Engine {
                              warp: Option[graft.geom.Warp.NativeWarp])(
                              finish: Dataset[QTile] => R): R = {
     val (outRows, outCols) = outDims(rows, cols, decimate, warp)
-    implicit val tileEnc: org.apache.spark.sql.Encoder[Tile] =
-      org.apache.spark.sql.Encoders.product[Tile]
-    // both bands warp onto the SAME output grid before the positional
-    // zip (the reference reads both from the one warped VRT), so the
-    // tile join stays co-partitioned by construction
-    val a0 = RasterSource.scan(spark, productId, "vv", rows, cols, decimate)
-    val b0 = RasterSource.scan(spark, productId, "vh", rows, cols, decimate)
-    val a = warp.fold(a0)(nw => warpTiles(a0, nw))
-    val b = warp.fold(b0)(nw => warpTiles(b0, nw))
-    val combined = a.joinWith(b,
-        a("tile_row") === b("tile_row") && a("tile_col") === b("tile_col"))
-      .map { case (ta, tb) => DbTile(ta.tile_row, ta.tile_col, ta.h, ta.w,
-        Kernels.toDb(Kernels.bandOp(ta.pixels, tb.pixels, op))) }
-      .persist()
+    val combined = loadOperation(spark, productId, op, rows, cols, warp, decimate).persist()
     try {
       val maxVal = params.bitDepth.maxVal
       val st = tileStats(combined)

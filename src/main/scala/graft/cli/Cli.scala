@@ -1,7 +1,5 @@
 package graft.cli
 
-import org.apache.spark.sql.SparkSession
-
 import graft.api.Engine
 import graft.model._
 
@@ -98,13 +96,10 @@ object Cli {
         System.err.println(s"error: ${err.getMessage}")
         sys.exit(2)
       case Right(args) =>
-        val spark = SparkSession.builder()
-          .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-          .config("spark.sql.shuffle.partitions",
-            sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-          .config("spark.ui.enabled", "false")
-          .getOrCreate()
-        spark.sparkContext.setLogLevel("WARN")
+        // SPARK_MASTER is the one deployment setting (default local[n],
+        // n = SPARK_GRAFT_CPUS, else every core of this machine)
+        val spark = graft.GraftSession.build(Runtime.getRuntime.availableProcessors,
+          sys.env.get("SPARK_MASTER"))
         try {
           if (args.batch) {
             val specs = args.inputDir.get.split(',').toSeq

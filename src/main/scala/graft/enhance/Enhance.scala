@@ -112,7 +112,7 @@ object Clahe {
   /** A4 CLAHE over the lineitem grid. The plan embeds ~60 copies of
     * the grid lineage once the stats/corner subtrees are composed, and
     * Spark's eager per-operation checkAnalysis makes construction alone
-    * cost ~1.2 s of driver time (tools/A4Warm, r11) — the registry's
+    * cost ~1.2 s of driver time (r11; `Profile phases` build column) — the registry's
     * prepared-query memo builds it once per (session, dir).
     */
   def query(s: SparkSession, dir: String): DataFrame = {
@@ -122,7 +122,7 @@ object Clahe {
     // the one-row stats relation is a full two-pass subtree over the
     // cached grid (agg + 4096-bin hist + CDF windows); without a persist
     // every invocation rebuilds it just to broadcast one row (~1.6 s warm
-    // at sf0.1, measured tools/A4Prof r11)
+    // at sf0.1, r11; `Profile stages` shows the rebuild)
     val st = HistStats.stats(g.filter(col("valid")).select(col("db"))).persistRecorded()
     val params = st.select(col("p01").as("low"), col("p99").as("high"),
       greatest(col("p99") - col("p01"), lit(1.0)).as("rng"))
@@ -133,7 +133,7 @@ object Clahe {
     // re-deriving norm/bin per consumer and caching dead stat columns.
     // ONE select, not a withColumn chain: every withColumn re-analyzes
     // the full lineage, and a4's construct cost was ~1.3 s of pure
-    // driver analysis before this batching (tools/A4Warm, r11) — the
+    // driver analysis before this batching (r11; `Profile phases`) — the
     // composed expressions are exactly what CollapseProject produced.
     val tileH = expr(s"(rows_ + ${Tiles - 1}) div $Tiles")
     val norm = when(col("valid"),
@@ -327,18 +327,26 @@ object Clahe {
   * factor is `1 + 0.1·(v−median)/range` (range>0) else 1
   * (`autoscale.rs:630-636`).
   *
-  * Distributed plan: each valid pixel is exploded to its 9 neighbor
-  * positions (a flatMap, no shuffle), then ONE hash aggregate on the
-  * target coordinate collects the neighborhood — the halo-exchange
-  * pattern without tile-boundary special cases. The center's own value
-  * rides the dy=dx=0 contribution row (`max` over the single flagged
-  * row, so it's carried exactly), which makes the aggregate the WHOLE
-  * plan: no join of the grid back onto the neighborhood relation — a
-  * center is a valid output iff its self-contribution arrived, and
+  * Distributed plan ([[neighborhood]]): the valid pixels pack into
+  * per-`y` row strips (one exchange of the grid at 1× bytes), each strip
+  * replicates to its 3 target rows (a second exchange, at strip grain),
+  * and one flatMap per target row sorts each cell's ≤9 values and picks
+  * median, min and max. The center's own value rides along from the
+  * center row, so a position is a valid output iff its own pixel
+  * arrived: no join of the grid back onto the neighborhood, and
   * out-of-grid phantom positions (touched only by border pixels'
-  * stencils) have no self-row and drop on the same predicate. dB values
-  * are rounded at the comparison boundary only (libm log10 may differ
-  * in the last ulp).
+  * stencils) drop on the same predicate. dB values are rounded at the
+  * comparison boundary only (libm log10 may differ in the last ulp).
+  *
+  * Sort invariant: the fold sorts with `java.util.Arrays.sort(double[])`
+  * where the r14–r20 plan used Spark's `sort_array`. The two give the
+  * same sorted values only when a neighborhood holds no NaN and no mix of
+  * -0.0 and 0.0: Java's total order puts -0.0 before 0.0, Spark's
+  * compares them equal and keeps arrival order, so a mixed-zero
+  * neighborhood can pick a median of the other sign (the emitted
+  * `round(…, 6)` turns either into +0.0; EnhanceSpec pins a mixed-sign-
+  * zero 3×3 fixture). NaN is kept out like everywhere a value reaches a
+  * sort. dB values of positive intensities are never NaN and never -0.0.
   */
 object LocalStats {
   /** A5: [[statsOf]] over the lineitem grid. */

@@ -266,7 +266,7 @@ object Dedup {
     * pair aggregate shared DEFINITIONALLY by D2 (Jaccard), D10
     * (containment) and D9 (exact side of the calibration curve), in the
     * same re-armed-persist pattern as [[shingleRelations]]. Two r20
-    * changes rolled together (tools/ReProf, the m6 pattern):
+    * changes rolled together (`Profile recon`, the m6 pattern):
     *
     *  1. Per-doc set sizes ride the postings INTO the self-join
     *     (`min(a.nsh)`/`min(b.nsh)` are group constants), replacing the
@@ -562,7 +562,7 @@ object Dedup {
           .when(col("near_of").isNotNull, "drop_near")
           .otherwise("keep").as("verdict"),
         coalesce(col("exact_of"), col("near_of")).as("dup_of"))
-      // r20 (tools/ReProf): batch-grain (1/BatchMod of the corpus)
+      // r20 (`Profile recon`): batch-grain (1/BatchMod of the corpus)
       // verdict boundary — a fresh construction re-runs the sort only,
       // not the exact/near probe joins (recon 0.69 s vs 0.04 s warm)
       .persistRecorded()
@@ -746,7 +746,7 @@ object Dedup {
       .join(sig.as("b"), col("doc_b") === col("b.doc_id"))
       .select(col("doc_a"), col("doc_b"),
         (matches.cast("double") / lit(NumHashes.toDouble)).as("est_jaccard"))
-    // r20 (tools/ReProf, the m6 pattern): the exact side reads the
+    // r20 (`Profile recon`, the m6 pattern): the exact side reads the
     // shared memoized pair-grain relation, which carries na/nb as group
     // constants instead of LEFT-joining sizes back onto the pair set
     // twice. Equivalence: a pair in `com` always has na, nb ≥ 1 (it
@@ -1117,7 +1117,7 @@ object Dedup {
       .select(col("doc_id"), col("n_shared"),
         round(col("n_shared").cast("double") / col("nsh").cast("double"), 6)
           .as("contamination"))
-      // r20 (tools/ReProf): contaminated-doc-grain boundary — a fresh
+      // r20 (`Profile recon`): contaminated-doc-grain boundary — a fresh
       // construction re-runs the sort only, not the benchmark mark join
       // + per-doc agg over the sh cache (recon 0.91 s vs 0.03 s warm)
       .persistRecorded()
@@ -1984,7 +1984,7 @@ object Dedup {
         greatest(col("sa"), col("sb")).as("source_b"), col("mm"))
       .groupBy("source_a", "source_b")
       .agg(count(lit(1)).as("n_pairs"), sum("mm").as("sm"))
-      // r20 (tools/ReProf): ≤|sources|²-row boundary — a fresh
+      // r20 (`Profile recon`): ≤|sources|²-row boundary — a fresh
       // construction re-runs the ratio projection + sort only, not the
       // band candidates + signature/source joins over the sig cache
       // (recon 0.90 s vs 0.05 s warm)

@@ -660,7 +660,7 @@ object Events {
       .select(col("day"), col("dau"), col("wau"),
         round(col("dau").cast("double") / col("wau").cast("double"), 6)
           .as("stickiness"))
-      // r20 (tools/ReProf): day-grain boundary — a fresh construction
+      // r20 (`Profile recon`): day-grain boundary — a fresh construction
       // re-runs the sort only, not the 7-day window expansion +
       // distinct over the ud cache (recon 0.93 s vs 0.04 s warm)
       .persistRecorded()
@@ -718,7 +718,7 @@ object Events {
       .filter(col("x.event_type") < col("y.event_type"))
       .groupBy(col("x.event_type").as("type_a"), col("y.event_type").as("type_b"))
       .agg(count(lit(1)).as("n_ab"))
-      // r20 (tools/ReProf): ≤|types|²-row basket boundary — a fresh
+      // r20 (`Profile recon`): ≤|types|²-row basket boundary — a fresh
       // construction re-runs the per-type counts + lift joins + sort,
       // not the in-session pair self-join (recon 0.98 s vs 0.08 s warm)
       .persistRecorded()

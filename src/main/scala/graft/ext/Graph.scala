@@ -300,7 +300,7 @@ object Graph {
       .select(col("b1"), col("b2"))
     val tri = wedges.join(e, col("b1") === col("a") && col("b2") === col("b"))
       .agg(count(lit(1)).as("n_triangles"))
-      // r20 (tools/ReProf, the m6 pattern): 1-row triangle-count
+      // r20 (`Profile recon`, the m6 pattern): 1-row triangle-count
       // boundary — a fresh construction re-runs the degree stats agg +
       // crossJoin only, not the wedge join (recon 1.27 s vs 0.03 s warm)
       .persistRecorded()
@@ -396,7 +396,7 @@ object Graph {
       .groupBy("b1", "b2")
       .agg(count(lit(1)).as("common_neighbors"),
         sum(col("w").cast(DecimalType(25, 12))).cast("double").as("aw"))
-      // r20 (tools/ReProf, the m6 pattern): aggregated candidate-pair
+      // r20 (`Profile recon`, the m6 pattern): aggregated candidate-pair
       // boundary — a fresh construction re-runs the known-edge anti-join
       // + top-k only, not the wedge self-join (recon 0.85 s vs 0.07 s
       // warm); same relation the query already materialized per run

@@ -689,7 +689,7 @@ object Mix {
         (col("est_jaccard") * Dedup.NumHashes).cast("long").as("matches"))
       .groupBy("split_a", "split_b")
       .agg(count(lit(1)).as("n_pairs"), sum("matches").as("sm"))
-      // r20 (tools/ReProf): ≤|splits|²-row boundary — a fresh
+      // r20 (`Profile recon`): ≤|splits|²-row boundary — a fresh
       // construction re-runs the ratio projection + sort only, not the
       // d3 candidate re-scoring (recon 0.75 s vs 0.08 s warm)
       .persistRecorded()

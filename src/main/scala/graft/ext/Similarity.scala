@@ -17,8 +17,8 @@ import graft.ext.SessionMemo.PersistRecorded
   * IEEE-754 op sequence, so cosines are bit-equal and no comparison
   * rounding is needed. (The Spark side previously unrolled the same
   * chain as ~192 builtin nodes; Catalyst analysis of those trees cost
-  * more driver time than execution — `graft.tools.S3Prof` measured the
-  * swap.) Hyperplane signs are ±1 literals from a deterministic integer
+  * more driver time than execution — `Profile phases` splits
+  * the two.) Hyperplane signs are ±1 literals from a deterministic integer
   * mix: literal float arrays on the Spark side, inline constants in the
   * SQL.
   *
@@ -847,7 +847,7 @@ object Similarity {
       .select(col("qid"), col("vec_id"))
     val ov = atop.join(etop, Seq("qid", "vec_id"))
       .groupBy("qid").agg(count(lit(1)).as("n_overlap"))
-      // r20 (tools/ReProf): ≤NumQueries-row overlap boundary — a fresh
+      // r20 (`Profile recon`): ≤NumQueries-row overlap boundary — a fresh
       // construction re-runs the query-spine left join + sort, not the
       // ADC and exact top-k legs (recon 0.94 s vs 0.06 s warm)
       .persistRecorded()

@@ -306,7 +306,7 @@ object Sketch {
         col("x.h") === col("y.h") && col("x.source") < col("y.source"))
       .groupBy(col("x.source").as("source_a"), col("y.source").as("source_b"))
       .agg(count(lit(1)).as("n_shared"))
-      // r20 (tools/ReProf): ≤|sources|²-row exact-intersection boundary
+      // r20 (`Profile recon`): ≤|sources|²-row exact-intersection boundary
       // — a fresh construction re-runs the tiny KMV pair grid + joins +
       // sort, not the corpus self-join (recon 0.79 s vs 0.04 s warm)
       .persistRecorded()
@@ -335,7 +335,7 @@ object Sketch {
         col("k_used"), col("kmv_shared"),
         round(col("kmv_shared").cast("double") / col("k_used").cast("double"), 6)
           .as("jacc_kmv"))
-      // r20 (tools/ReProf): the inter persist alone left recon at
+      // r20 (`Profile recon`): the inter persist alone left recon at
       // 0.78 s — the KMV pair grid + size joins re-ran per fresh build;
       // the ≤|sources|²-row assembly boundary leaves only the sort
       .persistRecorded()

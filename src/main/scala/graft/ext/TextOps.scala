@@ -1004,7 +1004,7 @@ object TextOps {
         max(when(col("rk") === kOf(5), col("q"))).as("p05"),
         max(when(col("rk") === kOf(50), col("q"))).as("p50"),
         max(when(col("rk") === kOf(95), col("q"))).as("p95"))
-      // r20 (tools/ReProf): 1-row percentile boundary — a fresh
+      // r20 (`Profile recon`): 1-row percentile boundary — a fresh
       // construction re-runs the winsorized-mean agg over the base
       // cache, not the two-phase rank windows (recon 0.68 s vs 0.06 warm)
       .persistRecorded()
@@ -1107,7 +1107,7 @@ object TextOps {
     ns.join(kl, "source").join(top, "source")
       .select(col("source"), col("n_stop_tokens"), col("kl_drift"),
         col("top_word"), col("top_p"), col("top_q"))
-      // r20 (tools/ReProf): ≤|sources|-row assembly boundary — a fresh
+      // r20 (`Profile recon`): ≤|sources|-row assembly boundary — a fresh
       // construction re-runs the sort only, not the KL/top-word legs
       // over the terms cache (recon 1.62 s vs 0.07 s warm)
       .persistRecorded()
@@ -1982,7 +1982,7 @@ object TextOps {
       .withColumn("lrk", row_number().over(
         Window.partitionBy("term", "bkt").orderBy(col("tfdl_e9").desc, col("doc_id"))))
       .filter(col("lrk") <= Bm25TopK)
-      // r20 (tools/ReProf, the m6 pattern): bounded per-bucket-survivor
+      // r20 (`Profile recon`, the m6 pattern): bounded per-bucket-survivor
       // boundary (≤ Bm25Queries·Bm25Buckets·Bm25TopK rows) — a fresh
       // construction re-runs the final term window + sort only, not the
       // candidate join/scoring/bucket window downstream of the postings
@@ -2714,7 +2714,7 @@ object TextOps {
     * materializes a 3n-element struct array per document before the
     * generate and scans the 3×-larger fused cache on every scoring
     * leg, and ran consistently SLOWER at sf0.1 (warm 1.75 s vs
-    * 1.51 s, cold 12.4 s vs 9.5 s, min-of-3 TimeQ, r16). Each explode
+    * 1.51 s, cold 12.4 s vs 9.5 s, min-of-3 `Profile time`, r16). Each explode
     * here is a streamed codegen'd Generate; the exchanged row count
     * is identical either way.
     */

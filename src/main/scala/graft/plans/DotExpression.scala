@@ -14,7 +14,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   * `Σ element_at(a,i)·element_at(b,i)` unrolled over 64 dims — is ~192
   * expression nodes PER DOT PRODUCT and ~3 000 nodes per sign-LSH code
   * column; Catalyst analysis/optimization of those trees cost 1-2 s of
-  * driver time per query (measured by `graft.tools.S3Prof`), dwarfing
+  * driver time per query (measured on s3; `graft.tools.Profile phases` splits it), dwarfing
   * execution at bench scale and re-paid by every executor's codegen.
   * This is ONE node emitting a tight fused loop.
   *

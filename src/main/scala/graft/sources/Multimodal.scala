@@ -368,8 +368,9 @@ object Multimodal {
       .filter(col("df") <= MaxFrameDf).select("frame_hash")
     val capped = fh.join(keep, "frame_hash")
     val sizes = capped.groupBy("doc_id").agg(count(lit(1)).as("nfh"))
-    // Steady-state base (r20, tools/M6Prof): per-doc frame counts are
-    // attached to the postings BEFORE the self-join, so the pair
+    // Steady-state base (r20, a per-leg probe; `Profile recon` shows
+    // it): per-doc frame counts are attached to the postings BEFORE the
+    // self-join, so the pair
     // aggregate reads na/nb as group constants instead of joining the
     // sizes relation back onto the pair set twice — a fresh plan over
     // the armed caches re-runs 2 exchanges (self-join + pair agg), not
@@ -489,7 +490,7 @@ object Multimodal {
     val keep = blocks.groupBy("blk", "bval").agg(count(lit(1)).as("df"))
       .filter(col("df") <= MaxAHashBlockDf).select("blk", "bval")
     val capped = blocks.join(keep, Seq("blk", "bval"))
-      // r20 (tools/ReProf, the m6 pattern): capped posting-list
+      // r20 (`Profile recon`, the m6 pattern): capped posting-list
       // boundary (≤ 4 rows per payload) — a fresh construction re-runs
       // the bucket self-join + distinct + sort only, not the hex
       // sampling projection, block explode and occupancy-cap agg

@@ -1,12 +1,11 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
+
+/** Flagship smoke: `SparkEntry.entry` row count and the registry and
+  * oracle sizes.
+  */
 object EntryCheck {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.build(4)
     println("ENTRY_ROWS=" + graft.SparkEntry.entry(spark).count())
     println("QUERIES=" + graft.SparkEntry.queries.size +
       " ORACLES=" + graft.SparkEntry.oracleSql.size)

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.functions.{bit_xor, col, struct, xxhash64}
-
 /** Persist-lifetime audit: machine-checks the contract documented on
   * `SparkEntry.queries` — a registry fn MAY leave persisted relations
   * behind on return (shared fixtures, memoized bases; long-lived
@@ -19,7 +17,7 @@ import org.apache.spark.sql.functions.{bit_xor, col, struct, xxhash64}
 object PersistAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = graft.Bench.buildSession(8)
+    val spark = graft.GraftSession.build(8)
     // Queries allowed to leave persists alive on return: the documented
     // internal/memoized-persist set plus the CC label-propagation
     // queries (session-lifetime ccMemo labels + their edge fixtures).
@@ -30,8 +28,7 @@ object PersistAudit {
       spark.catalog.clearCache()
       val before = spark.sparkContext.getPersistentRDDs.keySet
       val ok = try {
-        val d = graft.SparkEntry.queries(name)(spark, sfDir)
-        d.select(bit_xor(xxhash64(struct(d.columns.toIndexedSeq.map(col): _*)))).collect()
+        graft.Bench.checksum(graft.SparkEntry.queries(name)(spark, sfDir)).collect()
         true
       } catch { case e: Throwable =>
         println(s"AUDIT $name ERROR ${e.getClass.getSimpleName}: ${e.getMessage}")

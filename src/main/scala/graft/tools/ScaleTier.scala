@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.ext.Tables
@@ -50,22 +50,6 @@ object ScaleTier {
     */
   private val Shift = 1000000000000L
 
-  private def session(cpus: Int): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.maxPlanStringLength", "8192")
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4096"))
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    graft.plans.GraftExtensions.register(s)
-    s
-  }
-
   /** K-replicate a table, shifting the named BIGINT entity keys by
     * `i * Shift` per replica so the entity population scales with K
     * (plain duplication would instead make every key K× hotter — a
@@ -83,13 +67,17 @@ object ScaleTier {
   }
 
   def main(args: Array[String]): Unit = {
+    // each tier's session is local[cpus] with cpus shuffle partitions;
+    // SPARK_GRAFT_CPUS would override both
+    require(!sys.env.contains("SPARK_GRAFT_CPUS"),
+      "ScaleTier sets its own core counts (SPARK_GRAFT_SCALE_CPUS); unset SPARK_GRAFT_CPUS")
     val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val k = sys.env.get("SPARK_GRAFT_SCALE_K").flatMap(_.toIntOption).getOrElse(16)
     val Array(lo, hi) = sys.env.getOrElse("SPARK_GRAFT_SCALE_CPUS", "8,32")
       .split(',').map(_.trim.toInt)
     val dst = java.nio.file.Files.createTempDirectory("graft-scale").toString
     // ---- generate (one session; not timed) -------------------------
-    val gen = session(hi)
+    val gen = graft.GraftSession.build(hi)
     val rows = try {
       Seq(
         "lineitem" -> replicate(gen, src, dst, "lineitem", Seq("l_orderkey"), k),
@@ -99,17 +87,11 @@ object ScaleTier {
     println(s"SCALE generated k=$k at $dst: " +
       rows.map { case (t, n) => s"$t=$n" }.mkString(", "))
     // ---- time at each core count (fresh session each) --------------
-    import org.apache.spark.sql.functions.{bit_xor, struct, xxhash64}
     def timeAll(cpus: Int): Map[String, Double] = {
-      val s = session(cpus)
+      val s = graft.GraftSession.build(cpus)
       try Queries.map { name =>
         val fn = graft.SparkEntry.queries(name)
-        def once(): Unit = {
-          val d = fn(s, dst)
-          d.select(bit_xor(xxhash64(struct(d.columns.toIndexedSeq.map(col): _*))))
-            .collect()
-          ()
-        }
+        def once(): Unit = { graft.Bench.checksum(fn(s, dst)).collect(); () }
         try once() catch { case e: Throwable =>
           System.err.println(s"SCALE WARN: $name warmup failed: ${e.getMessage}") }
         s.catalog.clearCache()

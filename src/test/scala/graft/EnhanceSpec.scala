@@ -36,6 +36,35 @@ class EnhanceSpec extends SparkSpec {
     assert(r((2L, 1L)) == ((5L, 5.0, 4.0, 1.05)), s"edge: ${r((2L, 1L))}")
   }
 
+  test("A5 fold: mixed-sign zeros — hand-checked 3×3, every emitted zero is +0.0") {
+    //  -0  0  1
+    //  -0 -0  2
+    //   3 -0  0
+    val db = Array(Array(-0.0, 0.0, 1.0), Array(-0.0, -0.0, 2.0), Array(3.0, -0.0, 0.0))
+    val g = (for (y <- 0 to 2; x <- 0 to 2) yield (y, x, db(y)(x), true))
+      .toDF("y", "x", "db", "valid")
+    val rows = LocalStats.statsOf(g).collect()
+    val r = rows.map(row => (row.getLong(0), row.getLong(1)) ->
+      (row.getLong(2), row.getDouble(3), row.getDouble(4), row.getDouble(5))).toMap
+    // Arrays.sort puts -0.0 before 0.0; median = sorted(n/2), 0-based
+    val expected = Map(
+      (0L, 0L) -> ((4L, 0.0, 0.0, 1.0)), // [-0,-0,-0,0]: median -0.0, range 0 → factor 1
+      (0L, 1L) -> ((6L, 0.0, 2.0, 1.0)), // [-0,-0,-0,0,1,2]: median 0, center 0
+      (0L, 2L) -> ((4L, 1.0, 2.0, 1.0)), // [-0,0,1,2]: median 1, center 1
+      (1L, 0L) -> ((6L, 0.0, 3.0, 1.0)), // [-0,-0,-0,-0,0,3]: median -0.0, center -0.0
+      (1L, 1L) -> ((9L, 0.0, 3.0, 1.0)), // [-0×4,0,0,1,2,3]: median 0, center -0.0
+      (1L, 2L) -> ((6L, 0.0, 2.0, 1.1)), // [-0,-0,0,0,1,2]: 1 + 0.1·(2−0)/2
+      (2L, 0L) -> ((4L, 0.0, 3.0, 1.1)), // [-0,-0,-0,3]: median -0.0, 1 + 0.1·(3+0)/3
+      (2L, 1L) -> ((6L, 0.0, 3.0, 1.0)), // [-0,-0,-0,0,2,3]: median 0, center -0.0
+      (2L, 2L) -> ((4L, 0.0, 2.0, 1.0))) // [-0,-0,0,2]: median 0, center 0
+    assert(r == expected, s"cells: $r")
+    // == equates -0.0 and 0.0; the bits show round(…, 6) emits +0.0 even
+    // where the picked median was -0.0
+    val zeros = rows.flatMap(row => Seq(row.getDouble(3), row.getDouble(4))).filter(_ == 0.0)
+    assert(zeros.nonEmpty && zeros.forall(z => java.lang.Double.doubleToRawLongBits(z) == 0L),
+      s"signed zeros emitted: ${zeros.mkString(", ")}")
+  }
+
   test("A5 fold: all-invalid grid yields empty output; single-pixel grid is its own median") {
     val empty = Seq((0, 0, 1.0, false)).toDF("y", "x", "db", "valid")
     assert(LocalStats.statsOf(empty).count() == 0)

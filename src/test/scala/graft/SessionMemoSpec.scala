@@ -182,7 +182,7 @@ class SessionMemoSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val root = new File("src/main/scala/graft")
     assert(root.isDirectory, s"${root.getAbsolutePath} not found")
     val bare = """\.(persist\s*\(|cache\s*\(\s*\))""".r
-    val exempt = Seq("api/Engine.scala", "tools/", "ext/SessionMemo.scala")
+    val exempt = Seq("api/Engine.scala", "ext/SessionMemo.scala")
       .map(p => new File(root, p).getCanonicalPath)
     def files(d: File): Seq[File] =
       d.listFiles.toSeq.flatMap(f => if (f.isDirectory) files(f) else Seq(f).filter(_.getName.endsWith(".scala")))
