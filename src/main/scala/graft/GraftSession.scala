@@ -42,7 +42,7 @@ object GraftSession {
     * off, and Spark reads that key on a session's first query.
     */
   def build(defaultCpus: Int, master: Option[String] = None): SparkSession = {
-    val n = sys.env.get("SPARK_GRAFT_CPUS").flatMap(_.toIntOption).getOrElse(defaultCpus)
+    val n = cpus(defaultCpus)
     val spark = SparkSession.builder()
       .master(master.getOrElse(s"local[$n]"))
       .config("spark.sql.shuffle.partitions", n.toString)
@@ -56,4 +56,8 @@ object GraftSession {
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
+
+  /** SPARK_GRAFT_CPUS, else `defaultCpus`: the n of [[build]]. */
+  def cpus(defaultCpus: Int): Int =
+    sys.env.get("SPARK_GRAFT_CPUS").flatMap(_.toIntOption).getOrElse(defaultCpus)
 }

@@ -904,24 +904,30 @@ object SparkEntry {
     *
     * Persist lifetime contract: registry fns whose plans reuse a
     * relation across legs (minhash signatures, LSH bands, label-prop
-    * rounds) MAY leave those persists cached after the query returns —
-    * callers running many queries in one long-lived session (as
-    * Verify/Bench do) should `spark.catalog.clearCache()` between
+    * rounds) persist it through `persistRecorded`, so the query's memo
+    * entry (below) owns it and MAY leave it cached after the query
+    * returns — callers running many queries in one long-lived session
+    * (as Verify/Bench do) should `spark.catalog.clearCache()` between
     * queries to reclaim executor storage. `tools/PersistAudit` checks
-    * that only the `Bench.extraIters ++ Bench.auditSkip` entries do.
+    * that every relation a query leaves persisted is owned by a memo
+    * entry; Bench keeps an entry's persists warm between its own
+    * iterations exactly when its memo entry owns some.
     *
     * Prepared-query memo (r19): registry fns are pure in
     * (session, dir) and eager per-operation analysis makes steady-state
     * CONSTRUCTION alone cost 100–600 ms for most entries
     * (`Profile build`), so every built Dataset is memoized per
-    * (session, name, dir) on [[graft.ext.SessionMemo]], which re-arms
+    * (session, [[memoKey]]) on [[graft.ext.SessionMemo]], which re-arms
     * the persists each build recorded on every hit.
     */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     registry.map(q => q.name -> { (s: SparkSession, dir: String) =>
       graft.plans.GraftExtensions.register(s)
-      graft.ext.SessionMemo.get[DataFrame](s, s"registry:${q.name}:$dir")(q.fn(s, dir))
+      graft.ext.SessionMemo.get[DataFrame](s, memoKey(q.name, dir))(q.fn(s, dir))
     }).toMap
+
+  /** The [[graft.ext.SessionMemo]] key of registry query `name` over `dir`. */
+  private[graft] def memoKey(name: String, dir: String): String = s"registry:$name:$dir"
 
   /** The registry WITHOUT the prepared-query memo (r19 ADVICE item):
     * every call pays real Dataset construction. Diagnostics only —

@@ -1880,7 +1880,7 @@ object Dedup {
     * pairwise scan; the cfg tag rides inside the join key so the three
     * sweeps share one exchange; verification joins the persisted
     * signature relation (left cached per the registry persist contract;
-    * in Bench.extraIters); the final rollup is map-side partial onto a
+    * owned by the memo entry); the final rollup is map-side partial onto a
     * 3-row key space.
     */
   def bandTuning(s: SparkSession, dir: String): DataFrame = {
@@ -1964,7 +1964,7 @@ object Dedup {
     * all-pairs); the two source-attach joins key on doc_id; the rollup
     * is map-side partial onto the ≤|sources|² key space. The signature
     * relation feeds banding plus both verification sides, so it
-    * persists per call (extraIters-documented).
+    * persists per call (owned by the query's memo entry).
     */
   def sourceOverlap(s: SparkSession, dir: String): DataFrame = {
     val sig = minhashSig(s, dir).persistRecorded() // banding + both verify sides

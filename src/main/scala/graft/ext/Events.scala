@@ -1083,7 +1083,7 @@ object Events {
   def paretoShareFrom(events: DataFrame): DataFrame = {
     // the user-sized pre-agg feeds the max/count leg, the bucket-rank
     // leg, and the offset leg — unpersisted, each leg replays the full
-    // events scan + shuffle (t11 rule; registered in Bench.extraIters)
+    // events scan + shuffle (t11 rule; owned by the query's memo entry)
     val cnts = events.groupBy("user_id").agg(count(lit(1)).as("cnt"))
       .persistRecorded()
     val mx = cnts.agg(max("cnt").as("mxc"), count(lit(1)).as("n"))
@@ -1788,7 +1788,7 @@ object Events {
     * over that bounded spine — never over users or events. The
     * user-grain relation feeds four legs (duration counts, horizon
     * counts, churn counts, spine max) and is persisted for the query's
-    * lifetime (registry persist contract; Bench.extraIters).
+    * lifetime (registry persist contract; owned by its memo entry).
     */
   def retentionCurve(s: SparkSession, dir: String): DataFrame =
     retentionCurveFrom(t(s, dir))

@@ -649,8 +649,8 @@ object Graph {
     * persisted (all rounds feed the final union, so none can be
     * unpersisted early) — the ≤2·[[KcoreRounds]]+1 cached round tables
     * are bounded-small and live until the caller's `clearCache` (the
-    * registry per-query persist contract; Verify clears per query, g7
-    * is in Bench.extraIters).
+    * registry per-query persist contract; Verify clears per query, g7's
+    * memo entry owns them).
     */
   def kcore(s: SparkSession, dir: String): DataFrame =
     kcoreCore(edgeRelations(s, dir)._1)
@@ -677,8 +677,8 @@ object Graph {
     // plan-string rendering (r15, measured). Every round re-roots at an
     // RDD scan (`createDataFrame(df.rdd, schema)`) and persists: plans
     // stay constant-size, each round computes once, and the 7 stats
-    // legs read the ≤thousands-row cached rounds. g7 is in
-    // Bench.extraIters per the persist contract.
+    // legs read the ≤thousands-row cached rounds. g7's memo entry owns
+    // them per the persist contract.
     val spark = edges0.sparkSession
     def truncated(df: DataFrame): DataFrame =
       spark.createDataFrame(df.rdd, df.schema)

@@ -395,8 +395,8 @@ object Mix {
     * (identical inputs in both engines ⇒ identical difference; the
     * re-round sits ≥~0.5e-6 − 1e-15 from every boundary).
     *
-    * Scale shape: the memoized D7 labels (session-lifetime persist —
-    * this query must sit in Bench.extraIters per the persist contract)
+    * Scale shape: the memoized D7 labels (session-lifetime persist,
+    * owned by this query's memo entry per the persist contract)
     * join ONE corpus scan; everything downstream is arithmetic on the
     * sources-sized relation with two broadcast 1-row totals.
     */
@@ -1131,8 +1131,8 @@ object Mix {
     * pre-agg; the bucket-grain p/q histogram is a single map-side-
     * combinable aggregate onto ≤[[DsirBuckets]] keys; totals are a
     * 1-row broadcast; λ joins back by broadcast (provably bounded);
-    * the pre-agg is persisted (histogram leg + join-back leg — w15 is
-    * in Bench.extraIters per the persist contract). No unbounded key
+    * the pre-agg is persisted (histogram leg + join-back leg — owned by
+    * w15's memo entry per the persist contract). No unbounded key
     * anywhere: the hot dimension is the fixed bucket space.
     */
   def dsirWeights(s: SparkSession, dir: String): DataFrame =

@@ -1271,7 +1271,7 @@ object Relational {
     * the CLAUDE.md two-leg rule (r17 ADVICE: unpersisted, the
     * quarter-pruned fact scan + supplier aggregation executed twice
     * per run). Per the registry persist contract the persist is left
-    * for the session (x22 is in Bench.extraIters; PersistAudit knows).
+    * for the session (owned by x22's memo entry; PersistAudit checks).
     */
   def topSupplier(s: SparkSession, dir: String): DataFrame =
     topSupplierFrom(t(s, dir, "lineitem"), t(s, dir, "supplier"))

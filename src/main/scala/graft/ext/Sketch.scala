@@ -201,7 +201,7 @@ object Sketch {
     * leg is the two-phase bucketed rank; the probe joins the 4096-cell
     * table broadcast. The vocab pre-agg feeds three legs (cells, rank,
     * probe) and is persisted for the query's lifetime (registry persist
-    * contract; in Bench.extraIters).
+    * contract; owned by the query's memo entry).
     */
   def cmsHeavyHitters(s: SparkSession, dir: String): DataFrame = {
     val vocab = Tables.parquet(s, s"$dir/documents.parquet")
@@ -279,8 +279,8 @@ object Sketch {
     * domain, the x14 nation-spine argument); the exact-intersection
     * audit leg equi-joins on the hash value. The distinct relation
     * feeds four legs (n-counts, sketch, both intersect sides) and is
-    * persisted for the query's lifetime (registry contract;
-    * Bench.extraIters).
+    * persisted for the query's lifetime (registry contract; owned by
+    * the query's memo entry).
     */
   def kmvOverlap(s: SparkSession, dir: String): DataFrame = {
     val sh = Tables.parquet(s, s"$dir/documents.parquet")

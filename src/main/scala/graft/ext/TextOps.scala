@@ -2691,7 +2691,7 @@ object TextOps {
     * naive per-source window and the identical (key, doc_id) total
     * order makes them agree. The train bigram/unigram tables feed two
     * scoring legs each and the scored pre-agg feeds the distinct +
-    * join-back legs — all three persisted (t34 is in Bench.extraIters
+    * join-back legs — all three persisted (owned by t34's memo entry,
     * per the persist contract).
     */
   def lmPerplexity(s: SparkSession, dir: String): DataFrame =

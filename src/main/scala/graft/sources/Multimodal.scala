@@ -587,7 +587,7 @@ object Multimodal {
     // through one reducer; the distinct exchanges hash-spread on both
     // columns and the per-modality counts after them are map-side
     // combinable. The exploded block relation feeds all three legs →
-    // persisted (registered in Bench.extraIters).
+    // persisted (owned by m8's memo entry).
     val blk = blocks.persistRecorded()
     val tot = blk.groupBy("modality").agg(count(lit(1)).as("total_blocks"))
     val pay = blk.select("modality", "doc_id").distinct()

@@ -3,13 +3,16 @@ package graft.tools
 /** Persist-lifetime audit: machine-checks the contract documented on
   * `SparkEntry.queries` — a registry fn MAY leave persisted relations
   * behind on return (shared fixtures, memoized bases; long-lived
-  * callers clearCache between queries), but only the DOCUMENTED ones.
-  * For each query this runs the checksum action from a clean cache,
-  * then counts persisted RDDs still registered. A query that leaves
-  * persists without being in the documented set (Bench.extraIters —
-  * the internal/memoized-persist list — or the CC-loop set) is flagged
-  * and the run exits nonzero, so an undocumented persist can't slip in
-  * comment-enforced.
+  * callers clearCache between queries), but only ones a
+  * `SessionMemo` entry owns, i.e. ones persisted through
+  * `persistRecorded` inside a memoized build. For each query this runs
+  * the checksum action from a clean cache and counts the persisted RDDs
+  * still registered; it then unpersists every relation the held memo
+  * entries own. The owner need not be the query's own entry: g6 leaves
+  * the shared co-purchase edge relations persisted too. Any RDD still
+  * persisted after that was persisted outside the memo: the query is
+  * flagged and the run exits nonzero, so an undocumented persist can't
+  * slip in comment-enforced.
   *
   * Usage: SPARK_GRAFT_SF_DIR=... sbt "runMain graft.tools.PersistAudit
   * [name ...]" — no names = the full registry.
@@ -18,15 +21,12 @@ object PersistAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val spark = graft.GraftSession.build(8)
-    // Queries allowed to leave persists alive on return: the documented
-    // internal/memoized-persist set plus the CC label-propagation
-    // queries (session-lifetime ccMemo labels + their edge fixtures).
-    val documented = graft.Bench.extraIters ++ graft.Bench.auditSkip
     val names = if (args.nonEmpty) args.toSeq else graft.SparkEntry.queries.keys.toSeq.sorted
     var undocumented = List.empty[String]
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet.toSet
     names.foreach { name =>
       spark.catalog.clearCache()
-      val before = spark.sparkContext.getPersistentRDDs.keySet
+      val before = persisted
       val ok = try {
         graft.Bench.checksum(graft.SparkEntry.queries(name)(spark, sfDir)).collect()
         true
@@ -35,9 +35,11 @@ object PersistAudit {
         false
       }
       if (ok) {
-        val leftover = spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
-        val expected = documented(name)
-        if (leftover.nonEmpty && !expected) undocumented ::= name
+        val leftover = persisted -- before
+        val (_, held) = graft.ext.SessionMemo.heldEntries
+        held.foreach(k => graft.ext.SessionMemo.persistsOf(k).foreach(_.unpersist(blocking = true)))
+        val expected = (leftover & persisted).isEmpty
+        if (!expected) undocumented ::= name
         println(s"AUDIT $name leftover=${leftover.size} " +
           s"${if (leftover.isEmpty) "clean" else if (expected) "documented" else "UNDOCUMENTED"}")
       }

@@ -2,93 +2,78 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Pins the bench revalidation tier selection — the r15 artifact bug
-  * class: a global cap plus an implicit ratio-10 default for
-  * never-measured entries let each round's NEW queries consume the
-  * whole revalidation budget, truncating the "every ≥2 s entry
-  * revalidates" guarantee and publishing phantom regressions the judge
-  * had to re-measure by hand. Pure-function spec; no Spark session.
+/** Pins the bench's pure decisions: the in-place re-time loop, the
+  * compact contract line and the sweep fallback. No Spark session.
   */
 class BenchSelectionSpec extends AnyFunSuite {
+  import Bench.Iter
 
-  test("always-tier (>=2s) is selected in full and exempt from the cap") {
-    // 30 ratio suspects (> RevalidateMax = 24) AND three >=2s entries:
-    // the r15 bug starved the always-set; now it must survive intact.
-    val ratioSuspects = (1 to 30).map(i => (f"q$i%02d", 1.0 + i * 0.01))
-    val results = ratioSuspects ++ Seq(("a4", 2.6), ("m6", 2.1), ("d17", 2.0))
-    val prev = ratioSuspects.map { case (n, v) => n -> v / 2.0 }.toMap
-    val (always, ratio) = Bench.revalidationTiers(results, prev)
-    assert(always.map(_._1) == Seq("a4", "m6", "d17")) // time-desc, all kept
-    assert(ratio.length == 24) // the cap applies to the ratio tier only
-    assert(ratio.forall(e => !Set("a4", "m6", "d17")(e._1)))
+  private val Slots = 4
+  private def clean(wall: Double): Iter = Iter(wall, taskRun = wall, taskCpu = wall)
+  private def contended(wall: Double): Iter =
+    Iter(wall, taskRun = wall * (1 + 2 * Bench.InflatedOffCpuPerSlot * Slots), taskCpu = wall)
+
+  /** `retime` over `base`, with `again` answering from `more` in order
+    * and counting its calls.
+    */
+  private def retimeWith(base: Seq[Option[Iter]], more: Seq[Option[Iter]]) = {
+    val it = more.iterator
+    var calls = 0
+    val (all, still) = Bench.retime(base, () => { calls += 1; it.next() }, Slots)
+    (all, still, calls)
   }
 
-  test("never-measured entries are not ratio suspects") {
-    // new queries (absent from prev) below 2s must not select at all —
-    // the r15 bug treated them as ratio-10 inflation suspects.
-    val results = Seq(("new1", 1.5), ("new2", 0.9), ("old", 1.0))
-    val prev = Map("old" -> 0.5) // old inflated 2x -> genuine suspect
-    val (always, ratio) = Bench.revalidationTiers(results, prev)
-    assert(always.isEmpty)
-    assert(ratio.map(_._1) == Seq("old"))
+  test("inflated: off-CPU task seconds per slot-second above the constant") {
+    val k = Bench.InflatedOffCpuPerSlot
+    assert(!Bench.inflated(1.0, taskRun = 3.0, taskCpu = 2.9, slots = 4))
+    assert(Bench.inflated(1.0, taskRun = 3.0, taskCpu = 3.0 - 1.01 * k * 4, slots = 4))
+    assert(!Bench.inflated(1.0, taskRun = 3.0, taskCpu = 3.0 - 0.99 * k * 4, slots = 4))
+    // the same off-CPU seconds spread over 8x the slots read 8x lower
+    assert(!Bench.inflated(1.0, taskRun = 3.0, taskCpu = 3.0 - 1.01 * k * 4, slots = 32))
+    assert(Bench.inflated(1.0, taskRun = 40.0, taskCpu = 40.0 - 1.01 * k * 32, slots = 32))
+    // an iteration that ran no tasks (driver-only) is never inflated
+    assert(!Bench.inflated(0.5, taskRun = 0.0, taskCpu = 0.0, slots = 4))
+    assert(!Bench.inflated(0.0, taskRun = 0.0, taskCpu = 0.0, slots = 4))
+    val c = contended(2.0)
+    assert(Bench.inflated(c.wall, c.taskRun, c.taskCpu, Slots))
   }
 
-  test("ratio tier: threshold, floor, worst-inflation ordering, cap") {
-    val results = Seq(
-      ("flat", 1.0),      // prev 1.0 -> ratio 1.0, not a suspect
-      ("mild", 1.2),      // prev 1.0 -> 1.2x, under the 1.3 threshold
-      ("inflated", 1.4),  // prev 1.0 -> 1.4x, suspect
-      ("worse", 3.0),     // >=2s -> always-tier, NOT a ratio suspect
-      ("tiny", 0.39),     // prev 0.1 -> 3.9x but under the 0.4s floor
-      ("big", 1.9))       // prev 1.0 -> 1.9x, suspect, worse than 1.4x
-    val prev = Map("flat" -> 1.0, "mild" -> 1.0, "inflated" -> 1.0,
-      "worse" -> 1.0, "tiny" -> 0.1, "big" -> 1.0)
-    val (always, ratio) = Bench.revalidationTiers(results, prev)
-    assert(always.map(_._1) == Seq("worse"))
-    assert(ratio.map(_._1) == Seq("big", "inflated")) // worst inflation first
+  test("retime: a clean fastest iteration runs nothing more") {
+    // the slower iteration is inflated, the fastest is clean
+    val base = Seq(Some(contended(3.0)), Some(clean(1.0)))
+    val (all, still, calls) = retimeWith(base, Nil)
+    assert(calls == 0 && all == base && !still)
+    assert(Bench.published(all) == 1.0)
   }
 
-  test("revalidation publishes min(sweep, isolated) — r19 rule") {
-    // Both numbers measure the same code; chunk-state, contention and
-    // JIT compile-lag only INFLATE a wall time, so the min of two valid
-    // measurements is the better floor estimator.
-    // faster than sweep: the isolated number wins
-    assert(Bench.publishedRevalidation(sweep = 2.0, iso = 1.5) == 1.5)
-    // the r18 a4 case: an idle-sentinel child published cold-class
-    // 9.57s over a 3.17s sweep (TimeQ warm floor 2.74) — the old
-    // idle-sentinel gate believed it; the min rule keeps the sweep.
-    assert(Bench.publishedRevalidation(sweep = 3.17, iso = 9.57) == 3.17)
-    // the r16 d17 case (load-spiked child, 3.1s for a ~1.8s query):
-    // min keeps the sweep here too — the sentinel is diagnostic only.
-    assert(Bench.publishedRevalidation(sweep = 2.1, iso = 3.1) == 2.1)
-    // failed isolated runs keep the sweep number
-    assert(Bench.publishedRevalidation(sweep = 2.0, iso = -1.0) == 2.0)
+  test("retime: the cap holds when every extra iteration is inflated") {
+    val base = Seq(Some(contended(2.0)), Some(contended(2.5)))
+    val (all, still, calls) = retimeWith(base, Seq.fill(10)(Some(contended(1.8))))
+    assert(calls == Bench.MaxRetimes)
+    assert(all.length == base.length + Bench.MaxRetimes)
+    assert(still)
+    // the min estimator still publishes the fastest valid iteration
+    assert(Bench.published(all) == 1.8)
   }
 
-  test("childSentinel: no sentinel counts as contended (r17 advice, diagnostic)") {
-    assert(Bench.childSentinel(Nil).isPosInfinity)
-    assert(Bench.childSentinel(Seq(0.1, 0.25)) == 0.25)
+  test("retime: stops at the first clean iteration and publishes the min") {
+    val base = Seq(Some(contended(2.0)), Some(contended(2.2)))
+    // the clean iteration is slower than the inflated base min: the loop
+    // stops there, and the published number is still the min
+    val (all, still, calls) = retimeWith(base,
+      Seq(Some(contended(1.9)), Some(clean(2.1)), Some(clean(0.1))))
+    assert(calls == 2 && !still)
+    assert(Bench.published(all) == 1.9)
   }
 
-  test("cold-heavy entries get a min-of-4 reval child (r18 verdict #2)") {
-    // a4: cold 9.16 / warm 2.74 and g7: 4.62 / 1.40 — both >3x, the JIT
-    // compile-lag class that needs one extra warm iteration.
-    assert(Bench.revalChildIters(prevCold = Some(9.16), prevWarm = Some(2.74)) == 4)
-    assert(Bench.revalChildIters(prevCold = Some(4.62), prevWarm = Some(1.40)) == 4)
-    // ordinary fixture-build cold ratios stay at TimeQ's min-of-3
-    assert(Bench.revalChildIters(prevCold = Some(2.0), prevWarm = Some(1.5)) == 3)
-    // no history (non-extraIters entries record no cold) -> min-of-3
-    assert(Bench.revalChildIters(prevCold = None, prevWarm = Some(1.0)) == 3)
-    assert(Bench.revalChildIters(prevCold = Some(5.0), prevWarm = None) == 3)
-    // degenerate zero warm floor must not divide
-    assert(Bench.revalChildIters(prevCold = Some(5.0), prevWarm = Some(0.0)) == 3)
-  }
-
-  test("artifactNumberMap: flat object scan used for queries/cold history") {
-    val s = """{"metric":"total","queries":{"a":1.5,"b":0.25},"cold":{"a":9.0},"sf":"x"}"""
-    assert(Bench.artifactNumberMap(s, "queries") == Map("a" -> 1.5, "b" -> 0.25))
-    assert(Bench.artifactNumberMap(s, "cold") == Map("a" -> 9.0))
-    assert(Bench.artifactNumberMap(s, "missing").isEmpty)
+  test("retime: a failed iteration never publishes and never stops the loop") {
+    val base = Seq(None, Some(contended(2.0)))
+    val (all, still, calls) = retimeWith(base, Seq(None, None, Some(clean(1.5))))
+    assert(calls == 3 && !still)
+    assert(Bench.published(all) == 1.5)
+    // an entry with no valid iteration is failed, not re-timed
+    val (dead, deadStill, deadCalls) = retimeWith(Seq(None, None), Seq(Some(clean(0.1))))
+    assert(deadCalls == 0 && !deadStill && Bench.published(dead) == -1.0)
   }
 
   test("compact line: driver-contract keys, valid JSON, fits the stdout tail") {
@@ -131,58 +116,6 @@ class BenchSelectionSpec extends AnyFunSuite {
     assert(smallNode.get("fast_n").asInt == 1)
   }
 
-  test("failed entries (negative time) never select; fresh clone selects only >=2s") {
-    val results = Seq(("dead", -1.0), ("slow", 2.2), ("fine", 1.0))
-    val (always, ratio) = Bench.revalidationTiers(results, Map.empty)
-    assert(always.map(_._1) == Seq("slow"))
-    assert(ratio.isEmpty)
-  }
-
-  // ------------------------------------------------ r20 deadline logic
-  // BENCH_r19 was rc=124/"parsed":null: 35 unbounded chunk forks under
-  // host steal (~3,450 s) plus 42 queued ~40 s reval children, with the
-  // contract line printed only after everything finished. The harness
-  // is now deadline-bounded; these pin the pure shedding decisions.
-
-  test("reval admission: tier-dropping under an artificially small deadline") {
-    // 5 suspects at ~40s actual each, initial estimate 60s:
-    // budget 50  -> 0 admitted (even the first projected child won't fit)
-    assert(Bench.revalAdmissions(Seq.fill(5)(40.0), budgetSec = 50.0,
-      initialEstSec = 60.0) == 0)
-    // budget 100 -> first admits on the 60s estimate (spent 40), then
-    // the measured 40s average lets a second fit (80 <= 100), not a third
-    assert(Bench.revalAdmissions(Seq.fill(5)(40.0), budgetSec = 100.0,
-      initialEstSec = 60.0) == 2)
-    // an ample budget admits everyone
-    assert(Bench.revalAdmissions(Seq.fill(5)(40.0), budgetSec = 1000.0,
-      initialEstSec = 60.0) == 5)
-    // cheap children adapt the estimate upward in admissions: 10s actual
-    // lets 10 through a 100s budget despite the 60s initial estimate
-    assert(Bench.revalAdmissions(Seq.fill(20)(10.0), budgetSec = 100.0,
-      initialEstSec = 60.0) == 10)
-    // once one child is dropped, all later ones drop too (priority
-    // order — a cheaper-looking later child has no claim on the budget)
-    assert(Bench.revalAdmissions(Seq(90.0, 90.0, 1.0, 1.0), budgetSec = 100.0,
-      initialEstSec = 60.0) == 1)
-  }
-
-  test("reval child estimate: initial until measured, then the running average") {
-    assert(Bench.revalChildEstimate(Nil, 60.0) == 60.0)
-    assert(Bench.revalChildEstimate(Seq(10.0, 20.0), 60.0) == 15.0)
-  }
-
-  test("reval fleet admission: capped by fleet size, budget, and pending (r21)") {
-    // plenty of budget: the fleet takes min(pending, ChunksPerJvm-style cap)
-    assert(Bench.fleetAdmitCount(10, 30.0, 10000.0, 6) == 6)
-    assert(Bench.fleetAdmitCount(3, 30.0, 10000.0, 6) == 3)
-    // tight budget: only what the per-entry estimate fits (90/30 = 3)
-    assert(Bench.fleetAdmitCount(10, 30.0, 90.0, 6) == 3)
-    // no budget at all -> 0 (caller then drops everything left)
-    assert(Bench.fleetAdmitCount(10, 30.0, 20.0, 6) == 0)
-    // never negative, degenerate estimate guarded
-    assert(Bench.fleetAdmitCount(10, 0.0, -5.0, 6) == 0)
-  }
-
   test("compact line states the total both ways and lists per-entry cold (r21)") {
     val qs = Seq(("q_heavy", 1.5), ("q_fast", 0.1), ("raster_x", 0.4))
     val cold = Map("q_heavy" -> 4.0) // extraIters-style first iteration
@@ -209,12 +142,6 @@ class BenchSelectionSpec extends AnyFunSuite {
     assert(Bench.sweepGoInProcess(36, 360.0, 100, 500.0))
     // same pace with a 1500s budget -> keep forking
     assert(!Bench.sweepGoInProcess(36, 360.0, 100, 1500.0))
-  }
-
-  test("reval reserve scales down with small deadlines") {
-    assert(Bench.revalReserveSec(2400.0) == 600.0)
-    assert(Bench.revalReserveSec(1200.0) == 300.0)
-    assert(Bench.revalReserveSec(4000.0) == 600.0) // capped
   }
 
   test("compact line carries the harness self-description keys (r19 verdict #3)") {

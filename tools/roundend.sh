@@ -9,7 +9,8 @@
 # plumbing check. The audits always run at sf0.01, plus DupSubtreeAudit
 # additionally at sf0.1 (r17 verdict: subtree shapes can differ when
 # size-based join selection sees different file sizes). The bench sweep
-# is NOT included — it is its own ~25 min step with its own validity
+# is NOT included — it is its own ~15 min step (harness_sec 883-956 s at
+# sf0.1 with SPARK_GRAFT_CPUS=4 on a 4-core host) with its own validity
 # protocol (see CLAUDE.md); run it separately and commit bench_full.json.
 set -euo pipefail
 cd "$(dirname "$0")/.."
