@@ -1,12 +1,11 @@
 package graft.api
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.geom.Geom
 import graft.meta.SafeMeta
 import graft.model._
-import graft.ops.PixelOps
 import graft.sink.{Sinks, TiffWriter}
 import graft.sources.{RasterSource, Tile}
 import graft.stats.FastStats
@@ -82,9 +81,12 @@ final case class WarpCrop(product_id: String, band: String, tile: Int, block: In
 /** Per-product batch outcome (`api/mod.rs:452-457`). */
 final case class BatchReport(processed: Int, skipped: Int, errors: Seq[(String, String)])
 
-/** The engine's query lifecycle (E1-E3, SURVEY §3): params → plan
-  * `scan(tiles) → stats reduce [job 1] → broadcast params → per-tile
-  * kernel map [job 2] → collect OUTPUT tiles → resize/pad → sinks`.
+/** The engine's query lifecycle (E1-E3, SURVEY §3): params → one band
+  * pipeline per input `scan(tiles) → stats reduce → broadcast params →
+  * per-tile kernel map → [u8 rescale]`, whose final tiles go either to
+  * the streamed TIFF writer (a full-resolution single-page TIFF: tasks
+  * encode TIFF tiles and nothing is collected) or to a collect at target
+  * size → pad → sinks.
   *
   * Execution model (SURVEY §1.3): tiles are the PRIMARY representation.
   * Aggregations run as mapPartitions+reduce over the dense arrays
@@ -93,18 +95,12 @@ final case class BatchReport(processed: Int, skipped: Int, errors: Seq[(String, 
   * stages are JIT-compiled tile kernels (graft.api.Kernels — Spark's
   * higher-order array lambdas are interpreted, so typed Dataset maps are
   * the idiomatic fast path). The relational pixel view remains the
-  * oracle-checked surface in SparkEntry. Only the OUTPUT image is
-  * collected, as tile arrays.
+  * oracle-checked surface in SparkEntry. The driver holds at most a
+  * target-size output image, never a source-resolution one.
   */
 object Engine {
 
   import RasterSource.DefaultTileSize
-
-  /** P1 over the relational pixel view (oracle-facing helper). */
-  def withDb(px: DataFrame): DataFrame = {
-    val db = PixelOps.toDb(col("v"))
-    px.withColumn("db", db).withColumn("valid", PixelOps.validMask(db))
-  }
 
   private implicit val dbTileEnc: org.apache.spark.sql.Encoder[DbTile] =
     org.apache.spark.sql.Encoders.product[DbTile]
@@ -129,20 +125,14 @@ object Engine {
   def tileStats(tiles: Dataset[DbTile]): FastStats.FastStatsResult = {
     val m = tiles.mapPartitions(Kernels.momentsOfTiles)(
       org.apache.spark.sql.Encoders.product[FastStats.Moments])
-      .collect().foldLeft(FastStats.WelfordAgg.zero)(FastStats.WelfordAgg.merge)
-    val mr = FastStats.WelfordAgg.finish(m)
+      .collect().foldLeft(FastStats.Moments.zero)(FastStats.Moments.merge)
+    val mr = FastStats.Moments.finish(m)
     FastStats.fromMoments(mr, () => {
       val bins = graft.stats.HistStats.NumBins
       tiles.mapPartitions(Kernels.histOfTiles(_, mr.min, mr.max, bins))(
         org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]())
         .reduce { (a, b) => var i = 0; while (i < a.length) { a(i) += b(i); i += 1 }; a }
     })
-  }
-
-  /** A3 from a generic pixel DataFrame (kept for the relational API). */
-  def strategyParams(px: DataFrame, strategy: AutoscaleStrategy): (Double, Double, Double) = {
-    val st = FastStats.stats(px.filter(col("valid")).select(col("db")))
-    FastStats.strategyParams(st, strategy.name)
   }
 
   /** Strategy dispatch with the reference's routing
@@ -730,17 +720,60 @@ object Engine {
 
   // ------------------------------------------------------------- pipeline
 
-  /** Single-band pipeline (K9): scan → [native warp] → stats reduce →
-    * tile kernels → [u8 rescale] → collect tiles → resize/pad.
+  /** Single-band pipeline (K9): [[bandPipeline]] over one band, collected
+    * at target size and padded.
     */
   def processBand(spark: SparkSession, productId: String, band: String,
                   rows: Int, cols: Int, params: ProcessingParams,
                   decimate: Int = 1,
                   gt: Option[Array[Double]] = None,
-                  warp: Option[graft.geom.Warp.NativeWarp] = None): ProcessedImage = {
-    val (outRows, outCols) = outDims(rows, cols, decimate, warp)
-    bandTiles(spark, productId, band, rows, cols, params, decimate, warp)(
-      collectImage(params, gt, outRows, outCols))
+                  warp: Option[graft.geom.Warp.NativeWarp] = None): ProcessedImage =
+    grayImage(spark, productId, OneBand(band), rows, cols, params, decimate, gt, warp)
+
+  /** Band algebra (P2-P6) pipeline: [[bandPipeline]] over both bands'
+    * tiles joined on the tile key and combined by a zip kernel —
+    * positional alignment with no pixel shuffle (SURVEY §2.4: bands are
+    * co-partitioned by construction).
+    */
+  def processBandOp(spark: SparkSession, productId: String,
+                    op: PolarizationOperation, rows: Int, cols: Int,
+                    params: ProcessingParams, decimate: Int = 1,
+                    gt: Option[Array[Double]] = None,
+                    warp: Option[graft.geom.Warp.NativeWarp] = None): ProcessedImage =
+    grayImage(spark, productId, BandAlgebra(op), rows, cols, params, decimate, gt, warp)
+
+  /** What [[bandPipeline]] reads: one band, or the VV∘VH band algebra. */
+  private sealed trait Input
+  private final case class OneBand(band: String) extends Input
+  private final case class BandAlgebra(op: PolarizationOperation) extends Input
+
+  /** The pipeline input of a single-image polarization (every one but
+    * Multiband, which runs two [[OneBand]]s through [[processMultiband]]).
+    */
+  private def inputOf(p: Polarization): Input = p match {
+    case Polarization.Op(op) => BandAlgebra(op)
+    case one => OneBand(one.name)
+  }
+
+  /** `params.polarization`'s image at target size, padded: the one
+    * polarization dispatch of [[processToPath]] and [[processToBuffer]].
+    */
+  private def image(spark: SparkSession, productId: String, rows: Int, cols: Int,
+                    params: ProcessingParams, decimate: Int, gt: Option[Array[Double]],
+                    warp: Option[graft.geom.Warp.NativeWarp]): ProcessedImage =
+    if (params.polarization == Polarization.Multiband)
+      processMultiband(spark, productId, ("vv", "vh"), rows, cols, params, decimate, gt, warp)
+    else grayImage(spark, productId, inputOf(params.polarization), rows, cols, params,
+      decimate, gt, warp)
+
+  /** One gray image: [[bandPipeline]] over `input`, collected and padded. */
+  private def grayImage(spark: SparkSession, productId: String, input: Input,
+                        rows: Int, cols: Int, params: ProcessingParams, decimate: Int,
+                        gt: Option[Array[Double]],
+                        warp: Option[graft.geom.Warp.NativeWarp]): ProcessedImage = {
+    val (img, fw, fh, newGt) = bandPipeline(spark, productId, input, rows, cols, params,
+      decimate, warp)(collectPadded(params, gt, outDims(rows, cols, decimate, warp)))
+    ProcessedImage(fw, fh, params.bitDepth, Some(img), None, newGt)
   }
 
   /** The output grid of a pipeline: the warp's, else the decimated source's. */
@@ -749,73 +782,78 @@ object Engine {
     warp.map(nw => (nw.dstRows, nw.dstCols))
       .getOrElse(((rows + decimate - 1) / decimate, (cols + decimate - 1) / decimate))
 
-  /** [[processBand]]'s and [[processBandOp]]'s output step on the final
-    * tiles: collect at target size, then pad.
+  /** A pipeline's output step when the image is not streamed: collect the
+    * final tiles at target size, then pad.
     */
-  private def collectImage(params: ProcessingParams, gt: Option[Array[Double]],
-                           outRows: Int, outCols: Int)(q: Dataset[QTile]): ProcessedImage = {
+  private def collectPadded(params: ProcessingParams, gt: Option[Array[Double]],
+                            dims: (Int, Int))(
+                            q: Dataset[QTile]): (Array[Int], Int, Int, Option[Array[Double]]) = {
+    val (outRows, outCols) = dims
     val (resized, nw, nh) = collectResized(
       q, outRows, outCols, params.targetSize, params.bitDepth.maxVal.toInt)
-    val (img, fw, fh, newGt) = Geom.padAndRescaleGt(
-      resized, nw, nh, outCols, outRows, params.pad, gt)
-    ProcessedImage(fw, fh, params.bitDepth, Some(img), None, newGt)
+    Geom.padAndRescaleGt(resized, nw, nh, outCols, outRows, params.pad, gt)
   }
 
-  /** [[processBand]]'s pipeline up to its final tiles, which `finish`
-    * consumes while the pipeline's caches are still held.
+  /** The one band pipeline: read `input` → stats reduce → strategy
+    * dispatch → tile kernels → [u8 rescale], then `finish` consumes the
+    * final tiles while the pipeline's caches are still held.
+    *
+    * One band caches its FLOAT tiles (half the bytes through the columnar
+    * cache) and recomputes the dB view lazily per pass — log10 is cheaper
+    * than decoding a cached double column; the warp (when requested and
+    * native-resolvable) applies at READ time like the reference's
+    * warped-VRT read, so everything downstream sees the OUTPUT grid. The
+    * band algebra caches its dB tiles ([[loadOperation]]).
+    *
+    * `synRgbCopol` is set for a synRGB JPEG band (co-pol or cross-pol):
+    * under Tamed it takes the band-specific u8 clip
+    * (`autoscale.rs:710-742`: co-pol low = min(p02,p05), cross-pol low =
+    * p05; high = p99) straight to u8. Every other U8 output goes through
+    * the quantize then a min-max rescale (the reference's double
+    * normalization, `autoscale.rs:662-680`).
     */
-  private def bandTiles[R](spark: SparkSession, productId: String, band: String,
-                           rows: Int, cols: Int, params: ProcessingParams, decimate: Int,
-                           warp: Option[graft.geom.Warp.NativeWarp])(
-                           finish: Dataset[QTile] => R): R = {
+  private def bandPipeline[R](spark: SparkSession, productId: String, input: Input,
+                              rows: Int, cols: Int, params: ProcessingParams, decimate: Int,
+                              warp: Option[graft.geom.Warp.NativeWarp],
+                              synRgbCopol: Option[Boolean] = None)(
+                              finish: Dataset[QTile] => R): R = {
     val (outRows, outCols) = outDims(rows, cols, decimate, warp)
-    // cache the FLOAT tiles (half the bytes through the columnar cache);
-    // the dB view recomputes lazily per pass — log10 is cheaper than
-    // decoding a cached double column. The warp (when requested and
-    // native-resolvable) applies at READ time like the reference's
-    // warped-VRT read: everything downstream sees the OUTPUT grid.
-    val scanned = RasterSource.scan(spark, productId, band, rows, cols, decimate)
-    val raw = warp.fold(scanned)(nw => warpTiles(scanned, nw)).persist()
-    val tiles = toDbTiles(raw)
+    // this pipeline's own persists; a library entry point must not clear
+    // the shared session's cache manager out from under unrelated
+    // concurrent work
+    val own = scala.collection.mutable.ArrayBuffer.empty[Dataset[_]]
+    def persisted[T](ds: Dataset[T]): Dataset[T] = { own += ds; ds.persist() }
     try {
+      val tiles = input match {
+        case OneBand(band) =>
+          val scanned = RasterSource.scan(spark, productId, band, rows, cols, decimate)
+          toDbTiles(persisted(warp.fold(scanned)(nw => warpTiles(scanned, nw))))
+        case BandAlgebra(op) =>
+          persisted(loadOperation(spark, productId, op, rows, cols, warp, decimate))
+      }
       val maxVal = params.bitDepth.maxVal
       val st = tileStats(tiles)
+      val tamedSynRgb = synRgbCopol.filter(_ => params.autoscale == AutoscaleStrategy.Tamed)
       val quant = params.autoscale match {
         case AutoscaleStrategy.Clahe =>
           val (low, high, _) = FastStats.strategyParams(st, "clahe")
           claheTiles(tiles, outRows, outCols, low, high, maxVal)
         case strat =>
-          val (low, high, gamma) = paramsFor(st, strat)
+          val (low, high, gamma) = tamedSynRgb match {
+            case Some(copol) =>
+              val p = st.percentiles
+              (if (copol) math.min(p("p02"), p("p05")) else p("p05"), p("p99"), 1.0)
+            case None => paramsFor(st, strat)
+          }
           quantizeTiles(tiles, low, high, gamma, maxVal)
       }
-      // U8 output goes through the u16-path quantize then a min-max
-      // rescale (the reference's double normalization, autoscale.rs:662-680).
-      val quantP = if (params.bitDepth == BitDepth.U8) Some(quant.persist()) else None
-      try finish(quantP.map(rescaleTilesU8).getOrElse(quant))
-      finally quantP.foreach(_.unpersist())
-    } finally {
-      // unpersist only THIS pipeline's caches — a library entry point must
-      // not clear the shared session's cache manager out from under
-      // unrelated concurrent work
-      raw.unpersist()
-    }
+      finish(
+        if (params.bitDepth == BitDepth.U8 && tamedSynRgb.isEmpty) rescaleTilesU8(persisted(quant))
+        else quant)
+    } finally own.foreach(_.unpersist())
   }
 
   // ------------------------------------------------------------- synRGB
-
-  /** Tamed band-specific u8 autoscale for synRGB
-    * (`autoscale.rs:710-742`): co-pol low = min(p02,p05), cross-pol low =
-    * p05; high = p99; direct linear u8 (no double normalization).
-    */
-  def tamedSynrgbU8(tiles: Dataset[DbTile], isCopol: Boolean): Dataset[QTile] = {
-    val st = tileStats(tiles)
-    if (st.n == 0)
-      return tiles.map(t => QTile(t.tile_row, t.tile_col, t.h, t.w, new Array[Byte](t.db.length)))
-    val p02 = st.percentiles("p02"); val p05 = st.percentiles("p05")
-    val p99 = st.percentiles("p99")
-    val low = if (isCopol) math.min(p02, p05) else p05
-    quantizeTiles(tiles, low, p99, 1.0, 255.0)
-  }
 
   /** Default synRGB compose (P9-P11, `synthetic_rgb.rs:14-66`) on
     * assembled u8 bands (output-size, driver-side LUTs like the
@@ -967,10 +1005,10 @@ object Engine {
     results.toSeq.map(_.asInstanceOf[B])
   }
 
-  /** Two-band pipeline (K10): the two bands run as independent pipelines
-    * through [[overlapped]], so band 2's jobs fill the cores band 1
-    * leaves idle between its jobs and through its collect, resize and
-    * pad. Peak memory is therefore both bands' caches at once (the
+  /** Two-band pipeline (K10): the two bands run as independent
+    * [[bandPipeline]]s through [[overlapped]], so band 2's jobs fill the
+    * cores band 1 leaves idle between its jobs and through its collect,
+    * resize and pad. Peak memory is therefore both bands' caches at once (the
     * reference stages them one after the other, `save.rs:240-280`); each
     * band drops its own caches as it finishes. Each band is autoscaled
     * (full strategy dispatch incl. per-band CLAHE) and RESIZED first;
@@ -984,48 +1022,15 @@ object Engine {
                        params: ProcessingParams, decimate: Int = 1,
                        gt: Option[Array[Double]] = None,
                        warp: Option[graft.geom.Warp.NativeWarp] = None): ProcessedImage = {
-    val (outRows, outCols) = outDims(rows, cols, decimate, warp)
     val forTiff = params.format == OutputFormat.Tiff
     // JPEG synRGB consumes u8 bands; TIFF keeps the requested bit depth.
-    val maxVal = if (forTiff) params.bitDepth.maxVal else 255.0
-    val wantU8 = !forTiff || params.bitDepth == BitDepth.U8
-
-    def bandArr(band: String, isCopol: Boolean): (Array[Int], Int, Int, Option[Array[Double]]) = {
-      val scanned = RasterSource.scan(spark, productId, band, rows, cols, decimate)
-      val raw = warp.fold(scanned)(nw => warpTiles(scanned, nw)).persist()
-      val tiles = toDbTiles(raw)
-      // track this pipeline's own persists; never touch the session-wide
-      // cache manager (other workloads may own caches in this session)
-      var own: List[org.apache.spark.sql.Dataset[QTile]] = Nil
-      def cached(ds: org.apache.spark.sql.Dataset[QTile]) = {
-        val p = ds.persist(); own ::= p; p
-      }
-      try {
-        val q = params.autoscale match {
-          case AutoscaleStrategy.Tamed if !forTiff => tamedSynrgbU8(tiles, isCopol)
-          case AutoscaleStrategy.Clahe =>
-            val st = tileStats(tiles)
-            val (low, high, _) = FastStats.strategyParams(st, "clahe")
-            val c = claheTiles(tiles, outRows, outCols, low, high, maxVal)
-            if (wantU8) rescaleTilesU8(cached(c)) else c
-          case strat =>
-            val st = tileStats(tiles)
-            val (low, high, gamma) = paramsFor(st, strat)
-            val qt = quantizeTiles(tiles, low, high, gamma, maxVal)
-            if (wantU8) rescaleTilesU8(cached(qt)) else qt
-        }
-        // resize BEFORE compose (`save.rs` resizes each band to final
-        // dims, then composes synRGB) — distributed, target-size collect
-        val (resized, nw, nh) = collectResized(
-          q, outRows, outCols, params.targetSize, maxVal.toInt)
-        Geom.padAndRescaleGt(resized, nw, nh, outCols, outRows, params.pad, gt)
-      } finally {
-        raw.unpersist()
-        own.foreach(_.unpersist())
-      }
-    }
-    val done = overlapped(Seq(bands._1 -> true, bands._2 -> false)) {
-      case (band, isCopol) => bandArr(band, isCopol)
+    val bandParams = if (forTiff) params else params.copy(bitDepth = BitDepth.U8)
+    val dims = outDims(rows, cols, decimate, warp)
+    val done = overlapped(Seq(bands._1 -> true, bands._2 -> false)) { case (band, isCopol) =>
+      // resize BEFORE compose (`save.rs` resizes each band to final dims,
+      // then composes synRGB) — distributed, target-size collect
+      bandPipeline(spark, productId, OneBand(band), rows, cols, bandParams, decimate, warp,
+        synRgbCopol = if (forTiff) None else Some(isCopol))(collectPadded(bandParams, gt, dims))
     }
     val (b1, fw, fh, newGt) = done(0)
     val b2 = done(1)._1
@@ -1096,24 +1101,11 @@ object Engine {
       // at full size and without a pad the geotransform is unchanged
       val layout = TiffWriter.layout(outCols, outRows, u16, 1,
         Sinks.tiffFields(gt, effMeta.crs, fields))
-      val write = (q: Dataset[QTile]) => streamTiff(q, layout, outPath)
-      params.polarization match {
-        case Polarization.Op(op) =>
-          bandOpTiles(spark, productId, op, rows, cols, params, decimate, warp)(write)
-        case p => bandTiles(spark, productId, p.name, rows, cols, params, decimate, warp)(write)
-      }
+      bandPipeline(spark, productId, inputOf(params.polarization), rows, cols, params,
+        decimate, warp)(streamTiff(_, layout, outPath))
       writeSidecars(outPath, gt, effMeta, fields)
-    } else {
-      val img = params.polarization match {
-        case Polarization.Multiband => processMultiband(
-          spark, productId, ("vv", "vh"), rows, cols, params, decimate, gt, warp)
-        case Polarization.Op(op) =>
-          processBandOp(spark, productId, op, rows, cols, params, decimate, gt, warp)
-        case p =>
-          processBand(spark, productId, p.name, rows, cols, params, decimate, gt, warp)
-      }
-      writeImage(outPath, img, params, effMeta, polLabel)
-    }
+    } else writeImage(outPath, image(spark, productId, rows, cols, params, decimate, gt, warp),
+      params, effMeta, polLabel)
   }
 
   /** Writes `q`, the final tiles of a full-resolution single-page TIFF,
@@ -1234,17 +1226,7 @@ object Engine {
     requireSupported(meta)
     val warp = gateWarp(productId, rows, cols, params, meta, decimate)
     val gt = warp.map(nw => nw.dstGt.toArray).orElse(meta.geotransform)
-    params.polarization match {
-      case Polarization.Multiband =>
-        processMultiband(spark, productId, ("vv", "vh"), rows, cols, params,
-          decimate, gt, warp)
-      case Polarization.Op(op) =>
-        processBandOp(spark, productId, op, rows, cols, params, decimate,
-          gt, warp)
-      case p =>
-        processBand(spark, productId, p.name, rows, cols, params, decimate,
-          gt, warp)
-    }
+    image(spark, productId, rows, cols, params, decimate, gt, warp)
   }
 
   /** `load_polarization` (`api/mod.rs:859-881`): the raw band as a tile
@@ -1281,7 +1263,7 @@ object Engine {
   /** [[loadOperation]] with an optional read-time warp: both bands warp
     * onto the SAME output grid before the positional zip, exactly as
     * the reference reads both from the one warped VRT, so the tile join
-    * stays co-partitioned by construction. [[processBandOp]] persists
+    * stays co-partitioned by construction. [[bandPipeline]] persists
     * this relation as its input.
     */
   def loadOperation(spark: SparkSession, productId: String,
@@ -1306,51 +1288,6 @@ object Engine {
                 meta: SafeMeta = SafeMeta(), polLabel: String = ""): Unit =
     writeImage(outPath, img, params, meta,
       if (polLabel.nonEmpty) polLabel else params.polarization.name.toUpperCase)
-
-  /** Band algebra (P2-P6) pipeline: both bands' tiles joined on the tile
-    * key and combined by a zip kernel — positional alignment with no
-    * pixel shuffle (SURVEY §2.4: bands are co-partitioned by
-    * construction).
-    */
-  def processBandOp(spark: SparkSession, productId: String,
-                    op: PolarizationOperation, rows: Int, cols: Int,
-                    params: ProcessingParams, decimate: Int = 1,
-                    gt: Option[Array[Double]] = None,
-                    warp: Option[graft.geom.Warp.NativeWarp] = None): ProcessedImage = {
-    val (outRows, outCols) = outDims(rows, cols, decimate, warp)
-    bandOpTiles(spark, productId, op, rows, cols, params, decimate, warp)(
-      collectImage(params, gt, outRows, outCols))
-  }
-
-  /** [[processBandOp]]'s pipeline up to its final tiles, handed to
-    * `finish` like [[bandTiles]].
-    */
-  private def bandOpTiles[R](spark: SparkSession, productId: String,
-                             op: PolarizationOperation, rows: Int, cols: Int,
-                             params: ProcessingParams, decimate: Int,
-                             warp: Option[graft.geom.Warp.NativeWarp])(
-                             finish: Dataset[QTile] => R): R = {
-    val (outRows, outCols) = outDims(rows, cols, decimate, warp)
-    val combined = loadOperation(spark, productId, op, rows, cols, warp, decimate).persist()
-    try {
-      val maxVal = params.bitDepth.maxVal
-      val st = tileStats(combined)
-      val q0 = params.autoscale match {
-        case AutoscaleStrategy.Clahe =>
-          val (low, high, _) = FastStats.strategyParams(st, "clahe")
-          claheTiles(combined, outRows, outCols, low, high, maxVal)
-        case strat =>
-          val (low, high, gamma) = paramsFor(st, strat)
-          quantizeTiles(combined, low, high, gamma, maxVal)
-      }
-      val q0P = if (params.bitDepth == BitDepth.U8) Some(q0.persist()) else None
-      try finish(q0P.map(rescaleTilesU8).getOrElse(q0))
-      finally q0P.foreach(_.unpersist())
-    } finally {
-      // only this pipeline's caches — never the shared cache manager
-      combined.unpersist()
-    }
-  }
 
   private def writeImage(outPath: String, img: ProcessedImage,
                          params: ProcessingParams, meta: SafeMeta,

@@ -1,7 +1,7 @@
 package graft.sink
 
 import java.awt.image.{BufferedImage, DataBufferByte, DataBufferUShort}
-import java.io.{ByteArrayOutputStream, File}
+import java.io.File
 import java.nio.file.{Files, Paths}
 import javax.imageio.ImageIO
 
@@ -249,13 +249,7 @@ object Sinks {
   def writeJpegRgb(path: String, r: Array[Int], g: Array[Int], b: Array[Int], w: Int, h: Int): Unit =
     require(ImageIO.write(rgb(r, g, b, w, h), "JPEG", new File(path)), s"no JPEG writer for $path")
 
-  /** In-memory encode (the to-buffer API path, E3). */
-  def encode(format: String, bi: BufferedImage): Array[Byte] = {
-    val bos = new ByteArrayOutputStream()
-    require(ImageIO.write(bi, format, bos), s"no $format writer")
-    bos.toByteArray
-  }
-
+  /** In-memory images (the to-buffer API path, E3). */
   def bufferGrayU8(img: Array[Int], w: Int, h: Int): BufferedImage = grayU8(img, w, h)
   def bufferGrayU16(img: Array[Int], w: Int, h: Int): BufferedImage = grayU16(img, w, h)
   def bufferRgb(r: Array[Int], g: Array[Int], b: Array[Int], w: Int, h: Int): BufferedImage =

@@ -1,42 +1,28 @@
 package graft.stats
 
-import org.apache.spark.sql.{DataFrame, Encoder, Encoders}
-import org.apache.spark.sql.expressions.Aggregator
-import org.apache.spark.sql.functions._
-
-/** Single-pass custom typed Aggregators for the stats pipeline — the
-  * optimization tier of SURVEY §2.10/§7.4 (the oracle-checked tier is
-  * the declarative two-pass formulation in [[HistStats]]).
-  *
-  * Why custom: the built-in pass 2 shuffles a 4096-key groupBy; the
-  * [[FixedHistAgg]] buffer is ONE long[4096] per partition merged by
-  * vector add — partial aggregation with constant-size state, zero
-  * shuffle rows beyond the buffers themselves. This is exactly the
-  * property the reference chose the streaming histogram for (32 KB
-  * constant memory, `/root/reference/CHANGELOG.md:219-229`), expressed
-  * as a mergeable Spark Aggregator so it parallelizes over any number
-  * of executors.
+/** The driver-side half of the tile stats path
+  * ([[graft.api.Engine.tileStats]]), the optimization tier of SURVEY
+  * §2.10/§7.4 (the oracle-checked tier is the declarative two-pass
+  * formulation in [[HistStats]]): the tasks reduce their tiles to one
+  * Welford buffer and one 4096-bin histogram per partition — constant
+  * state, the property the reference chose the streaming histogram for
+  * (32 KB constant memory, `CHANGELOG.md:219-229`) — and
+  * this object merges the buffers, inverts the CDF and picks the
+  * strategy's clip window.
   */
 object FastStats {
 
   /** Welford/Chan mergeable moments buffer. */
   final case class Moments(n: Long, mean: Double, m2: Double, mn: Double, mx: Double)
 
-  final case class MomentsResult(n: Long, min: Double, max: Double, mean: Double, std: Double)
-
-  /** Pass 1: count/min/max/mean/std in one pass (Chan's parallel merge —
-    * the distributed form of the reference's sequential Welford update,
-    * `autoscale.rs:35-78`).
+  /** Chan's parallel merge of per-partition Welford buffers — the
+    * distributed form of the reference's sequential Welford update
+    * (`autoscale.rs:35-78`).
     */
-  object WelfordAgg extends Aggregator[Double, Moments, MomentsResult] {
-    def zero: Moments = Moments(0L, 0.0, 0.0, Double.PositiveInfinity, Double.NegativeInfinity)
-    def reduce(b: Moments, v: Double): Moments = {
-      val n = b.n + 1
-      val delta = v - b.mean
-      val mean = b.mean + delta / n
-      Moments(n, mean, b.m2 + delta * (v - mean), math.min(b.mn, v), math.max(b.mx, v))
-    }
-    def merge(a: Moments, b: Moments): Moments = {
+  object Moments {
+    val zero: Moments = Moments(0L, 0.0, 0.0, Double.PositiveInfinity, Double.NegativeInfinity)
+
+    def merge(a: Moments, b: Moments): Moments =
       if (a.n == 0) b
       else if (b.n == 0) a
       else {
@@ -47,66 +33,26 @@ object FastStats {
           a.m2 + b.m2 + delta * delta * a.n * b.n / n,
           math.min(a.mn, b.mn), math.max(a.mx, b.mx))
       }
-    }
+
     def finish(r: Moments): MomentsResult =
       if (r.n == 0) MomentsResult(0, 0.0, 0.0, 0.0, 0.0)
       else MomentsResult(r.n, r.mn, r.mx, r.mean,
         if (r.n <= 1) 0.0 else math.sqrt(r.m2 / r.n))
-    def bufferEncoder: Encoder[Moments] = Encoders.product[Moments]
-    def outputEncoder: Encoder[MomentsResult] = Encoders.product[MomentsResult]
   }
 
-  /** Pass 2: fixed-range histogram — buffer is the bin array itself,
-    * merged by element-wise add. Binning matches `autoscale.rs:112-116`:
-    * bin = min(floor(clamp((v−mn)·(1/span),0,1)·bins), bins−1).
-    */
-  final class FixedHistAgg(mn: Double, mx: Double, bins: Int)
-      extends Aggregator[Double, Array[Long], Array[Long]] {
-    private val inv = if (mx > mn) 1.0 / (mx - mn) else 0.0
-    def zero: Array[Long] = new Array[Long](bins)
-    def reduce(b: Array[Long], v: Double): Array[Long] = {
-      val t = math.min(math.max((v - mn) * inv, 0.0), 1.0)
-      val bin = math.min(math.floor(t * bins).toLong, (bins - 1).toLong).toInt
-      b(bin) += 1
-      b
-    }
-    def merge(a: Array[Long], b: Array[Long]): Array[Long] = {
-      var i = 0
-      while (i < bins) { a(i) += b(i); i += 1 }
-      a
-    }
-    def finish(r: Array[Long]): Array[Long] = r
-    def bufferEncoder: Encoder[Array[Long]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
-    def outputEncoder: Encoder[Array[Long]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
-  }
+  final case class MomentsResult(n: Long, min: Double, max: Double, mean: Double, std: Double)
 
   final case class FastStatsResult(
       n: Long, min: Double, max: Double, mean: Double, std: Double,
       percentiles: Map[String, Double])
 
-  /** Two-job driver helper: moments pass → histogram pass → CDF inversion
-    * on the 4096-bin array (driver-side, same arithmetic as
-    * `HistStats.statsCtesSql`: target = min(floor(p·n), n−1), intra-bin
-    * linear interpolation). Percentiles are bit-identical to the
-    * declarative path; mean/std may differ in final ulps (float merge
-    * order) — use the declarative path where oracle exactness matters.
+  /** Degenerate handling + CDF inversion on the 4096-bin array (same
+    * arithmetic as `HistStats.statsCtesSql`: target = min(floor(p·n),
+    * n−1), intra-bin linear interpolation), so percentiles are
+    * bit-identical to the declarative path. `histProvider` is only
+    * invoked when a histogram is needed.
     */
-  def stats(px: DataFrame, numBins: Int = HistStats.NumBins): FastStatsResult = {
-    import px.sparkSession.implicits._
-    val ds = px.select(col("db").cast("double")).as[Double]
-    val mr = ds.select(WelfordAgg.toColumn).collect()(0)
-    fromMoments(mr,
-      () => ds.select(new FixedHistAgg(mr.min, mr.max, numBins).toColumn).collect()(0),
-      numBins)
-  }
-
-  /** Degenerate handling + CDF inversion shared by the DF and tile
-    * paths. `histProvider` is only invoked when a histogram is needed.
-    */
-  def fromMoments(m: MomentsResult, histProvider: () => Array[Long],
-                  numBins: Int = HistStats.NumBins): FastStatsResult = {
+  def fromMoments(m: MomentsResult, histProvider: () => Array[Long]): FastStatsResult = {
     if (m.n == 0)
       return FastStatsResult(0, 0.0, 0.0, 0.0, 0.0,
         HistStats.Percentiles.map { case (nm, _) => nm -> 0.0 }.toMap)
@@ -114,6 +60,7 @@ object FastStats {
       return FastStatsResult(m.n, m.min, m.max, m.mean, m.std,
         HistStats.Percentiles.map { case (nm, _) => nm -> m.min }.toMap)
     val hist = histProvider()
+    val numBins = HistStats.NumBins
     val binWidth = (m.max - m.min) / numBins.toDouble
     val cum = new Array[Long](numBins + 1)
     var i = 0

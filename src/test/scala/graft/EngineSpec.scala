@@ -138,7 +138,7 @@ class EngineSpec extends SparkSpec {
 
   test("tileStats folds the partitions' moments in partition order, whatever order they finish in") {
     import graft.api.{DbTile, Kernels}
-    import graft.stats.FastStats.WelfordAgg
+    import graft.stats.FastStats.Moments
     // partition 1 holds few values far from partition 0's, so Chan's merge
     // gives different last bits in the two orders
     def tiles(p: Long): Seq[DbTile] = {
@@ -148,8 +148,8 @@ class EngineSpec extends SparkSpec {
         if (p == 0) -12.3 + 7.7 * rnd.nextDouble() else 3.1 + 0.01 * rnd.nextDouble())))
     }
     val m = Seq(0L, 1L).map(p => Kernels.momentsOfTiles(tiles(p).iterator).next())
-    val forward = WelfordAgg.finish(WelfordAgg.merge(m(0), m(1)))
-    val reverse = WelfordAgg.finish(WelfordAgg.merge(m(1), m(0)))
+    val forward = Moments.finish(Moments.merge(m(0), m(1)))
+    val reverse = Moments.finish(Moments.merge(m(1), m(0)))
     assert((forward.mean, forward.std) != ((reverse.mean, reverse.std)),
       "the data does not tell the two merge orders apart")
     // partition 0 finishes last in every job
@@ -160,6 +160,19 @@ class EngineSpec extends SparkSpec {
     val st = Engine.tileStats(ds)
     assert(st.mean == forward.mean && st.std == forward.std,
       s"mean/std ${(st.mean, st.std)}, partition-order fold ${(forward.mean, forward.std)}")
+  }
+
+  test("Engine.scala has one band pipeline: one call site each of its stage functions") {
+    val text = new String(Files.readAllBytes(Paths.get("src/main/scala/graft/api/Engine.scala")), "UTF-8")
+    Seq("tileStats", "claheTiles", "quantizeTiles", "rescaleTilesU8").foreach { f =>
+      // every use but the definition and Scaladoc links: calls and
+      // method values such as `.map(rescaleTilesU8)`
+      val sites = ("""(?<!def )(?<!\[\[)\b""" + f + """\b(?!\]\])""").r.findAllMatchIn(text).map { m =>
+        text.substring(0, m.start).count(_ == '\n') + 1
+      }.toSeq
+      assert(sites.size == 1,
+        s"$f is used at Engine.scala lines ${sites.mkString(", ")}; use it from bandPipeline only")
+    }
   }
 
   test("native-res pipeline collects only target-size buffers (8192² → 1024)") {
