@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.SparkPlan
 
 /** Benchmark main. Two modes:
   *
@@ -178,6 +179,21 @@ object Bench {
     */
   private[graft] def checksum(d: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
     d.select(bit_xor(xxhash64(struct(d.columns.toIndexedSeq.map(col): _*))))
+
+  /** `d`'s physical plan as EnsureRequirements prepares it, with AQE
+    * off in `spark` while `d` is built and planned: under AQE the tree
+    * hides inside a childless AdaptiveSparkPlanExec, and `sparkPlan` has
+    * no exchanges yet. Building `d` off AQE matters too: the relations
+    * a build persists report a different output partitioning, and so
+    * change the exchanges above them (g1_pagerank plans 5 shuffles
+    * built off AQE, 8 built on it). Nothing of `d`'s plan executes.
+    */
+  private[graft] def preparedPlan(spark: SparkSession)(d: => org.apache.spark.sql.DataFrame): SparkPlan = {
+    val priorAqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try d.queryExecution.executedPlan
+    finally spark.conf.set("spark.sql.adaptive.enabled", priorAqe)
+  }
 
   private def run(spark: SparkSession,
                   fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
@@ -409,25 +425,18 @@ object Bench {
       pub
     }
     // Static plan audit per registry query: exchange (shuffle/broadcast)
-    // operator counts from the planned physical tree — an artifact future
-    // round comparisons can read without re-running anything. AQE is OFF
-    // for the audit only: EnsureRequirements inserts exchanges during
-    // executedPlan preparation (sparkPlan has none yet), and under AQE
-    // the tree hides inside a childless AdaptiveSparkPlanExec — with it
-    // disabled the full prepared tree is walkable. Counted by node
-    // CLASS, not plan-string grep: toString re-renders shared subtrees,
-    // inflating counts, while ReusedExchange nodes correctly don't match
-    // the exchange classes. Planning only; nothing executes. A planning
-    // failure is recorded as (-1, -1); NonFatal only.
-    val exchanges = {
-      val priorAqe = spark.conf.get("spark.sql.adaptive.enabled")
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      try ordered.map { case (name, fn) =>
-        if (auditSkip(name)) name -> (-2, -2) else {
+    // operator counts from the prepared physical tree — an artifact future
+    // round comparisons can read without re-running anything. Counted by
+    // node CLASS, not plan-string grep: toString re-renders shared
+    // subtrees, inflating counts, while ReusedExchange nodes correctly
+    // don't match the exchange classes. A planning failure is recorded
+    // as (-1, -1); NonFatal only.
+    val exchanges = ordered.map { case (name, fn) =>
+      if (auditSkip(name)) name -> (-2, -2) else {
         val r = try {
           var shuffle = 0
           var bcast = 0
-          fn(spark, sfDir).queryExecution.executedPlan.foreach {
+          preparedPlan(spark)(fn(spark, sfDir)).foreach {
             case _: org.apache.spark.sql.execution.exchange.ShuffleExchangeLike => shuffle += 1
             case _: org.apache.spark.sql.execution.exchange.BroadcastExchangeLike => bcast += 1
             case _ => ()
@@ -440,8 +449,7 @@ object Bench {
         }
         spark.catalog.clearCache()
         r
-        }
-      } finally spark.conf.set("spark.sql.adaptive.enabled", priorAqe)
+      }
     }
     try {
       val results = ordered.map { case (name, fn) =>

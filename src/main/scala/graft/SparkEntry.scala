@@ -163,7 +163,7 @@ object SparkEntry {
       val st = HistStats.stats(px.filter(PixelOps.validMask(col("db"))))
       // q feeds BOTH the min/max agg and the final projection — without
       // the persist the scan+dB+stats+quantize subtree executes twice
-      // (DupSubtreeAudit: 90-node duplicate; the two-leg rule)
+      // (`tools/Audit` dup check: 90-node duplicate; the two-leg rule)
       val q = px.crossJoin(broadcast(st)).select(
         col("l_orderkey"), col("l_linenumber"),
         PixelOps.clipQuantizeMasked(col("db"), PixelOps.validMask(col("db")),
@@ -908,10 +908,10 @@ object SparkEntry {
     * entry (below) owns it and MAY leave it cached after the query
     * returns — callers running many queries in one long-lived session
     * (as Verify/Bench do) should `spark.catalog.clearCache()` between
-    * queries to reclaim executor storage. `tools/PersistAudit` checks
-    * that every relation a query leaves persisted is owned by a memo
-    * entry; Bench keeps an entry's persists warm between its own
-    * iterations exactly when its memo entry owns some.
+    * queries to reclaim executor storage. `tools/Audit` checks that
+    * every relation a query leaves persisted is owned by a memo entry;
+    * Bench keeps an entry's persists warm between its own iterations
+    * exactly when its memo entry owns some.
     *
     * Prepared-query memo (r19): registry fns are pure in
     * (session, dir) and eager per-operation analysis makes steady-state

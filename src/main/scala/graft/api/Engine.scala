@@ -730,19 +730,11 @@ object Engine {
                   warp: Option[graft.geom.Warp.NativeWarp] = None): ProcessedImage =
     grayImage(spark, productId, OneBand(band), rows, cols, params, decimate, gt, warp)
 
-  /** Band algebra (P2-P6) pipeline: [[bandPipeline]] over both bands'
-    * tiles joined on the tile key and combined by a zip kernel —
-    * positional alignment with no pixel shuffle (SURVEY §2.4: bands are
-    * co-partitioned by construction).
+  /** What [[bandPipeline]] reads: one band, or the VV∘VH band algebra
+    * (P2-P6): both bands' tiles joined on the tile key and combined by a
+    * zip kernel — positional alignment with no pixel shuffle (SURVEY
+    * §2.4: bands are co-partitioned by construction).
     */
-  def processBandOp(spark: SparkSession, productId: String,
-                    op: PolarizationOperation, rows: Int, cols: Int,
-                    params: ProcessingParams, decimate: Int = 1,
-                    gt: Option[Array[Double]] = None,
-                    warp: Option[graft.geom.Warp.NativeWarp] = None): ProcessedImage =
-    grayImage(spark, productId, BandAlgebra(op), rows, cols, params, decimate, gt, warp)
-
-  /** What [[bandPipeline]] reads: one band, or the VV∘VH band algebra. */
   private sealed trait Input
   private final case class OneBand(band: String) extends Input
   private final case class BandAlgebra(op: PolarizationOperation) extends Input

@@ -1581,7 +1581,7 @@ object Events {
       least(col("e_us"), expr(s"(day + 1) * $DayUs - 1")).as("ce"))
     // ONE pass: each clipped interval explodes into its open/close
     // deltas in-row — the union form re-executed the whole sessionize
-    // chain once per leg (DupSubtreeAudit; rows are identical)
+    // chain once per leg (`tools/Audit` dup check; rows are identical)
     val deltas = clipped.select(col("day"),
         explode(array(
           struct(col("cs").as("at"), lit(1L).as("p"), lit(0L).as("m")),
@@ -1723,7 +1723,7 @@ object Events {
       .select(expr(s"(s_us - prev_e) div $MinuteUs").as("gap_min"))
     // band-grain (<=~40 rows), but it feeds the total leg AND the
     // final projection: unpersisted, the sessionize chain executed
-    // twice (DupSubtreeAudit; the two-leg rule)
+    // twice (`tools/Audit` dup check; the two-leg rule)
     val bins = gaps
       .withColumn("band", (length(conv(col("gap_min"), 10, 2)) - 1).cast("long"))
       .groupBy("band")

@@ -207,16 +207,6 @@ object Mix {
 
   // ------------------------------------------------- W7 temperature mixing
 
-  /** W7 temperature exponent α = 1/2: weights ∝ p^α flatten the natural
-    * source distribution toward uniform (α→0) — the multilingual /
-    * multi-source sampling temperature of XLM-R (Conneau et al. 2020)
-    * and the LLaMA corpus up-sampling. α = 1/2 specifically makes
-    * p^α = sqrt(p), which IEEE-754 requires to be CORRECTLY ROUNDED —
-    * unlike ln/exp there is no cross-libm ulp risk, so the only
-    * determinism care left is the Σw′ accumulation (DECIMAL, below).
-    */
-  val TemperatureAlphaInv = 2
-
   /** W7: temperature-scaled mixture weights — per source, the natural
     * token share p, the temperature weight w = √p / Σ√p, and the token
     * allocation + implied epochs under [[EpochTokenBudget]]. The
@@ -250,6 +240,13 @@ object Mix {
     val scored = per.crossJoin(broadcast(tot))
       .withColumn("p",
         col("available_tokens").cast("double") / col("nn").cast("double"))
+      // temperature exponent α = 1/2: weights ∝ p^α flatten the natural
+      // source distribution toward uniform (α→0) — the multi-source
+      // sampling temperature of XLM-R (Conneau et al. 2020) and the LLaMA
+      // corpus up-sampling. α = 1/2 makes p^α = sqrt(p), which IEEE-754
+      // requires to be CORRECTLY ROUNDED: unlike ln/exp there is no
+      // cross-libm ulp risk, so the only determinism care left is the
+      // Σw′ accumulation (DECIMAL, below)
       .withColumn("w9", round(sqrt(col("p")), 9))
     val sw = scored.agg(
       sum(col("w9").cast(DecimalType(20, 9))).cast("double").as("sw")) // 1 row
@@ -407,7 +404,7 @@ object Mix {
     val labels = Dedup.clusterIds(s, dir) // (id, lbl), memoized
     // ≤|sources| rows, but it feeds the total leg AND the scored chain
     // (which itself fans out twice) — unpersisted, the corpus scan +
-    // labels join + agg executed once per leg (DupSubtreeAudit)
+    // labels join + agg executed once per leg (`tools/Audit` dup check)
     val per = base.join(labels, col("doc_id") === col("id"))
       .withColumn("keep", (col("doc_id") === col("lbl")).cast("long"))
       .groupBy("source").agg(
@@ -773,7 +770,7 @@ object Mix {
       .withColumn("mult", phaseMult(col("phase")))
       // (source, phase)-grain, but it feeds the total leg AND the
       // final projection: unpersisted, the curriculum chain over the
-      // corpus executed twice (DupSubtreeAudit: 51-node duplicate)
+      // corpus executed twice (`tools/Audit` dup check: 51-node duplicate)
       .persistRecorded()
     val tot = per.agg(sum(col("mult") * col("available_tokens")).as("tot")) // 1 row
     per.crossJoin(broadcast(tot))

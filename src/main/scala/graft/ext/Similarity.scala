@@ -457,7 +457,7 @@ object Similarity {
     val members = emb.groupBy("label").agg(count(lit(1)).as("n"))
     // label-grain, but consumed by BOTH pair sides: unpersisted, the
     // posexplode centroid build over the corpus executed twice
-    // (DupSubtreeAudit; the two-leg rule)
+    // (`tools/Audit` dup check; the two-leg rule)
     val cents = centroids.join(members, "label").persistRecorded()
     val a = cents.select(col("label").as("label_a"), col("centroid").as("ca"),
       col("n").as("n_a"))
@@ -814,7 +814,7 @@ object Similarity {
     // (query × codeword) subspace distances — 20×16 rows, provably bounded
     // NumQueries·PqCodes rows, but it feeds one broadcast leg PER
     // subspace below — unpersisted, the query scan + distance table
-    // rebuilt once per subspace join (DupSubtreeAudit)
+    // rebuilt once per subspace join (`tools/Audit` dup check)
     val qcd = q.crossJoin(broadcast(codes)).select(
       Seq(col("qid"), col("cid")) ++ (0 until PqSubSpaces).map { m =>
         val qs = sub(col("qe"), m); val cs = sub(col("ce"), m)

@@ -1282,7 +1282,6 @@ object TextOps {
   def gopherFilterFrom(d: DataFrame): DataFrame = {
     val toks = tokens(col("text"))
     val nw = size(toks)
-    val nwD = nw.cast("double")
     val sumWordLen = length(concat_ws("", toks))
     val nHash = length(col("text")) - length(replace(col("text"), lit("#"), lit("")))
     val nUEll = length(col("text")) - length(replace(col("text"), lit("…"), lit("")))

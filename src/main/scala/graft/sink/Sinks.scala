@@ -25,7 +25,7 @@ object Sinks {
   // setSample/setRGB converts through the sample and colour models on
   // every pixel, about half of a 2048² JPEG sink's time. SinksSpec pins
   // the encoded bytes to those of the per-pixel path.
-  private def grayU8(img: Array[Int], w: Int, h: Int): BufferedImage = {
+  private[graft] def grayU8(img: Array[Int], w: Int, h: Int): BufferedImage = {
     val bi = new BufferedImage(w, h, BufferedImage.TYPE_BYTE_GRAY)
     val buf = bi.getRaster.getDataBuffer.asInstanceOf[DataBufferByte].getData
     var i = 0
@@ -33,7 +33,7 @@ object Sinks {
     bi
   }
 
-  private def grayU16(img: Array[Int], w: Int, h: Int): BufferedImage = {
+  private[graft] def grayU16(img: Array[Int], w: Int, h: Int): BufferedImage = {
     val bi = new BufferedImage(w, h, BufferedImage.TYPE_USHORT_GRAY)
     val buf = bi.getRaster.getDataBuffer.asInstanceOf[DataBufferUShort].getData
     var i = 0
@@ -248,12 +248,6 @@ object Sinks {
 
   def writeJpegRgb(path: String, r: Array[Int], g: Array[Int], b: Array[Int], w: Int, h: Int): Unit =
     require(ImageIO.write(rgb(r, g, b, w, h), "JPEG", new File(path)), s"no JPEG writer for $path")
-
-  /** In-memory images (the to-buffer API path, E3). */
-  def bufferGrayU8(img: Array[Int], w: Int, h: Int): BufferedImage = grayU8(img, w, h)
-  def bufferGrayU16(img: Array[Int], w: Int, h: Int): BufferedImage = grayU16(img, w, h)
-  def bufferRgb(r: Array[Int], g: Array[Int], b: Array[Int], w: Int, h: Int): BufferedImage =
-    rgb(r, g, b, w, h)
 
   // -------------------------------------------------------------- sidecars
 

@@ -49,9 +49,7 @@ object RasterSource {
     * the local cases at their r20 task counts and the sizing only adds
     * slices for scenes big enough to need them.
     */
-  val PxPerScanTask: Long =
-    sys.env.get("SPARK_GRAFT_PX_PER_TASK").flatMap(_.toLongOption)
-      .getOrElse(512L * 1024)
+  val PxPerScanTask: Long = 512L * 1024
 
   /** Deterministic synthetic band value at (y, x): a smooth field with
     * speckle-ish variation, strictly positive (SAR magnitude domain).
@@ -132,10 +130,4 @@ object RasterSource {
     case "all_pairs" => Seq("vv", "vh", "hh", "hv")
     case other => Seq(other)
   }
-
-  /** S7: auto resample-algorithm choice (`sentinel1.rs:1089-1102`):
-    * shrinking ≥4× → Average (anti-alias), else Lanczos.
-    */
-  def autoResampleAlg(srcLong: Int, targetLong: Int): String =
-    if (targetLong > 0 && srcLong / targetLong >= 4) "average" else "lanczos"
 }

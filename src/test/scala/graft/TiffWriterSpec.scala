@@ -26,7 +26,7 @@ class TiffWriterSpec extends SparkSpec {
   }
 
   private def gray(img: Array[Int], w: Int, h: Int, u16: Boolean) =
-    if (u16) Sinks.bufferGrayU16(img, w, h) else Sinks.bufferGrayU8(img, w, h)
+    if (u16) Sinks.grayU16(img, w, h) else Sinks.grayU8(img, w, h)
 
   /** The ImageIO strip writer `Sinks.writeTiffGrayTagged` used before
     * the tiled writer.
