@@ -1,6 +1,8 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeLike}
 
 /** Benchmark main. Two modes:
   *
@@ -22,15 +24,14 @@ import org.apache.spark.sql.execution.SparkPlan
   *    shed in that order as the budget tightens, and a shutdown hook
   *    prints a best-effort contract line even on SIGTERM — BENCH_r19
   *    died rc=124/"parsed":null with the artifact never printed.
-  *    `SPARK_GRAFT_BENCH_FORK=1` forces this mode for an ONLY subset.
   *  - **fleet child** (`SPARK_GRAFT_BENCH_OUT` and
   *    `SPARK_GRAFT_BENCH_MULTI` set): runs the '|'-separated chunks with
   *    a session restart between them, in-process, and writes one
   *    line-based protocol file per chunk to OUT instead of printing
   *    artifacts.
   *
-  * A `SPARK_GRAFT_BENCH_ONLY` subset runs in-process in one session:
-  * perf iteration on a subset without fork overhead.
+  * A `SPARK_GRAFT_BENCH_ONLY` subset runs the parent mode over its
+  * names; `tools/Profile time` runs [[Bench.runSuite]] in one session.
   */
 object Bench {
   import org.apache.spark.sql.functions.{bit_xor, col, struct, xxhash64}
@@ -180,26 +181,20 @@ object Bench {
   private[graft] def checksum(d: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
     d.select(bit_xor(xxhash64(struct(d.columns.toIndexedSeq.map(col): _*))))
 
-  /** `d`'s physical plan as EnsureRequirements prepares it, with AQE
-    * off in `spark` while `d` is built and planned: under AQE the tree
-    * hides inside a childless AdaptiveSparkPlanExec, and `sparkPlan` has
-    * no exchanges yet. Building `d` off AQE matters too: the relations
-    * a build persists report a different output partitioning, and so
-    * change the exchanges above them (g1_pagerank plans 5 shuffles
-    * built off AQE, 8 built on it). Nothing of `d`'s plan executes.
+  /** Shuffle and broadcast exchanges of an executed adaptive plan, over
+    * the final plan and its query stages. Counted by node class, not by
+    * plan-string grep, which counts a shared subtree once per rendering;
+    * a reused exchange is neither class. Subqueries are not walked.
     */
-  private[graft] def preparedPlan(spark: SparkSession)(d: => org.apache.spark.sql.DataFrame): SparkPlan = {
-    val priorAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try d.queryExecution.executedPlan
-    finally spark.conf.set("spark.sql.adaptive.enabled", priorAqe)
-  }
-
-  private def run(spark: SparkSession,
-                  fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-                  dir: String): Unit = {
-    checksum(fn(spark, dir)).collect()
-    ()
+  private def exchangesOf(plan: SparkPlan): (Int, Int) = {
+    var shuffle = 0
+    var bcast = 0
+    new AdaptiveSparkPlanHelper {}.foreach(plan) {
+      case _: ShuffleExchangeLike => shuffle += 1
+      case _: BroadcastExchangeLike => bcast += 1
+      case _ => ()
+    }
+    (shuffle, bcast)
   }
 
   private[graft] def deleteTree(path: java.nio.file.Path): Unit =
@@ -223,6 +218,12 @@ object Bench {
   // regressions stay visible. Every other registry entry runs 2
   // iterations with a clearCache after each. Rasters run 4: the
   // BASELINE.md comparables swung 0.46↔0.78 s run-to-run at min-of-2.
+  // A registry entry is built once at the timed scale factor, under the
+  // session's own confs, just before its iterations. The build is timed
+  // on its own: it joins `cold` where the entry records one and never
+  // enters a published min, so every iteration that can be published
+  // runs a built entry. `exchanges` counts the plan the first iteration
+  // executed.
 
   /** One timed iteration: wall seconds, and the summed executor run and
     * CPU seconds of the tasks it ran.
@@ -285,36 +286,27 @@ object Bench {
   private[graft] final case class Retime(name: String, base: Double, published: Double,
                                          extra: Int, sec: Double, inflated: Boolean)
 
-  // The iterative connected-components queries (d7/c1/d8/c3) execute
-  // their full label-propagation loop (per-round count() actions) just
-  // to CONSTRUCT the DataFrame — auditing them would run each
-  // essentially to completion twice per bench. Recorded as (-2, -2) =
-  // "skipped: construction runs jobs".
-  private[graft] val auditSkip = Set("d7_dup_clusters", "c1_curation_funnel",
-    "d8_para_clusters", "c3_dedup_impact", "c4_dedup_quality",
-    "g6_components")
-
   /** Raster-pipeline E2E cases — the direct comparables to the
     * reference's published numbers (BASELINE.md: single-product
     * SAFE→synRGB/TIFF wall times).
     */
-  private[graft] def rasterCases(spark: SparkSession): Seq[(String, () => Unit)] = {
+  private[graft] val rasterCases: Seq[(String, SparkSession => Unit)] = {
     import graft.api.Engine
     import graft.model._
-    Seq[(String, () => Unit)](
-      "raster_standard_16mp" -> (() => { Engine.processBand(spark, "b", "vv", 4096, 4096,
+    Seq[(String, SparkSession => Unit)](
+      "raster_standard_16mp" -> (spark => { Engine.processBand(spark, "b", "vv", 4096, 4096,
         ProcessingParams(autoscale = AutoscaleStrategy.Standard, targetSize = Some(2048))); () }),
-      "raster_clahe_16mp" -> (() => { Engine.processBand(spark, "b", "vv", 4096, 4096,
+      "raster_clahe_16mp" -> (spark => { Engine.processBand(spark, "b", "vv", 4096, 4096,
         ProcessingParams(autoscale = AutoscaleStrategy.Clahe, targetSize = Some(2048))); () }),
-      "raster_synrgb_tamed_16mp" -> (() => { Engine.processMultiband(spark, "b", ("vv", "vh"),
+      "raster_synrgb_tamed_16mp" -> (spark => { Engine.processMultiband(spark, "b", ("vv", "vh"),
         4096, 4096, ProcessingParams(autoscale = AutoscaleStrategy.Tamed, targetSize = Some(2048))); () }),
-      "raster_pushdown_400mp" -> (() => { Engine.processBand(spark, "b", "vv", 20000, 20000,
+      "raster_pushdown_400mp" -> (spark => { Engine.processBand(spark, "b", "vv", 20000, 20000,
         ProcessingParams(autoscale = AutoscaleStrategy.Standard, targetSize = Some(2048)),
         decimate = 8); () }),
       // native warp E2E (S8): UTM zone change fused with the -ts resize
       // — the distributed inverse-projected resample incl. the block
       // regroup (k=2 at this shrink)
-      "raster_warp_utm_16mp" -> (() => { Engine.processToBuffer(spark, "b", 4096, 4096,
+      "raster_warp_utm_16mp" -> (spark => { Engine.processToBuffer(spark, "b", 4096, 4096,
         ProcessingParams(autoscale = AutoscaleStrategy.Standard, targetSize = Some(2048),
           targetCrs = Some("EPSG:32633")),
         graft.meta.SafeMeta(crs = Some("EPSG:32632"),
@@ -323,7 +315,7 @@ object Bench {
       // directory loop (`api/mod.rs:474-536`): N products end-to-end
       // through processToPath with error isolation — surfaces the
       // scheduling overhead a single-product number hides
-      "raster_batch_4prod" -> (() => {
+      "raster_batch_4prod" -> (spark => {
         val out = java.nio.file.Files.createTempDirectory("graft-bench-batch")
         try {
           val report = Engine.processDirectory(spark,
@@ -335,9 +327,11 @@ object Bench {
         () }))
   }
 
-  private val rasterNames: Seq[String] = Seq("raster_standard_16mp",
-    "raster_clahe_16mp", "raster_synrgb_tamed_16mp", "raster_pushdown_400mp",
-    "raster_warp_utm_16mp", "raster_batch_4prod")
+  /** The scale factor every entry is built and run at once before the
+    * timed pass: codegen compilation and JIT for each plan shape land
+    * there, not in the timed iterations.
+    */
+  private val WarmDir = "/root/testdata/sf0.001"
 
   /** Everything one suite pass produces, mergeable across chunks. */
   final case class SuiteResult(
@@ -350,18 +344,19 @@ object Bench {
     sentinels: Seq[Double],
     retimed: Seq[Retime] = Nil)
 
-  /** Runs the named subset (registry + raster) in THIS JVM: warmup at
-    * the small SF, sentinel, static exchange audit, timed iterations.
+  /** Runs the named subset (registry + raster) in THIS JVM with the
+    * per-entry protocol above: warmup at [[WarmDir]], sentinel, then
+    * each entry's build at `sfDir` and its timed iterations. `cold`,
+    * where recorded, is the build plus the first iteration; a published
+    * min never includes the build. An entry's `exchanges` are
+    * [[exchangesOf]] the adaptive plan the first iteration that
+    * completed executed: (-1, -1) when none did.
     */
   def runSuite(spark: SparkSession, sfDir: String,
                names: String => Boolean): SuiteResult = {
     val ordered = SparkEntry.queries.toSeq.sortBy(_._1).filter(q => names(q._1))
-    // Warmup at the smallest SF: triggers codegen compilation + JIT for
-    // every plan shape so the timed pass measures steady-state execution,
-    // not first-call compilation.
-    val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
     ordered.foreach { case (_, fn) =>
-      try run(spark, fn, warmDir) catch { case _: Throwable => }
+      try checksum(fn(spark, WarmDir)).collect() catch { case _: Throwable => }
       spark.catalog.clearCache()
     }
     // Contention sentinel: a fixed trivial job timed AFTER warmup. Its
@@ -397,10 +392,10 @@ object Bench {
     // per-query caches (grid/signature persists) must never bleed into
     // the NEXT query's timings; an entry that owns persists keeps them
     // warm between its OWN iterations (see the protocol note above).
-    def timed(name: String, f: () => Unit, raster: Boolean): Double = {
+    def timed(name: String, f: () => Unit, raster: Boolean, buildSec: Double = 0.0): Double = {
       val first = once(name, f)
       val keep = !raster && ext.SessionMemo.persistsOf(SparkEntry.memoKey(name, sfDir)).nonEmpty
-      if (keep) first.foreach(i => coldTimes(name) = i.wall)
+      if (keep) first.foreach(i => coldTimes(name) = buildSec + i.wall)
       else spark.catalog.clearCache()
       val iterate = () => {
         val r = once(name, f)
@@ -424,40 +419,22 @@ object Bench {
       else if (all.exists(_.isEmpty)) flaky += name
       pub
     }
-    // Static plan audit per registry query: exchange (shuffle/broadcast)
-    // operator counts from the prepared physical tree — an artifact future
-    // round comparisons can read without re-running anything. Counted by
-    // node CLASS, not plan-string grep: toString re-renders shared
-    // subtrees, inflating counts, while ReusedExchange nodes correctly
-    // don't match the exchange classes. A planning failure is recorded
-    // as (-1, -1); NonFatal only.
-    val exchanges = ordered.map { case (name, fn) =>
-      if (auditSkip(name)) name -> (-2, -2) else {
-        val r = try {
-          var shuffle = 0
-          var bcast = 0
-          preparedPlan(spark)(fn(spark, sfDir)).foreach {
-            case _: org.apache.spark.sql.execution.exchange.ShuffleExchangeLike => shuffle += 1
-            case _: org.apache.spark.sql.execution.exchange.BroadcastExchangeLike => bcast += 1
-            case _ => ()
-          }
-          name -> (shuffle, bcast)
-        } catch {
-          case scala.util.control.NonFatal(e) =>
-            System.err.println(s"BENCH AUDIT FAIL $name: ${e.getClass.getSimpleName}: ${e.getMessage}")
-            name -> (-1, -1)
-        }
-        spark.catalog.clearCache()
-        r
-      }
-    }
     try {
-      val results = ordered.map { case (name, fn) =>
-        name -> timed(name, () => run(spark, fn, sfDir), raster = false)
-      }
-      val rasterResults = rasterCases(spark).filter(c => names(c._1)).map { case (name, f) =>
-        try { f() } catch { case _: Throwable => } // warm
-        name -> timed(name, f, raster = true)
+      val (results, exchanges) = ordered.map { case (name, fn) =>
+        val build = once(name, () => { fn(spark, sfDir); () })
+        // counted inside the iteration: a tree walk, and the plan is not
+        // held past it
+        var counted: Option[(Int, Int)] = None
+        val pub = timed(name, () => {
+          val d = checksum(fn(spark, sfDir))
+          d.collect()
+          if (counted.isEmpty) counted = Some(exchangesOf(d.queryExecution.executedPlan))
+        }, raster = false, buildSec = build.fold(0.0)(_.wall))
+        (name -> pub, name -> counted.getOrElse((-1, -1)))
+      }.unzip
+      val rasterResults = rasterCases.filter(c => names(c._1)).map { case (name, f) =>
+        try { f(spark) } catch { case _: Throwable => } // warm
+        name -> timed(name, () => f(spark), raster = true)
       }
       SuiteResult(results ++ rasterResults, coldTimes.toSeq, iterCounts.toSeq,
         exchanges, failed.distinct.toSeq, flaky.distinct.toSeq, Seq(sentinel), retimed.toSeq)
@@ -700,8 +677,13 @@ object Bench {
       "valid timed iterations under 'queries'; 'value' sums them. A registry entry " +
       "whose memo entry owns persists runs 3 iterations with them kept warm and " +
       "records its first under 'cold'; other registry entries run 2 with a " +
-      "clearCache after each; raster cases run 4. 'cold_value' sums each entry's " +
-      "cold where one is recorded. When the fastest iteration's tasks spent more " +
+      "clearCache after each; raster cases run 4. A registry entry is built once, " +
+      "timed on its own, before its iterations: 'cold' is the build plus the first " +
+      "iteration, and no published min includes the build. 'exchanges' counts the " +
+      "shuffle and broadcast exchanges of the adaptive plan its first completed " +
+      "iteration executed. " +
+      "'cold_value' sums each entry's cold where one is recorded. When the " +
+      "fastest iteration's tasks spent more " +
       s"than $InflatedOffCpuPerSlot off-CPU s per slot-second, the entry re-runs in " +
       s"place, up to $MaxRetimes more iterations, stopping at the first clean one; " +
       "'revalidated' maps each such entry to its base and published min, and " +
@@ -875,9 +857,10 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // SPARK_GRAFT_BENCH_ONLY=<comma-list> restricts the run to matching
-    // query names (registry and raster cases) — perf iteration on a
-    // subset without paying the full sweep. The driver never sets it,
-    // so round artifacts always carry the complete suite.
+    // query names (registry and raster cases), under the same forked
+    // protocol — perf iteration on a subset without paying the full
+    // sweep. The driver never sets it, so round artifacts always carry
+    // the complete suite.
     val only: Option[Set[String]] = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
     // Diagnostic registry entries excluded from the DEFAULT sweep
@@ -888,7 +871,7 @@ object Bench {
     // to split t23's plan if BM25 ever hash-fails again).
     val demoted = Set("t23a_spine_probe")
     val allNames = (SparkEntry.queries.keys.toSeq.sorted
-      .filterNot(n => demoted(n) && !only.exists(_.contains(n)))) ++ rasterNames
+      .filterNot(n => demoted(n) && !only.exists(_.contains(n)))) ++ rasterCases.map(_._1)
     // r11 ADVICE: an ONLY name matching nothing silently yielded an
     // empty/partial run that could be mistaken for a real measurement.
     only.foreach { o =>
@@ -912,7 +895,7 @@ object Bench {
               chunk.split(',').map(_.trim).filter(_.nonEmpty).toSet))
             spark.stop()
         }
-      case None if only.isEmpty || sys.env.contains("SPARK_GRAFT_BENCH_FORK") =>
+      case None =>
         // parent: forked chunked sweep (the driver's round artifact).
         // r20: the whole run is deadline-bounded (see DeadlineSec) and a
         // shutdown hook prints a best-effort contract line on SIGTERM —
@@ -934,14 +917,6 @@ object Bench {
           stats = statsOf(r, el, el, skipped))
         // a fallback chunk may have started a session in this JVM
         org.apache.spark.sql.SparkSession.getActiveSession.foreach(_.stop())
-      case None =>
-        // manual in-process run (subset perf iteration)
-        val t0 = System.nanoTime()
-        val spark = GraftSession.build(4)
-        val r = runSuite(spark, sfDir, n => only.forall(_.contains(n)))
-        val el = (System.nanoTime() - t0) / 1e9
-        emitArtifacts(r, sfDir, 1, fullSuite = only.isEmpty, stats = statsOf(r, el, el))
-        spark.stop()
     }
   }
 }

@@ -14,8 +14,8 @@ import graft.meta.SafeMeta
   * Every TIFF the engine writes goes through [[TiffWriter]] (tiled,
   * tags from [[tiffFields]]); a full-resolution `Engine.processToPath`
   * TIFF streams its tiles there without a driver-side image. JPEG, and
-  * the strip-layout fixture writers [[writeTiffGray]] /
-  * [[writeTiffGrayLayout]] the decode specs use, stay on javax.imageio.
+  * the fixture writer [[writeTiffGrayLayout]] the decode specs use,
+  * stay on javax.imageio.
   */
 object Sinks {
 
@@ -54,17 +54,13 @@ object Sinks {
     bi
   }
 
-  /** K1: gray TIFF (u8 or u16). */
-  def writeTiffGray(path: String, img: Array[Int], w: Int, h: Int, u16: Boolean): Unit = {
-    val bi = if (u16) grayU16(img, w, h) else grayU8(img, w, h)
-    require(ImageIO.write(bi, "TIFF", new File(path)), s"no TIFF writer for $path")
-  }
-
   /** Gray TIFF with an explicit on-disk layout — real Sentinel-1
     * measurement rasters are tiled and/or compressed GeoTIFFs
     * (`/root/reference/src/io/sentinel1.rs:183-389` reads them through
     * GDAL), so the source-side decode must handle those layouts too.
-    * Used to build such fixtures for the decode round-trip specs.
+    * Used to build such fixtures for the decode round-trip specs; with
+    * no compression and no tiling it writes the bytes of
+    * `ImageIO.write(image, "TIFF", file)` (strips).
     *
     * @param compression TIFF compression type name (e.g. "Deflate",
     *                    "LZW", "PackBits"), or null for uncompressed

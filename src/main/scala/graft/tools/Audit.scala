@@ -2,7 +2,7 @@ package graft.tools
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
 import org.apache.spark.sql.execution.joins.CartesianProductExec
@@ -44,7 +44,7 @@ import graft.ext.SessionMemo
   *     shared co-purchase edge relations persisted too.
   *
   * Checks 1 and 2 read the query's AQE-off prepared plan
-  * ([[graft.Bench.preparedPlan]], the plan Bench counts exchanges on)
+  * ([[preparedPlan]]: the whole tree before AQE splits it into stages)
   * and execute nothing of its output plan; check 3 then materializes
   * the same built query through `Bench.checksum` under the session's
   * default AQE. Builder-side driver actions run at construction: the
@@ -201,6 +201,21 @@ object Audit {
     }
   }
 
+  /** `d`'s physical plan as EnsureRequirements prepares it, with AQE
+    * off in `spark` while `d` is built and planned: under AQE the tree
+    * hides inside a childless AdaptiveSparkPlanExec, and `sparkPlan` has
+    * no exchanges yet. Building `d` off AQE matters too: the relations
+    * a build persists report a different output partitioning, and so
+    * change the exchanges above them (g1_pagerank plans 5 shuffles
+    * built off AQE, 8 built on it). Nothing of `d`'s plan executes.
+    */
+  private[graft] def preparedPlan(spark: SparkSession)(d: => DataFrame): SparkPlan = {
+    val priorAqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try d.queryExecution.executedPlan
+    finally spark.conf.set("spark.sql.adaptive.enabled", priorAqe)
+  }
+
   /** Ids of the RDDs persisted in `spark` right now. */
   def persisted(spark: SparkSession): Set[Int] =
     spark.sparkContext.getPersistentRDDs.keySet.toSet
@@ -230,9 +245,9 @@ object Audit {
       spark.catalog.clearCache()
       val before = persisted(spark)
       try {
-        // built inside preparedPlan's AQE-off window, as Bench builds it
+        // built inside preparedPlan's AQE-off window
         lazy val df = graft.SparkEntry.queries(name)(spark, sfDir)
-        val plan = graft.Bench.preparedPlan(spark)(df)
+        val plan = preparedPlan(spark)(df)
         val plannedChecks = Seq("plan" -> planCheck(name, plan), "dup" -> dupCheck(name, plan))
         graft.Bench.checksum(df).collect()
         val verdicts = plannedChecks :+ ("persist" -> persistCheck(spark, before))

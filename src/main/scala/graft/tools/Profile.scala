@@ -18,10 +18,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * SPARK_GRAFT_SF_DIR=... sbt "runMain graft.tools.Profile <mode> <name ...>"
   * }}}
   *
-  *  - `time <name ...>` — the bench protocol without the sweep: one
-  *    untimed run, ONE clearCache, then N timed iterations (iteration 1
-  *    is the cold rebuild, the rest run against the query's own warm
-  *    persists); prints min and every iteration. Registry queries and
+  *  - `time <name ...>` — `Bench.runSuite` over the names in this
+  *    session: the bench's own per-entry protocol (warmup, sentinel,
+  *    iteration count, cold record, in-place re-time) without the
+  *    sweep's fleets and chunks. Prints each entry's published min, its
+  *    cold when recorded and its iteration count. Registry queries and
   *    raster cases. The isolated-validation path for a sweep number.
   *  - `phases <query ...>` — per iteration, the driver-side split of one
   *    action: Dataset construction (the registry fn), analysis of the
@@ -69,13 +70,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    characters. No names = the whole registry.
   *
   * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default
-  * 32), SPARK_GRAFT_ITERS (timed iterations: time 3, phases 6, stages 10).
+  * 32), SPARK_GRAFT_ITERS (timed iterations: phases 6, stages 10).
   */
 object Profile {
 
   private val Modes: Seq[String] = Seq("time", "phases", "stages", "recon", "build", "plan")
 
-  private val DefaultIters = Map("time" -> 3, "phases" -> 6, "stages" -> 10)
+  private val DefaultIters = Map("phases" -> 6, "stages" -> 10)
 
   def main(args: Array[String]): Unit = {
     val mode = args.headOption.getOrElse("")
@@ -102,7 +103,7 @@ object Profile {
     // plan strings are capped by the conf of the thread's active session
     SparkSession.setActiveSession(spark)
     mode match {
-      case "time" => time(spark, work(spark, sfDir, args), iters)
+      case "time" => time(spark, sfDir, args)
       case "phases" => named(args).foreach { case (n, fn) => phases(spark, n, fn, sfDir, iters) }
       case "stages" => stages(spark, work(spark, sfDir, args), iters)
       case "recon" => recon(spark, named(args), sfDir)
@@ -131,18 +132,24 @@ object Profile {
     if (names.nonEmpty) { names.foreach(query); names }
     else graft.SparkEntry.queries.keys.toSeq.sorted
 
+  private val rasterCases = graft.Bench.rasterCases.toMap
+
+  private def requireKnown(names: Seq[String]): Unit = {
+    require(names.nonEmpty, "no names given")
+    val unknown = names.filterNot(n => graft.SparkEntry.queries.contains(n) || rasterCases.contains(n))
+    require(unknown.isEmpty,
+      s"unknown names (neither registry query nor raster case): ${unknown.mkString(", ")}")
+  }
+
   /** Each name's unit of work: a raster case's end-to-end thunk, or a
     * registry query built and checksum-materialized.
     */
   private def work(spark: SparkSession, sfDir: String,
                    names: Seq[String]): Seq[(String, () => Unit)] = {
-    require(names.nonEmpty, "no names given")
-    val raster = graft.Bench.rasterCases(spark).toMap
-    val unknown = names.filterNot(n => graft.SparkEntry.queries.contains(n) || raster.contains(n))
-    require(unknown.isEmpty,
-      s"unknown names (neither registry query nor raster case): ${unknown.mkString(", ")}")
-    names.map(n => n -> raster.getOrElse(n, () => {
-      graft.Bench.checksum(graft.SparkEntry.queries(n)(spark, sfDir)).collect(); ()
+    requireKnown(names)
+    names.map(n => n -> (rasterCases.get(n) match {
+      case Some(f) => () => f(spark)
+      case None => () => { graft.Bench.checksum(graft.SparkEntry.queries(n)(spark, sfDir)).collect(); () }
     }))
   }
 
@@ -163,14 +170,16 @@ object Profile {
 
   // ---- time ---------------------------------------------------------------
 
-  private def time(spark: SparkSession, items: Seq[(String, () => Unit)], iters: Int): Unit = {
-    println(f"${"name"}%-32s ${"min_s"}%9s  all_s")
-    items.foreach { case (name, f) =>
-      untimedThenClear(spark, name, f)
-      val times = (1 to iters).map(_ => sec(f()))
-      spark.catalog.clearCache()
-      println(f"$name%-32s min ${times.min}%.3f  all ${times.map(t => f"$t%.2f").mkString(" ")}")
+  private def time(spark: SparkSession, sfDir: String, names: Seq[String]): Unit = {
+    requireKnown(names)
+    val r = graft.Bench.runSuite(spark, sfDir, names.toSet)
+    val (cold, iters) = (r.cold.toMap, r.iters.toMap)
+    println(f"${"name"}%-32s ${"min_s"}%9s ${"cold_s"}%9s  iters")
+    r.results.foreach { case (name, min) =>
+      val c = cold.get(name).fold("-")(v => f"$v%.3f")
+      println(f"$name%-32s $min%9.3f $c%9s  ${iters(name)}")
     }
+    if (r.failed.nonEmpty) println(s"failed: ${r.failed.mkString(", ")}")
   }
 
   // ---- phases -------------------------------------------------------------

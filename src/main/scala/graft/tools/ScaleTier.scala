@@ -23,10 +23,11 @@ import graft.ext.Tables
   * /root/testdata survives the run), is used only for this throughput
   * measurement, and never feeds Verify/the oracle gate (CLAUDE.md: the
   * correctness gate runs ONLY over the driver's testdata). Timing
-  * discipline: per (cores, query) one untimed warm run then min-of-3
-  * full re-executions with the cache cleared between iterations — the
-  * honest fresh-construction cost at both core counts, same action as
-  * Bench (checksum-materialize every output column).
+  * discipline: each core count runs `Bench.runSuite` over the queries
+  * in a fresh session, so every number is in the sweep's own units:
+  * the published min, and the cold (the build plus the first
+  * iteration) where the protocol records one. A failed query fails the
+  * tier.
   *
   * Usage:
   *   SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_SCALE_K=16 \
@@ -89,23 +90,15 @@ object ScaleTier {
     // ---- time at each core count (fresh session each) --------------
     def timeAll(cpus: Int): Map[String, Double] = {
       val s = graft.GraftSession.build(cpus)
-      try Queries.map { name =>
-        val fn = graft.SparkEntry.queries(name)
-        def once(): Unit = { graft.Bench.checksum(fn(s, dst)).collect(); () }
-        try once() catch { case e: Throwable =>
-          System.err.println(s"SCALE WARN: $name warmup failed: ${e.getMessage}") }
-        s.catalog.clearCache()
-        val times = (1 to 3).map { _ =>
-          val t0 = System.nanoTime()
-          once()
-          val dt = (System.nanoTime() - t0) / 1e9
-          s.catalog.clearCache() // fresh-construction cost every iteration
-          dt
-        }
-        println(f"SCALE local[$cpus] $name%-22s min ${times.min}%.2f  " +
-          s"all ${times.map(t => f"$t%.2f").mkString(" ")}")
-        name -> times.min
-      }.toMap finally s.stop()
+      val r = try graft.Bench.runSuite(s, dst, Queries.toSet) finally s.stop()
+      val (cold, iters) = (r.cold.toMap, r.iters.toMap)
+      r.results.foreach { case (name, min) =>
+        println(f"SCALE local[$cpus] $name%-22s min $min%.2f  cold " +
+          cold.get(name).fold("-")(c => f"$c%.2f") + s"  iters ${iters(name)}")
+      }
+      // a failed entry publishes -1: no ratio or artifact is written from it
+      require(r.failed.isEmpty, s"SCALE FAIL at local[$cpus]: ${r.failed.mkString(", ")}")
+      r.results.toMap
     }
     // HIGH first, LOW second: both sessions share one JVM, so residual
     // JIT warmth from the first run can only make the SECOND faster.
@@ -115,7 +108,7 @@ object ScaleTier {
     val hiT = timeAll(hi)
     val loT = timeAll(lo)
     val entries = Queries.map { q =>
-      val r = if (hiT(q) > 0) loT(q) / hiT(q) else -1.0
+      val r = loT(q) / hiT(q)
       s""""$q":{"sec$lo":${f"${loT(q)}%.3f"},"sec$hi":${f"${hiT(q)}%.3f"},"ratio":${f"$r%.2f"}}"""
     }
     val json = s"""{"src":"$src","k":$k,"cpus_low":$lo,"cpus_high":$hi,""" +

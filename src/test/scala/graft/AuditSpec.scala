@@ -9,16 +9,16 @@ import graft.tools.Audit
   */
 class AuditSpec extends SparkSpec {
 
-  private def plan(name: String) = Bench.preparedPlan(spark)(SparkEntry.queries(name)(spark, Sf0001))
+  private def plan(name: String) = Audit.preparedPlan(spark)(SparkEntry.queries(name)(spark, Sf0001))
 
   test("plan: a crossJoin planned with broadcast joins off is a cartesian") {
     val key = "spark.sql.autoBroadcastJoinThreshold"
     val prior = spark.conf.get(key)
     spark.conf.set(key, "-1")
-    val crossed = try Bench.preparedPlan(spark)(spark.range(10).crossJoin(spark.range(10)))
+    val crossed = try Audit.preparedPlan(spark)(spark.range(10).crossJoin(spark.range(10)))
       finally spark.conf.set(key, prior)
     assert(Audit.planCheck("crossed", crossed) == Audit.Verdict("CARTESIAN", fails = true, allowed = false))
-    assert(Audit.planCheck("range", Bench.preparedPlan(spark)(spark.range(10).toDF())) ==
+    assert(Audit.planCheck("range", Audit.preparedPlan(spark)(spark.range(10).toDF())) ==
       Audit.Verdict("clean", fails = false, allowed = false))
   }
 

@@ -1,8 +1,12 @@
 package graft
 
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeLike}
+
 /** `Bench.runSuite` at sf0.001 on one registry entry whose memo entry
   * owns persists and one whose entry owns none: the iteration count and
-  * the `cold` record follow SessionMemo's record of the build.
+  * the `cold` record follow SessionMemo's record of the build, and the
+  * published exchanges are those of the plan the entry executes.
   */
 class BenchRunSuiteSpec extends SparkSpec {
 
@@ -18,5 +22,24 @@ class BenchRunSuiteSpec extends SparkSpec {
     assert(iters(owns) - extra(owns) == 3, r)
     assert(iters(plain) - extra(plain) == 2, r)
     assert(r.cold.map(_._1) == Seq(owns), r)
+  }
+
+  test("runSuite: exchanges count the adaptive plan the entry executes under default confs") {
+    // g1_pagerank's build persists relations, whose output partitioning
+    // shapes the exchanges above them; q1_agg persists nothing. Counted
+    // on g1's plan prepared with AQE off, sf0.001 reads (5, 1) where the
+    // executed adaptive plan reads (7, 10).
+    val names = Seq("g1_pagerank", "q1_agg")
+    val r = Bench.runSuite(spark, Sf0001, names.toSet)
+    val stages = new AdaptiveSparkPlanHelper {}
+    names.foreach { n =>
+      val d = Bench.checksum(SparkEntry.queries(n)(spark, Sf0001))
+      d.collect()
+      val plan = d.queryExecution.executedPlan
+      val executed = (stages.collect(plan) { case e: ShuffleExchangeLike => e }.size,
+        stages.collect(plan) { case e: BroadcastExchangeLike => e }.size)
+      assert(r.exchanges.toMap.apply(n) == executed, n)
+    }
+    spark.catalog.clearCache()
   }
 }

@@ -4,9 +4,9 @@ import java.nio.file.{Files, Paths}
 
 import graft.tools.Profile
 
-/** Each `tools.Profile` mode once on q1_agg at sf0.001: its header, and
-  * one row per iteration (or per query); `plan` writes the full dump
-  * even on a session that caps plan strings.
+/** Each `tools.Profile` mode once at sf0.001: its header, and one row
+  * per iteration (or per query); `time` prints `Bench.runSuite`'s rows;
+  * `plan` writes the full dump even on a session that caps plan strings.
   */
 class ProfileSpec extends SparkSpec {
 
@@ -22,10 +22,15 @@ class ProfileSpec extends SparkSpec {
     out.drop(at + 1)
   }
 
-  test("time: min and every iteration of a registry query") {
-    val rows = rowsOf(profile("time", "q1_agg")(), """name\s+min_s\s+all_s""")
-    assert(rows.size == 1 && rows.head.startsWith("q1_agg"), rows)
-    assert(rows.head.split("all ")(1).trim.split(" ").length == 2, rows)
+  test("time: Bench.runSuite's min, cold and iteration count per entry") {
+    val rows = rowsOf(profile("time", "p1_db_mask", "d3_minhash_lsh")(),
+      """name\s+min_s\s+cold_s\s+iters""").map(_.split("\\s+").toSeq)
+    assert(rows.map(_.head) == Seq("d3_minhash_lsh", "p1_db_mask"), rows)
+    // an in-place re-time on a contended host adds up to MaxRetimes
+    def iters(row: Seq[String], base: Int) = (base to base + Bench.MaxRetimes).contains(row(3).toInt)
+    val Seq(owns, plain) = rows
+    assert(owns(1).toDouble > 0 && owns(2).toDouble > 0 && iters(owns, 3), rows)
+    assert(plain(1).toDouble > 0 && plain(2) == "-" && iters(plain, 2), rows)
   }
 
   test("phases: one row per iteration with the main-thread stack") {

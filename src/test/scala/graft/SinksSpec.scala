@@ -55,7 +55,7 @@ class SinksSpec extends AnyFunSuite {
   }
 
   test("u8 TIFF equals the per-pixel setSample encoding") {
-    val got = bytesOf(Sinks.writeTiffGray(_, gray, w, h, u16 = false))
+    val got = bytesOf(Sinks.writeTiffGrayLayout(_, gray, w, h, u16 = false, null, 0))
     assert(got.sameElements(refBytes(refGray(), "TIFF")))
   }
 }

@@ -21,7 +21,7 @@ class TiffSourceSpec extends SparkSpec {
     val (w, h) = (300, 200)
     val img = ramp(w, h, 255)
     val path = s"$dir/band_vv.tiff"
-    Sinks.writeTiffGray(path, img, w, h, u16 = false)
+    Sinks.writeTiffGrayLayout(path, img, w, h, u16 = false, null, 0)
     val tiles = TiffSource.scan(spark, path, "vv", tileSize = 128).collect()
     assert(tiles.map(t => t.h.toLong * t.w).sum == h.toLong * w)
     assert(tiles.forall(_.product_id == "band_vv"))
@@ -40,7 +40,7 @@ class TiffSourceSpec extends SparkSpec {
     val (w, h) = (64, 48)
     val img = ramp(w, h, 65535)
     val path = s"$dir/band_vh.tif"
-    Sinks.writeTiffGray(path, img, w, h, u16 = true)
+    Sinks.writeTiffGrayLayout(path, img, w, h, u16 = true, null, 0)
     val (dh, dw, px) = TiffSource.decode(Files.readAllBytes(java.nio.file.Paths.get(path)), 1, 0)
     assert((dh, dw) == (h, w))
     for (i <- img.indices) assert(px(i) == img(i).toFloat)
@@ -51,7 +51,7 @@ class TiffSourceSpec extends SparkSpec {
     val (w, h) = (101, 67) // odd dims exercise the ceil edges
     val img = ramp(w, h, 255)
     val path = s"$dir/d.tiff"
-    Sinks.writeTiffGray(path, img, w, h, u16 = false)
+    Sinks.writeTiffGrayLayout(path, img, w, h, u16 = false, null, 0)
     val d = 3
     val (dh, dw, px) = TiffSource.decode(Files.readAllBytes(java.nio.file.Paths.get(path)), d, 0)
     assert(dh == (h + d - 1) / d && dw == (w + d - 1) / d)
@@ -109,7 +109,7 @@ class TiffSourceSpec extends SparkSpec {
       (RasterSource.syntheticValue("vv", i / w, i % w) * 1000).toInt.min(65535)
     }
     val path = s"$dir/s1a_test_vv_0001.tiff"
-    Sinks.writeTiffGray(path, img, w, h, u16 = true)
+    Sinks.writeTiffGrayLayout(path, img, w, h, u16 = true, null, 0)
     val tiles = TiffSource.scan(spark, path, "vv")
     import graft.api.Engine
     val st = Engine.tileStats(Engine.toDbTiles(tiles))
@@ -123,10 +123,10 @@ class TiffSourceSpec extends SparkSpec {
     val dir = tmpDir
     val (w, h) = (8, 8)
     val img = ramp(w, h, 255)
-    Sinks.writeTiffGray(s"$dir/s1a-iw-grd-vv-0001.tiff", img, w, h, u16 = false)
-    Sinks.writeTiffGray(s"$dir/s1a-iw-grd-vh-0001.tiff", img, w, h, u16 = false)
-    Sinks.writeTiffGray(s"$dir/s1a-iw-grd-vv-0001_warped.tiff", img, w, h, u16 = false)
-    Sinks.writeTiffGray(s"$dir/notes.txt.bak", img, w, h, u16 = false) // non-tif ignored
+    Sinks.writeTiffGrayLayout(s"$dir/s1a-iw-grd-vv-0001.tiff", img, w, h, u16 = false, null, 0)
+    Sinks.writeTiffGrayLayout(s"$dir/s1a-iw-grd-vh-0001.tiff", img, w, h, u16 = false, null, 0)
+    Sinks.writeTiffGrayLayout(s"$dir/s1a-iw-grd-vv-0001_warped.tiff", img, w, h, u16 = false, null, 0)
+    Sinks.writeTiffGrayLayout(s"$dir/notes.txt.bak", img, w, h, u16 = false, null, 0) // non-tif ignored
     val pf = TiffSource.identifyPolarizationFiles(dir)
     assert(pf.vv.exists(p => p.endsWith("vv-0001.tiff") && !p.contains("_warped")))
     assert(pf.vh.exists(_.endsWith("vh-0001.tiff")))
@@ -134,7 +134,7 @@ class TiffSourceSpec extends SparkSpec {
 
     // unlabeled single file + declared polarization → metadata fallback
     val dir2 = tmpDir
-    Sinks.writeTiffGray(s"$dir2/measurement-0001.tiff", img, w, h, u16 = false)
+    Sinks.writeTiffGrayLayout(s"$dir2/measurement-0001.tiff", img, w, h, u16 = false, null, 0)
     val pf2 = TiffSource.identifyPolarizationFiles(dir2, declaredPols = Seq("HH"))
     assert(pf2.hh.exists(_.endsWith("measurement-0001.tiff")))
     assert(pf2.vv.isEmpty)
@@ -150,8 +150,8 @@ class TiffSourceSpec extends SparkSpec {
     val dir = tmpDir
     val (w, h) = (16, 16)
     val img = ramp(w, h, 255)
-    Sinks.writeTiffGray(s"$dir/p-vv.tiff", img, w, h, u16 = false)
-    Sinks.writeTiffGray(s"$dir/p-vh.tiff", img, w, h, u16 = false)
+    Sinks.writeTiffGrayLayout(s"$dir/p-vv.tiff", img, w, h, u16 = false, null, 0)
+    Sinks.writeTiffGrayLayout(s"$dir/p-vh.tiff", img, w, h, u16 = false, null, 0)
     val bands = TiffSource.openProduct(spark, dir, "multiband")
     assert(bands.keySet == Set("vv", "vh"))
     assert(bands("vv").collect().map(t => t.h.toLong * t.w).sum == h.toLong * w)

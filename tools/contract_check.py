@@ -20,14 +20,25 @@ SAME sbt pipeline and asserts, on the captured stdout:
   4. the line also survives the driver's exact tail discipline
      (last 2000 chars -> last line).
 
+With --expect, the run is a real bench subset and the line must also
+  5. carry no "failed" key;
+  6. account for exactly the expected names: the names it lists, plus
+     "fast_n" for those under its listing threshold;
+  7. follow a full artifact line (the last earlier stdout line starting
+     with {"metric") whose "queries" names exactly the expected names.
+
 Exit 0 = contract green; nonzero with a diagnostic otherwise.
-Usage: python3 tools/contract_check.py   (run from the repo root)
+Usage (run from the repo root):
+  python3 tools/contract_check.py
+  python3 tools/contract_check.py --main graft.Bench \
+      --env SPARK_GRAFT_SF_DIR=/root/testdata/sf0.001 \
+      --env SPARK_GRAFT_BENCH_ONLY=q1_agg,d3_minhash_lsh --expect q1_agg,d3_minhash_lsh
 """
+import argparse
 import json
+import os
 import subprocess
 import sys
-
-CMD = ["sbt", "-batch", "runMain graft.tools.ContractStub"]
 
 
 def fail(msg, out=None):
@@ -39,8 +50,19 @@ def fail(msg, out=None):
 
 
 def main():
+    ap = argparse.ArgumentParser()
+    ap.add_argument("--main", default="graft.tools.ContractStub",
+                    help="the main sbt runs (default: the no-Spark stub)")
+    ap.add_argument("--env", action="append", default=[], metavar="KEY=VALUE",
+                    help="an environment variable for the run; repeatable")
+    ap.add_argument("--expect", default=None, metavar="NAME,NAME",
+                    help="the entries a bench subset run must account for")
+    args = ap.parse_args()
+    env = dict(os.environ)
+    env.update(kv.split("=", 1) for kv in args.env)
+    cmd = ["sbt", "-batch", f"runMain {args.main}"]
     try:
-        proc = subprocess.run(CMD, capture_output=True, text=True, timeout=900)
+        proc = subprocess.run(cmd, capture_output=True, text=True, timeout=900, env=env)
     except subprocess.TimeoutExpired as e:
         # A cold clone on a loaded box can spend minutes compiling before
         # ContractStub runs; die with the gate's own diagnostic (and the
@@ -109,6 +131,19 @@ def main():
             if not isinstance(v, (int, float)) or v < 0}
     if badc:
         fail(f"negative/non-numeric cold timings: {badc}")
+
+    if args.expect is not None:
+        names = set(args.expect.split(","))
+        if "failed" in obj:
+            fail(f'a subset entry failed: {obj["failed"]}')
+        listed = set(obj["queries"])
+        if not listed <= names or len(listed) + obj.get("fast_n", 0) != len(names):
+            fail(f"the line does not account for exactly {sorted(names)}: "
+                 f'lists {sorted(listed)}, fast_n={obj.get("fast_n")}')
+        full = next((l for l in reversed(out.splitlines()[:-1])
+                     if l.startswith('{"metric"')), None)
+        if full is None or set(json.loads(full)["queries"]) != names:
+            fail(f"no full artifact line naming exactly {sorted(names)}", out)
 
     print(f"CONTRACT OK: last stdout line parses; keys={sorted(obj)}; "
           f"queries={len(obj['queries'])}")
