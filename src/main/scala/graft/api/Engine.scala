@@ -1,7 +1,9 @@
 package graft.api
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.geom.Geom
 import graft.meta.SafeMeta
@@ -89,14 +91,18 @@ final case class BatchReport(processed: Int, skipped: Int, errors: Seq[(String, 
   * size → pad → sinks.
   *
   * Execution model (SURVEY §1.3): tiles are the PRIMARY representation.
-  * Aggregations run as mapPartitions+reduce over the dense arrays
-  * (constant-size partial state: Welford moments, bin vectors — the
-  * distributed form of the reference's streaming passes); per-pixel
-  * stages are JIT-compiled tile kernels (graft.api.Kernels — Spark's
-  * higher-order array lambdas are interpreted, so typed Dataset maps are
-  * the idiomatic fast path). The relational pixel view remains the
-  * oracle-checked surface in SparkEntry. The driver holds at most a
-  * target-size output image, never a source-resolution one.
+  * A band pipeline builds its dB tiles once and persists them as one
+  * deserialized `RDD[DbTile]` (the reference's in-memory dB image, reused
+  * across passes as RDDs allow): aggregations run as mapPartitions+reduce
+  * over its dense arrays (constant-size partial state: Welford moments,
+  * bin vectors — the distributed form of the reference's streaming
+  * passes), and per-pixel stages are JIT-compiled tile kernels over the
+  * same arrays (graft.api.Kernels — Spark's higher-order array lambdas
+  * are interpreted, and a columnar cache would decode every tile again
+  * on every pass). Scan, warp and band algebra stay Datasets up to that
+  * cache. The relational pixel view remains the oracle-checked surface
+  * in SparkEntry. The driver holds at most a target-size output image,
+  * never a source-resolution one.
   */
 object Engine {
 
@@ -104,35 +110,51 @@ object Engine {
 
   private implicit val dbTileEnc: org.apache.spark.sql.Encoder[DbTile] =
     org.apache.spark.sql.Encoders.product[DbTile]
+  private implicit val qTileEnc: org.apache.spark.sql.Encoder[QTile] =
+    org.apache.spark.sql.Encoders.product[QTile]
 
-  /** P1: tiles → dB-domain tiles (materialized once, like the
-    * reference's dB image; cached by the pipeline drivers).
+  // ----------------------------------------------------- tile-kernel stages
+  //
+  // Each stage is one function over an RDD, and bandPipeline is its one
+  // caller. The dB, stats and quantize stages also have a public Dataset
+  // form beside them: a one-line adapter for callers that hold Datasets.
+
+  /** P1: tiles → dB-domain tiles (the reference's `Array2<f64>` dB image);
+    * [[bandPipeline]] persists the result, so every later pass reads it.
     */
-  def toDbTiles(tiles: Dataset[Tile]): Dataset[DbTile] =
+  private[graft] def dbTiles(tiles: RDD[Tile]): RDD[DbTile] =
     tiles.map(t => DbTile(t.tile_row, t.tile_col, t.h, t.w, Kernels.toDb(t.pixels)))
 
-  /** A1/A2 over tiles: moments reduce, then histogram reduce, then the
+  def toDbTiles(tiles: Dataset[Tile]): Dataset[DbTile] =
+    tiles.sparkSession.createDataset(dbTiles(tiles.rdd))
+
+  /** A1/A2 over dB tiles: moments reduce, then histogram reduce, then the
     * shared CDF inversion — two jobs, partial state = one buffer per
     * partition.
     *
     * The per-partition Welford buffers fold on the driver in PARTITION
     * order: Chan's merge is not associative in floating point, and a
-    * `Dataset.reduce` merges in task-completion order, so mean/std could
-    * differ in their last bits from run to run. The collect ships the
-    * same one row per partition the reduce did. Histogram bins are
-    * integer adds, exact in any order.
+    * reduce merges in task-completion order, so mean/std could differ in
+    * their last bits from run to run. `collect` returns the buffers in
+    * partition order. Histogram bins are integer adds, exact in any order.
     */
-  def tileStats(tiles: Dataset[DbTile]): FastStats.FastStatsResult = {
-    val m = tiles.mapPartitions(Kernels.momentsOfTiles)(
-      org.apache.spark.sql.Encoders.product[FastStats.Moments])
-      .collect().foldLeft(FastStats.Moments.zero)(FastStats.Moments.merge)
+  private[graft] def dbStats(tiles: RDD[DbTile]): FastStats.FastStatsResult = {
+    val m = tiles.mapPartitions(Kernels.momentsOfTiles).collect()
+      .foldLeft(FastStats.Moments.zero)(FastStats.Moments.merge)
     val mr = FastStats.Moments.finish(m)
     FastStats.fromMoments(mr, () => {
       val bins = graft.stats.HistStats.NumBins
-      tiles.mapPartitions(Kernels.histOfTiles(_, mr.min, mr.max, bins))(
-        org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]())
-        .reduce { (a, b) => var i = 0; while (i < a.length) { a(i) += b(i); i += 1 }; a }
+      tiles.mapPartitions(Kernels.histOfTiles(_, mr.min, mr.max, bins)).reduce(addBins)
     })
+  }
+
+  def tileStats(tiles: Dataset[DbTile]): FastStats.FastStatsResult = dbStats(tiles.rdd)
+
+  /** Adds `b`'s bins into `a`. */
+  private def addBins(a: Array[Long], b: Array[Long]): Array[Long] = {
+    var i = 0
+    while (i < a.length) { a(i) += b(i); i += 1 }
+    a
   }
 
   /** Strategy dispatch with the reference's routing
@@ -146,19 +168,21 @@ object Engine {
       case s => FastStats.strategyParams(st, s.name)
     }
 
-  // ----------------------------------------------------- tile-kernel stages
-
-  private implicit val qTileEnc: org.apache.spark.sql.Encoder[QTile] =
-    org.apache.spark.sql.Encoders.product[QTile]
-
-  def quantizeTiles(tiles: Dataset[DbTile], low: Double, high: Double,
-                    gamma: Double, maxVal: Double): Dataset[QTile] =
+  /** P7 per tile: mask → clip → normalize → gamma → quantize. */
+  private[graft] def quantizedDb(tiles: RDD[DbTile], low: Double, high: Double,
+                                gamma: Double, maxVal: Double): RDD[QTile] =
     tiles.map(t => QTile.packed(t.tile_row, t.tile_col, t.h, t.w,
       Kernels.quantize(t.db, low, high, gamma, maxVal), maxVal))
 
-  /** P8: global min/max reduce + per-tile rescale. */
-  def rescaleTilesU8(tq: Dataset[QTile]): Dataset[QTile] = {
-    import tq.sparkSession.implicits._
+  def quantizeTiles(tiles: Dataset[DbTile], low: Double, high: Double,
+                    gamma: Double, maxVal: Double): Dataset[QTile] =
+    tiles.sparkSession.createDataset(quantizedDb(tiles.rdd, low, high, gamma, maxVal))
+
+  /** P8: global min/max reduce + per-tile rescale. Both passes read
+    * `tq`, so [[bandPipeline]] persists it: the quantize or CLAHE sample
+    * that produced it then runs once.
+    */
+  private[graft] def rescaledU8(tq: RDD[QTile]): RDD[QTile] = {
     val (mn, mx) = tq.map { t =>
       val q = t.samples
       var mn = Int.MaxValue; var mx = Int.MinValue
@@ -656,9 +680,9 @@ object Engine {
     * bilinear sampling = a tile kernel against the broadcast CDF array.
     * No joins, no pixel shuffle; CDF state independent of image size.
     */
-  def claheTiles(tiles: Dataset[DbTile], rows: Int, cols: Int,
-                 low: Double, high: Double, maxVal: Double,
-                 tileSize: Int = DefaultTileSize): Dataset[QTile] = {
+  private[graft] def claheDb(tiles: RDD[DbTile], rows: Int, cols: Int,
+                             low: Double, high: Double, maxVal: Double,
+                             tileSize: Int = DefaultTileSize): RDD[QTile] = {
     val nTiles = graft.enhance.Clahe.Tiles
     val bins = graft.enhance.Clahe.NumBins
     val clipLimit = graft.enhance.Clahe.ClipLimit
@@ -666,9 +690,8 @@ object Engine {
     val tileW = (cols + nTiles - 1) / nTiles
 
     val flat = tiles.mapPartitions(
-      Kernels.claheHistOfTiles(_, tileSize, tileH, tileW, nTiles, bins, low, high))(
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]())
-      .reduce { (a, b) => var i = 0; while (i < a.length) { a(i) += b(i); i += 1 }; a }
+      Kernels.claheHistOfTiles(_, tileSize, tileH, tileW, nTiles, bins, low, high))
+      .reduce(addBins)
 
     // Driver-side clip/redistribute/CDF — exact reference arithmetic;
     // tile_pixels comes from dims, not a data pass.
@@ -764,7 +787,7 @@ object Engine {
                         gt: Option[Array[Double]],
                         warp: Option[graft.geom.Warp.NativeWarp]): ProcessedImage = {
     val (img, fw, fh, newGt) = bandPipeline(spark, productId, input, rows, cols, params,
-      decimate, warp)(collectPadded(params, gt, outDims(rows, cols, decimate, warp)))
+      decimate, warp)(collectPadded(spark, params, gt, outDims(rows, cols, decimate, warp)))
     ProcessedImage(fw, fh, params.bitDepth, Some(img), None, newGt)
   }
 
@@ -775,27 +798,31 @@ object Engine {
       .getOrElse(((rows + decimate - 1) / decimate, (cols + decimate - 1) / decimate))
 
   /** A pipeline's output step when the image is not streamed: collect the
-    * final tiles at target size, then pad.
+    * final tiles at target size, then pad. The tiles cross to a Dataset
+    * here, the one form [[collectResized]] takes.
     */
-  private def collectPadded(params: ProcessingParams, gt: Option[Array[Double]],
-                            dims: (Int, Int))(
-                            q: Dataset[QTile]): (Array[Int], Int, Int, Option[Array[Double]]) = {
+  private def collectPadded(spark: SparkSession, params: ProcessingParams,
+                            gt: Option[Array[Double]], dims: (Int, Int))(
+                            q: RDD[QTile]): (Array[Int], Int, Int, Option[Array[Double]]) = {
     val (outRows, outCols) = dims
     val (resized, nw, nh) = collectResized(
-      q, outRows, outCols, params.targetSize, params.bitDepth.maxVal.toInt)
+      spark.createDataset(q), outRows, outCols, params.targetSize, params.bitDepth.maxVal.toInt)
     Geom.padAndRescaleGt(resized, nw, nh, outCols, outRows, params.pad, gt)
   }
 
-  /** The one band pipeline: read `input` → stats reduce → strategy
-    * dispatch → tile kernels → [u8 rescale], then `finish` consumes the
-    * final tiles while the pipeline's caches are still held.
+  /** The one band pipeline: read `input` → dB tiles → stats reduce →
+    * strategy dispatch → tile kernels → [u8 rescale], then `finish`
+    * consumes the final tiles while the pipeline's cache is still held.
     *
-    * One band caches its FLOAT tiles (half the bytes through the columnar
-    * cache) and recomputes the dB view lazily per pass — log10 is cheaper
-    * than decoding a cached double column; the warp (when requested and
-    * native-resolvable) applies at READ time like the reference's
-    * warped-VRT read, so everything downstream sees the OUTPUT grid. The
-    * band algebra caches its dB tiles ([[loadOperation]]).
+    * The pipeline persists ONE `RDD[DbTile]`, deserialized at
+    * MEMORY_AND_DISK: the scanned tiles (warped when a native warp is
+    * requested — it applies at READ time like the reference's warped-VRT
+    * read, so everything downstream sees the OUTPUT grid) through `toDb`,
+    * or the band algebra's dB tiles ([[loadOperation]]). The moments job
+    * builds it; the histogram, quantize and CLAHE passes read its arrays
+    * in place, with no decode and no log10. No stage writes into a cached
+    * array ([[Kernels]]). A u8 rescale reads its input twice, so the
+    * quantized tiles are persisted too. The `finally` unpersists both.
     *
     * `synRgbCopol` is set for a synRGB JPEG band (co-pol or cross-pol):
     * under Tamed it takes the band-specific u8 clip
@@ -808,28 +835,27 @@ object Engine {
                               rows: Int, cols: Int, params: ProcessingParams, decimate: Int,
                               warp: Option[graft.geom.Warp.NativeWarp],
                               synRgbCopol: Option[Boolean] = None)(
-                              finish: Dataset[QTile] => R): R = {
+                              finish: RDD[QTile] => R): R = {
     val (outRows, outCols) = outDims(rows, cols, decimate, warp)
     // this pipeline's own persists; a library entry point must not clear
-    // the shared session's cache manager out from under unrelated
-    // concurrent work
-    val own = scala.collection.mutable.ArrayBuffer.empty[Dataset[_]]
-    def persisted[T](ds: Dataset[T]): Dataset[T] = { own += ds; ds.persist() }
+    // the shared session's cache out from under unrelated concurrent work
+    val own = scala.collection.mutable.ArrayBuffer.empty[RDD[_]]
+    def persisted[T](rdd: RDD[T]): RDD[T] = { own += rdd; rdd.persist(StorageLevel.MEMORY_AND_DISK) }
     try {
-      val tiles = input match {
+      val db = persisted(input match {
         case OneBand(band) =>
           val scanned = RasterSource.scan(spark, productId, band, rows, cols, decimate)
-          toDbTiles(persisted(warp.fold(scanned)(nw => warpTiles(scanned, nw))))
+          dbTiles(warp.fold(scanned)(nw => warpTiles(scanned, nw)).rdd)
         case BandAlgebra(op) =>
-          persisted(loadOperation(spark, productId, op, rows, cols, warp, decimate))
-      }
+          loadOperation(spark, productId, op, rows, cols, warp, decimate).rdd
+      })
       val maxVal = params.bitDepth.maxVal
-      val st = tileStats(tiles)
+      val st = dbStats(db)
       val tamedSynRgb = synRgbCopol.filter(_ => params.autoscale == AutoscaleStrategy.Tamed)
       val quant = params.autoscale match {
         case AutoscaleStrategy.Clahe =>
           val (low, high, _) = FastStats.strategyParams(st, "clahe")
-          claheTiles(tiles, outRows, outCols, low, high, maxVal)
+          claheDb(db, outRows, outCols, low, high, maxVal)
         case strat =>
           val (low, high, gamma) = tamedSynRgb match {
             case Some(copol) =>
@@ -837,10 +863,10 @@ object Engine {
               (if (copol) math.min(p("p02"), p("p05")) else p("p05"), p("p99"), 1.0)
             case None => paramsFor(st, strat)
           }
-          quantizeTiles(tiles, low, high, gamma, maxVal)
+          quantizedDb(db, low, high, gamma, maxVal)
       }
       finish(
-        if (params.bitDepth == BitDepth.U8 && tamedSynRgb.isEmpty) rescaleTilesU8(persisted(quant))
+        if (params.bitDepth == BitDepth.U8 && tamedSynRgb.isEmpty) rescaledU8(persisted(quant))
         else quant)
     } finally own.foreach(_.unpersist())
   }
@@ -1022,7 +1048,8 @@ object Engine {
       // resize BEFORE compose (`save.rs` resizes each band to final dims,
       // then composes synRGB) — distributed, target-size collect
       bandPipeline(spark, productId, OneBand(band), rows, cols, bandParams, decimate, warp,
-        synRgbCopol = if (forTiff) None else Some(isCopol))(collectPadded(bandParams, gt, dims))
+        synRgbCopol = if (forTiff) None else Some(isCopol))(
+        collectPadded(spark, bandParams, gt, dims))
     }
     val (b1, fw, fh, newGt) = done(0)
     val b2 = done(1)._1
@@ -1110,12 +1137,12 @@ object Engine {
     * partition's tiles (2 MB for 16 tiles at 16 bits). A failed job
     * leaves no file behind.
     */
-  private def streamTiff(q: Dataset[QTile], layout: TiffWriter.Layout, path: String): Unit = {
+  private def streamTiff(q: RDD[QTile], layout: TiffWriter.Layout, path: String): Unit = {
     val bps = layout.bytesPerSample
-    val parts = q.rdd.mapPartitions(_.map(t => (t.tile_row, t.tile_col, TiffWriter.tileBytes(t, bps))))
+    val parts = q.mapPartitions(_.map(t => (t.tile_row, t.tile_col, TiffWriter.tileBytes(t, bps))))
     val out = new TiffWriter.Out(path, layout)
     try {
-      try q.sparkSession.sparkContext.runJob(parts,
+      try q.sparkContext.runJob(parts,
         (it: Iterator[(Int, Int, Array[Byte])]) => it.toArray,
         (_: Int, ps: Array[(Int, Int, Array[Byte])]) => {
           streamedDeliveries.incrementAndGet()
@@ -1256,7 +1283,7 @@ object Engine {
     * onto the SAME output grid before the positional zip, exactly as
     * the reference reads both from the one warped VRT, so the tile join
     * stays co-partitioned by construction. [[bandPipeline]] persists
-    * this relation as its input.
+    * these tiles as its dB cache.
     */
   def loadOperation(spark: SparkSession, productId: String,
                     op: PolarizationOperation, rows: Int, cols: Int,

@@ -9,7 +9,13 @@ import graft.stats.FastStats.Moments
 final case class DbTile(tile_row: Int, tile_col: Int, h: Int, w: Int, db: Array[Double])
 
 /** Per-tile pixel kernels — plain Scala loops over the dense arrays
-  * inside tiles, executed distributed via typed Dataset maps.
+  * inside tiles, executed distributed as maps over a band pipeline's
+  * cached `RDD[DbTile]`.
+  *
+  * RULE: no kernel writes into its input. The cache is deserialized, so
+  * every pass gets the SAME `db` arrays; a kernel that changed one in
+  * place would corrupt every later pass and each re-run of a task. Each
+  * kernel allocates its output (`KernelsCacheSpec` checks this).
   *
   * WHY NOT Column transforms: Spark's higher-order array functions
   * (`transform`/`zip_with`) evaluate their lambda INTERPRETED (no
@@ -31,9 +37,10 @@ object Kernels {
 
   @inline def valid(dbv: Double): Boolean = dbv > graft.ops.PixelOps.ValidDbThreshold
 
-  /** P1: materialize the dB tile once (the reference's `Array2<f64>` dB
-    * image) so the stats, histogram, and quantize passes don't each pay
-    * the log10.
+  /** P1: one tile's dB values — the reference's `Array2<f64>` dB image.
+    * A band pipeline runs it once per pixel, as it builds its cached
+    * `RDD[DbTile]`, so the stats, histogram and quantize passes read the
+    * doubles instead of each paying the log10.
     */
   def toDb(pixels: Array[Float]): Array[Double] = {
     val out = new Array[Double](pixels.length)

@@ -164,7 +164,7 @@ object Clahe {
     // the reference's zero-filled cdfs). Tile pixel counts come from
     // DIMS, not a data pass: the grid is a complete rows_×Cols raster by
     // construction (truncated to whole rows), so count(tile) ≡ rowspan ×
-    // colspan — the same shortcut the production claheTiles takes. One
+    // colspan — the same shortcut the production Engine.claheDb takes. One
     // scalar agg over the cached grid replaces a full groupBy pass over
     // the pixel cache.
     val tileIds = s.range(Tiles).toDF("ty")

@@ -40,6 +40,28 @@ class CacheHygieneSpec extends SparkSpec {
     }
   }
 
+  test("every warped single-band plan leaves the persistent RDDs as it found them") {
+    val warped = ProcessingParams(targetCrs = Some("EPSG:32633"))
+    val dir = Files.createTempDirectory("graft-test")
+    // a full-resolution u16 TIFF streams its tiles to the file
+    val streamed = warped.copy(polarization = Polarization.Vv, format = OutputFormat.Tiff,
+      bitDepth = BitDepth.U16, autoscale = AutoscaleStrategy.Standard)
+    val before = persistent
+    Engine.processToPath(spark, "S1A_IW_GRDH_1SDV_hygiene", 90, 70,
+      dir.resolve("streamed.tiff").toString, streamed, meta)
+    assert(Files.exists(dir.resolve("streamed.tiff")))
+    assert(persistent == before, s"$streamed left a cache behind")
+    Seq(warped.copy(polarization = Polarization.Op(PolarizationOperation.Diff),
+        autoscale = AutoscaleStrategy.Standard),
+      warped.copy(polarization = Polarization.Vv, autoscale = AutoscaleStrategy.Clahe)
+    ).foreach { params =>
+      val before = persistent
+      val img = Engine.processToBuffer(spark, "S1A_IW_GRDH_1SDV_hygiene", 90, 70, params, meta)
+      assert(img.width > 0 && img.height > 0)
+      assert(persistent == before, s"$params left a cache behind")
+    }
+  }
+
   test("a pipeline whose output step throws leaves the persistent RDDs as it found them") {
     // a full-resolution TIFF streams: the output step opens the file,
     // which fails in a missing directory after the stats, quantize and

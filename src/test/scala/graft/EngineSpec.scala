@@ -164,15 +164,62 @@ class EngineSpec extends SparkSpec {
 
   test("Engine.scala has one band pipeline: one call site each of its stage functions") {
     val text = new String(Files.readAllBytes(Paths.get("src/main/scala/graft/api/Engine.scala")), "UTF-8")
-    Seq("tileStats", "claheTiles", "quantizeTiles", "rescaleTilesU8").foreach { f =>
-      // every use but the definition and Scaladoc links: calls and
-      // method values such as `.map(rescaleTilesU8)`
-      val sites = ("""(?<!def )(?<!\[\[)\b""" + f + """\b(?!\]\])""").r.findAllMatchIn(text).map { m =>
-        text.substring(0, m.start).count(_ == '\n') + 1
-      }.toSeq
-      assert(sites.size == 1,
-        s"$f is used at Engine.scala lines ${sites.mkString(", ")}; use it from bandPipeline only")
+    def lineOf(at: Int) = text.substring(0, at).count(_ == '\n') + 1
+    // every use but the definition and Scaladoc links: calls and method
+    // values such as `.map(rescaledU8)`; `Kernels.x` is another function
+    def sites(f: String): Seq[Int] =
+      ("""(?<!def )(?<!\[\[)(?<!\.)\b""" + f + """\b(?!\]\])""").r.findAllMatchIn(text)
+        .map(m => lineOf(m.start)).toSeq
+    // the lines of a definition: from its `def` to the first blank line
+    def body(f: String): Range = {
+      val at = ("""def """ + f + """[(\[]""").r.findFirstMatchIn(text).map(_.start).getOrElse(-1)
+      assert(at >= 0, s"no def $f in Engine.scala")
+      lineOf(at) to lineOf(text.indexOf("\n\n", at))
     }
+    val pipeline = body("bandPipeline")
+    // each RDD stage and its one allowed second caller, if it has one: the
+    // Dataset adapter for callers that hold Datasets, which Engine.scala
+    // itself never calls
+    Seq("dbTiles" -> Some("toDbTiles"), "dbStats" -> Some("tileStats"),
+      "quantizedDb" -> Some("quantizeTiles"), "claheDb" -> None, "rescaledU8" -> None).foreach {
+      case (f, adapter) =>
+        val (inAdapter, rest) = sites(f).partition(l => adapter.exists(body(_).contains(l)))
+        adapter.foreach { a =>
+          assert(sites(a).isEmpty,
+            s"$a is used at Engine.scala lines ${sites(a).mkString(", ")}; use $f from bandPipeline")
+          assert(inAdapter.size == 1, s"$a is no longer a one-line adapter over $f")
+        }
+        assert(rest.size == 1 && pipeline.contains(rest.head),
+          s"$f is used at Engine.scala lines ${rest.mkString(", ")}; use it from bandPipeline only")
+    }
+  }
+
+  test("a streamed TIFF band runs 3 jobs, 4 when warped: the dB cache is built by the moments job") {
+    val gt = Array(730000.0, 10.0, 0.0, 5000000.0, 0.0, -10.0)
+    val meta = SafeMeta(productType = Some("GRD"), crs = Some("EPSG:32632"), geotransform = Some(gt))
+    val params = ProcessingParams(polarization = Polarization.Vv, format = OutputFormat.Tiff,
+      bitDepth = BitDepth.U16, autoscale = AutoscaleStrategy.Standard)
+    val dir = tmpDir
+    def jobs(name: String, p: ProcessingParams): Int = {
+      val started = new java.util.concurrent.atomic.AtomicInteger
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          started.incrementAndGet()
+      }
+      drainListeners()
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        Engine.processToPath(spark, s"S1A_IW_GRDH_1SDV_$name", 600, 700, s"$dir/$name.tiff", p, meta)
+        drainListeners()
+      } finally spark.sparkContext.removeSparkListener(listener)
+      assert(Files.exists(Paths.get(s"$dir/$name.tiff")))
+      // less the marker job drainListeners ran
+      started.get - 1
+    }
+    // 3×3 tiles: moments (which builds the cache), histogram, TIFF output
+    assert(jobs("plain", params) == 3)
+    // the warp's shuffle runs as a job of its own before them
+    assert(jobs("warped", params.copy(targetCrs = Some("EPSG:32633"))) == 4)
   }
 
   test("native-res pipeline collects only target-size buffers (8192² → 1024)") {
